@@ -1,4 +1,5 @@
-"""Shared expression helpers for the query corpus.
+"""Shared expression helpers for the query corpus, and `sql_query`, which
+turns a DuckDB-dialect text into a registry function.
 
 Deterministic-float policy
 --------------------------
@@ -19,8 +20,14 @@ whole-stage-codegen, partial+final, no extra shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import re
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from duckdb_wasm_spark.dialect import translate
+from duckdb_wasm_spark.tables import TABLES, load_table
 
 DEC = "decimal(15,2)"
 
@@ -31,35 +38,9 @@ def dec(c: str | Column) -> Column:
     return col.cast(DEC)
 
 
-def one() -> Column:
-    """Literal 1 as decimal(15,2) (lazy: needs an active SparkSession)."""
-    return F.lit(1).cast(DEC)
-
-
-def revenue() -> Column:
-    """l_extendedprice * (1 - l_discount), exact (decimal(31,4))."""
-    return dec("l_extendedprice") * (one() - dec("l_discount"))
-
-
-def charge() -> Column:
-    """revenue * (1 + l_tax), exact; intermediate narrowed to decimal(18,4)
-    so Spark's product precision stays ≤38 (values ≪ 1e14, no overflow)."""
-    return revenue().cast("decimal(18,4)") * (one() + dec("l_tax"))
-
-
 def dsum(e: Column) -> Column:
     """Deterministic double SUM via exact decimal accumulation."""
     return F.sum(e).cast("double")
-
-
-def davg(e: Column) -> Column:
-    """Deterministic double AVG: exact decimal sum / row count."""
-    return F.sum(e).cast("double") / F.count(F.lit(1))
-
-
-def ts(literal: str) -> Column:
-    """Timestamp literal pinned to UTC parsing (session TZ is UTC)."""
-    return F.to_timestamp(F.lit(literal))
 
 
 # ---- matching DuckDB SQL fragments (oracle side) --------------------------
@@ -84,3 +65,30 @@ def sql_davg(expr: str) -> str:
 
 def sql_dec(c: str) -> str:
     return SQL_DEC.format(c=c)
+
+
+def sql_query(
+    name: str, text: str
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Registry function `fn(spark, sf_dir)` that runs the DuckDB-dialect
+    `text`: every table the text names is registered as a temp view,
+    the text goes through `dialect.translate` (the path
+    `Connection.query()` takes) and `spark.sql` plans the result. The
+    registry's oracle gate then checks the translator on the same text
+    DuckDB runs."""
+    tables = [t for t in TABLES if re.search(rf"\b{t}\b", text, re.I)]
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        for t in tables:
+            load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+        tr = translate(text)
+        if tr.kind != "query":
+            raise ValueError(
+                f"{name}: expected a query, but the text translates to "
+                f"a {tr.kind!r} statement"
+            )
+        return spark.sql(tr.sql)
+
+    fn.__name__ = name
+    fn.__doc__ = f"{name}: its DuckDB-dialect text, translated and run."
+    return fn

@@ -15,6 +15,13 @@ CARDINALITY() gives the expected row count per query as a function of
 the input tables (checked in tests, mirroring the reference's embedded
 asserts).
 
+The six queries above run their DuckDB-dialect oracle text through the
+dialect translator (`sql_query`). Two micro queries stay DataFrame plans:
+micro_scalar_fns, because the translator has no `xor(`, and
+micro_topk_per_group, because its text quotes `"value"`, which Spark
+reads as a string literal outside SparkDB's ANSI double-quoted-identifier
+mode.
+
 Scale notes: sort is a global range-partitioned sort (Spark samples
 boundaries — the one unavoidable all-shuffle op); topk never
 materializes the full sort (TakeOrderedAndProject); grouped sum is
@@ -31,7 +38,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_wasm_spark.plans._util import dec, dsum, sql_dec, sql_dsum
+from duckdb_wasm_spark.plans._util import dec, dsum, sql_dec, sql_dsum, sql_query
 from duckdb_wasm_spark.tables import load_table, load_tables
 
 QUERIES: dict = {}
@@ -50,16 +57,6 @@ TOP_K = 100
 
 
 # ------------------------------------------------------------ micro_sort
-@_q("micro_sort")
-def micro_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-key sort over events (ref sort bench: 1-2 integer order keys).
-    Contract: rows == count(events)."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select("event_id", "user_id", "value").orderBy(
-        F.col("user_id").asc(), F.col("event_id").desc()
-    )
-
-
 ORACLE["micro_sort"] = """
 select event_id, user_id, value from events
 order by user_id asc, event_id desc
@@ -67,19 +64,6 @@ order by user_id asc, event_id desc
 
 
 # ------------------------------------------------------------ micro_topk
-@_q("micro_topk")
-def micro_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-K: ORDER BY + LIMIT fuses to TakeOrderedAndProject (no global
-    sort materialization). Tie-broken on event_id so top-k is total.
-    Contract: rows == K."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.select("event_id", "value")
-        .orderBy(F.col("value").desc(), F.col("event_id").asc())
-        .limit(TOP_K)
-    )
-
-
 ORACLE["micro_topk"] = f"""
 select event_id, value from events
 order by value desc, event_id asc
@@ -88,14 +72,6 @@ limit {TOP_K}
 
 
 # ----------------------------------------------------- micro_grouped_sum
-@_q("micro_grouped_sum")
-def micro_grouped_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped sum (ref: SELECT SUM(v1) FROM t GROUP BY v0).
-    Contract: rows == count(distinct user_id)."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy("user_id").agg(dsum(dec("value")).alias("sum_value"))
-
-
 ORACLE["micro_grouped_sum"] = f"""
 select user_id, {sql_dsum(sql_dec('value'))} sum_value
 from events group by user_id
@@ -103,37 +79,12 @@ from events group by user_id
 
 
 # ----------------------------------------------------------- micro_regex
-@_q("micro_regex")
-def micro_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIKE with one-char wildcard prefix (ref: WHERE v0 LIKE '_#%').
-    Contract: rows == matching parts."""
-    part = load_table(spark, sf_dir, "part")
-    return part.where(F.col("p_name").like("_a%")).select(
-        "p_partkey", "p_name"
-    )
-
-
 ORACLE["micro_regex"] = """
 select p_partkey, p_name from part where p_name like '_a%'
 """
 
 
 # ----------------------------------------------------------- micro_join2
-@_q("micro_join2")
-def micro_join2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-way equi-join with a filtered build side (ref join2:
-    rows == filterA · stepAB). Contract: one row per 'F' order of a
-    BUILDING-segment customer."""
-    t = load_tables(spark, sf_dir, "orders", "customer")
-    cust = t["customer"].where(F.col("c_mktsegment") == "BUILDING")
-    return (
-        t["orders"]
-        .where(F.col("o_orderstatus") == "F")
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .select("o_orderkey", "c_custkey", "c_name", "o_totalprice")
-    )
-
-
 ORACLE["micro_join2"] = """
 select o_orderkey, c_custkey, c_name, o_totalprice
 from orders join customer on o_custkey = c_custkey
@@ -142,24 +93,6 @@ where o_orderstatus = 'F' and c_mktsegment = 'BUILDING'
 
 
 # ----------------------------------------------------------- micro_join3
-@_q("micro_join3")
-def micro_join3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-way equi-join fact→dim→dim (ref join3:
-    rows == filterA · stepAB · stepBC)."""
-    t = load_tables(spark, sf_dir, "lineitem", "orders", "customer")
-    cust = t["customer"].where(F.col("c_mktsegment") == "BUILDING")
-    return (
-        t["lineitem"]
-        .where(F.col("l_quantity") <= 5)
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "l_orderkey", "l_linenumber", "c_custkey",
-            dec("l_extendedprice").cast("double").alias("price"),
-        )
-    )
-
-
 ORACLE["micro_join3"] = """
 select l_orderkey, l_linenumber, c_custkey,
        cast(cast(l_extendedprice as decimal(15,2)) as double) price
@@ -168,6 +101,12 @@ join orders on l_orderkey = o_orderkey
 join customer on o_custkey = c_custkey
 where l_quantity <= 5 and c_mktsegment = 'BUILDING'
 """
+
+for _name in (
+    "micro_sort", "micro_topk", "micro_grouped_sum",
+    "micro_regex", "micro_join2", "micro_join3",
+):
+    QUERIES[_name] = sql_query(_name, ORACLE[_name])
 
 
 # ----------------------------------------------------- micro_scalar_fns

@@ -18,15 +18,16 @@ adapted to the available columns **while preserving its operator class**:
   q10 7-key group + topk           q21 EXISTS + NOT EXISTS self-joins
   q11 HAVING w/ scalar subquery    q22 substring + NOT EXISTS + avg subq
 
-Spark-first notes (100 TB framing):
-  - Joins are declared with equi-conditions; Catalyst/AQE picks broadcast
-    for region/nation/part/supplier dims (autoBroadcastJoinThreshold) and
-    sort-merge for fact-fact; explicit F.broadcast on always-tiny dims.
-  - Aggregations are partial+final hash aggregates automatically.
-  - Correlated subqueries are expressed as group-agg + equi-join (exactly
-    Catalyst's own decorrelation), so no per-row subquery execution.
-  - Every ORDER BY under a LIMIT ends in a unique key so top-k is total —
-    two engines must select the same rows.
+Each query runs its DuckDB-dialect text, the same text DuckDB checks it
+against: `sql_query` translates it and hands it to `spark.sql`, and
+Catalyst decorrelates the subqueries and picks broadcast or sort-merge
+joins. One DataFrame plan is kept, q17. Catalyst decorrelates its
+per-part AVG into an aggregate over all of lineitem that is joined
+back; the DataFrame form takes the AVG as a window over the
+part-filtered join and scans lineitem once. The text path measured
+0.91 s against 0.39 s at sf0.1 (4 cores, median of warm runs). Every
+ORDER BY under a LIMIT ends in a unique key so top-k is total — two
+engines must select the same rows.
 
 Determinism: see plans/_util.py (decimal accumulation policy).
 """
@@ -37,55 +38,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from duckdb_wasm_spark.tables import load_table, load_tables
 from duckdb_wasm_spark.plans._util import (
-    charge,
-    davg,
     dec,
-    dsum,
-    revenue,
     sql_davg,
     sql_dec,
     sql_dsum,
+    sql_query,
     SQL_CHARGE,
     SQL_REV,
-    ts,
 )
+from duckdb_wasm_spark.tables import load_tables
 
-QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
 
 
-def _q(name):
-    def reg(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return reg
-
-
-# --------------------------------------------------------------------- q1
-@_q("q1")
-def q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pricing summary report (tpch/1.sql). Scan→filter→8-agg group."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.where(F.col("l_shipdate") <= ts("2000-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dsum(dec("l_quantity")).alias("sum_qty"),
-            dsum(dec("l_extendedprice")).alias("sum_base_price"),
-            dsum(revenue()).alias("sum_disc_price"),
-            dsum(charge()).alias("sum_charge"),
-            davg(dec("l_quantity")).alias("avg_qty"),
-            davg(dec("l_extendedprice")).alias("avg_price"),
-            davg(dec("l_discount")).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
+# ------------------------------------------------------------------- q1
+# Pricing summary report (tpch/1.sql).
 ORACLE["q1"] = f"""
 select
     l_returnflag,
@@ -105,57 +73,9 @@ order by l_returnflag, l_linestatus
 """
 
 
-# --------------------------------------------------------------------- q2
-@_q("q2")
-def q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Minimum-cost supplier (tpch/2.sql). partsupp is absent, so supply
-    cost := l_extendedprice / l_quantity observed in lineitem; the
-    correlated scalar MIN subquery becomes a per-part MIN window over the
-    already-part-filtered join.
-
-    Scale notes: lineitem joins the selective part filter FIRST, so the
-    fact table is cut to ~1/100 before any other work (previously the
-    per-part MIN aggregated every partkey and lineitem was scanned twice).
-    One lineitem scan, one shuffle on p_partkey for the window; AQE picks
-    broadcast for the filtered part side when it is small."""
-    t = load_tables(
-        spark, sf_dir, "part", "supplier", "lineitem", "nation", "region"
-    )
-    europe_supp = (
-        t["supplier"]
-        .join(
-            F.broadcast(t["nation"]),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(t["region"].where(F.col("r_name") == "EUROPE")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-    )
-    part = t["part"].where(
-        (F.col("p_size") == 15) & (F.col("p_type") == "LARGE")
-    )
-    supply = (
-        t["lineitem"]
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .withColumn(
-            "supplycost", F.col("l_extendedprice") / F.col("l_quantity")
-        )
-        .join(europe_supp, F.col("l_suppkey") == F.col("s_suppkey"))
-    )
-    w = Window.partitionBy("p_partkey")
-    return (
-        supply.withColumn("min_cost", F.min("supplycost").over(w))
-        .where(F.col("supplycost") == F.col("min_cost"))
-        .select("s_acctbal", "s_name", "n_name", "p_partkey", "p_name")
-        .distinct()
-        .orderBy(
-            F.col("s_acctbal").desc(), "n_name", "s_name", "p_partkey"
-        )
-        .limit(100)
-    )
-
-
+# ------------------------------------------------------------------- q2
+# Minimum-cost supplier (tpch/2.sql). partsupp is absent, so the supply
+# cost is l_extendedprice / l_quantity as observed in lineitem.
 ORACLE["q2"] = """
 select distinct s_acctbal, s_name, n_name, p_partkey, p_name
 from part, supplier, lineitem, nation, region
@@ -179,30 +99,9 @@ limit 100
 """
 
 
-# --------------------------------------------------------------------- q3
-@_q("q3")
-def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shipping priority (tpch/3.sql); o_shippriority column absent →
-    dropped from projection. Top-10 made total by l_orderkey tiebreak."""
-    t = load_tables(spark, sf_dir, "customer", "orders", "lineitem")
-    return (
-        t["customer"]
-        .where(F.col("c_mktsegment") == "BUILDING")
-        .join(
-            t["orders"].where(F.col("o_orderdate") < ts("1998-03-15")),
-            F.col("c_custkey") == F.col("o_custkey"),
-        )
-        .join(
-            t["lineitem"].where(F.col("l_shipdate") > ts("1998-03-15")),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .groupBy("l_orderkey", F.col("o_orderdate").cast("date").alias("o_orderdate"))
-        .agg(dsum(revenue()).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), "o_orderdate", "l_orderkey")
-        .limit(10)
-    )
-
-
+# ------------------------------------------------------------------- q3
+# Shipping priority (tpch/3.sql). o_shippriority is absent and dropped;
+# the l_orderkey tiebreak makes the top-10 total.
 ORACLE["q3"] = f"""
 select
     l_orderkey,
@@ -220,30 +119,9 @@ limit 10
 """
 
 
-# --------------------------------------------------------------------- q4
-@_q("q4")
-def q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order priority checking (tpch/4.sql). l_commitdate/receiptdate are
-    absent → the EXISTS predicate becomes l_shipdate > o_orderdate (a late
-    shipment). Correlated EXISTS → left-semi join."""
-    t = load_tables(spark, sf_dir, "orders", "lineitem")
-    orders = t["orders"].where(
-        (F.col("o_orderdate") >= ts("1996-07-01"))
-        & (F.col("o_orderdate") < ts("1996-10-01"))
-    )
-    return (
-        orders.join(
-            t["lineitem"],
-            (F.col("l_orderkey") == F.col("o_orderkey"))
-            & (F.col("l_shipdate") > F.col("o_orderdate")),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
+# ------------------------------------------------------------------- q4
+# Order priority checking (tpch/4.sql). l_commitdate/l_receiptdate are
+# absent, so the EXISTS predicate is a late shipment: l_shipdate > o_orderdate.
 ORACLE["q4"] = """
 select o_orderpriority, count(*) as order_count
 from orders
@@ -257,49 +135,8 @@ order by o_orderpriority
 """
 
 
-# --------------------------------------------------------------------- q5
-@_q("q5")
-def q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local supplier volume (tpch/5.sql), full 6-way join."""
-    t = load_tables(
-        spark,
-        sf_dir,
-        "customer",
-        "orders",
-        "lineitem",
-        "supplier",
-        "nation",
-        "region",
-    )
-    return (
-        t["customer"]
-        .join(
-            t["orders"].where(
-                (F.col("o_orderdate") >= ts("1996-01-01"))
-                & (F.col("o_orderdate") < ts("1997-01-01"))
-            ),
-            F.col("c_custkey") == F.col("o_custkey"),
-        )
-        .join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            t["supplier"],
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(
-            F.broadcast(t["nation"]),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(t["region"].where(F.col("r_name") == "ASIA")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .groupBy("n_name")
-        .agg(dsum(revenue()).alias("revenue"))
-        .orderBy(F.col("revenue").desc())
-    )
-
-
+# ------------------------------------------------------------------- q5
+# Local supplier volume (tpch/5.sql): the full 6-way join.
 ORACLE["q5"] = f"""
 select n_name, {sql_dsum(SQL_REV)} as revenue
 from customer, orders, lineitem, supplier, nation, region
@@ -317,24 +154,8 @@ order by revenue desc
 """
 
 
-# --------------------------------------------------------------------- q6
-@_q("q6")
-def q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forecasting revenue change (tpch/6.sql): scan→filter→global agg.
-    All predicates push to the parquet scan."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.where(
-            (F.col("l_shipdate") >= ts("1996-01-01"))
-            & (F.col("l_shipdate") < ts("1997-01-01"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(dsum(dec("l_extendedprice") * dec("l_discount")).alias("revenue"))
-    )
-
-
+# ------------------------------------------------------------------- q6
+# Forecasting revenue change (tpch/6.sql): scan, filter, global agg.
 ORACLE["q6"] = f"""
 select {sql_dsum(sql_dec('l_extendedprice') + ' * ' + sql_dec('l_discount'))} as revenue
 from lineitem
@@ -345,44 +166,9 @@ where l_shipdate >= timestamp '1996-01-01'
 """
 
 
-# --------------------------------------------------------------------- q7
-@_q("q7")
-def q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Volume shipping (tpch/7.sql): nation dim joined twice under two
-    aliases, cross-pair OR predicate, extract(year)."""
-    t = load_tables(
-        spark, sf_dir, "supplier", "lineitem", "orders", "customer", "nation"
-    )
-    n1 = t["nation"].select(
-        F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = t["nation"].select(
-        F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
-    )
-    pair = (
-        (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
-    ) | (
-        (F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1")
-    )
-    return (
-        t["supplier"]
-        .join(t["lineitem"], F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(t["orders"], F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(t["customer"], F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
-        .where(
-            pair
-            & (F.col("l_shipdate") >= ts("1996-01-01"))
-            & (F.col("l_shipdate") <= ts("1997-12-31"))
-        )
-        .withColumn("l_year", F.year("l_shipdate").cast("long"))
-        .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(dsum(revenue()).alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    )
-
-
+# ------------------------------------------------------------------- q7
+# Volume shipping (tpch/7.sql): nation under two aliases, a cross-pair
+# OR predicate, extract(year).
 ORACLE["q7"] = f"""
 select supp_nation, cust_nation, l_year, {sql_dsum('volume')} as revenue
 from (
@@ -407,65 +193,9 @@ order by supp_nation, cust_nation, l_year
 """
 
 
-# --------------------------------------------------------------------- q8
-@_q("q8")
-def q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """National market share (tpch/8.sql): CASE-conditional aggregate
-    ratio. Share of NATION_3 suppliers in AMERICA-region customers' ECONOMY
-    part volume."""
-    t = load_tables(
-        spark,
-        sf_dir,
-        "part",
-        "supplier",
-        "lineitem",
-        "orders",
-        "customer",
-        "nation",
-        "region",
-    )
-    n1 = t["nation"].select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_region")
-    )
-    n2 = t["nation"].select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    vol = revenue().cast("decimal(18,4)")
-    return (
-        t["part"]
-        .where(F.col("p_type") == "ECONOMY")
-        .join(t["lineitem"], F.col("p_partkey") == F.col("l_partkey"))
-        .join(t["supplier"], F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(
-            t["orders"].where(
-                (F.col("o_orderdate") >= ts("1996-01-01"))
-                & (F.col("o_orderdate") <= ts("1997-12-31"))
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("c_nationkey") == F.col("cn_key"))
-        .join(
-            F.broadcast(
-                t["region"].where(F.col("r_name") == "AMERICA")
-            ),
-            F.col("cn_region") == F.col("r_regionkey"),
-        )
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("sn_key"))
-        .withColumn("o_year", F.year("o_orderdate").cast("long"))
-        .groupBy("o_year")
-        .agg(
-            (
-                F.sum(
-                    F.when(F.col("supp_nation") == "NATION_3", vol)
-                ).cast("double")
-                / F.sum(vol).cast("double")
-            ).alias("mkt_share")
-        )
-        .orderBy("o_year")
-    )
-
-
+# ------------------------------------------------------------------- q8
+# National market share (tpch/8.sql): the share of NATION_3 suppliers in
+# the ECONOMY part volume of AMERICA-region customers.
 ORACLE["q8"] = f"""
 select
     o_year,
@@ -495,35 +225,9 @@ order by o_year
 """
 
 
-# --------------------------------------------------------------------- q9
-@_q("q9")
-def q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product type profit (tpch/9.sql); without partsupp the
-    ps_supplycost term is dropped, profit := revenue."""
-    t = load_tables(
-        spark, sf_dir, "part", "supplier", "lineitem", "orders", "nation"
-    )
-    return (
-        t["part"]
-        .where(F.col("p_name").like("%rod%"))
-        .join(t["lineitem"], F.col("p_partkey") == F.col("l_partkey"))
-        .join(t["supplier"], F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(t["orders"], F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(
-            F.broadcast(t["nation"]),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").cast("long").alias("o_year"),
-            revenue().alias("amount"),
-        )
-        .groupBy("nation", "o_year")
-        .agg(dsum(F.col("amount")).alias("sum_profit"))
-        .orderBy("nation", F.col("o_year").desc())
-    )
-
-
+# ------------------------------------------------------------------- q9
+# Product type profit (tpch/9.sql). Without partsupp the ps_supplycost
+# term is dropped, so profit is revenue.
 ORACLE["q9"] = f"""
 select nation, o_year, {sql_dsum('amount')} as sum_profit
 from (
@@ -543,36 +247,9 @@ order by nation, o_year desc
 """
 
 
-# --------------------------------------------------------------------- q10
-@_q("q10")
-def q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Returned item reporting (tpch/10.sql); address/phone/comment columns
-    absent → dropped. Top-20 total by c_custkey tiebreak."""
-    t = load_tables(spark, sf_dir, "customer", "orders", "lineitem", "nation")
-    return (
-        t["customer"]
-        .join(
-            t["orders"].where(
-                (F.col("o_orderdate") >= ts("1997-01-01"))
-                & (F.col("o_orderdate") < ts("1997-04-01"))
-            ),
-            F.col("c_custkey") == F.col("o_custkey"),
-        )
-        .join(
-            t["lineitem"].where(F.col("l_returnflag") == "R"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            F.broadcast(t["nation"]),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(dsum(revenue()).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), "c_custkey")
-        .limit(20)
-    )
-
-
+# ------------------------------------------------------------------ q10
+# Returned item reporting (tpch/10.sql). The address/phone/comment
+# columns are absent and dropped; the c_custkey tiebreak makes the top-20 total.
 ORACLE["q10"] = f"""
 select c_custkey, c_name, c_acctbal, n_name, {sql_dsum(SQL_REV)} as revenue
 from customer, orders, lineitem, nation
@@ -588,34 +265,10 @@ limit 20
 """
 
 
-# --------------------------------------------------------------------- q11
-@_q("q11")
-def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Important stock identification (tpch/11.sql). partsupp absent →
-    value := supplier account balances per nation; HAVING compares against
-    a scalar subquery over the whole table (same operator class)."""
-    t = load_tables(spark, sf_dir, "supplier", "nation")
-    total = (
-        t["supplier"]
-        .agg(dsum(dec("s_acctbal")).alias("total_value"))
-        .withColumn("threshold", F.col("total_value") * F.lit(0.05))
-        .select("threshold")
-    )
-    return (
-        t["supplier"]
-        .join(
-            F.broadcast(t["nation"]),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy("n_name")
-        .agg(dsum(dec("s_acctbal")).alias("value"))
-        .crossJoin(F.broadcast(total))
-        .where(F.col("value") > F.col("threshold"))
-        .select("n_name", "value")
-        .orderBy(F.col("value").desc(), "n_name")
-    )
-
-
+# ------------------------------------------------------------------ q11
+# Important stock identification (tpch/11.sql). partsupp is absent, so the
+# value is the suppliers' account balance per nation; HAVING compares it with
+# a scalar subquery over the whole table.
 ORACLE["q11"] = f"""
 select n_name, {sql_dsum(sql_dec('s_acctbal'))} as value
 from supplier, nation
@@ -627,31 +280,9 @@ order by value desc, n_name
 """
 
 
-# --------------------------------------------------------------------- q12
-@_q("q12")
-def q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shipping modes / order priority (tpch/12.sql). l_shipmode absent →
-    group by l_returnflag; the CASE-on-priority aggregate is preserved."""
-    t = load_tables(spark, sf_dir, "orders", "lineitem")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        t["orders"]
-        .join(
-            t["lineitem"].where(
-                (F.col("l_shipdate") >= ts("1997-01-01"))
-                & (F.col("l_shipdate") < ts("1998-01-01"))
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
+# ------------------------------------------------------------------ q12
+# Shipping modes and order priority (tpch/12.sql). l_shipmode is absent,
+# so the groups are l_returnflag.
 # DuckDB sum(int) yields HUGEINT → cast to bigint to match Spark's long.
 ORACLE["q12"] = """
 select
@@ -669,29 +300,9 @@ order by l_returnflag
 """
 
 
-# --------------------------------------------------------------------- q13
-@_q("q13")
-def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer distribution (tpch/13.sql): LEFT OUTER with an extra join
-    predicate, then re-aggregation of counts. o_comment filter → priority."""
-    t = load_tables(spark, sf_dir, "customer", "orders")
-    per_cust = (
-        t["customer"]
-        .join(
-            t["orders"].where(F.col("o_orderpriority") != "1-URGENT"),
-            F.col("c_custkey") == F.col("o_custkey"),
-            "left_outer",
-        )
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
-    )
-
-
+# ------------------------------------------------------------------ q13
+# Customer distribution (tpch/13.sql): LEFT OUTER join with an extra join
+# predicate, then re-aggregation. The o_comment filter becomes a priority one.
 ORACLE["q13"] = """
 select c_count, count(*) as custdist
 from (
@@ -705,31 +316,8 @@ order by custdist desc, c_count desc
 """
 
 
-# --------------------------------------------------------------------- q14
-@_q("q14")
-def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Promotion effect (tpch/14.sql): conditional aggregate ratio."""
-    t = load_tables(spark, sf_dir, "lineitem", "part")
-    rev = revenue()
-    return (
-        t["lineitem"]
-        .where(
-            (F.col("l_shipdate") >= ts("1997-09-01"))
-            & (F.col("l_shipdate") < ts("1997-10-01"))
-        )
-        .join(t["part"], F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            (
-                F.lit(100.0)
-                * F.sum(F.when(F.col("p_type").like("PROMO%"), rev)).cast(
-                    "double"
-                )
-                / F.sum(rev).cast("double")
-            ).alias("promo_revenue")
-        )
-    )
-
-
+# ------------------------------------------------------------------ q14
+# Promotion effect (tpch/14.sql): conditional aggregate ratio.
 ORACLE["q14"] = f"""
 select
     100.0 * cast(sum(case when p_type like 'PROMO%'
@@ -742,46 +330,9 @@ where l_partkey = p_partkey
 """
 
 
-# --------------------------------------------------------------------- q15
-@_q("q15")
-def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top supplier (tpch/15.sql): revenue view + uncorrelated scalar MAX.
-    MAX over identical doubles is order-independent → exact equality join
-    is safe.
-
-    The revenue view has two consumers (the scalar MAX and the supplier
-    join), and Catalyst does not fuse them (ReusedExchange needs
-    identical physical subtrees, which the extra aggregate breaks) — so
-    the lineitem scan+filter+agg runs twice. Measured round 4: a
-    localCheckpoint of the supplier-grained aggregate makes it
-    single-pass but is NET SLOWER here (0.92s vs 0.68s best-of-3 at
-    sf0.1 — block-manager materialization costs more than re-scanning a
-    filtered 600k-row parquet). At warehouse scale the checkpoint (or a
-    cached CTE) wins; at bench scale the declarative double-scan is
-    kept because it measures faster."""
-    t = load_tables(spark, sf_dir, "supplier", "lineitem")
-    rev = (
-        t["lineitem"]
-        .where(
-            (F.col("l_shipdate") >= ts("1996-01-01"))
-            & (F.col("l_shipdate") < ts("1996-04-01"))
-        )
-        .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(dsum(revenue()).alias("total_revenue"))
-    )
-    mx = rev.agg(F.max("total_revenue").alias("max_revenue"))
-    return (
-        t["supplier"]
-        .join(rev, F.col("s_suppkey") == F.col("supplier_no"))
-        .join(
-            F.broadcast(mx),
-            F.col("total_revenue") == F.col("max_revenue"),
-        )
-        .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
-    )
-
-
+# ------------------------------------------------------------------ q15
+# Top supplier (tpch/15.sql): revenue view and an uncorrelated scalar MAX.
+# MAX over identical doubles is order-independent, so the equality is exact.
 ORACLE["q15"] = f"""
 with revenue as (
     select l_suppkey as supplier_no, {sql_dsum(SQL_REV)} as total_revenue
@@ -798,44 +349,9 @@ order by s_suppkey
 """
 
 
-# --------------------------------------------------------------------- q16
-@_q("q16")
-def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parts/supplier relationship (tpch/16.sql). partsupp absent → the
-    part↔supplier association is observed through lineitem. Preserves
-    count(distinct), NOT IN (subquery), IN (value list), NOT LIKE."""
-    t = load_tables(spark, sf_dir, "lineitem", "part", "supplier")
-    # NOT IN (subquery) → left_anti is exact only while the subquery
-    # side has no NULLs (SQL NOT IN yields empty on any NULL); s_suppkey
-    # is a non-null key in this schema — guard anyway so a nullable
-    # future schema can't silently diverge.
-    bad_supp = (
-        t["supplier"]
-        .where(F.col("s_name").like("%7"))
-        .select(F.col("s_suppkey").alias("bad_key"))
-        .where(F.col("bad_key").isNotNull())
-    )
-    part = t["part"].where(
-        (F.col("p_brand") != "Brand#1")
-        & (~F.col("p_type").like("MEDIUM%"))
-        & (F.col("p_size").isin(1, 5, 10, 15, 20, 25, 30, 35))
-    )
-    return (
-        t["lineitem"]
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .join(
-            F.broadcast(bad_supp),
-            F.col("l_suppkey") == F.col("bad_key"),
-            "left_anti",
-        )
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(
-            F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size"
-        )
-    )
-
-
+# ------------------------------------------------------------------ q16
+# Parts/supplier relationship (tpch/16.sql). partsupp is absent, so the
+# part-supplier association is observed through lineitem.
 ORACLE["q16"] = """
 select p_brand, p_type, p_size, count(distinct l_suppkey) as supplier_cnt
 from lineitem, part
@@ -850,18 +366,15 @@ order by supplier_cnt desc, p_brand, p_type, p_size
 """
 
 
-# --------------------------------------------------------------------- q17
-@_q("q17")
+# ------------------------------------------------------------------ q17
+# Small-quantity-order revenue (tpch/17.sql): correlated scalar AVG. The
+# AVG is decimal sum / count, so the 0.2 * avg threshold is bit-identical in
+# both engines.
 def q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-quantity-order revenue (tpch/17.sql): correlated scalar AVG
-    subquery → per-part AVG window. The avg is decimal-sum / count so the
-    0.2·avg threshold is bit-identical across engines.
-
-    Scale notes: lineitem is joined to the selective part filter FIRST and
-    the per-part AVG threshold is a window over that filtered join — one
-    lineitem scan, one shuffle on p_partkey (previously the threshold
-    aggregated ALL partkeys, a full extra fact-table shuffle for ~1/100 of
-    the groups)."""
+    """The correlated per-part AVG as a window over the part-filtered join:
+    one lineitem scan and one shuffle on p_partkey. The plan Catalyst
+    derives from the text aggregates all of lineitem per part and joins
+    it back, which measured 2.3x slower at sf0.1 on 4 cores."""
     t = load_tables(spark, sf_dir, "lineitem", "part")
     part = t["part"].where(
         (F.col("p_brand") == "Brand#3") & (F.col("p_type") == "SMALL")
@@ -901,37 +414,9 @@ where p_partkey = l_partkey
 """
 
 
-# --------------------------------------------------------------------- q18
-@_q("q18")
-def q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Large volume customer (tpch/18.sql): IN over an agg-HAVING subquery
-    + top-100. o_totalprice ties broken by o_orderkey."""
-    t = load_tables(spark, sf_dir, "customer", "orders", "lineitem")
-    big = (
-        t["lineitem"]
-        .groupBy(F.col("l_orderkey").alias("big_orderkey"))
-        .agg(F.sum(dec("l_quantity")).alias("qty"))
-        .where(F.col("qty").cast("double") > 300.0)
-        .select("big_orderkey")
-    )
-    return (
-        t["orders"]
-        .join(big, F.col("o_orderkey") == F.col("big_orderkey"), "left_semi")
-        .join(t["customer"], F.col("c_custkey") == F.col("o_custkey"))
-        .join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            F.col("o_orderdate").cast("date").alias("o_orderdate"),
-            "o_totalprice",
-        )
-        .agg(dsum(dec("l_quantity")).alias("sum_qty"))
-        .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
-        .limit(100)
-    )
-
-
+# ------------------------------------------------------------------ q18
+# Large volume customer (tpch/18.sql): IN over an agg-HAVING subquery and a
+# top-100; o_orderkey breaks o_totalprice ties.
 ORACLE["q18"] = f"""
 select
     c_name, c_custkey, o_orderkey,
@@ -952,38 +437,9 @@ limit 100
 """
 
 
-# --------------------------------------------------------------------- q19
-@_q("q19")
-def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Discounted revenue (tpch/19.sql): 3-way OR of conjunction blocks.
-    p_container/l_shipmode absent → blocks use brand/size/quantity."""
-    t = load_tables(spark, sf_dir, "lineitem", "part")
-    b1 = (
-        (F.col("p_brand") == "Brand#1")
-        & (F.col("p_size").between(1, 5))
-        & (F.col("l_quantity") >= 1)
-        & (F.col("l_quantity") <= 11)
-    )
-    b2 = (
-        (F.col("p_brand") == "Brand#2")
-        & (F.col("p_size").between(1, 10))
-        & (F.col("l_quantity") >= 10)
-        & (F.col("l_quantity") <= 20)
-    )
-    b3 = (
-        (F.col("p_brand") == "Brand#3")
-        & (F.col("p_size").between(1, 15))
-        & (F.col("l_quantity") >= 20)
-        & (F.col("l_quantity") <= 30)
-    )
-    return (
-        t["lineitem"]
-        .join(t["part"], F.col("p_partkey") == F.col("l_partkey"))
-        .where(b1 | b2 | b3)
-        .agg(dsum(revenue()).alias("revenue"))
-    )
-
-
+# ------------------------------------------------------------------ q19
+# Discounted revenue (tpch/19.sql): an OR of three conjunction blocks.
+# p_container/l_shipmode are absent, so the blocks use brand, size, quantity.
 ORACLE["q19"] = f"""
 select {sql_dsum(SQL_REV)} as revenue
 from lineitem, part
@@ -997,44 +453,9 @@ where p_partkey = l_partkey
 """
 
 
-# --------------------------------------------------------------------- q20
-@_q("q20")
-def q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Potential part promotion (tpch/20.sql): nested IN subqueries.
-    partsupp absent → supplier shipped-quantity over lineitem stands in for
-    availqty."""
-    t = load_tables(spark, sf_dir, "supplier", "nation", "lineitem", "part")
-    blue_parts = t["part"].where(F.col("p_name").like("blue%")).select(
-        F.col("p_partkey").alias("bp_key")
-    )
-    big_shippers = (
-        t["lineitem"]
-        .where(
-            (F.col("l_shipdate") >= ts("1997-01-01"))
-            & (F.col("l_shipdate") < ts("1998-01-01"))
-        )
-        .join(blue_parts, F.col("l_partkey") == F.col("bp_key"), "left_semi")
-        .groupBy(F.col("l_suppkey").alias("bs_key"))
-        .agg(F.sum(dec("l_quantity")).alias("qty"))
-        .where(F.col("qty").cast("double") > 100.0)
-        .select("bs_key")
-    )
-    asia_nations = t["nation"].where(F.col("n_regionkey") == 2).select(
-        F.col("n_nationkey").alias("an_key")
-    )
-    return (
-        t["supplier"]
-        .join(big_shippers, F.col("s_suppkey") == F.col("bs_key"), "left_semi")
-        .join(
-            F.broadcast(asia_nations),
-            F.col("s_nationkey") == F.col("an_key"),
-            "left_semi",
-        )
-        .select("s_name", "s_acctbal")
-        .orderBy("s_name")
-    )
-
-
+# ------------------------------------------------------------------ q20
+# Potential part promotion (tpch/20.sql): nested IN subqueries. partsupp is
+# absent, so the supplier's shipped quantity stands in for availqty.
 ORACLE["q20"] = """
 select s_name, s_acctbal
 from supplier
@@ -1052,61 +473,10 @@ order by s_name
 """
 
 
-# --------------------------------------------------------------------- q21
-@_q("q21")
-def q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Suppliers who kept orders waiting (tpch/21.sql): EXISTS + NOT EXISTS
-    self-joins on lineitem. commitdate/receiptdate absent → "late" :=
-    l_shipdate > o_orderdate.
-
-    The EXISTS/NOT-EXISTS pair is rewritten as per-order distinct-supplier
-    counts (the standard q21 decorrelation):
-      EXISTS l2 (other supplier in the order)      ⇔ n_supp(order) ≥ 2
-      NOT EXISTS l3 (other LATE supplier in order) ⇔ n_late_supp(order) = 1
-    both exact because the probe row's own supplier always appears in both
-    sets.
-
-    Scale notes: `late` is computed ONCE and its per-order late-supplier
-    count is a window over it (previously `late` was built twice and
-    lineitem shuffled twice more through row-level semi/anti joins). Two
-    lineitem scans total (late + the all-suppliers count), all joins keyed
-    on l_orderkey."""
-    t = load_tables(
-        spark, sf_dir, "supplier", "lineitem", "orders", "nation"
-    )
-    f_orders = t["orders"].where(F.col("o_orderstatus") == "F")
-    li = t["lineitem"]
-    late = (
-        li.join(f_orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .where(F.col("l_shipdate") > F.col("o_orderdate"))
-        .select("l_orderkey", "l_suppkey")
-    )
-    w = Window.partitionBy("l_orderkey")
-    late_flagged = late.withColumn(
-        "n_late_supp", F.size(F.collect_set("l_suppkey").over(w))
-    )
-    all_supp = li.groupBy(F.col("l_orderkey").alias("a_orderkey")).agg(
-        F.countDistinct("l_suppkey").alias("n_supp")
-    )
-    return (
-        late_flagged.where(F.col("n_late_supp") == 1)
-        .join(
-            all_supp.where(F.col("n_supp") >= 2),
-            F.col("l_orderkey") == F.col("a_orderkey"),
-            "left_semi",
-        )
-        .join(t["supplier"], F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(
-            F.broadcast(t["nation"].where(F.col("n_name") == "NATION_4")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.col("numwait").desc(), "s_name")
-        .limit(100)
-    )
-
-
+# ------------------------------------------------------------------ q21
+# Suppliers who kept orders waiting (tpch/21.sql): EXISTS and NOT EXISTS
+# over lineitem. commitdate/receiptdate are absent, so a line is late when
+# l_shipdate > o_orderdate.
 ORACLE["q21"] = """
 select s_name, count(*) as numwait
 from supplier, lineitem l1, orders, nation
@@ -1133,42 +503,10 @@ limit 100
 """
 
 
-# --------------------------------------------------------------------- q22
-@_q("q22")
-def q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global sales opportunity (tpch/22.sql): substring country code (from
-    c_name digits — c_phone absent), IN list, scalar AVG subquery,
-    NOT EXISTS anti-join (every customer has orders in this data, so the
-    anti-join excludes customers with *urgent* orders instead)."""
-    t = load_tables(spark, sf_dir, "customer", "orders")
-    codes = ["11", "17", "23", "29", "31", "41", "47"]
-    cust = t["customer"].withColumn(
-        "cntrycode", F.substring("c_name", 17, 2)
-    ).where(F.col("cntrycode").isin(codes))
-    avg_bal = cust.where(F.col("c_acctbal") > 0.0).agg(
-        (F.sum(dec("c_acctbal")).cast("double") / F.count(F.lit(1))).alias(
-            "avg_bal"
-        )
-    )
-    return (
-        cust.crossJoin(F.broadcast(avg_bal))
-        .where(F.col("c_acctbal") > F.col("avg_bal"))
-        .join(
-            t["orders"]
-            .where(F.col("o_orderpriority") == "1-URGENT")
-            .select("o_custkey"),
-            F.col("c_custkey") == F.col("o_custkey"),
-            "left_anti",
-        )
-        .groupBy("cntrycode")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            dsum(dec("c_acctbal")).alias("totacctbal"),
-        )
-        .orderBy("cntrycode")
-    )
-
-
+# ------------------------------------------------------------------ q22
+# Global sales opportunity (tpch/22.sql). c_phone is absent, so the country
+# code is two digits of c_name. Every customer has orders, so NOT EXISTS
+# excludes the customers with urgent orders instead.
 ORACLE["q22"] = f"""
 select
     cntrycode,
@@ -1192,3 +530,7 @@ from (
 group by cntrycode
 order by cntrycode
 """
+
+
+QUERIES: dict = {name: sql_query(name, text) for name, text in ORACLE.items()}
+QUERIES["q17"] = q17

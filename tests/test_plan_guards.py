@@ -20,8 +20,6 @@ import __spark_entry__ as entry
 # so the allowlist cannot silently accumulate unaudited BNLJs (r6
 # verdict task #8). The failure message below quotes this contract.
 BNLJ_ALLOWED = {
-    "q11": "scalar-subquery threshold: exactly 1 row broadcast to the agg",
-    "q22": "scalar-subquery avg balance: exactly 1 row broadcast",
     "lsh_candidate_growth": (
         "per-subset output row: two 1-row aggregate frames (candidate "
         "count x max bucket) scalar-crossed — never the corpus"

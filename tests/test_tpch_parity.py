@@ -4,6 +4,7 @@
 import pytest
 
 from duckdb_wasm_spark.plans import tpch
+from duckdb_wasm_spark.plans._util import sql_query
 from duckdb_wasm_spark.testing import assert_parity
 
 
@@ -19,8 +20,15 @@ def test_reference_sqlite_variants_parity(spark, sf_dir, oracle):
     driver gate must hash-match their determinized oracles."""
     from duckdb_wasm_spark.plans import reference_sql
 
-    if not reference_sql.QUERIES:
-        pytest.skip("reference corpus not mounted")
     assert set(reference_sql.QUERIES) == {"ref_q7_sqlite", "ref_q8_sqlite"}
     for name, fn in reference_sql.QUERIES.items():
         assert_parity(fn(spark, sf_dir), reference_sql.ORACLE[name], oracle, name)
+
+
+def test_sql_query_rejects_non_query_text(spark, sf_dir):
+    """A registry text that translates to a statement other than a
+    query must fail with an error naming the query, never reach
+    spark.sql."""
+    fn = sql_query("ddl_text", "CREATE TABLE t (a INTEGER)")
+    with pytest.raises(ValueError, match="ddl_text"):
+        fn(spark, sf_dir)
