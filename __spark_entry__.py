@@ -48,225 +48,36 @@ def _registries():
     return modules
 
 
-# Emission priority for the driver's bounded correctness walk (~50
-# rows/round, insertion order).  Round-3 verdict finding #2: the long-
-# green TPC-H/micro/extras queries sat first and starved every LLM-
-# pipeline operator out of the window for two rounds running.  Order is
-# therefore: (a) queries the driver has NEVER gated, (b) queries whose
-# implementation changed after their last green row, then (c) the
-# long-stable corpus — TPC-H/micro/extras — and finally the rows-only
-# (no-oracle) ML comparison points.  Revisit each round: move anything
-# newly green out of (a)/(b) and anything rewritten back into (b).
-#
-# ROUND-5 ROTATION (applied): CORRECTNESS_r04 gated 50 rows — 44 LLM/
-# extension rows green, q1–q4 green, and SIX reds (corpus_stats,
-# sample_token_budget, sample_split, corpus_mix_weights,
-# sample_pack_sequences, text_lm_score — an oracle HUGEINT typing bug,
-# fixed r5 with cast(sum(…) as bigint)).  The r4-green names fall to
-# tier (c); the window below is exactly the 41 registry names WITHOUT
-# an r4-green row: the 6 fixed reds first (their oracles changed — must
-# re-certify before anything else), the 6 consolidated extra_* queries
-# the driver has never seen under their current names, then the
-# r3-certified stable corpus (q5–q22, micro_*, the 4 unchanged-name
-# extras) whose rows are now two rounds old.
-#
-# ROUND-6 ROTATION (applied): CORRECTNESS_r05 came back 50/50 green,
-# so every oracle-backed query now has a green row dated r4 or r5.
-# This window is therefore: (a) new/rewritten in round 6 —
-# sim_topk_ivf_trained (new) and text_tfidf_topk (plan rewritten:
-# explode-trap fix + broadcast-df); (b) the 41 r4-green names without
-# an r5 row, oldest rows first — led by the two embedding-LSH queries
-# whose shared oracle text was refactored in r5 (verdict "what's
-# wrong" #1), then the TPC-H/reference stragglers, then the r4 LLM
-# corpus in its original emission order.  The 50 r5-green names fall
-# to tier (c) registry order.
-#
-# ROUND-7 ROTATION (applied): CORRECTNESS_r06 came back 50/50 green;
-# the r6 window cut off after text_vocab_topk, leaving exactly the 17
-# r4-green tail names two rounds stale (r6 verdict "what's wrong" #2).
-# This window is therefore: (a) new / rewritten-since-green in round 7
-# — embed_covariance (its r6 green row predates the late-r6 mapInPandas
-# rewrite at HEAD) plus every query added or replanned this round, and
-# ann_brp_ml, which has NEVER had a driver row (rows-only by design;
-# the priority loop below now admits no-oracle names so it can finally
-# be emitted — r6 verdict "what's wrong" #1); (b) the 17 r4-stale
-# names, oldest emission first; (c) the r5-green corpus (q1, q5–q22,
-# micro_*, extras), whose rows are now two rounds old themselves.
-# ROUND-8 ROTATION (applied): CORRECTNESS_r07 came back 50/50 green
-# (ann_brp_ml got its first driver row, recorded no_oracle as
-# designed), so the stalest greens are now: dedup_minhash_ml (r2 —
-# six rounds), the 36 r5-green corpus names the r7 window cut off
-# (q17–q22, micro_*, text_stats family, sampling/chunking corpus,
-# extras), then the 45 r6-green names. This window is therefore:
-# (a) the seventeen queries ADDED in round 8 (graph family x3, KMV/HLL-
-# merge sketches, source-overlap matrix, bucketed-join gate, parquet
-# stream sink, sessionization, column profiling, streaming Python
-# DataSource, LSH band-tuning sweep, Python UDTF, end-to-end
-# near-dedup composition); (b) changed-since-green — the r8 advice commit backtick-
-# quoted the dot_fold/_sq_flat F.expr fast paths, textually changing
-# the generated expressions of every embedding-similarity plan, so
-# one representative per consumer family re-gates (embedding-LSH
-# dedup pair, brute/IVF/PQ similarity); (c) dedup_minhash_ml;
-# (d) the 36 r5-green names in emission order; (e) backfill from the
-# r6-green corpus oldest-first.
-# ROUND-9 ROTATION (applied): CORRECTNESS_r08 came back 49/50 green +
-# dedup_minhash_ml rows-only by design. Latest-green census entering
-# r9: 18 names r5-green (three rounds stale), 42 r6-green. This
-# window is therefore: (a) new in round 9 — knn_graph_recall (the
-# embed_knn_graph recall audit), embed_quantization_audit (SQ8 error),
-# embed_dim_truncation_audit (MRL recall), events_dpp_join (dynamic
-# partition pruning), text_robust_stats (grouped-map applyInPandas
-# median/MAD), dedup_incremental_ingest (batch-vs-index probe),
-# events_stream_static_join (8th streaming gate); (b) rewritten in round 9 —
-# corpus_source_divergence (the vocab cap is now real and in the
-# oracle text), events_sessionize (oracle total-order tie-break fix),
-# sketch_hist_quantiles (broadcast direction flip), the five graph
-# queries (shared _edges memo; pagerank additionally moved to one
-# generated spark.sql) and embed_knn_graph (pair_dot extracted — pure
-# code motion); (c) the two rows-only ML rows so their driver checks
-# do not go stale (r8 verdict task 8); (d) the 18 r5-green names —
-# listed ALPHABETICALLY, not emission order (r9 advice: the original
-# label said emission order but the applied list was alphabetized;
-# all 18 were gated green in r9 so no window harm resulted);
-# (e) backfill from the 42 r6-green names,
-# oldest-emission first — the cut tail (events_stream_*, asof,
-# range_join, pipeline_clean_corpus, quality_buckets, ref_q7_sqlite,
-# sample_balanced, sim_topk_ivf_trained, extra_lateral/stats/unpivot,
-# decontaminate_ngram, corpus_zipf_slope, events_daily/key_skew/
-# rolling/session/sliding/tumbling) rolls to the ROUND-10 window
-# front.
-# ROUND-11 ROTATION (applied): CORRECTNESS_r10 came back 48/50 green +
-# the two rows-only ML rows. Latest-green census entering r11 (from
-# the committed CORRECTNESS files over the 174-name registry):
-# 1 name r6-green (events_stream_stateful), 43 r7, 37 r8, 43 r9,
-# 50 r10. This window (r10 verdict #3: oldest-first, nothing older
-# than r8 afterwards): (a) REWRITTEN in round 11 — extra_stats (price
-# quantile moved to the two-level radix cumsum, qty to a domain-
-# bounded histogram; r10 verdict #1) and the four class-key-window
-# fixes (corpus_length_quantiles -> cumulative histogram;
-# sample_token_budget / sample_pack_sequences / sample_mixture_budget
-# -> ranks.keyed_prefix_sum; r10 verdict #2) — their plans changed so
-# they must re-gate first; (b) the single r6-green name; (c) all 43
-# r7-green names, alphabetical. 5+1+43 = 49 <= the ~50-row window;
-# everything after follows in registry order.
-# ROUND-11 CONTINUATION: the driver restarted the round, so the
-# ELEVEN operators added in the continuation session (never gated —
-# tier a0 of the r11 window) led that window ahead of the first
-# session's five rewrites; 11+5+1 = 17 of the ~50-row window, the
-# r7-stale tail following alphabetically, and the committed
-# REPLICA_r11.json (same-session, full registry) backstopped
-# whatever the window cut off.
-# ROUND-12 ROTATION (applied): CORRECTNESS_r11 came back 50/50 green.
-# Latest-green census entering r12 (committed CORRECTNESS files over
-# the 185-name registry): 10 names r7-green (sketch_hll_distinct, the
-# four source_* roundtrips, the five text_* rows — the r11 verdict #2
-# shortfall), 36 r8, 40 r9, 47 r10, 50 r11, plus the two rows-only
-# ML rows last rows-checked r10. This window LEADS with: (a0) THREE
-# never-gated round-12 additions (semdedup_cell_growth,
-# text_bm25_topk, corpus_novelty); (a) THIRTEEN rewritten in round 12
-# — dedup_semdedup (ranked assignment + pair verdicts now one disk
-# artifact), sample_dsir (Gumbel u clamped away from 0, r11 advice),
-# the six graph queries (edge/degree frames now disk artifacts), the
-# two stream-stream join gates (outer layout at one data file; inner
-# drops the trailing no-data batch), ivf_kmeanspp_init (candidate set
-# persisted), and the two cluster-assignment queries (CC labels
-# persisted) — plans/expressions changed so they re-gate; (b) the 10
-# r7-stale names, alphabetical (r11 verdict #2: the r12 window MUST
-# lead with these); (c) the two rows-only ML rows so their driver
-# checks stay fresh; (d) the 35 remaining r8-green names,
-# alphabetical (dedup_clusters moved up to tier (a)) — 3+13+10+2 = 28
-# rows lead them, so the last ~13 roll past the ~50-row window to
-# lead r13; REPLICA_r12 (same-session, full-registry, 188/188 ok)
-# backstops the cut.
-# ROUND-13 ROTATION (applied): CORRECTNESS_r12 came back 48/50 full
-# green + the two rows-only ML rows. Latest-green census entering r13
-# (committed CORRECTNESS files over the 188-name registry): 13 names
-# r8-green (five rounds stale — exactly the tier-(d) tail the r12
-# window cut), 35 r9, 45 r10, 45 r11, 50 r12. This window LEADS with:
-# (a) TWELVE rewritten in round 13 — the six graph queries (pagerank/LPA
-# iterations moved from BROADCAST to co-partitioned SHUFFLE_HASH
-# joins; n_nodes now served from the edge artifact's persisted
-# metadata; deg_sym reloads raw), semdedup_cell_growth (both subsets'
-# occupancy frames now one disk artifact), text_bm25_topk (persisted
-# lexical index + precomputed per-posting impacts),
-# text_tfidf_topk (consumes the same index), and dedup_jaccard_prefix
-# (persisted gram/prefix index + exact-integer threshold pushdown),
-# and dedup_ngram_jaccard + dedup_containment (their posting pipeline
-# now serves the shingle arrays from the same persisted gram index) —
-# plans changed so they re-gate first; (b) the 13 r8-stale names,
-# alphabetical (r12 verdict #6: the r13 window MUST lead with these);
-# (c) the two rows-only ML rows so their driver checks stay fresh;
-# (d) backfill from the 33 remaining r9-green names, alphabetical
-# (dedup_containment moved up to tier (a)) —
-# 12+13+2 = 27 rows lead them, so the last ~10 roll past the ~50-row
-# window to lead r14; REPLICA_r13 (same-session, full-registry)
-# backstops the cut.
-# ROUND-14 ROTATION (applied): CORRECTNESS_r13 came back 48/50 full
-# green + the two rows-only ML rows. Latest-green census entering r14
-# (committed CORRECTNESS files over the 188-name registry): 10 names
-# r9-green (the tail the r13 window cut), 45 r10, 44 r11, 39 r12,
-# 48 r13. This window LEADS with: (a) SIXTEEN rewritten in round 14
-# — the three PCA consumers (embed_pca_power/embed_abtt/
-# embed_covariance: μ and the top component are now ONE disk-persisted
-# artifact, similarity._pca_artifact), text_lm_score +
-# corpus_ppl_buckets (the bigram-LM scores are a persisted ingest
-# artifact, text._lm_artifact), dedup_substring/_capped +
-# dedup_span_removal (shared persisted positional-window index,
-# dedup._window_index_memo), dedup_minhash + dedup_lsh_tuning
-# (persisted full-corpus MinHash signatures,
-# dedup._minhash_sigs_memo; minhash also serves the gram-index
-# arrays), and the six graph queries (artifact reload path changed:
-# conf-free per-file union respread + n_nodes meta fallback);
-# (b) the 10 r9-stale names, alphabetical (r13
-# verdict #6: nothing in the registry may stay older than r10-green
-# after this round); (c) the two rows-only ML rows so their driver
-# checks stay fresh; (d) backfill from the 44 remaining r10-green
-# names, alphabetical — 16+10+2 = 28 rows lead them, so the last ~22
-# roll past the ~50-row window to lead r15; REPLICA_r14
-# (same-session, full-registry) backstops the cut.
-# ROUND-15 ROTATION (applied): CORRECTNESS_r14 came back 48/50 full
-# green + the two rows-only ML rows. Latest-green census entering r15
-# (committed CORRECTNESS files over the 188-name registry): 22 names
-# r10-green (the tail the r14 window cut), 40 r11, 37 r12, 39 r13,
-# 48 r14. This window LEADS with: (a) the SIX r15 verdict-task
-# consumers — knn_graph_recall + sim_topk_brute (both now serve the
-# shared persisted panel_truth artifact, and the recall sweep was
-# restructured to a single-pass plan: similarity.panel_truth_memo,
-# r14 verdict #2) and events_stream_outer_join / ann_brp_ml /
-# graph_kcore / graph_common_neighbors (the four A/B'd wall rows —
-# AB_r15_acea964.json cleared the code, their gates re-certify the
-# behavior at HEAD); (b) the 21 remaining r10-green names,
-# alphabetical (r14 verdict #4: nothing in the registry may stay
-# older than r11-green after this round); (c) the other rows-only ML
-# row so its driver check stays fresh; (d) backfill from the 40
-# r11-green names, alphabetical — 6+21+1 = 28 rows lead them, so the
-# last ~18 roll past the ~50-row window to lead r16; REPLICA_r15
-# (same-session, full-registry) backstops the cut.
-# ROUND-16 ROTATION (applied AFTER the round's last rewrite — r15
-# verdict #2c: the r15 window was fixed BEFORE that round's main
-# rewrite commit landed, so 12 structurally rewritten queries shipped
-# with no driver-side oracle row; this window leads with exactly
-# those, plus everything round 16 touched). Latest-green census
-# entering r16 (committed CORRECTNESS files over the 188-name
-# registry): 18 names r11-green, 36 r12, 38 r13, 46 r14, 50 r15.
-# Tiers: (a) REWRITTEN-SINCE-GREEN — the 12 r15 rewrites the r15
-# window missed (grouped-map MMR, single-pass LSH sweep, skew-stress/
-# kmv/bloom checkpoints, quality_scores + artifact-served corpus
-# consumers) and the 6 further r16-touched names (dedup_jaccard_prefix
-# distinct-late, graph_kcore lazy-deg fold, the two CC-cluster
-# queries and pipeline_canonical_best under the lazy CC folds,
-# sketch_hll_distinct's single-pass gridless rollup;
-# sketch_bloom_decontaminate was additionally restructured to the
-# dense-bitmask probe in r16); (b) the 15 remaining r11-green names,
-# five rounds stale, alphabetical; (c) the two rows-only ML rows so
-# their driver checks stay fresh; (d) backfill from the 29 remaining
-# r12-green names, alphabetical — 18+15+2 = 35 rows lead them, so the
-# tail rolls past the ~50-row window to lead r17; REPLICA_r16
-# (same-session, full-registry, regenerated at end-of-round HEAD)
-# backstops the cut.
+# Emission order for the bounded correctness walk, which gates about 50
+# rows per walk in insertion order, so this order decides which queries
+# get a fresh oracle row. When the long-green TPC-H/micro corpus led, the
+# LLM-pipeline operators got no rows for two walks running.
+# The rule:
+#   (a) never-gated queries, then queries rewritten since their last
+#       green row (a changed plan makes the old row prove nothing);
+#   (b) then green queries, oldest green row first;
+#   (c) rows-only (no-oracle) queries last. `queries()` puts every
+#       unlisted rows-only query at the end; the two ML rows are listed
+#       inside the window on purpose, so their rows-only checks stay
+#       fresh.
+# When a query is rewritten, move it to the head of (a); when a listed
+# name gets a green row, move it down.
 _GATE_PRIORITY = [
-    # (a) rewritten since last green row: the 12 r15 rewrites the r15
-    # window missed (r15 verdict #2c), then the r16-touched names
+    # (a) never gated, or rewritten since the last green row
+    "extra_windows",
+    "extra_set_ops",
+    "extra_grouping",
+    "extra_full_outer",
+    "extra_recursive_walk",
+    "extra_lateral",
+    "extra_unpivot",
+    "profile_columns",
+    "dedup_exact",
+    "text_robust_stats",
+    "asof_click_attribution",
+    "events_funnel",
+    "events_session",
+    "events_anomaly",
     "sim_topk_mmr",
     "dedup_lsh_tuning",
     "dedup_skew_stress",
@@ -286,9 +97,7 @@ _GATE_PRIORITY = [
     "pipeline_canonical_best",
     "sketch_hll_distinct",
     "sketch_cms_heavy_hitters",
-    # (b) r11-green, five rounds stale (alphabetical; the other r11
-    # names are in tier (a); sketch_cms_heavy_hitters moved up to (a)
-    # — its single-count-frame rewrite landed in r16)
+    # (b) oldest green row first
     "q11",
     "q12",
     "q13",
@@ -303,11 +112,10 @@ _GATE_PRIORITY = [
     "ref_q8_sqlite",
     "sample_pack_sequences",
     "sample_token_budget",
-    # (c) rows-only (no-oracle) ML rows
+    # the two rows-only ML rows, listed inside the window (see (c))
     "ann_brp_ml",
     "dedup_minhash_ml",
-    # (d) r12-green, four rounds stale (alphabetical; tier-(a) names
-    # excluded)
+    # (b) continued
     "dedup_semdedup",
     "events_scd2",
     "events_stream_join",
@@ -321,7 +129,6 @@ _GATE_PRIORITY = [
     "micro_scalar_fns",
     "micro_sort",
     "micro_topk",
-    "profile_columns",
     "q17",
     "q18",
     "q19",
@@ -346,7 +153,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     oracle-backed queries in registry order, then rows-only
     (no-oracle) queries last — the driver walks this dict in insertion
     order under a bounded correctness window, so the order IS the
-    gating policy (round-2 finding #1, round-3 finding #2)."""
+    gating policy."""
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     oracles: dict[str, str] = {}
     for m in _registries():
@@ -354,10 +161,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         oracles.update(m.ORACLE)
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for k in _GATE_PRIORITY:
-        # No-oracle names are admitted on purpose: the driver records a
-        # rows-only check for them, which is still a driver row (r6
-        # verdict: ann_brp_ml was starved of ANY row for six rounds
-        # because this loop used to require an oracle entry).
+        # No-oracle names are admitted on purpose: the walk records a
+        # rows-only check for them, which is still a gate row (when
+        # this loop required an oracle, ann_brp_ml got no row at all).
         if k in merged:
             out[k] = merged[k]
     out.update({k: v for k, v in merged.items() if k in oracles})

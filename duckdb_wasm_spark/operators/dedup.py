@@ -57,6 +57,7 @@ from duckdb_wasm_spark.operators._text import (
     toks,
     trigrams,
 )
+from duckdb_wasm_spark.plans._util import sql_query
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
@@ -72,24 +73,9 @@ def _q(name):
 
 
 # ----------------------------------------------------------- dedup_exact
-@_q("dedup_exact")
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: group by md5(lower(trim(text))), keep the smallest
-    doc_id per group. One hash-shuffle on the fingerprint — the canonical
-    distributed exact dedup."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select(
-            F.md5(F.lower(F.trim(F.col("text")))).alias("fp"), "doc_id"
-        )
-        .groupBy("fp")
-        .agg(
-            F.min("doc_id").alias("keeper_doc_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-    )
-
-
+# Exact dedup: group by md5(lower(trim(text))), keep the smallest
+# doc_id per group. One hash-shuffle on the fingerprint — the canonical
+# distributed exact dedup.
 ORACLE["dedup_exact"] = """
 select md5(lower(trim(text))) fp,
        min(doc_id) keeper_doc_id,
@@ -97,6 +83,7 @@ select md5(lower(trim(text))) fp,
 from documents
 group by 1
 """
+QUERIES["dedup_exact"] = sql_query("dedup_exact", ORACLE["dedup_exact"])
 
 
 # -------------------------------------------------- dedup_ngram_jaccard

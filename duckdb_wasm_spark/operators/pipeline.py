@@ -429,7 +429,7 @@ def corpus_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     pow(tokens, α) per row plus a sum over the handful of post-aggregate
     source rows, and the weight is rounded to 12 decimals — far coarser
     than the ~1-ulp pow/reassociation divergence between engines (the
-    policy set by the trig corpus / extra_corr).
+    policy set by the trig corpus / extra_stats' corr).
 
     Scale: one partial+final hash aggregate by source over the scan; the
     normalizing window runs over the tiny aggregated frame (rows =

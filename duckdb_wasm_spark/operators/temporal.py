@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from duckdb_wasm_spark.plans._util import dec, dsum, sql_dec, sql_dsum
+from duckdb_wasm_spark.plans._util import dec, dsum, sql_dec, sql_dsum, sql_query
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
@@ -50,39 +50,12 @@ def _q(name):
 
 
 # ---------------------------------------------- asof_click_attribution
-_ASOF_ORDER = ("ts", "is_p", "event_id")  # total order; clicks sort
-# before purchases at the same instant, so ts >= click_ts is inclusive
-
-
-@_q("asof_click_attribution")
-def asof_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Purchase→click as-of attribution: each purchase is matched to
-    the latest click by the same user at or before its timestamp, plus
-    the running count of prior clicks. LEFT semantics: purchases with
-    no prior click keep NULL click_ts."""
-    ev = load_table(spark, sf_dir, "events").where(
-        F.col("event_type").isin("click", "purchase")
-    )
-    tagged = ev.select(
-        "event_id",
-        "user_id",
-        "ts",
-        (F.col("event_type") == "purchase").cast("int").alias("is_p"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(*_ASOF_ORDER)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    is_click = F.col("is_p") == 0
-    return (
-        tagged.withColumn("click_ts", F.max(F.when(is_click, F.col("ts"))).over(w))
-        .withColumn("n_prior_clicks", F.count(F.when(is_click, F.lit(1))).over(w))
-        .where(F.col("is_p") == 1)
-        .select("event_id", "user_id", "ts", "click_ts", "n_prior_clicks")
-    )
-
-
+# Purchase→click as-of attribution: each purchase is matched to the
+# latest click by the same user at or before its timestamp, plus the
+# running count of prior clicks. LEFT semantics: purchases with no prior
+# click keep NULL click_ts. The window order (ts, is_p, event_id) is
+# total; clicks sort before purchases at the same instant, so
+# ts >= click_ts is inclusive.
 _SQL_ASOF_W = (
     "(partition by user_id order by ts, is_p, event_id rows unbounded preceding)"
 )
@@ -102,6 +75,9 @@ select event_id, user_id, ts, click_ts, n_prior_clicks
 from merged
 where is_p = 1
 """
+QUERIES["asof_click_attribution"] = sql_query(
+    "asof_click_attribution", ORACLE["asof_click_attribution"]
+)
 
 
 # ---------------------------------------------- range_join_price_bands
@@ -266,65 +242,15 @@ group by cohort_date, offset_days
 
 
 # ---------------------------------------------------------- events_funnel
+# Strict sequential funnel: users who signed up, then viewed AFTER the
+# signup, then purchased AFTER that view — per-step user counts plus
+# conversion from step 1. "Strict" means each step's timestamp must
+# exceed the previous step's FIRST occurrence (the standard
+# ordered-funnel definition; unordered co-occurrence would overcount).
+# Three filtered min-aggregates chained by user_id equi-joins: every
+# shuffle is on the same high-cardinality user key, no window over the
+# raw stream, counts only.
 _FUNNEL = ("signup", "view", "purchase")  # strictly ordered steps
-
-
-@_q("events_funnel")
-def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strict sequential funnel: users who signed up, then viewed AFTER
-    the signup, then purchased AFTER that view — per-step user counts
-    plus conversion from step 1. "Strict" means each step's timestamp
-    must exceed the previous step's FIRST occurrence (the standard
-    ordered-funnel definition; unordered co-occurrence would overcount).
-
-    Scale: three filtered min-aggregates chained by user_id equi-joins —
-    every shuffle is on the same high-cardinality user key (AQE can
-    reuse the exchange), no window over the raw stream, counts only."""
-    ev = load_table(spark, sf_dir, "events")
-    s1 = (
-        ev.where(F.col("event_type") == _FUNNEL[0])
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    s2 = (
-        ev.where(F.col("event_type") == _FUNNEL[1])
-        .join(s1, "user_id")
-        .where(F.col("ts") > F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    s3 = (
-        ev.where(F.col("event_type") == _FUNNEL[2])
-        .join(s2, "user_id")
-        .where(F.col("ts") > F.col("t2"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-    # fully declarative (no driver-side .count() loop): per-step counts
-    # union into a 3-row frame; the step-1 scalar is pulled alongside via
-    # an unpartitioned window (3 rows total — single-partition window is
-    # free here, and it keeps the plan BNLJ-free for the plan guards)
-    steps = None
-    for i, (step_df, name) in enumerate(zip((s1, s2, s3), _FUNNEL)):
-        c = step_df.agg(F.count(F.lit(1)).alias("n_users")).select(
-            F.lit(i + 1).alias("step"),
-            F.lit(name).alias("event_type"),
-            "n_users",
-        )
-        steps = c if steps is None else steps.unionByName(c)
-    w = Window.partitionBy(F.lit(1))
-    n_first = F.max(
-        F.when(F.col("step") == 1, F.col("n_users"))
-    ).over(w)
-    return steps.select(
-        "step",
-        "event_type",
-        "n_users",
-        (F.col("n_users").cast("double") / n_first).alias(
-            "conv_from_first"
-        ),
-    )
-
 
 ORACLE["events_funnel"] = f"""
 with s1 as (
@@ -347,6 +273,7 @@ select step, event_type, n_users,
          / (select n_users from counts where step = 1) conv_from_first
 from counts
 """
+QUERIES["events_funnel"] = sql_query("events_funnel", ORACLE["events_funnel"])
 
 
 # --------------------------------------------------- events_key_skew

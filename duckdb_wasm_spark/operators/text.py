@@ -38,6 +38,7 @@ from duckdb_wasm_spark.operators._text import (
     toks,
     trigrams,
 )
+from duckdb_wasm_spark.plans._util import sql_query
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
@@ -387,7 +388,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = (tf_cnt / doc_len) · ln(N / df), computed from four integer
     counts with one double expression applied identically in both
     engines, rounded past the libm-ulp zone (same policy as
-    extra_corr); ranking orders by the ROUNDED score so the cut is
+    extra_stats' corr); ranking orders by the ROUNDED score so the cut is
     identical too, ties broken on the token.
 
     Plan (100 TB): the TF and df tables come from the disk-persisted
@@ -1129,57 +1130,15 @@ limit {PMI_TOP}
 
 
 # ------------------------------------------------------ text_robust_stats
-@_q("text_robust_stats")
-def text_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source ROBUST length statistics (median + MAD) via a
-    grouped-map `applyInPandas` — the one vectorized-Python surface
-    the corpus did not yet gate (mapInPandas: multimodal;
-    applyInPandasWithState: streaming; pandas_udf scalar: similarity).
-    Median/MAD are the outlier-robust location/scale a curation
-    pipeline reports next to the mean (one boilerplate crawl of 10^6
-    identical short docs shifts a mean, barely moves a median), and
-    they are genuinely holistic — no distributive/algebraic form — so
-    the per-group pandas function is the honest implementation, not a
-    UDF-for-the-sake-of-it.
-
-    Scale honesty (100 TB): grouped-map ships EACH GROUP to one
-    worker as an Arrow batch — correct only while a group's rows fit
-    worker memory. Per-source length vectors are 8 bytes/doc (10^9
-    docs/source = 8 GB — borderline), so at full scale the exact form
-    keys on (source, shard) with a median-of-medians merge, or the
-    pipeline reads sketch_hist_quantiles (the mergeable estimator this
-    repo pairs with this exact baseline; same pairing as
-    hist_quantiles vs corpus_length_quantiles).
-
-    Determinism: medians of bigint vectors are exact doubles (odd n:
-    a value; even n: the mean of two integers — both exactly
-    representable), numpy and DuckDB agree bit-for-bit; MAD folds the
-    same property over half-integer deviations."""
-    import pandas as pd
-
-    def stats(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-
-        x = pdf["n_chars"].to_numpy(dtype="float64")
-        med = float(np.median(x))
-        mad = float(np.median(np.abs(x - med)))
-        return pd.DataFrame(
-            [[pdf["source"].iloc[0], len(x), med, mad]],
-            columns=["source", "n_docs", "median_chars", "mad_chars"],
-        )
-
-    docs = load_table(spark, sf_dir, "documents").select("source", "n_chars")
-    return (
-        docs.groupBy("source")
-        .applyInPandas(
-            stats,
-            "source string, n_docs bigint, median_chars double, "
-            "mad_chars double",
-        )
-        .orderBy("source")
-    )
-
-
+# Per-source robust length statistics: median and MAD, the
+# outlier-robust location and scale a curation pipeline reports next to
+# the mean (a crawl of 10^6 identical short docs shifts a mean, barely
+# a median). Both are holistic: the exact median aggregate buffers each
+# group's values, which holds while one source's lengths (8 bytes/doc)
+# fit a task; past that, key on (source, shard) and merge, or read
+# sketch_hist_quantiles, the mergeable estimator. Medians of bigints are
+# exact doubles (a value, or the mean of two integers), so both engines
+# agree bit-for-bit, and MAD inherits that over half-integer deviations.
 ORACLE["text_robust_stats"] = """
 with med as (
   select source, count(*) n_docs,
@@ -1194,6 +1153,9 @@ select m.source, m.n_docs, m.median_chars, a.mad_chars
 from med m join mad a using (source)
 order by source
 """
+QUERIES["text_robust_stats"] = sql_query(
+    "text_robust_stats", ORACLE["text_robust_stats"]
+)
 
 
 # ----------------------------------------------------- shared lexical index

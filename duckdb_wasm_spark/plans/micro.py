@@ -15,12 +15,12 @@ CARDINALITY() gives the expected row count per query as a function of
 the input tables (checked in tests, mirroring the reference's embedded
 asserts).
 
-The six queries above run their DuckDB-dialect oracle text through the
-dialect translator (`sql_query`). Two micro queries stay DataFrame plans:
-micro_scalar_fns, because the translator has no `xor(`, and
-micro_topk_per_group, because its text quotes `"value"`, which Spark
-reads as a string literal outside SparkDB's ANSI double-quoted-identifier
-mode.
+The six queries above and profile_columns run their DuckDB-dialect
+oracle text through the dialect translator (`sql_query`). Two micro
+queries stay DataFrame plans: micro_scalar_fns, because the translator
+has no `xor(`, and micro_topk_per_group, because its text quotes
+`"value"`, which Spark reads as a string literal outside SparkDB's ANSI
+double-quoted-identifier mode.
 
 Scale notes: sort is a global range-partitioned sort (Spark samples
 boundaries — the one unavoidable all-shuffle op); topk never
@@ -447,38 +447,14 @@ PROFILE_COLS = (
 )
 
 
-@_q("profile_columns")
-def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-pass COLUMN PROFILING of lineitem — per column: null
-    count and exact distinct count, one row per column. The data-
-    quality sweep every ingestion pipeline runs before trusting a new
-    drop — as a UNION of 11 single-column aggregates. On columnar
-    storage this is the right profiling plan: column pruning gives
-    every branch a one-column scan, so total bytes read equal ONE full
-    scan of the table, each branch's distinct-aggregate state is
-    per-column (map-side combined, value-domain-bounded shuffle), and
-    the branches schedule concurrently in one job. The alternative —
-    one multi-distinct aggregate — makes Catalyst Expand-replicate the
-    row stream 11x before the shuffle (measured 3.3s vs 1.0s here at
-    sf0.1: the replication tax, paid at any scale).
-
-    Determinism: counts only — no floats, no engine-specific
-    min/max-over-strings formatting."""
-    li = load_table(spark, sf_dir, "lineitem")
-    branches = [
-        li.agg(
-            F.lit(c).alias("column_name"),
-            (F.count(F.lit(1)) - F.count(c)).alias("n_nulls"),
-            F.countDistinct(c).alias("n_distinct"),
-        )
-        for c in PROFILE_COLS
-    ]
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.orderBy("column_name")
-
-
+# Single-pass column profiling of lineitem: null count and exact
+# distinct count per column, one row per column, as a UNION of 11
+# single-column aggregates. Column pruning gives every branch a
+# one-column scan, so the bytes read equal one full scan; each branch's
+# distinct state is per-column and map-side combined; the branches run
+# concurrently in one job. One multi-distinct aggregate instead makes
+# Catalyst Expand-replicate the rows 11x before the shuffle (3.3s vs
+# 1.0s at sf0.1). Counts only, so no float or string-format drift.
 ORACLE["profile_columns"] = "\nunion all\n".join(
     f"""select '{c}' column_name,
        count(*) - count({c}) n_nulls,
@@ -486,6 +462,9 @@ ORACLE["profile_columns"] = "\nunion all\n".join(
 from lineitem"""
     for c in PROFILE_COLS
 ) + "\norder by column_name"
+QUERIES["profile_columns"] = sql_query(
+    "profile_columns", ORACLE["profile_columns"]
+)
 
 
 # ---------------------------------------- source_pydatasource_stream

@@ -12,8 +12,11 @@ aggregates keyed on (window, type) — one shuffle; the sliding window
 fans each row into window/slide copies (2× here) before the partial
 agg, exactly like Spark's streaming expansion. Session windows shuffle
 by user and sort within partitions (Spark's session_window does the
-merge sort-side; the oracle's lag/cumsum-islands form is the same
-algorithm spelled out).
+merge sort-side; the lag/cumsum-islands text is the same algorithm
+spelled out).
+
+events_session and events_anomaly run their DuckDB-dialect text through
+the dialect translator (`plans/_util.sql_query`).
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_wasm_spark.plans._util import dec, dsum, sql_dec, sql_dsum
+from duckdb_wasm_spark.plans._util import dec, dsum, sql_dec, sql_dsum, sql_query
 from duckdb_wasm_spark.tables import load_table, write_events_daily
 
 QUERIES: dict = {}
@@ -103,34 +106,33 @@ group by 1
 # --------------------------------------------------------- events_session
 SESSION_GAP_MIN = 10
 
-
-@_q("events_session")
-def events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user session windows with a 10-minute inactivity gap —
-    Spark's session_window (the streaming stateful session operator) in
-    batch form. Output: user, session start, event count.
-
-    Round-3 bench flagged a 0.87→1.01s drift; measured head-to-head at
-    sf0.1/local[32] (round 4): this plan = 1 exchange(user_id) + 1 sort
-    at 1.01s best-of-3, vs 1.17s for the lag+cumsum islands rewrite
-    with the identical exchange/sort count — session_window's merge
-    already reuses the user_id exchange, the islands form just adds two
-    window passes before the aggregate. The drift was environment
-    noise, not plan cost; keeping session_window (which is also the
-    operator the streaming path runs incrementally)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("w"),
-            "user_id",
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n",
-        )
-    )
+# Per-user sessions with a 10-minute inactivity gap: user, session
+# start, event count. The islands form: a new session starts where the
+# gap from the user's previous event is >= the gap; a running sum of
+# those starts numbers the sessions. One exchange by user_id. The
+# streaming gate events_stream_session runs Spark's session_window over
+# the same events and is checked against this text.
+ORACLE["events_session"] = f"""
+with marked as (
+  select user_id, ts,
+         case when lag(ts) over (partition by user_id order by ts)
+                   is null
+               or ts - lag(ts) over (partition by user_id order by ts)
+                   >= interval {SESSION_GAP_MIN} minutes
+              then 1 else 0 end new_session
+  from events),
+numbered as (
+  select user_id, ts,
+         sum(new_session) over (partition by user_id order by ts
+                                rows unbounded preceding) session_id
+  from marked)
+select user_id, min(ts) session_start, count(*) n
+from numbered
+group by user_id, session_id
+"""
+QUERIES["events_session"] = sql_query(
+    "events_session", ORACLE["events_session"]
+)
 
 
 # ---------------------------------------------------- events_daily_pruned
@@ -236,28 +238,6 @@ order by 1
 """
 
 
-# islands form: a new session starts where the gap from the previous
-# event of the same user is >= the gap threshold
-ORACLE["events_session"] = f"""
-with marked as (
-  select user_id, ts,
-         case when lag(ts) over (partition by user_id order by ts)
-                   is null
-               or ts - lag(ts) over (partition by user_id order by ts)
-                   >= interval {SESSION_GAP_MIN} minutes
-              then 1 else 0 end new_session
-  from events),
-numbered as (
-  select user_id, ts,
-         sum(new_session) over (partition by user_id order by ts
-                                rows unbounded preceding) session_id
-  from marked)
-select user_id, min(ts) session_start, count(*) n
-from numbered
-group by user_id, session_id
-"""
-
-
 # ------------------------------------------------------- events_rolling
 ROLL_SECONDS = 600  # rolling 10-minute lookback
 
@@ -322,67 +302,16 @@ ANOM_MIN_BUCKETS = 12  # need at least this much history to score
 ANOM_Z = 2.0
 
 
-@_q("events_anomaly")
-def events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-hour event-count anomaly flags per event type: z-score of
-    each hour's count against the trailing ANOM_TRAIL hourly buckets
-    (excluding the current hour), flagged at |z| > 2 — the monitoring
-    query an event pipeline alerts on, and in streaming form the same
-    windowed aggregate + stateful baseline.
-
-    Determinism without decimals: counts are integers, the window
-    sums are exact longs, and mean/variance/z use only IEEE
-    correctly-rounded ops (+,-,*,/,sqrt — no transcendental), so the
-    doubles are bit-identical across engines. Hours with fewer than
-    ANOM_MIN_BUCKETS of history or zero variance score NULL.
-
-    Plan (100 TB): one (hour, type) hash aggregate, then one window
-    shuffled by event_type ordered by hour — baseline state is 24 longs
-    per type, constant memory at any scale."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("hour_start"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("hour_start")
-        .rowsBetween(-ANOM_TRAIL, -1)
-    )
-    d = hourly.select(
-        "hour_start",
-        "event_type",
-        "n",
-        F.count(F.lit(1)).over(w).alias("n_hist"),
-        F.sum("n").over(w).alias("s1"),
-        F.sum(F.col("n") * F.col("n")).over(w).alias("s2"),
-    )
-    nh = F.col("n_hist").cast("double")
-    mean = F.col("s1").cast("double") / nh
-    var = (
-        nh * F.col("s2").cast("double")
-        - F.col("s1").cast("double") * F.col("s1").cast("double")
-    ) / (nh * nh)
-    z = F.when(
-        (F.col("n_hist") >= ANOM_MIN_BUCKETS) & (var > 0),
-        (F.col("n").cast("double") - mean) / F.sqrt(var),
-    )
-    return d.select(
-        "hour_start",
-        "event_type",
-        "n",
-        z.alias("z"),
-        # coalesce: unscored hours are "not anomalous", and a non-null
-        # boolean column normalizes identically in both engines
-        F.coalesce(F.abs(z) > ANOM_Z, F.lit(False)).alias("is_anomaly"),
-    )
-
-
+# Per-hour event-count anomaly flags per event type: z-score of each
+# hour's count against the trailing ANOM_TRAIL hourly buckets (excluding
+# the current hour), flagged at |z| > 2 — the monitoring query an event
+# pipeline alerts on. Counts are integers, the window sums exact longs,
+# and mean/variance/z use only correctly-rounded ops (+ - * / sqrt), so
+# the doubles are bit-identical across engines. Hours with fewer than
+# ANOM_MIN_BUCKETS of history or zero variance score NULL, and an
+# unscored hour is not anomalous. One (hour, type) hash aggregate, then
+# one window shuffled by event_type ordered by hour: the baseline state
+# is 24 longs per type at any scale.
 ORACLE["events_anomaly"] = f"""
 with hourly as (
   select date_trunc('hour', ts) hour_start, event_type, count(*) n
@@ -411,6 +340,9 @@ select hour_start, event_type, n, z,
        coalesce(abs(z) > {ANOM_Z}, false) is_anomaly
 from z
 """
+QUERIES["events_anomaly"] = sql_query(
+    "events_anomaly", ORACLE["events_anomaly"]
+)
 
 
 # ------------------------------------------------- events_stream_tumbling

@@ -42,7 +42,7 @@ def main() -> int:
         capture_output=True, text=True,
     ).stdout.strip()
     qs = entrymod.queries()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = _build_session(cpus)
     load_table(spark, sf_dir, "lineitem").count()
     spark.range(cpus * 4, numPartitions=cpus).mapInPandas(

@@ -13,6 +13,8 @@ compared across arms by the caller (the providers must be
 result-invariant; the oracle gate already pins the default provider).
 """
 
+import gc
+import hashlib
 import json
 import os
 import sys
@@ -39,7 +41,16 @@ DEFAULT_QUERIES = (
 )
 
 
+USAGE = (
+    "usage: python scripts/state_store_sweep.py "
+    f"<{'|'.join(PROVIDERS)}> [q1,q2,...]"
+)
+
+
 def main() -> int:
+    if len(sys.argv) not in (2, 3) or sys.argv[1] not in PROVIDERS:
+        print(USAGE, file=sys.stderr)
+        return 2
     provider = sys.argv[1]
     names = (
         sys.argv[2].split(",") if len(sys.argv) > 2 else list(DEFAULT_QUERIES)
@@ -54,7 +65,7 @@ def main() -> int:
     from duckdb_wasm_spark.tables import load_table
 
     qs = entrymod.queries()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = _build_session(cpus)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass", PROVIDERS[provider]
@@ -75,16 +86,12 @@ def main() -> int:
         out["queries"][n] = walls
         # order-insensitive row fingerprint so the caller can check the
         # backends are result-identical
-        import hashlib
-
         out["rows"][n] = (
             len(rows),
             hashlib.md5(
                 "\n".join(sorted(map(str, rows))).encode()
             ).hexdigest(),
         )
-        import gc
-
         gc.collect()
         try:
             spark.sparkContext._jvm.System.gc()
