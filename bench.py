@@ -2,8 +2,8 @@
 """Benchmark entry point (driver contract, BASELINE.md "bench").
 
 Runs the registered query corpus at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and
-prints exactly ONE JSON line on stdout:
+the sf0.1 test corpus) on ``local[$SPARK_GRAFT_CPUS]`` (default: the
+machine's core count) and prints exactly ONE JSON line on stdout:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q1": sec, ...}, "sf": 0.1}
@@ -13,6 +13,11 @@ warm-up is session overhead, not plan cost — the reference's
 benchmark.js harness likewise samples warm), then each query timed as
 plan-build + execute-to-driver (collect). Everything else (logs, Spark
 chatter) goes to stderr so stdout stays machine-parseable.
+
+The full per-query map goes to BENCH_FULL.json (default sf_dir and core
+count, no DuckDB interleave) or a suffixed sidecar; with
+SPARK_GRAFT_DUCKDB=1 the side-by-side goes to ORACLE_BENCH*.json. Both
+carry a `machine` block (cores, memory, pyspark and duckdb versions).
 """
 
 from __future__ import annotations
@@ -48,105 +53,29 @@ def _build_session(cpus: int):
     )
 
 
-def _stage_layout(spark, sf_dir: str, cpus: int) -> str:
-    """Rewrite each table once into a cpus-way multi-file layout.
+def _machine() -> dict:
+    """Where the numbers came from: cores, memory, engine versions."""
+    import duckdb
+    import pyspark
 
-    The generator's parquet files carry ONE row group per table, and a
-    row group is the indivisible unit of parallel read in both engines —
-    so every scan of the original layout is effectively single-threaded
-    no matter how many cores the session has. That is an artifact of the
-    tiny test files, not of the queries: at the 100 TB design point a
-    table is thousands of files × row groups and scan parallelism is the
-    norm. Staging restores the representative layout for a one-time
-    cost reported in the JSON (excluded from per-query timings, like
-    the JVM warm-up); BOTH engines then read the SAME staged files, so
-    the DuckDB side-by-side stays apples-to-apples.
-
-    Measured tradeoff at sf0.1/32 cpus (see ORACLE_BENCH*.json): the
-    staged layout speeds individual heavy scans ~3x in Spark but adds
-    32-way task-scheduling overhead to every small query, a wash over
-    this corpus (57.8s vs 57.0s), while DuckDB's near-zero per-row-
-    group cost cuts its total 69.0s -> 27.0s. Default is therefore OFF
-    (SPARK_GRAFT_STAGE=1 opts in) — the raw layout is also what the
-    driver's round-over-round BENCH comparisons assume.
-
-    PERSISTENT (r12): the staged copy lives in a fingerprinted
-    warehouse dir (the stream-layout discipline, live._layout_dir's
-    shape) instead of a fresh tempdir per run. A fresh tempdir
-    invalidated every index-artifact fingerprint on every staged run —
-    the r11 staged-cold column was mostly one-time index builds
-    against a layout that would never be seen again. The staged copy
-    IS environment setup (the multi-file landing layout a deployment
-    already has), so it persists and the artifacts built against it
-    persist with it; regenerated testdata re-stages automatically via
-    the source fingerprint."""
-    from duckdb_wasm_spark.artifacts import (
-        _ROOT,
-        _fingerprint,
-        _prune_dead_sources,
-        _source_key,
-        process_lock,
-    )
-    from duckdb_wasm_spark.tables import TABLES
-
-    fp = _fingerprint(sf_dir, tuple(TABLES))
-    base = os.path.normpath(os.path.join(_ROOT, "..", "bench_staged"))
-    src_dir = os.path.join(base, _source_key(sf_dir))
-    out = os.path.join(src_dir, f"{fp}_c{cpus}")
-    marker = os.path.join(out, "_STAGED_COMMITTED")
-    if os.path.exists(marker):
-        return out
-    import shutil
-
-    # cross-process exclusion, same as persisted_frames' build (two
-    # staged benches racing would tear this rmtree-then-write too)
-    with process_lock("bench_staged"):
-        if os.path.exists(marker):  # built while we waited
-            return out
-        # Supersede ONLY this sf_dir's stale-fingerprint layouts (same
-        # discipline as live._layout_dir / artifacts.persisted_frames —
-        # an early version rmtree'd the whole base, so alternating
-        # staged benches over sf0.01 and sf0.1 re-staged every run and
-        # orphaned every index artifact fingerprinted against the
-        # deleted dirs). Same-fingerprint layouts for OTHER cpu counts
-        # stay: they are not stale, just differently sliced.
-        for entry in os.listdir(src_dir) if os.path.isdir(src_dir) else []:
-            if entry != "_SOURCE_DIR" and not entry.startswith(f"{fp}_c"):
-                shutil.rmtree(
-                    os.path.join(src_dir, entry), ignore_errors=True
-                )
-        _prune_dead_sources(base)
-        os.makedirs(out, exist_ok=True)
-        with open(os.path.join(src_dir, "_SOURCE_DIR"), "w") as fh:
-            fh.write(os.path.abspath(sf_dir))
-        for t in TABLES:
-            (
-                spark.read.parquet(f"{sf_dir}/{t}.parquet")
-                .repartition(cpus)
-                .write.mode("overwrite")
-                .parquet(f"{out}/{t}.parquet")
-            )
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return out
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return {
+        "nproc": os.cpu_count(),
+        "mem_gb": round(mem / 2**30, 1),
+        "pyspark": pyspark.__version__,
+        "duckdb": duckdb.__version__,
+    }
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1").rstrip("/")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     sf = _sf_from_dir(sf_dir)
 
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
     spark = _build_session(cpus)
-
-    stage = os.environ.get("SPARK_GRAFT_STAGE", "0") == "1"
-    stage_sec = 0.0
-    if stage:
-        t0 = time.perf_counter()
-        sf_dir = _stage_layout(spark, sf_dir, cpus)
-        stage_sec = round(time.perf_counter() - t0, 3)
 
     # Warm-up: touch the fact table & spin up codegen/shuffle machinery once,
     # and spawn the Python/Arrow worker pool (otherwise the corpus's first
@@ -161,12 +90,11 @@ def main() -> int:
 
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
     # DuckDB side-by-side setup happens BEFORE the main loop because
-    # the two engines now run INTERLEAVED per query (r13 verdict #4):
-    # the old all-Spark-then-all-DuckDB order let OS page-cache state
+    # the two engines run INTERLEAVED per query: an
+    # all-Spark-then-all-DuckDB order lets OS page-cache state
     # accumulated by one engine's full pass systematically favor the
-    # other (the staged artifact's 257s→175s DuckDB swing between
-    # passes), so the committed ratio depended on which engine ran
-    # last. Alternating the within-query engine order (ABBA: query i
+    # other, so the ratio would depend on which engine ran last.
+    # Alternating the within-query engine order (ABBA: query i
     # even = Spark first, odd = DuckDB first, cold+warm both sides
     # each turn) makes cache exposure symmetric by construction.
     duck_enabled = os.environ.get("SPARK_GRAFT_DUCKDB") == "1"
@@ -181,13 +109,10 @@ def main() -> int:
 
         con = duckdb.connect()
         con.execute(f"set threads = {cpus}")
-        # staged tables are DIRECTORIES of part files; original
-        # layout is a single file per table
-        glob = "/*.parquet" if stage else ""
         for t in TABLES:
             con.execute(
                 f"create view {t} as "
-                f"select * from read_parquet('{sf_dir}/{t}.parquet{glob}')"
+                f"select * from read_parquet('{sf_dir}/{t}.parquet')"
             )
         osql = entrymod.oracle_sql()
 
@@ -305,42 +230,24 @@ def main() -> int:
         for k, v in timings.items()
         if k in slowest or v < 0
     }
-    # the canonical committed artifact name is reserved for the
-    # documented methodology (default sf0.1 dir, DEFAULT 32 cpus, raw
-    # layout, NO DuckDB interleave — r14 code review: with ABBA, a
-    # DUCKDB=1 run executes DuckDB between the Spark runs of each
-    # query, which perturbs the Spark walls; such a run must not
-    # overwrite the numbers round-over-round comparisons assume); any
-    # other config writes a suffixed sidecar so a quick sf0.01,
-    # staged, side-by-side, or low-core scaling run can never silently
-    # replace the committed numbers (round-5 ADVICE; the cpus term is
-    # r15 verdict #4 — the driver's 8-core scaling probe silently
-    # overwrote BENCH_FULL.json because the guard checked SF_DIR/
-    # stage/duckdb but not cpus)
+    # the canonical committed artifact names are reserved for the
+    # documented methodology: default sf0.1 dir and this machine's
+    # core count. BENCH_FULL.json also excludes the DuckDB interleave,
+    # which runs DuckDB between the Spark runs of each query and so
+    # perturbs the Spark walls. Any other config writes a suffixed
+    # sidecar, so a quick sf0.01, side-by-side or low-core run never
+    # replaces the committed numbers.
     canonical = (
         os.environ.get("SPARK_GRAFT_SF_DIR") in (None, "/root/testdata/sf0.1")
-        and cpus == 32
-        and not stage
-        and not duck_enabled
-    )
-    # the ORACLE_BENCH.json name needs its own flag WITHOUT the
-    # duck_enabled term: that term only exists to keep interleaved runs
-    # off BENCH_FULL.json, but the oracle artifact is BY DEFINITION an
-    # interleaved run — sharing `canonical` made the `elif canonical`
-    # branch below unreachable and the committed ORACLE_BENCH.json
-    # could never be regenerated by bench.py (r14 ADVICE)
-    oracle_canonical = (
-        os.environ.get("SPARK_GRAFT_SF_DIR") in (None, "/root/testdata/sf0.1")
-        and cpus == 32
-        and not stage
+        and cpus == os.cpu_count()
     )
     full_name = (
         "BENCH_FULL.json"
-        if canonical
+        if canonical and not duck_enabled
         else f"BENCH_FULL_sf{sf}_c{cpus}"
-        f"{'_staged' if stage else ''}"
         f"{'_duckdb' if duck_enabled else ''}.json"
     )
+    machine = _machine()
     with open(
         os.path.join(
             os.path.dirname(os.path.abspath(__file__)), full_name
@@ -360,30 +267,7 @@ def main() -> int:
                 # between them (ABBA) — not comparable to duckdb=false
                 # runs round-over-round
                 "duckdb_interleaved": duck_enabled,
-                # Core-scaling honesty (r15 verdict #4/#7): at sf0.1
-                # most walls are CORE-COUNT-INSENSITIVE FLOORS — job/
-                # stage scheduling, streaming micro-batch commits,
-                # artifact-reload jobs, single-row-group scans, py4j
-                # plan construction — so 8-vs-32-core ratios near 1.0
-                # name a floor, not ignored parallelism (the session
-                # master honors $SPARK_GRAFT_CPUS; see the _c8 sidecar
-                # for the measured low-core run). r15 measured ratios:
-                # core-sensitive (>=1.2): knn_graph_recall 1.53,
-                # events_stream_outer_join 1.22, dedup_minhash_ml 1.25,
-                # dedup_edit_verify 1.21; floor-bound (~1.0): most of
-                # the corpus; over-parallelized tiny stages (<0.9):
-                # ann_brp_ml 0.80 (~2M-row candidate shuffle across 32
-                # partitions — ANN_BRP_ATTRIBUTION_r16.json),
-                # lsh_candidate_growth 0.85, source_pydatasource_stream
-                # 0.84 (driver-side Python read), dedup_lsh_tuning
-                # 0.87. Genuine scaling signal needs sf >= 1.
-                "scaling_note": (
-                    "sf0.1 walls are mostly per-query fixed floors "
-                    "(scheduling, micro-batch commits, reload jobs); "
-                    "8v32-core ratios near 1.0 are floor-bound rows, "
-                    "not fake parallelism — see comment in bench.py "
-                    "and BENCH_FULL_sf0.1_c8.json"
-                ),
+                "machine": machine,
             },
             f,
             indent=1,
@@ -400,8 +284,6 @@ def main() -> int:
         "n_queries": len(timings),
         "n_failed": len(timings) - len(ok),
         "cpus": cpus,
-        "staged_layout": stage,
-        "stage_sec": stage_sec,
     }
 
     # Optional DuckDB side-by-side (round-3 verdict task #5): with
@@ -425,13 +307,12 @@ def main() -> int:
             "sf": sf,
             "cpus": cpus,
             "runs": runs,
-            # ABBA per-query engine interleave (r13 verdict #4): the
-            # ratio no longer depends on which engine's full pass ran
-            # last in the process
+            # ABBA per-query engine interleave: the ratio does not
+            # depend on which engine's full pass ran last
             "interleaved": True,
-            # free-text run annotation (e.g. which pass of a staged
-            # build/steady pair this is) so the artifact itself names
-            # its conditions instead of a commit message doing it
+            # free-text run annotation (e.g. whether the artifact
+            # store was empty) so the artifact itself names its
+            # conditions
             "note": os.environ.get("SPARK_GRAFT_BENCH_NOTE", ""),
             "n_comparable": len(duck_ok),
             "spark_total_sec": spark_comparable,
@@ -440,23 +321,19 @@ def main() -> int:
                 spark_comparable / duck_total, 3
             ) if duck_total else None,
             # cold = run-1 walls on BOTH sides: the Spark cold total
-            # contains every session-memo build (r9 advice — the
-            # warm ratio alone compared warm-memo Spark to per-run
-            # DuckDB); the cold/cold ratio is the no-amortization view
+            # contains every session-memo build (the warm ratio alone
+            # compares warm-memo Spark to per-run DuckDB); the
+            # cold/cold ratio is the no-amortization view
             "spark_total_cold_sec": spark_comparable_cold,
             "duckdb_total_cold_sec": duck_total_cold,
             "ratio_cold_spark_over_duckdb": round(
                 spark_comparable_cold / duck_total_cold, 3
             ) if duck_total_cold else None,
-            # cold-residual decomposition (r14 verdict #5): cold -
-            # warm per engine IS each engine's per-session floor
-            # (Spark: artifact reload + whole-stage-codegen JIT on
-            # first run of each plan, flat in data per the graph
-            # ledger; DuckDB: buffer re-reads). The staged cold ratio
-            # exceeding the warm ratio is exactly this pair of
-            # premiums — named here with the run's own numbers so the
-            # artifact pins its residual instead of a commit message
-            # asserting it.
+            # cold-residual decomposition: cold - warm per engine IS
+            # each engine's per-session floor (Spark: artifact reload
+            # + whole-stage-codegen JIT on first run of each plan;
+            # DuckDB: buffer re-reads), named with the run's own
+            # numbers.
             "cold_premium": {
                 "spark_sec": round(
                     spark_comparable_cold - spark_comparable, 3
@@ -473,11 +350,8 @@ def main() -> int:
                 for k in duck
             },
         }
-        side["staged_layout"] = stage
-        side["stage_sec"] = stage_sec
-        if stage:
-            artifact = "ORACLE_BENCH_STAGED.json"
-        elif oracle_canonical:
+        side["machine"] = machine
+        if canonical:
             artifact = "ORACLE_BENCH.json"
         else:  # same guard as BENCH_FULL: never clobber the committed name
             artifact = f"ORACLE_BENCH_sf{sf}_c{cpus}.json"

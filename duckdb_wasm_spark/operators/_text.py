@@ -127,10 +127,6 @@ def sql_bigrams(t: str) -> str:
 
 
 # ------------------------------------------------------- hashed tokens
-def md5_of(col: Column) -> Column:
-    return F.md5(col)
-
-
 def tok_hash60(tok: Column) -> Column:
     """60-bit integer hash of a token: leading 15 hex chars of md5.
     Same value as DuckDB ('0x' || substr(md5(t),1,15))::bigint."""

@@ -180,7 +180,7 @@ def dedup_ngram_jaccard(
     docs = load_table(spark, sf_dir, "documents")
     if max_df is None:
         # full corpus: the shingle arrays come from the persisted gram
-        # index (one tokenize ever, shared with dedup_jaccard_prefix)
+        # index (one tokenize ever, shared with the other consumers)
         inter = _posting_pair_overlaps(
             docs, arrays=_gram_index_memo(spark, sf_dir)["arrays"]
         )
@@ -597,13 +597,6 @@ def minhash_pairs(
         .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
     )
-
-
-def _minhash_ctes() -> str:
-    """The shared CTE chain (docs → shingle hashes → signatures → bands →
-    verified candidates) used by the dedup_minhash oracle and reused by
-    the dedup_clusters oracle."""
-    return _minhash_sql_parts()[0]
 
 
 def _minhash_sql_parts(source: str = "documents") -> tuple[str, str]:
@@ -1105,12 +1098,6 @@ def sql_dot(a: str, b: str) -> str:
 def cosine(a, b):
     return dot_fold(a, b) / (
         F.sqrt(dot_fold(a, a)) * F.sqrt(dot_fold(b, b))
-    )
-
-
-def sql_cosine(a: str, b: str) -> str:
-    return (
-        f"{sql_dot(a, b)} / (sqrt({sql_dot(a, a)}) * sqrt({sql_dot(b, b)}))"
     )
 
 
@@ -2848,56 +2835,29 @@ PFX_T_DEN = 5  # threshold as the exact rational 1/5 == JACCARD_THRESHOLD
 
 
 def _gram_index_memo(spark: SparkSession, sf_dir: str):
-    """DISK-PERSISTED trigram-shingle index over `documents` (r12
-    verdict #7: dedup_jaccard_prefix was the slowest registry row at
-    6.2s, dominated by re-tokenizing + re-ranking what a production
-    near-dup service materializes once on ingest). Frames:
+    """DISK-PERSISTED trigram-shingle index over `documents`: the
+    "arrays" frame, (doc_id, grams, n) — each document's distinct
+    trigram-shingle array with its cardinality, the tokenize pass a
+    near-dup service materializes once on ingest. Consumers:
+    dedup_ngram_jaccard (and so dedup_jaccard_prefix), dedup_minhash's
+    verify, the pipeline near-dup compositions and text novelty.
+    Served raw (a plain scan; consumers shuffle or broadcast it).
+    Measured against re-tokenizing per query (sf0.1, 4 cores, warm
+    medians): dedup_ngram_jaccard 2.64s served vs 3.97s recomputed.
+    Reload ≡ rebuild is pinned in tests/test_artifacts.py.
 
-    - "arrays": (doc_id, grams, n) — the distinct trigram-shingle
-                array per document with its cardinality.
-    - "prefix": (doc_id, gram) — the AllPairs/PPJoin prefix postings
-                under the global rarest-first (df, gram) token order
-                at threshold 1/PFX_T_DEN: the candidate-generation
-                index itself. The threshold rides the artifact
-                fingerprint, so retuning it rebuilds.
-
-    Both frames reload raw (plain scans): "arrays" is broadcast to
-    the verify stage, "prefix" has one self-join consumer that
-    shuffles it on gram anyway. Reload ≡ rebuild is
-    pinned in tests/test_artifacts.py.
-
-    At 100 TB both frames are written BUCKETED — "prefix" by gram (the
-    candidate self-join becomes bucket-local) and "arrays" by doc_id
-    (the verify join co-partitions with the candidate stream once the
-    doc→grams map outgrows broadcast)."""
-    from pyspark.sql.window import Window
-
+    At 100 TB the frame is written BUCKETED by doc_id, so the verify
+    joins co-partition with the candidate stream once the doc→grams
+    map outgrows broadcast."""
     from duckdb_wasm_spark.artifacts import persisted_frames
 
     def _build():
         docs = load_table(spark, sf_dir, "documents")
-        arrays = (
-            _gram_arrays(docs)
-            .select("doc_id", "grams", F.size("grams").alias("n"))
-            .localCheckpoint()
-        )
-        grams = arrays.select(
-            "doc_id", "n", F.explode("grams").alias("gram")
-        )
-        dfc = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-        w = Window.partitionBy("doc_id").orderBy("df", "gram")
-        prefix = (
-            grams.join(dfc, "gram")
-            .withColumn("rn", F.row_number().over(w))
-            .where(
-                F.col("rn")
-                <= F.col("n")
-                - F.expr(f"(n + {PFX_T_DEN - 1}) div {PFX_T_DEN}")
-                + F.lit(1)
+        return {
+            "arrays": _gram_arrays(docs).select(
+                "doc_id", "grams", F.size("grams").alias("n")
             )
-            .select("doc_id", "gram")
-        )
-        return {"arrays": arrays, "prefix": prefix}
+        }
 
     return persisted_frames(
         spark,
@@ -2905,117 +2865,23 @@ def _gram_index_memo(spark: SparkSession, sf_dir: str):
         sf_dir,
         ("documents",),
         _build,
-        layout={"arrays": "raw", "prefix": "raw"},
-        version=f"tri-v1;t_den={PFX_T_DEN}",
+        layout={"arrays": "raw"},
+        version="tri-v1",
     )
 
 
-@_q("dedup_jaccard_prefix")
-def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact trigram-Jaccard near-dup pairs via PREFIX FILTERING
-    (AllPairs/PPJoin, Bayardo et al., WWW 2007) — the third candidate
-    generator over the same ground truth as dedup_ngram_jaccard
-    (posting lists) and dedup_minhash (LSH), and the one that is both
-    LOSSLESS and sub-posting-list cheap: under a global rarest-first
-    token order, two sets can reach Jaccard >= t only if their first
-    p = n - ceil(t*n) + 1 ordered tokens share an element, so only
-    PREFIX tokens enter the candidate join — the stop-gram postings
-    that dominate the full inverted index never expand at all
-    (frequent grams sort LAST and rarely make a prefix).
-
-    Plan: the shingle arrays AND the ranked prefix postings are the
-    disk-persisted gram index (_gram_index_memo, r12 verdict #7 —
-    built once on ingest under the global rarest-first (df, gram)
-    token order, total so both engines cut identical prefixes); query
-    time is the candidate equi-join on prefix grams only plus an
-    array_intersect verify per candidate pair (JVM codegen, O(n) per
-    pair, no re-shuffle of the gram stream). Threshold arithmetic is
-    all-integer (ceil(n/5) = (n+4) div 5), so the prefix boundary is
-    engine-exact.
-
-    At 100 TB: candidate volume is bounded by PREFIX postings
-    (~(1-t)·n per doc, and biased to RARE grams — the df skew that
-    makes full posting lists quadratic works FOR the filter here);
-    the verify touches only surviving pairs. The lossless guarantee
-    is pytest-pinned: result set identical to dedup_ngram_jaccard.
-
-    Cites the same reference workload as dedup_ngram_jaccard
-    (SURVEY.md §2 dedup family)."""
-    idx = _gram_index_memo(spark, sf_dir)
-    arrays, prefix = idx["arrays"], idx["prefix"]
-    cand = (
-        prefix.select(F.col("doc_id").alias("doc_a"), "gram")
-        .join(prefix.select(F.col("doc_id").alias("doc_b"), "gram"), "gram")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    # the doc->grams map is corpus-row-sized (no pair expansion) and
-    # BROADCAST to the candidate stream, so the 788k-pair frame never
-    # shuffles through a sort-merge exchange with two 50-element
-    # arrays riding every row; at a corpus beyond broadcast,
-    # co-partition pairs and arrays on the probe id instead
-    verified = (
-        cand.join(
-            F.broadcast(
-                arrays.select(
-                    F.col("doc_id").alias("doc_a"),
-                    F.col("grams").alias("ga"),
-                    F.col("n").alias("n_a"),
-                )
-            ),
-            "doc_a",
-        )
-        .join(
-            F.broadcast(
-                arrays.select(
-                    F.col("doc_id").alias("doc_b"),
-                    F.col("grams").alias("gb"),
-                    F.col("n").alias("n_b"),
-                )
-            ),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("ga", "gb")).alias("n_common"),
-            "n_a",
-            "n_b",
-        )
-    )
-    # Threshold as the EXACT integer form: jaccard >= 1/5  <=>
-    # 6*n_common >= n_a + n_b (denominator positive: candidates share
-    # >= 1 gram). Filtering on the double ratio looked natural but
-    # Catalyst pushes the predicate into the verify join with n_common
-    # inlined, re-running the O(|grams|) array_intersect 3x per pair
-    # (measured 7.8s vs 3.3s warm at sf0.1); the integer form is
-    # pushed too — which now works FOR us: one intersect per candidate
-    # at the join, and the double jaccard below computes only for the
-    # ~256 surviving pairs.
-    # Dedup AFTER the threshold (r16, guide §2.4): the candidate join
-    # emits one row per SHARED prefix gram, and the old plan collapsed
-    # them with a full-width distinct — an exchange of the entire
-    # ~856k-row candidate stream to save 8.6% duplicate intersects
-    # (measured 855,810 raw vs 788,124 distinct at sf0.1). Verifying
-    # the raw stream instead and de-duplicating the ~290 surviving
-    # rows removes that corpus-scale exchange outright; n_common /
-    # jaccard are deterministic per pair, so the late distinct yields
-    # the identical set.
-    return (
-        verified.where(
-            F.lit(PFX_T_DEN + 1) * F.col("n_common")
-            >= F.col("n_a") + F.col("n_b")
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
-        .distinct()
-    )
+# dedup_jaccard_prefix names the prefix-filtering formulation (AllPairs/
+# PPJoin, Bayardo et al., WWW 2007): under a global rarest-first token
+# order two sets reach Jaccard >= t only if their first
+# p = n - ceil(t*n) + 1 tokens share one, so only prefix postings enter
+# the candidate join. The oracle below states that formulation; Spark
+# serves the registered query with the posting-list plan of
+# dedup_ngram_jaccard, which returns the same exact pair set. The
+# persisted-prefix plan this replaced was slower: at sf0.1 on 4 cores
+# (fresh-process ABBA, warm medians) posting lists took 2.86s and the
+# prefix plan 7.88s. test_operator_parity therefore checks the prefix
+# filter's losslessness against Spark's exact pairs.
+QUERIES["dedup_jaccard_prefix"] = dedup_ngram_jaccard
 
 
 ORACLE["dedup_jaccard_prefix"] = f"""

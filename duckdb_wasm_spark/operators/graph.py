@@ -281,9 +281,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast form even at sf0.1 (2.4s vs 3.5s warm, 4.9s vs 6.1s
     first-run: no per-iteration broadcast-build jobs)."""
     art = _edges_artifact(spark, sf_dir)
-    # overlap the two frame materializations (sym's respread job and
-    # deg_sym's raw scan setup) instead of paying them back-to-back
-    art.prefetch("sym", "deg_sym")
     ev, dv = "dws_graph_edges_sym", "dws_graph_deg"
     art["sym"].createOrReplaceTempView(ev)
     # the degree frame is the persisted "deg_sym" artifact shape —

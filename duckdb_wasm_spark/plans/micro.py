@@ -824,8 +824,7 @@ def _aqe_skew_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE splits a skewed reduce partition along MAP-OUTPUT boundaries,
     and the single-row-group testdata gives the join exchange exactly
     one mapper otherwise (nothing to split) — production facts have
-    thousands of mappers, the same layout artifact bench.py's
-    _stage_layout documents. The repartition key (event_id) is
+    thousands of mappers. The repartition key (event_id) is
     skew-free so map outputs are uniform."""
     t = load_tables(spark, sf_dir, "events", "customer")
     fact = (

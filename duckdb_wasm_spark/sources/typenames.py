@@ -55,8 +55,6 @@ _SIMPLE: dict[str, T.DataType] = {
     "interval[m]": T.YearMonthIntervalType(),
 }
 
-_TIME_UNITS = ("s", "ms", "us", "ns")
-
 
 def _parse_simple(name: str) -> T.DataType | None:
     if name in _SIMPLE:

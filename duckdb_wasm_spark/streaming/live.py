@@ -69,6 +69,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
+from duckdb_wasm_spark.artifacts import _fingerprint, committed_dir
 from duckdb_wasm_spark.tables import load_table
 
 
@@ -132,53 +133,12 @@ def no_trailing_empty_batch(spark: SparkSession):
         spark.conf.set(key, prev)
 
 
-def _layout_dir(kind: str, sf_dir: str, write) -> str:
-    """Persistent fingerprinted directory for a staged stream layout
-    (r10 verdict #5: the layouts are environment setup — the Kafka
-    topic / landing dir a deployment already HAS — so they persist
-    across sessions like the index artifacts instead of being
-    re-staged per cold session). `write(out)` performs the layout
-    build and runs UNDER a cross-process per-kind lock together with
-    the rmtree/marker protocol (r14 code review: this build was the
-    one rmtree-then-write left unserialized after persisted_frames
-    and bench._stage_layout got their flocks — two processes staging
-    the same stream layout could tear each other's files and commit a
-    torn-but-marked directory every later session replays).
-    Stale-safe: the fingerprint hashes the events table's (mtime,
-    size); superseded fingerprints of the same kind are deleted on
-    build, so disk stays bounded (the r6 accumulate-forever ADVICE
-    concern, solved by supersession instead of per-process tmpdirs)."""
-    from duckdb_wasm_spark.artifacts import (
-        _ROOT,
-        _fingerprint,
-        _prune_dead_sources,
-        _source_key,
-        process_lock,
-    )
+def _layouts_dir(kind: str) -> str:
+    """Directory of one staged stream layout kind, beside the index
+    artifacts (resolved per call: a caller may redirect the store)."""
+    from duckdb_wasm_spark import artifacts
 
-    fp = _fingerprint(sf_dir, ("events",))
-    kind_dir = os.path.normpath(
-        os.path.join(_ROOT, "..", "stream_layouts", kind)
-    )
-    src_dir = os.path.join(kind_dir, _source_key(sf_dir))
-    out = os.path.join(src_dir, fp)
-    done = os.path.join(out, "_LAYOUT_COMMITTED")
-    if os.path.exists(done):
-        return out
-    with process_lock(f"stream_layout_{kind}"):
-        if os.path.exists(done):  # built while we waited for the lock
-            return out
-        # supersede only THIS sf_dir's old fingerprints (sf0.01/sf0.1
-        # layouts coexist) and prune source keys whose dir is gone
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _prune_dead_sources(kind_dir)
-        os.makedirs(out, exist_ok=True)
-        with open(os.path.join(src_dir, "_SOURCE_DIR"), "w") as fh:
-            fh.write(os.path.abspath(sf_dir))
-        write(out)
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return out
+    return os.path.join(os.path.dirname(artifacts._ROOT), "stream_layouts", kind)
 
 
 def _staged_stream_source(
@@ -188,8 +148,10 @@ def _staged_stream_source(
     source delivers several micro-batches. The layout is environment
     setup (the stand-in for the Kafka topic / landing directory a
     deployment already has), not operator cost — it persists across
-    sessions via _layout_dir, so cold sessions replay the existing
-    landing dir instead of re-writing the table (r10 verdict #5)."""
+    sessions through the artifact store's commit protocol
+    (artifacts.committed_dir, fingerprinted on the events table), so
+    cold sessions replay the existing landing dir instead of
+    re-writing the table."""
     memo: dict = spark.__dict__.setdefault("_dws_stream_src", {})
     key = (sf_dir, n_files)
     if key not in memo:
@@ -199,9 +161,10 @@ def _staged_stream_source(
         # rejects. Cast at the staging boundary — session tz is UTC, so
         # the mapping is the identity a naive event log means.
         ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        out = _layout_dir(
-            f"roundrobin_{n_files}",
+        out = committed_dir(
+            _layouts_dir(f"roundrobin_{n_files}"),
             sf_dir,
+            _fingerprint(sf_dir, ("events",)),
             lambda out: ev.repartition(n_files)
             .write.mode("overwrite")
             .parquet(out),
@@ -237,7 +200,7 @@ def _staged_stream_source_ordered(
     never themselves certified (the watermark never passes their own
     far-future ts), so they add zero output rows. Standard punctuation
     discipline, stated rather than hidden. Persists across sessions
-    like the unordered variant (_layout_dir)."""
+    like the unordered variant."""
     memo: dict = spark.__dict__.setdefault("_dws_stream_src_ord", {})
     key = (sf_dir, n_files)
     if key not in memo:
@@ -319,7 +282,12 @@ def _staged_stream_source_ordered(
                     dst,
                     (base_mtime + n_files + i, base_mtime + n_files + i),
                 )
-        out = _layout_dir(f"ordered_{n_files}", sf_dir, _write)
+        out = committed_dir(
+            _layouts_dir(f"ordered_{n_files}"),
+            sf_dir,
+            _fingerprint(sf_dir, ("events",)),
+            _write,
+        )
         memo[key] = (out, ev.schema)
     return memo[key]
 

@@ -378,9 +378,9 @@ def events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The file source needs a DIRECTORY. Raw layout: events.parquet is
     # a FILE in the multi-table sf_dir → read the dir with a
-    # pathGlobFilter (which matches LEAF names). Staged layout
-    # (SPARK_GRAFT_STAGE): events.parquet IS a directory of part files
-    # → point at it directly; a pathGlobFilter would match zero leaves
+    # pathGlobFilter (which matches LEAF names). Spark-written layout
+    # (e.g. a test corpus): events.parquet IS a directory of part
+    # files → point at it directly; a pathGlobFilter would match zero leaves
     # and silently stream an EMPTY source (review finding, reproduced).
     path = f"{sf_dir}/events.parquet"
     raw = spark.read.parquet(path)  # raw schema, pre ts-conversion

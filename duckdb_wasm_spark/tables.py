@@ -30,11 +30,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any realistic scale factor
-# (region=5 rows, nation=25 rows always; supplier/part/customer grow with SF
-# but stay far below fact tables).
-BROADCAST_DIMS = ("region", "nation")
-
 
 def _ensure_session_conf(spark: SparkSession) -> None:
     """One-time session configuration (guarded — no repeated global

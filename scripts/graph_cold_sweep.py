@@ -22,7 +22,7 @@ data size (the irreducibility argument):
         python scripts/graph_cold_sweep.py graph_pagerank
 
 NOTE: do not run while a bench is in flight — artifact builds are now
-cross-process flock-serialized (artifacts.process_lock), so a race is
+cross-process flock-serialized (artifacts.committed_dir), so a race is
 safe but this process may block on the other's build.
 """
 
@@ -60,7 +60,7 @@ def main():
     from duckdb_wasm_spark.tables import load_table
 
     qs = entrymod.queries()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = _build_session(cpus)
     load_table(spark, sf_dir, "lineitem").count()
     # size the Python-worker pool warm-up to the configured parallelism
@@ -74,7 +74,8 @@ def main():
 
     t0 = time.perf_counter()
     art = _edges_artifact(spark, sf_dir)
-    art.prefetch(*_FRAMES[name])  # materialize (build if absent)
+    for frame in _FRAMES[name]:  # materialize (build if absent)
+        art[frame]
     reload_s = round(time.perf_counter() - t0, 3)
 
     walls = []

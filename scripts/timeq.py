@@ -6,7 +6,7 @@ Fresh session per invocation; prints cold (run 1) and warm (run 2)
 walls per query with the same warm-up discipline as bench.py.
 
 Concurrency: safe to run while a bench is in flight — artifact builds
-are cross-process flock-serialized (artifacts.process_lock), so two
+are cross-process flock-serialized (artifacts.committed_dir), so two
 processes can no longer tear each other's output dirs; worst case
 this process blocks until the other's build commits. Timings taken
 during an overlap are still contended, of course — don't trust them.
@@ -26,7 +26,7 @@ def main():
     from bench import _build_session
 
     qs = entrymod.queries()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = _build_session(cpus)
     from duckdb_wasm_spark.tables import load_table
 

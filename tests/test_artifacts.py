@@ -1,14 +1,17 @@
 """Unit tests for the disk-persisted index-artifact store
-(duckdb_wasm_spark/artifacts.py, round-10 verdict #4): the lifecycle
-properties the ANN/LSH consumers rely on — build-once, reload
-value-identical, session-memo identity, fingerprint invalidation on
-source change, supersession of stale fingerprints — tested directly
-against a scratch source table so a regression cannot hide behind the
-operator gates."""
+(duckdb_wasm_spark/artifacts.py): the lifecycle properties the
+ANN/LSH consumers rely on — build-once, reload value-identical,
+session-memo identity, fingerprint invalidation on source change,
+supersession of stale fingerprints, torn builds never served — tested
+directly against a scratch source table in a private store (`store`)
+so a regression cannot hide behind the operator gates; then
+reload ≡ rebuild for each real kind against the shared store."""
 
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -26,12 +29,15 @@ def scratch_sf(tmp_path, spark):
     return str(d)
 
 
-def _clean(kind):
-    shutil.rmtree(os.path.join(artifacts._ROOT, kind), ignore_errors=True)
+@pytest.fixture()
+def store(tmp_path, monkeypatch):
+    """An empty artifact store private to the test."""
+    root = tmp_path / "store" / "index_artifacts"
+    monkeypatch.setattr(artifacts, "_ROOT", str(root))
+    return str(root)
 
 
-def test_build_once_then_reload_identical(spark, scratch_sf):
-    _clean("t_basic")
+def test_build_once_then_reload_identical(spark, scratch_sf, store):
     calls = {"n": 0}
 
     def build():
@@ -51,7 +57,14 @@ def test_build_once_then_reload_identical(spark, scratch_sf):
         spark, "t_basic", scratch_sf, ("embeddings",), build
     )
     assert calls["n"] == 1
-    assert got2["a"] is got1["a"]
+    assert got2 is got1
+    # repeated [name] returns the identical DataFrame object
+    assert got1["a"] is got1["a"]
+    # meta defaults to an empty dict when no meta_build was given
+    assert got1.meta == {}
+    # not a dict: a stray .get cannot silently skip a frame's supplier
+    with pytest.raises(AttributeError):
+        got1.get("a")
     # fresh "session" (drop the memo): reload from disk, still no build
     spark.__dict__.pop("_dws_disk_artifacts")
     got3 = artifacts.persisted_frames(
@@ -61,8 +74,7 @@ def test_build_once_then_reload_identical(spark, scratch_sf):
     assert sorted(r["y"] for r in got3["b"].collect()) == [10, 11, 12]
 
 
-def test_fingerprint_invalidates_on_source_change(spark, scratch_sf):
-    _clean("t_stale")
+def test_fingerprint_invalidates_on_source_change(spark, scratch_sf, store):
     calls = {"n": 0}
 
     def build():
@@ -86,7 +98,7 @@ def test_fingerprint_invalidates_on_source_change(spark, scratch_sf):
     )
     assert calls["n"] == 2
     src_dir = os.path.join(
-        artifacts._ROOT, "t_stale", artifacts._source_key(scratch_sf)
+        store, "t_stale", artifacts._source_key(scratch_sf)
     )
     got = sorted(
         d for d in os.listdir(src_dir) if not d.startswith("_")
@@ -94,13 +106,16 @@ def test_fingerprint_invalidates_on_source_change(spark, scratch_sf):
     assert got == [fp2], "superseded fingerprint not cleaned"
 
 
-def test_partial_build_is_not_served(spark, scratch_sf):
+def test_partial_build_is_not_served(spark, scratch_sf, store):
     """A dir without the commit marker (torn build: the process died
     mid-write) must rebuild, never serve partial frames."""
-    _clean("t_torn")
     fp = artifacts._fingerprint(scratch_sf, ("embeddings",))
-    base = os.path.join(artifacts._ROOT, "t_torn", fp)
-    os.makedirs(os.path.join(base, "a"), exist_ok=True)  # no marker
+    base = os.path.join(store, "t_torn", artifacts._source_key(scratch_sf), fp)
+    os.makedirs(os.path.join(base, "a"))  # no marker
+    pq.write_table(
+        pa.table({"x": [100, 101]}),
+        os.path.join(base, "a", "part-00000-stray.parquet"),
+    )
     calls = {"n": 0}
 
     def build():
@@ -111,17 +126,16 @@ def test_partial_build_is_not_served(spark, scratch_sf):
         spark, "t_torn", scratch_sf, ("embeddings",), build
     )
     assert calls["n"] == 1
-    assert got["a"].count() == 4
+    assert sorted(r["x"] for r in got["a"].collect()) == [0, 1, 2, 3]
 
 
 def test_two_source_dirs_coexist_and_dead_sources_prune(
-    spark, tmp_path
+    spark, tmp_path, store
 ):
     """Artifacts for DIFFERENT sf_dirs of the same kind must coexist
     (the flat first cut wiped sf0.01's store whenever sf0.1 built);
-    source keys whose directory vanished (temp staged bench layouts)
+    source keys whose directory vanished (a test's temporary corpus)
     are pruned on the next build."""
-    _clean("t_coex")
     dirs = []
     for name in ("sfA", "sfB"):
         d = tmp_path / name
@@ -159,19 +173,19 @@ def test_two_source_dirs_coexist_and_dead_sources_prune(
     artifacts.persisted_frames(
         spark, "t_coex", str(c), ("embeddings",), build
     )
-    kind_dir = os.path.join(artifacts._ROOT, "t_coex")
+    kind_dir = os.path.join(store, "t_coex")
     keys = set(os.listdir(kind_dir))
     assert artifacts._source_key(dirs[0]) not in keys, "dead source kept"
     assert artifacts._source_key(dirs[1]) in keys
     assert artifacts._source_key(str(c)) in keys
 
 
-def test_layout_respread_hash_partitions_named_frames(spark, scratch_sf):
-    """The `layout` spec (r12, graph edge frames) must bring named
-    frames back hash-partitioned on the given columns and leave
-    unnamed frames round-robin — and reload must stay value-identical
-    either way."""
-    _clean("t_layout")
+def test_layout_respread_hash_partitions_named_frames(
+    spark, scratch_sf, store
+):
+    """The `layout` spec (graph edge frames) must bring named frames
+    back hash-partitioned on the given columns and leave unnamed frames
+    round-robin — and reload must stay value-identical either way."""
 
     def build():
         return {
@@ -203,7 +217,6 @@ def test_layout_respread_hash_partitions_named_frames(spark, scratch_sf):
     fresh = build()
     assert got["keyed"].exceptAll(fresh["keyed"]).count() == 0
     assert fresh["keyed"].exceptAll(got["keyed"]).count() == 0
-    _clean("t_layout")
 
 
 def test_graph_edges_reload_equals_rebuild(spark, sf_dir):
@@ -377,11 +390,8 @@ def test_semdedup_growth_occupancy_reload_equals_rebuild(spark, sf_dir):
 
 
 def test_gram_index_reload_equals_rebuild(spark, sf_dir):
-    """The disk-persisted trigram/prefix index (r12 verdict #7) must
-    serve exactly what a fresh tokenize + df-rank derivation
-    computes, for both frames."""
-    from pyspark.sql.window import Window
-
+    """The disk-persisted trigram-shingle index must serve exactly what
+    a fresh tokenize computes."""
     from duckdb_wasm_spark.operators import dedup
     from duckdb_wasm_spark.tables import load_table
 
@@ -392,32 +402,13 @@ def test_gram_index_reload_equals_rebuild(spark, sf_dir):
     )
     assert idx["arrays"].exceptAll(fresh_arrays).count() == 0
     assert fresh_arrays.exceptAll(idx["arrays"]).count() == 0
-    grams = fresh_arrays.select(
-        "doc_id", "n", F.explode("grams").alias("gram")
-    )
-    dfc = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("doc_id").orderBy("df", "gram")
-    fresh_prefix = (
-        grams.join(dfc, "gram")
-        .withColumn("rn", F.row_number().over(w))
-        .where(
-            F.col("rn")
-            <= F.col("n")
-            - F.expr(f"(n + {dedup.PFX_T_DEN - 1}) div {dedup.PFX_T_DEN}")
-            + F.lit(1)
-        )
-        .select("doc_id", "gram")
-    )
-    assert idx["prefix"].exceptAll(fresh_prefix).count() == 0
-    assert fresh_prefix.exceptAll(idx["prefix"]).count() == 0
 
 
-def test_version_token_invalidates(spark, scratch_sf):
+def test_version_token_invalidates(spark, scratch_sf, store):
     """Bumping the builder-constants version token must rebuild the
     artifact exactly like regenerated source data does (r12 ADVICE:
     frames bake constants into the data, so a constant change served
     a stale artifact until a parity test happened to run)."""
-    _clean("t_ver")
     calls = {"n": 0}
 
     def build():
@@ -440,45 +431,12 @@ def test_version_token_invalidates(spark, scratch_sf):
         spark, "t_ver", scratch_sf, ("embeddings",), build, version="tau=0.6"
     )
     assert calls["n"] == 2
-    _clean("t_ver")
 
 
-def test_lazy_frames_full_dict_contract(spark, scratch_sf):
-    """get/values/items/len/iteration must all route through the
-    suppliers — dict.get does NOT call __getitem__, so the r12 lazy
-    reload silently returned None/empty through those paths (r12
-    ADVICE)."""
-    _clean("t_dict")
-
-    def build():
-        return {
-            "a": spark.range(2).select(F.col("id").alias("x")),
-            "b": spark.range(3).select(F.col("id").alias("y")),
-        }
-
-    got = artifacts.persisted_frames(
-        spark, "t_dict", scratch_sf, ("embeddings",), build
-    )
-    assert len(got) == 2
-    assert sorted(got.keys()) == ["a", "b"]
-    assert got.get("a") is not None and got.get("a").count() == 2
-    assert got.get("missing") is None
-    assert got.get("missing", "dflt") == "dflt"
-    assert {k for k, _ in got.items()} == {"a", "b"}
-    assert len(got.values()) == 2
-    assert all(v is not None for v in got.values())
-    # repeated access returns the identical DataFrame object
-    assert got["b"] is got["b"]
-    # meta defaults to an empty dict when no meta_build was given
-    assert got.meta == {}
-    _clean("t_dict")
-
-
-def test_meta_build_persists_scalars(spark, scratch_sf):
+def test_meta_build_persists_scalars(spark, scratch_sf, store):
     """meta_build scalars must persist to the _META.json sidecar and
     come back on a reload (fresh session memo) without re-running the
     builder."""
-    _clean("t_meta")
     calls = {"n": 0}
 
     def build():
@@ -496,7 +454,6 @@ def test_meta_build_persists_scalars(spark, scratch_sf):
         meta_build=lambda built: {"n": built["a"].count()},
     )
     assert got2.meta == {"n": 7} and calls["n"] == 1
-    _clean("t_meta")
 
 
 def test_pca_artifact_reload_equals_rebuild(spark, sf_dir):
@@ -656,42 +613,11 @@ def test_panel_truth_reload_equals_rebuild(spark, sf_dir):
         ).count()
 
 
-def test_prefetch_materializes_concurrently_and_memoizes(spark, scratch_sf):
-    """prefetch() must materialize the named frames (and only those),
-    return self, and leave the usual identity-memo semantics intact —
-    concurrent suppliers run under per-frame locks, so the frames must
-    still come back value-correct."""
-    _clean("t_prefetch")
-
-    def build():
-        return {
-            "a": spark.range(6).select(F.col("id").alias("x")),
-            "b": spark.range(4).select((F.col("id") + 1).alias("y")),
-            "c": spark.range(2).select((F.col("id") + 9).alias("z")),
-        }
-
-    got = artifacts.persisted_frames(
-        spark, "t_prefetch", scratch_sf, ("embeddings",), build
-    )
-    out = got.prefetch("a", "b")
-    assert out is got
-    # a and b are materialized (plain dict hits), c is not yet
-    assert dict.__contains__(got, "a") and dict.__contains__(got, "b")
-    assert not dict.__contains__(got, "c")
-    a1 = got["a"]
-    assert got.prefetch("a")["a"] is a1  # no re-materialization
-    assert sorted(r["x"] for r in a1.collect()) == list(range(6))
-    assert sorted(r["y"] for r in got["b"].collect()) == [1, 2, 3, 4]
-    assert sorted(r["z"] for r in got["c"].collect()) == [9, 10]
-    _clean("t_prefetch")
-
-
-def test_multifile_reload_parallelism_and_values(spark, scratch_sf):
+def test_multifile_reload_parallelism_and_values(spark, scratch_sf, store):
     """A multi-part-file artifact must reload through per-file union
     relations: at least one scan partition per part file BEFORE the
     respread (the conf-free replacement for the old session-global
     maxPartitionBytes flip), and values identical to the build."""
-    _clean("t_union")
 
     def build():
         return {
@@ -706,9 +632,7 @@ def test_multifile_reload_parallelism_and_values(spark, scratch_sf):
     import glob as _glob
 
     files = _glob.glob(
-        os.path.join(
-            artifacts._ROOT, "t_union", "*", "*", "k", "part-*.parquet"
-        )
+        os.path.join(store, "t_union", "*", "*", "k", "part-*.parquet")
     )
     assert len(files) > 1, "expected a multi-file artifact"
     # the materialized frame is respread to defaultParallelism and
@@ -728,7 +652,6 @@ def test_multifile_reload_parallelism_and_values(spark, scratch_sf):
         [spark.read.schema(schema).parquet(f) for f in files],
     )
     assert u.rdd.getNumPartitions() >= len(files)
-    _clean("t_union")
 
 
 def test_quality_scores_reload_equals_rebuild(spark, sf_dir):

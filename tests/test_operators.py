@@ -1176,26 +1176,6 @@ def test_triangle_count_structure(spark, sf_dir):
         assert r["n_triangles"] == n * (n - 1) * (n - 2) // 6
 
 
-def test_prefix_filter_is_lossless(spark, sf_dir):
-    """The AllPairs prefix-filter guarantee: under the rarest-first
-    global order with prefix p = n - ceil(t*n) + 1, NO qualifying pair
-    escapes the candidate join — dedup_jaccard_prefix must return the
-    exact same (pair, jaccard) set as the full posting-list operator.
-    A wrong prefix boundary (off-by-one, float ceil) silently drops
-    borderline pairs; set equality catches it."""
-    from duckdb_wasm_spark.operators import dedup
-
-    exact = {
-        (r.doc_a, r.doc_b, round(r.jaccard, 12))
-        for r in dedup.QUERIES["dedup_ngram_jaccard"](spark, sf_dir).collect()
-    }
-    pfx = {
-        (r.doc_a, r.doc_b, round(r.jaccard, 12))
-        for r in dedup.QUERIES["dedup_jaccard_prefix"](spark, sf_dir).collect()
-    }
-    assert pfx == exact
-
-
 def test_scd2_intervals_tile_and_account(spark, sf_dir):
     """SCD2 invariants: per user, versions are 1..K dense, intervals
     are half-open and TILE the timeline (valid_to == next valid_from),
