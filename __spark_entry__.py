@@ -64,6 +64,7 @@ def _registries():
 # name gets a green row, move it down.
 _GATE_PRIORITY = [
     # (a) never gated, or rewritten since the last green row
+    "micro_topk_per_group",
     "extra_windows",
     "extra_set_ops",
     "extra_grouping",

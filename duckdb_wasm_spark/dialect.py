@@ -20,6 +20,7 @@ goes straight to spark.sql so Catalyst sees the original shape.
 
 from __future__ import annotations
 
+import hashlib
 import re
 from dataclasses import dataclass, field
 
@@ -221,9 +222,12 @@ _FILE_REF_RE = re.compile(
 )
 
 
-def _view_name_for(path: str, idx: int) -> str:
+def _view_name_for(path: str, fmt: str) -> str:
+    """One name per (file, format): a live view over `a/x.parquet`
+    keeps reading that file after another statement binds `b/x.parquet`."""
     stem = re.sub(r"\W+", "_", path.rsplit("/", 1)[-1])
-    return f"_file_{stem}_{idx}"
+    digest = hashlib.md5(f"{fmt}:{path}".encode()).hexdigest()[:8]
+    return f"_file_{stem}_{digest}"
 
 
 def _rewrite_file_tables(sql: str) -> tuple[str, dict[str, tuple[str, str]]]:
@@ -232,7 +236,7 @@ def _rewrite_file_tables(sql: str) -> tuple[str, dict[str, tuple[str, str]]]:
     def scan_repl(m):
         fn, path = m.group(1).lower(), m.group(2)
         fmt = "csv" if "csv" in fn else "parquet"
-        name = _view_name_for(path, len(views))
+        name = _view_name_for(path, fmt)
         views[name] = (path, fmt)
         return name
 
@@ -241,7 +245,7 @@ def _rewrite_file_tables(sql: str) -> tuple[str, dict[str, tuple[str, str]]]:
     def ref_repl(m):
         path = m.group(3)
         fmt = path.rsplit(".", 1)[-1].lower()
-        name = _view_name_for(path, len(views))
+        name = _view_name_for(path, fmt)
         views[name] = (path, fmt)
         return f"{m.group(1)}{m.group(2)}{name}"
 

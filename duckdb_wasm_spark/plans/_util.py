@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_wasm_spark.dialect import translate
+from duckdb_wasm_spark.session import Connection, SparkDB
 from duckdb_wasm_spark.tables import TABLES, load_table
 
 DEC = "decimal(15,2)"
@@ -67,27 +68,35 @@ def sql_dec(c: str) -> str:
     return SQL_DEC.format(c=c)
 
 
+def _database(spark: SparkSession) -> SparkDB:
+    """The caller session's one `SparkDB`, which every registry text
+    runs through: the same session settings as `Connection.query()`."""
+    db = spark.__dict__.get("_dws_sparkdb")
+    return db or spark.__dict__.setdefault("_dws_sparkdb", SparkDB(spark))
+
+
 def sql_query(
     name: str, text: str
 ) -> Callable[[SparkSession, str], DataFrame]:
     """Registry function `fn(spark, sf_dir)` that runs the DuckDB-dialect
-    `text`: every table the text names is registered as a temp view,
-    the text goes through `dialect.translate` (the path
-    `Connection.query()` takes) and `spark.sql` plans the result. The
-    registry's oracle gate then checks the translator on the same text
-    DuckDB runs."""
+    `text` the way `Connection.query()` does, in the caller session's
+    database: every table the text names is registered as a database
+    table, and the text goes through `dialect.translate` and the
+    connection's statement runner. The registry's oracle gate then
+    checks the translator on the same text DuckDB runs."""
     tables = [t for t in TABLES if re.search(rf"\b{t}\b", text, re.I)]
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        db = _database(spark)
         for t in tables:
-            load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+            db._set_table(t, load_table(db.spark, sf_dir, t))
         tr = translate(text)
         if tr.kind != "query":
             raise ValueError(
                 f"{name}: expected a query, but the text translates to "
                 f"a {tr.kind!r} statement"
             )
-        return spark.sql(tr.sql)
+        return Connection(db)._run_translated(tr)
 
     fn.__name__ = name
     fn.__doc__ = f"{name}: its DuckDB-dialect text, translated and run."

@@ -15,12 +15,10 @@ CARDINALITY() gives the expected row count per query as a function of
 the input tables (checked in tests, mirroring the reference's embedded
 asserts).
 
-The six queries above and profile_columns run their DuckDB-dialect
-oracle text through the dialect translator (`sql_query`). Two micro
-queries stay DataFrame plans: micro_scalar_fns, because the translator
-has no `xor(`, and micro_topk_per_group, because its text quotes
-`"value"`, which Spark reads as a string literal outside SparkDB's ANSI
-double-quoted-identifier mode.
+The six queries above, micro_topk_per_group and profile_columns run
+their DuckDB-dialect oracle text through `sql_query`, in the same
+database session as `Connection.query()`. micro_scalar_fns stays a
+DataFrame plan, because the translator has no `xor(`.
 
 Scale notes: sort is a global range-partitioned sort (Spark samples
 boundaries — the one unavoidable all-shuffle op); topk never
@@ -907,36 +905,13 @@ order by c_mktsegment
 
 
 # --------------------------------------------------- micro_topk_per_group
+# TOP-K PER GROUP with rank-limit pushdown, the grouped sibling of
+# micro_topk: the row_number window under rk <= K must plan as
+# WindowGroupLimit, which keeps K rows per group before and after the
+# shuffle instead of sorting every group's full row set
+# (tests/test_micro.py::test_topk_per_group_plan). The order is total,
+# so the selected set is engine-exact.
 GROUP_TOP_K = 3  # per-user top events kept
-
-
-@_q("micro_topk_per_group")
-def micro_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TOP-K PER GROUP with rank-limit pushdown — the grouped sibling
-    of micro_topk's TakeOrderedAndProject: a row_number window under a
-    rank<=K predicate must execute as WindowGroupLimit (Spark 3.5+),
-    which keeps only K rows per group IN THE PARTIAL stage (before and
-    after the shuffle) instead of materializing and sorting every
-    group's full row set — at 100 TB the difference between shuffling
-    K x |groups| rows and shuffling the corpus.
-    tests/test_micro.py::test_topk_per_group_plan asserts the
-    WindowGroupLimit node.
-
-    Order is total (value desc, event_id asc), so the selected set is
-    engine-exact; value rides through untouched (no aggregation, so no
-    float-sum hazard)."""
-    ev = load_table(spark, sf_dir, "events")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("value").desc(), F.col("event_id").asc()
-    )
-    return (
-        ev.select("user_id", "event_id", "value")
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= GROUP_TOP_K)
-    )
-
 
 ORACLE["micro_topk_per_group"] = f"""
 select user_id, event_id, "value", rk from (
@@ -946,3 +921,6 @@ select user_id, event_id, "value", rk from (
   from events)
 where rk <= {GROUP_TOP_K}
 """
+QUERIES["micro_topk_per_group"] = sql_query(
+    "micro_topk_per_group", ORACLE["micro_topk_per_group"]
+)

@@ -15,21 +15,28 @@ reference's patchSchema/patchRecordBatch (lib/src/arrow_casts.cc:9-85,
 config lib/include/duckdb/web/config.h:41-52, tested
 bindings.test.ts:176-199).
 
-Scale notes: the catalog holds lazy DataFrames (plans, not data);
-query() materializes via Spark's Arrow collect; send() pulls partitions
-incrementally (toLocalIterator) so the driver never holds the full
-result. ANSI mode is ON so inserts range-check like the reference's
-strict typecheck (bindings.test.ts:86-142).
+Each SparkDB works in its own child session (`spark.newSession()`),
+which copies the caller's modifiable SQL confs and then sets ANSI mode
+(inserts range-check like the reference's strict typecheck,
+bindings.test.ts:86-142), UTC and double-quoted identifiers. The
+caller's session is never written. The child's temp views are the
+catalog: a table is a view over a lazy DataFrame, and a view is SQL
+text that Spark re-resolves on every query, so it sees later writes.
+
+Scale notes: query() materializes via Spark's Arrow collect; send()
+pulls partitions incrementally (toLocalIterator) so the driver never
+holds the full result.
 """
 
 from __future__ import annotations
 
 import fnmatch
-import itertools
+import functools
 import os
 import tempfile
 
 import pyarrow as pa
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_wasm_spark import tokenizer
@@ -45,6 +52,35 @@ FEATURE_SIMD = 1 << 2
 
 class SparkDBError(RuntimeError):
     pass
+
+
+# the database session's own settings, set after the caller's confs
+_DUCKDB_CONFS = {
+    "spark.sql.ansi.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    # DuckDB treats "x" as an identifier, not a string literal —
+    # ANSI-mode Spark matches with this flag (requires ansi.enabled)
+    "spark.sql.ansi.doubleQuotedIdentifiers": "true",
+}
+
+
+def _typed_errors(method):
+    """Re-raise a Spark error, or a statement the translator rejects,
+    as `SparkDBError`: the error class, then the first line of its
+    message; the original stays chained as the cause."""
+
+    @functools.wraps(method)
+    def wrapper(*args, **kwargs):
+        try:
+            return method(*args, **kwargs)
+        except (PySparkException, ValueError) as e:
+            cls = type(e).__name__
+            if isinstance(e, PySparkException):
+                cls = e.getCondition() or cls
+            line = next((ln for ln in str(e).splitlines() if ln.strip()), "")
+            raise SparkDBError(f"{cls}: {line.removeprefix(f'[{cls}] ')}") from e
+
+    return wrapper
 
 
 def _patch_bigint(table: pa.Table) -> pa.Table:
@@ -74,29 +110,16 @@ class SparkDB:
                 .appName("duckdb_wasm_spark")
                 .config("spark.sql.shuffle.partitions", "32")
                 .config("spark.sql.adaptive.enabled", "true")
-                .config("spark.sql.session.timeZone", "UTC")
-                .config("spark.sql.ansi.enabled", "true")
                 .config("spark.sql.execution.arrow.pyspark.enabled", "true")
                 .config("spark.ui.enabled", "false")
                 .getOrCreate()
             )
-        # snapshot caller-session confs we force, so close() can restore
-        # them (a shared SparkSession must not keep ANSI/UTC leaked into
-        # unrelated work after this database handle is done)
-        self._conf_snapshot = {
-            k: self._conf_get(spark, k)
-            for k in (
-                "spark.sql.ansi.enabled",
-                "spark.sql.session.timeZone",
-                "spark.sql.ansi.doubleQuotedIdentifiers",
-            )
-        }
-        spark.conf.set("spark.sql.ansi.enabled", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        # DuckDB treats "x" as an identifier, not a string literal —
-        # ANSI-mode Spark matches with this flag (requires ansi.enabled)
-        spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
-        self.spark = spark
+        self.spark = spark.newSession()
+        for key, val in spark.conf.getAll.items():
+            if spark.conf.isModifiable(key):
+                self.spark.conf.set(key, val)
+        for key, val in _DUCKDB_CONFS.items():
+            self.spark.conf.set(key, val)
         # file registry: name -> local path (ref webdb.cc:579-627)
         self._files: dict[str, str] = {}
         # lazy ranged-HTTP handles (register_file_url): name -> reader;
@@ -104,22 +127,16 @@ class SparkDB:
         # tail bytes only (sources/http_range.py)
         self._http_readers: dict = {}
         self._tmpdir = tempfile.mkdtemp(prefix="sparkdb_files_")
-        # in-memory catalog: name -> DataFrame (tables) / sql (views)
+        # in-memory catalog: table name -> DataFrame, and view names
+        # (the view bodies live in the session as SQL temp views)
         self._tables: dict[str, DataFrame] = {}
-        self._views: dict[str, DataFrame] = {}
+        self._views: set[str] = set()
         # per-file access statistics (ref CollectFileStatistics /
         # ExportFileStatistics, webdb.cc:702-714; lib/src/io/file_stats.cc)
         self._file_stats: dict[str, dict] = {}
         self._stats_enabled: set[str] = set()
         # per-table INSERT counter since the last plan compaction
         self._insert_depth: dict[str, int] = {}
-
-    @staticmethod
-    def _conf_get(spark: SparkSession, key: str) -> str | None:
-        try:
-            return spark.conf.get(key)
-        except Exception:
-            return None
 
     # ------------------------------------------------------------ open
     @classmethod
@@ -148,16 +165,9 @@ class SparkDB:
         """Drop all tables, views, registered files, and live state —
         the reference's Open()/Reset cycle without tearing down the JVM
         (ref webdb.cc:541-577 re-open semantics)."""
-        file_views = [
-            t.name
-            for t in self.spark.catalog.listTables()
-            if t.isTemporary and t.name.startswith("_file_")
-        ]
-        for name in self.list_tables() + file_views:
-            try:
-                self.spark.catalog.dropTempView(name)
-            except Exception:
-                pass
+        for t in self.spark.catalog.listTables():
+            if t.isTemporary:
+                self.spark.catalog.dropTempView(t.name)
         self._tables.clear()
         self._views.clear()
         self._files.clear()
@@ -167,15 +177,9 @@ class SparkDB:
         self._insert_depth.clear()
 
     def close(self) -> None:
-        """Release catalog state and hand a caller-provided SparkSession
-        back with its original ANSI/timezone confs (they are forced on
-        for the lifetime of this handle; see __init__)."""
+        """Release catalog state. The caller's session was never
+        written, so there is nothing to give back."""
         self.reset()
-        for key, val in self._conf_snapshot.items():
-            if val is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, val)
 
     # --------------------------------------------------- file registry
     def register_file_url(self, name: str, path: str) -> None:
@@ -284,9 +288,18 @@ class SparkDB:
         return dict(self._file_stats.get(name, {"reads": 0, "bytes": 0}))
 
     # --------------------------------------------------------- catalog
-    def _register_catalog_views(self) -> None:
-        for name, df in itertools.chain(self._tables.items(), self._views.items()):
-            df.createOrReplaceTempView(name)
+    def _register_catalog_views(self, t: Translated) -> None:
+        """Bind the statement's file views. Tables and views already
+        live in the session's temp-view catalog."""
+        for view, (fname, fmt) in t.file_views.items():
+            path = self._resolve_file(fname)
+            if fmt == "csv":
+                df = csv_source.read_csv(self.spark, path=path)
+            elif fmt == "json":
+                df = json_source.read_json(self.spark, path=path)
+            else:
+                df = self.spark.read.parquet(path)
+            df.createOrReplaceTempView(view)
 
     def _set_table(self, name: str, df: DataFrame) -> None:
         self._tables[name] = df
@@ -405,19 +418,10 @@ class Connection:
 
     def _run_translated(self, t: Translated, args: list | None = None) -> DataFrame:
         spark = self.db.spark
-        self.db._register_catalog_views()
-        for view, (fname, fmt) in t.file_views.items():
-            path = self.db._resolve_file(fname)
-            if fmt == "csv":
-                df = csv_source.read_csv(spark, path=path)
-            elif fmt == "json":
-                df = json_source.read_json(spark, path=path)
-            else:
-                df = spark.read.parquet(path)
-            df.createOrReplaceTempView(view)
+        self.db._register_catalog_views(t)
 
         if t.kind == "query":
-            return spark.sql(t.sql, args=args) if args else spark.sql(t.sql)
+            return spark.sql(t.sql, args=args)
 
         if t.kind == "show_tables":
             names = self.db.list_tables()
@@ -426,7 +430,7 @@ class Connection:
             )
 
         if t.kind == "create_table_as":
-            df = spark.sql(t.sql, args=args) if args else spark.sql(t.sql)
+            df = spark.sql(t.sql, args=args)
             # CTAS materializes in the reference; keep the plan lazy but
             # pin the current snapshot via a local checkpoint-free cache
             self.db._set_table(t.meta["name"], df)
@@ -439,18 +443,19 @@ class Connection:
             return self._empty_ok()
 
         if t.kind == "create_view":
-            df = spark.sql(t.sql, args=args) if args else spark.sql(t.sql)
-            self.db._views[t.meta["name"]] = df
-            df.createOrReplaceTempView(t.meta["name"])
+            spark.sql(f"CREATE OR REPLACE TEMP VIEW {t.meta['name']} AS {t.sql}", args=args)
+            self.db._views.add(t.meta["name"])
             return self._empty_ok()
 
         if t.kind == "drop":
             name = t.meta["name"]
             store = self.db._tables if t.meta["what"] == "table" else self.db._views
-            if name not in store and not t.meta["if_exists"]:
+            if name in store:
+                self.db._tables.pop(name, None)
+                self.db._views.discard(name)
+                spark.catalog.dropTempView(name)
+            elif not t.meta["if_exists"]:
                 raise SparkDBError(f"{t.meta['what']} {name!r} does not exist")
-            store.pop(name, None)
-            spark.catalog.dropTempView(name)
             return self._empty_ok()
 
         if t.kind == "insert":
@@ -461,7 +466,7 @@ class Connection:
             body = t.sql
             if body.lower().startswith("values"):
                 body = f"SELECT * FROM ({body})"
-            src = spark.sql(body, args=args) if args else spark.sql(body)
+            src = spark.sql(body, args=args)
             # explicit column list: map source columns to the named
             # targets, unnamed columns fill with NULL
             insert_cols = t.meta.get("columns") or list(target.columns)
@@ -509,12 +514,11 @@ class Connection:
 
         if t.kind == "describe":
             name = t.meta["name"]
-            df = self.db._tables.get(name) or self.db._views.get(name)
-            if df is None:
+            if name not in self.db._tables and name not in self.db._views:
                 raise SparkDBError(f"table {name!r} does not exist")
             rows = [
                 (f.name, _duck_type_name(f.dataType), "YES" if f.nullable else "NO")
-                for f in df.schema
+                for f in spark.table(name).schema
             ]
             return spark.createDataFrame(
                 rows, "column_name string, column_type string, null string"
@@ -622,14 +626,8 @@ class Connection:
         if t.kind == "copy":
             from duckdb_wasm_spark import writers
 
-            if t.meta["source"]:
-                df = self.db._tables.get(t.meta["source"]) or self.db._views.get(
-                    t.meta["source"]
-                )
-                if df is None:
-                    df = spark.table(t.meta["source"])
-            else:
-                df = spark.sql(t.sql)
+            source = t.meta["source"]
+            df = spark.table(source) if source else spark.sql(t.sql)
             writers.copy_to(df, t.meta["path"], t.meta["options"], self.db)
             return self._empty_ok()
 
@@ -644,6 +642,7 @@ class Connection:
     def _empty_ok(self) -> DataFrame:
         return self.db.spark.createDataFrame([], "ok boolean")
 
+    @_typed_errors
     def query(self, sql: str, *params) -> pa.Table:
         """Materialized query → pyarrow.Table (ref RunQuery,
         webdb.cc:84-119 / 141-154)."""
@@ -667,6 +666,7 @@ class Connection:
             self._stream = None
         self._prepared.clear()
 
+    @_typed_errors
     def send(self, sql: str, *params) -> ResultStream:
         """Streamed query; replaces any live cursor on this connection
         (ref SendQuery, webdb.cc:156-167)."""
@@ -676,6 +676,7 @@ class Connection:
         self._stream = ResultStream(df, patch_bigint=not self.db.emit_bigint)
         return self._stream
 
+    @_typed_errors
     def fetch(self) -> pa.RecordBatch | None:
         """Pull the next batch of the live cursor (ref FetchQueryResults)."""
         if self._stream is None:
@@ -724,6 +725,7 @@ class Connection:
         del self._prepared[stmt_id]
 
     # ------------------------------------------------------- ingestion
+    @_typed_errors
     def insert_csv_from_path(self, name_or_path: str, **options) -> None:
         """ref InsertCSVFromPath, webdb.cc:339-404. options: table
         (required), schema, create (default True), plus csv_source opts."""
@@ -736,6 +738,7 @@ class Connection:
         df = csv_source.read_csv(self.db.spark, path=path, **options)
         self._create_or_insert(table, df, create)
 
+    @_typed_errors
     def insert_json_from_path(self, name_or_path: str, **options) -> None:
         """ref InsertJSONFromPath, webdb.cc:406-447."""
         table = options.pop("table", None)
@@ -747,6 +750,7 @@ class Connection:
         df = json_source.read_json(self.db.spark, path=path, **options)
         self._create_or_insert(table, df, create)
 
+    @_typed_errors
     def insert_arrow_table(self, table: pa.Table, *, name: str, create: bool = True):
         """ref InsertArrowFromIPCStream (materialized form)."""
         df = arrow_source.insert_arrow_table(self.db.spark, table)

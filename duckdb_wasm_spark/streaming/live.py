@@ -221,19 +221,11 @@ def _staged_stream_source_ordered(
                 .write.mode("overwrite")
                 .parquet(staging)
             )
-            # Spark writes the parts in PARALLEL (same mtime), and the
-            # file stream source replays by (mtime, then listing order)
-            # — so the range order must be imposed explicitly:
-            # sequential names AND strictly ascending mtimes, or an
-            # early-time file replaying late gets its rows
-            # watermark-dropped (observed: arbitrary subsets lost under
-            # the 1-day delay before this rewrite).
+            # sequential names carry the range order; _stamp_replay_order
+            # turns them into the mtimes the stream source replays by
             parts = sorted(globmod.glob(f"{staging}/part-*.parquet"))
-            base_mtime = int(__import__("time").time()) - 3600
             for i, p in enumerate(parts):
-                dst = f"{out}/{i:04d}-chunk.parquet"
-                shutil.copyfile(p, dst)
-                os.utime(dst, (base_mtime + i, base_mtime + i))
+                shutil.copyfile(p, f"{out}/{i:04d}-chunk.parquet")
             shutil.rmtree(staging, ignore_errors=True)
             max_ts = ev.agg(F.max("ts")).collect()[0][0]
             base_us = (
@@ -275,13 +267,9 @@ def _staged_stream_source_ordered(
                     else:
                         cols.append(col)
                         fields.append(proto.schema.field(name))
-                # zz- prefix + later mtime: replays strictly after the data
+                # zz- prefix: sorts, so replays, strictly after the data
                 dst = f"{out}/zz-sentinel-{i}.parquet"
                 pq.write_table(pa.table(cols, schema=pa.schema(fields)), dst)
-                os.utime(
-                    dst,
-                    (base_mtime + n_files + i, base_mtime + n_files + i),
-                )
         out = committed_dir(
             _layouts_dir(f"ordered_{n_files}"),
             sf_dir,
@@ -289,7 +277,25 @@ def _staged_stream_source_ordered(
             _write,
         )
         memo[key] = (out, ev.schema)
+    _stamp_replay_order(memo[key][0])
     return memo[key]
+
+
+# a fixed base keeps the stamps idempotent across serves and processes
+_REPLAY_BASE_MTIME = 1_600_000_000
+
+
+def _stamp_replay_order(layout: str) -> None:
+    """Stamp strictly ascending mtimes in file-name order. The file
+    stream source replays by (mtime, then listing order), and Spark
+    writes the parts in parallel with one mtime, so an early-time file
+    replaying late gets its rows watermark-dropped. The order lives in
+    the names; the mtimes are re-derived on every serve, so a copy that
+    lost them (cp -r, a restore, a touch) still replays in order."""
+    names = sorted(n for n in os.listdir(layout) if n.endswith(".parquet"))
+    for i, n in enumerate(names):
+        t = _REPLAY_BASE_MTIME + i
+        os.utime(os.path.join(layout, n), (t, t))
 
 
 def stream_outer_join(

@@ -20,3 +20,17 @@ def test_state_store_sweep_without_arguments_prints_usage():
     assert "usage:" in r.stderr
     assert "<hdfs|rocksdb>" in r.stderr
     assert r.stdout == ""
+
+
+def test_sql_lane_without_arguments_prints_usage():
+    """No sf_dir argument: exit 2 with the usage line on stderr, before
+    any Spark session starts."""
+    r = subprocess.run(
+        [sys.executable, os.path.join(_SCRIPTS, "sql_lane.py")],
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert r.returncode == 2, r
+    assert "usage: python scripts/sql_lane.py <sf_dir>" in r.stderr
+    assert r.stdout == ""

@@ -73,7 +73,7 @@ def test_create_table_columns_default_null(conn):
 def test_insert_strict_typecheck(conn):
     # bindings.test.ts:86-142: out-of-range insert must be rejected
     conn.query("CREATE TABLE narrow (a TINYINT)")
-    with pytest.raises(Exception):
+    with pytest.raises(SparkDBError):
         conn.query("INSERT INTO narrow VALUES (1000)")
     conn.query("DROP TABLE narrow")
 
@@ -84,7 +84,7 @@ def test_insert_select_strict_typecheck(conn):
     # prunes the casts, so the overflow only surfaced on a later read
     conn.query("CREATE TABLE src AS SELECT 1000::INTEGER AS a")
     conn.query("CREATE TABLE narrow2 (a TINYINT)")
-    with pytest.raises(Exception):
+    with pytest.raises(SparkDBError):
         conn.query("INSERT INTO narrow2 SELECT a FROM src")
     # the failed insert must not have corrupted the target
     n = conn.query("SELECT count(*)::INTEGER AS n FROM narrow2")
@@ -122,16 +122,103 @@ def test_insert_plan_depth_bounded(conn, db):
     conn.query("DROP TABLE deep")
 
 
-def test_close_restores_shared_session_confs(spark):
-    # ADVICE r2: a caller-provided session must get its confs back
+def test_caller_session_is_never_changed(spark, sf_dir):
+    """The database works in its own child session: the caller's confs
+    and temp views are exactly as they were while it is open and after
+    it closes, and DuckDB's double-quoted identifiers stay inside it."""
+    probe = 'SELECT "a" AS x FROM (SELECT 1 AS a)'
+
+    def caller_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    views = caller_views()
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
         db2 = SparkDB(spark=spark)
-        assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+        c2 = db2.connect()
+        c2.query("CREATE TABLE only_in_db AS SELECT 1::INTEGER AS a")
+        c2.query("CREATE VIEW only_in_db_v AS SELECT a FROM only_in_db")
+        c2.query(f"SELECT count(*) AS n FROM read_parquet('{sf_dir}/region.parquet')")
+        assert spark.conf.get("spark.sql.ansi.enabled") == "false"
+        assert db2.spark.conf.get("spark.sql.ansi.enabled") == "true"
+        assert spark.sql(probe).first().x == "a"
+        assert db2.spark.sql(probe).first().x == 1
+        assert caller_views() == views
         db2.close()
         assert spark.conf.get("spark.sql.ansi.enabled") == "false"
+        assert spark.sql(probe).first().x == "a"
+        assert caller_views() == views
     finally:
-        spark.conf.set("spark.sql.ansi.enabled", "true")
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+def test_two_databases_on_one_session_keep_their_own_tables(spark):
+    a, b = SparkDB(spark=spark), SparkDB(spark=spark)
+    try:
+        a.connect().query("CREATE TABLE t AS SELECT 1::INTEGER AS v")
+        b.connect().query("CREATE TABLE t AS SELECT 2::INTEGER AS v")
+        assert a.connect().query("SELECT v FROM t").column("v").to_pylist() == [1]
+        assert b.connect().query("SELECT v FROM t").column("v").to_pylist() == [2]
+    finally:
+        a.close()
+        b.close()
+
+
+def test_view_matches_duckdb_after_writes(conn):
+    """A view is bound when it is queried, as in DuckDB: it sees every
+    later INSERT, UPDATE and DELETE on its table."""
+    import duckdb
+
+    duck = duckdb.connect()
+    probe = "SELECT n::INTEGER AS n, s::INTEGER AS s FROM vlive"
+    setup = (
+        "CREATE TABLE vbase (x INTEGER)",
+        "INSERT INTO vbase VALUES (1), (2)",
+        "CREATE VIEW vlive AS SELECT count(*) AS n, sum(x) AS s FROM vbase",
+    )
+    writes = (
+        "INSERT INTO vbase VALUES (3)",
+        "UPDATE vbase SET x = x * 10 WHERE x = 2",
+        "DELETE FROM vbase WHERE x = 1",
+    )
+    for stmt in setup + writes:
+        conn.query(stmt)
+        duck.execute(stmt)
+        if stmt in writes:
+            want = duck.execute(probe).fetch_arrow_table().to_pylist()
+            assert conn.query(probe).to_pylist() == want, stmt
+    conn.query("DROP VIEW vlive")
+    conn.query("DROP TABLE vbase")
+
+
+def test_file_view_keeps_its_file(conn, tmp_path):
+    """Two files with one base name get two file views, so a view over
+    a/x.parquet still reads it after a statement reads b/x.parquet."""
+    import pyarrow.parquet as pq
+
+    for d, v in (("a", 1), ("b", 2)):
+        (tmp_path / d).mkdir()
+        pq.write_table(pa.table({"v": pa.array([v], pa.int32())}), tmp_path / d / "x.parquet")
+    conn.query(f"CREATE VIEW xa AS SELECT v FROM read_parquet('{tmp_path}/a/x.parquet')")
+    b = conn.query(f"SELECT v FROM read_parquet('{tmp_path}/b/x.parquet')")
+    assert b.column("v").to_pylist() == [2]
+    assert conn.query("SELECT v FROM xa").column("v").to_pylist() == [1]
+    conn.query("DROP VIEW xa")
+
+
+def test_errors_are_typed(conn):
+    """Spark and translator errors surface as SparkDBError: the error
+    class, then the first line of its message, the original chained."""
+    from pyspark.errors import PySparkException
+
+    with pytest.raises(SparkDBError, match=r"^TABLE_OR_VIEW_NOT_FOUND: The table") as e:
+        conn.query("SELECT * FROM no_such_table")
+    assert isinstance(e.value.__cause__, PySparkException)
+    with pytest.raises(SparkDBError, match=r"^PARSE_SYNTAX_ERROR: Syntax error"):
+        conn.query("SELECT 1 +")
+    with pytest.raises(SparkDBError, match=r"^ValueError: unsupported ALTER TABLE"):
+        conn.query("ALTER TABLE t FROB x")
 
 
 def test_create_view(conn):
@@ -611,7 +698,7 @@ def test_qualify_quoted_identifier_and_literal_exclude(conn):
 def test_update_strict_typecheck(conn):
     conn.query("CREATE TABLE uds (a TINYINT)")
     conn.query("INSERT INTO uds VALUES (1)")
-    with pytest.raises(Exception):
+    with pytest.raises(SparkDBError):
         conn.query("UPDATE uds SET a = 1000")
     with pytest.raises(SparkDBError):
         conn.query("UPDATE uds SET nope = 1")
@@ -663,7 +750,7 @@ def test_qualify_rewrite(conn):
         "QUALIFY rank() OVER (ORDER BY v DESC) <= 2 ORDER BY v DESC LIMIT 1"
     )
     assert t2.column("v").to_pylist() == [20]
-    with pytest.raises(Exception):
+    with pytest.raises(SparkDBError):
         conn.query(
             "SELECT DISTINCT k FROM q "
             "QUALIFY row_number() OVER (ORDER BY k) = 1"

@@ -114,3 +114,25 @@ def test_upsert_store_replay_idempotent(spark, tmp_path):
         map(tuple, live._resolve_upsert_store(spark, store).collect())
     )
     assert before == after == [(1, 5, 520), (2, 1, 100)]
+
+
+def test_ordered_layout_ignores_file_mtimes(spark, sf_dir, oracle, tmp_path, monkeypatch):
+    """The ordered stream layout keeps its replay order in its file
+    names, not in mtimes a copy or restore may reset: with the committed
+    layout's mtimes running in reverse, the outer-join gate still
+    matches DuckDB."""
+    import glob
+    import os
+
+    from duckdb_wasm_spark import artifacts
+
+    monkeypatch.setattr(artifacts, "_ROOT", str(tmp_path / "store" / "index_artifacts"))
+    monkeypatch.setitem(spark.__dict__, "_dws_stream_src_ord", {})
+    layout, _ = live._staged_stream_source_ordered(spark, sf_dir, n_files=1)
+    files = sorted(glob.glob(f"{layout}/*.parquet"))
+    assert len(files) >= 3  # the data plus two sentinels
+    for i, f in enumerate(reversed(files)):
+        os.utime(f, (2_000_000_000 + i, 2_000_000_000 + i))
+    spark.__dict__["_dws_stream_src_ord"].clear()
+    name = "events_stream_outer_join"
+    assert_parity(windows.QUERIES[name](spark, sf_dir), windows.ORACLE[name], oracle, name)
