@@ -5,9 +5,10 @@ Architecture (Spark-first, not a port):
   - ``session``    WebDB-shaped API (SparkDB/Connection) over a SparkSession:
                    query / send+fetch cursor / prepared statements / file
                    registry / tokenizer (reference: lib/src/webdb.cc).
-  - ``dialect``    DuckDB→Spark SQL translation: ``::`` casts,
-                   generate_series, substring FROM/FOR, parquet_scan +
-                   implicit file refs, PRAGMA, COPY, EXPORT (SURVEY §4.2).
+  - ``dialect``    DuckDB→Spark SQL translation: DuckDB's own parser reads
+                   each query and an emitter writes Spark SQL from its
+                   SELECT tree; PRAGMA, COPY, EXPORT and DDL dispatch by
+                   statement head; DuckDB's tokenizer (SURVEY §4.2).
   - ``writers``    COPY TO csv/parquet single-file sinks + EXPORT DATABASE.
   - ``sources``    CSV option surface, JSON (row-array + column-object with
                    the inference lattice), Arrow ingestion, type-name
@@ -18,7 +19,6 @@ Architecture (Spark-first, not a port):
                    Jaccard / MinHash-LSH / SimHash / embedding LSH),
                    similarity search (brute-force + IVF), text analysis,
                    multimodal binary-column plumbing.
-  - ``tokenizer``  SQL lexer for the Tokenize() API surface.
   - ``streaming``  Structured Streaming over the events table (planned —
                    not yet on disk).
 

@@ -39,8 +39,12 @@ import pyarrow as pa
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
-from duckdb_wasm_spark import tokenizer
-from duckdb_wasm_spark.dialect import Translated, columns_from_ddl, translate
+from duckdb_wasm_spark.dialect import (
+    Translated,
+    columns_from_ddl,
+    tokenize,
+    translate,
+)
 from duckdb_wasm_spark.sources import arrow_source, csv_source, json_source
 
 __version__ = "0.2.0"
@@ -62,6 +66,13 @@ _DUCKDB_CONFS = {
     # ANSI-mode Spark matches with this flag (requires ansi.enabled)
     "spark.sql.ansi.doubleQuotedIdentifiers": "true",
 }
+# Spark pushes the filter it infers from an unnest (explode) below the
+# projections that build the unnested list, inlining them: a list that
+# lambdas build over another list is then rebuilt once per element.
+_EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
+_INFER_FROM_GENERATE = (
+    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+)
 
 
 def _typed_errors(method):
@@ -74,7 +85,7 @@ def _typed_errors(method):
         try:
             return method(*args, **kwargs)
         except (PySparkException, ValueError) as e:
-            cls = type(e).__name__
+            cls = getattr(e, "condition", None) or type(e).__name__
             if isinstance(e, PySparkException):
                 cls = e.getCondition() or cls
             line = next((ln for ln in str(e).splitlines() if ln.strip()), "")
@@ -120,6 +131,10 @@ class SparkDB:
                 self.spark.conf.set(key, val)
         for key, val in _DUCKDB_CONFS.items():
             self.spark.conf.set(key, val)
+        excluded = self.spark.conf.get(_EXCLUDED_RULES, "")
+        self.spark.conf.set(
+            _EXCLUDED_RULES, ",".join(filter(None, [excluded, _INFER_FROM_GENERATE]))
+        )
         # file registry: name -> local path (ref webdb.cc:579-627)
         self._files: dict[str, str] = {}
         # lazy ranged-HTTP handles (register_file_url): name -> reader;
@@ -159,7 +174,7 @@ class SparkDB:
         return flags
 
     def tokenize(self, text: str) -> dict:
-        return tokenizer.tokenize(text)
+        return tokenize(text)
 
     def reset(self) -> None:
         """Drop all tables, views, registered files, and live state —

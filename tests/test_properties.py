@@ -6,10 +6,11 @@ asymmetry on inputs nobody wrote down)."""
 
 import json
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from duckdb_wasm_spark import tokenizer
+from duckdb_wasm_spark import dialect
 from duckdb_wasm_spark.sources import json_analyzer as ja
 
 
@@ -17,7 +18,7 @@ from duckdb_wasm_spark.sources import json_analyzer as ja
 @settings(max_examples=300, deadline=None)
 @given(st.text(max_size=200))
 def test_tokenize_never_crashes_and_offsets_are_strictly_increasing(text):
-    out = tokenizer.tokenize(text)
+    out = dialect.tokenize(text)
     offs, types = out["offsets"], out["types"]
     assert len(offs) == len(types)
     assert all(b > a for a, b in zip(offs, offs[1:]))
@@ -46,8 +47,8 @@ def test_tokenize_token_count_is_whitespace_invariant(parts):
     if any(p == "--c" for p in parts[:-1]):
         return
     assert (
-        tokenizer.tokenize(tight)["types"]
-        == tokenizer.tokenize(loose)["types"]
+        dialect.tokenize(tight)["types"]
+        == dialect.tokenize(loose)["types"]
     )
 
 
@@ -119,78 +120,45 @@ def test_analyze_json_row_order_does_not_change_column_set(rows):
 
 
 # ------------------------------------------------------------ dialect
-from duckdb_wasm_spark import dialect  # noqa: E402
+import duckdb  # noqa: E402
+
+from duckdb_wasm_spark.dialect import translate  # noqa: E402
 
 
-_SNIPPETS = st.lists(
-    st.sampled_from(
-        [
-            "select x::INTEGER from t",
-            "select substring(s from 2 for 3) from t",
-            "select * from generate_series(0, 9) g(v)",
-            "select * EXCLUDE (a) from t",
-            "select strftime(d, '%Y-%m-%d') from t",
-            "select 'a::b' from t",          # cast syntax inside a literal
-            "select '* EXCLUDE (x)' from t",  # rewrite keyword in a literal
-            "select substring('a from b' from 2) from t",  # r10 ADVICE
-            "select 'it''s'::text from t",   # doubled-quote cast operand
-            "select 1",
-        ]
-    ),
-    min_size=1,
-    max_size=4,
-)
-
-
-@settings(max_examples=200, deadline=None)
-@given(_SNIPPETS)
-def test_dialect_rewrite_is_idempotent(parts):
-    """Rewrites must not re-fire on their own output: translating a
-    translated text is the identity (a second pass that changed
-    anything would mean the rewrite's output re-matches its own
-    pattern — the classic double-rewrite corruption class)."""
-    sql = " union all ".join(parts)
-    once, _ = dialect._rewrite_query_text(sql)
-    twice, _ = dialect._rewrite_query_text(once)
-    assert twice == once
+def _spark_literal(duck_literal: str) -> str:
+    """The Spark literal of the value DuckDB reads from `duck_literal`."""
+    return dialect._str(duckdb.execute(f"SELECT {duck_literal}").fetchone()[0])
 
 
 @settings(max_examples=200, deadline=None)
 @given(st.text(alphabet="abfromrsting:*()' ECXLUDE%", max_size=40))
 def test_dialect_rewrite_preserves_string_literals(body):
-    """Whatever surrounds it, a complete single-quoted literal's TEXT
-    survives translation byte-for-byte (rewrites run outside protected
-    spans only). The alphabet can spell 'from'/'for'/'substring' so a
-    span-unaware substring rewrite would be caught here (round-10
-    ADVICE: the pre-fix rewrite corrupted ' from ' inside literals)."""
+    """Whatever it spells, a complete single-quoted literal reaches Spark
+    as the value DuckDB reads from it. The alphabet can spell
+    'from'/'for'/'substring'/'::'/'EXCLUDE', the text that once fooled
+    the string rewriters."""
     lit = "'" + body.replace("'", "") + "'"
-    sql = f"select {lit} as c from t"
-    out, _ = dialect._rewrite_query_text(sql)
-    assert lit in out
+    out = translate(f"select {lit} as c from t").sql
+    assert out == f"SELECT {_spark_literal(lit)} AS `c` FROM `t`"
 
 
 @settings(max_examples=200, deadline=None)
 @given(st.text(alphabet="ab from', ", max_size=24))
 def test_substring_rewrite_preserves_literal_operands(body):
-    """A literal FIRST ARGUMENT of substring(x from n) survives the
-    FROM→comma rewrite byte-for-byte even when it contains ' from '
-    itself (round-10 ADVICE golden, generalized)."""
+    """A literal FIRST ARGUMENT of substring(x from n) stays intact even
+    when it contains ' from ' itself."""
     lit = "'" + body.replace("'", "") + "'"
-    sql = f"select substring({lit} from 2) as c from t"
-    out, _ = dialect._rewrite_query_text(sql)
-    assert lit in out
-    assert f"substring({lit}, 2)" in out
+    out = translate(f"select substring({lit} from 2) as c from t").sql
+    assert f"substring({_spark_literal(lit)}, 2)" in out
 
 
 def test_substring_and_cast_rewrite_goldens():
-    """Pinned repros for the two round-10 ADVICE dialect bugs."""
-    out, _ = dialect._rewrite_query_text(
-        "select substring('a from b' from 2) as c from t")
+    """Pinned repros for the literal-operand cases of substring and ::."""
+    out = translate("select substring('a from b' from 2) as c from t").sql
     assert "substring('a from b', 2)" in out
-    out, _ = dialect._rewrite_query_text("select 'it''s'::text as c")
-    assert "CAST('it''s' AS STRING)" in out
-    out, _ = dialect._rewrite_query_text(
-        "select substring('x for y' from 1 for 2) as c")
+    out = translate("select 'it''s'::text as c").sql
+    assert "CAST('it\\'s' AS STRING)" in out
+    out = translate("select substring('x for y' from 1 for 2) as c").sql
     assert "substring('x for y', 1, 2)" in out
 
 
@@ -279,125 +247,92 @@ def test_http_range_reads_equal_slices(data, chunk, pos, ln):
 
 
 @settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.sampled_from(
-            [
-                "select * from t qualify row_number() over (order by x)"
-                " <= 2",
-                "select a from t where a > 1",
-                "select 'qualify' from t",
-                "select * from generate_series(0, 9) g(v)",
-                "select * from generate_series(0, ?) g(v)",
-                "select * from generate_series(10, 0, -2) g(v)",
-            ]
-        ),
-        min_size=1,
-        max_size=3,
-    )
-)
-def test_qualify_and_generate_series_rewrites_idempotent(parts):
-    sql = " union all ".join(parts)
-    o1, _ = dialect._rewrite_query_text(sql)
-    o2, _ = dialect._rewrite_query_text(o1)
-    assert o1 == o2
-
-
-# ------------------------------------------ r11: remaining rewrites
-# (round-10 verdict #6: UPDATE/DELETE/ALTER/QUALIFY/EXCLUDE and the
-# typename parser are the same regex surface class that yielded two
-# real bugs in r10 — give each the idempotence / literal-preservation
-# / fails-closed treatment)
-
-
-@settings(max_examples=200, deadline=None)
 @given(st.text(alphabet="strftime%Ymd('), ", max_size=32))
 def test_strftime_rewrite_preserves_literals(body):
-    """A literal that can spell strftime(...) text survives
-    translation byte-for-byte; the rewrite only fires on real
-    format-first calls outside literals."""
+    """A literal that can spell strftime(...) text is a literal, never a
+    call."""
     lit = "'" + body.replace("'", "") + "'"
-    sql = f"select {lit} as c from t"
-    out, _ = dialect._rewrite_query_text(sql)
-    assert lit in out
+    out = translate(f"select {lit} as c from t").sql
+    assert out == f"SELECT {_spark_literal(lit)} AS `c` FROM `t`"
 
 
 @settings(max_examples=200, deadline=None)
 @given(
     st.text(alphabet="abc_", min_size=1, max_size=6),
-    st.sampled_from(["%Y", "%Y-%m", "%Y-%m-%d", "%H:%M:%S", "%d/%m"]),
+    st.sampled_from(sorted(dialect._STRFTIME)),
+    st.booleans(),
 )
-def test_strftime_rewrite_maps_every_directive(col, fmt):
-    """Every sqlite directive in the map is translated and no '%'
-    survives into the date_format pattern for mapped-only formats."""
-    out, _ = dialect._rewrite_query_text(
-        f"select strftime('{fmt}', {col}) from t"
-    )
-    assert "date_format(" in out and "%" not in out
-    twice, _ = dialect._rewrite_query_text(out)
-    assert twice == out
+def test_strftime_rewrite_maps_every_directive(col, directive, format_first):
+    """Every directive in the map becomes its Spark pattern, in either
+    argument order (the sqlite texts put the format first); literal
+    letters around it are quoted."""
+    fmt = f"'{directive}-T'"
+    args = f"{fmt}, {col}" if format_first else f"{col}, {fmt}"
+    out = translate(f"select strftime({args}) from t").sql
+    pattern = dialect._STRFTIME[directive]
+    assert out == f"SELECT date_format(`{col}`, '{pattern}\\'-T\\'') FROM `t`"
 
 
 @settings(max_examples=150, deadline=None)
 @given(st.text(alphabet="qualify rown()<=3'odrebt ", max_size=40))
 def test_qualify_never_crashes_and_preserves_literals(body):
-    """Arbitrary QUALIFY-ish text either rewrites or raises the
-    defined ValueError — never an IndexError/AttributeError — and a
-    complete literal spelling 'qualify'/'order' is never the split
-    point."""
+    """QUALIFY always becomes a filter on a helper column, and a
+    complete literal spelling 'qualify'/'order' stays a literal."""
     lit = "'" + body.replace("'", "") + "'"
     sql = f"select {lit} as c from t qualify row_number() over (order by c) <= 2"
-    try:
-        out, _ = dialect._rewrite_query_text(sql)
-    except ValueError:
-        return
-    assert lit in out
-    assert "__qualify__" in out
+    out = translate(sql).sql
+    assert _spark_literal(lit) in out
+    assert out.endswith("WHERE __qualify")
 
 
-def test_qualify_rejects_distinct_and_handles_tails():
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        dialect._rewrite_query_text(
-            "select distinct a from t qualify row_number() "
-            "over (order by a) = 1"
-        )
-    out, _ = dialect._rewrite_query_text(
+def test_qualify_supports_distinct_and_handles_tails():
+    """DISTINCT, ORDER BY and LIMIT apply after the QUALIFY filter, as in
+    DuckDB: they move to the select that filters on the helper column."""
+    out = translate(
+        "select distinct a from t qualify row_number() over (order by a) = 1"
+    ).sql
+    assert out.startswith("SELECT DISTINCT * EXCEPT (__qualify) FROM (SELECT `a`,")
+    out = translate(
         "select a from t qualify row_number() over (order by a) <= 2 "
         "order by a limit 1"
-    )
-    assert out.rstrip().endswith("order by a limit 1")
-    # 'order' inside the OVER parens must not cut the predicate
-    assert "over (order by a) <= 2" in out
+    ).sql
+    assert out.endswith("WHERE __qualify ORDER BY `a` ASC NULLS LAST LIMIT 1")
+    # 'order' inside the OVER parens stays in the predicate
+    assert "(row_number() OVER (ORDER BY `a` ASC NULLS LAST) <= 2) AS __qualify" in out
 
 
 @settings(max_examples=200, deadline=None)
 @given(
-    st.text(alphabet="ab=1,  ", min_size=1, max_size=20),
     st.one_of(st.none(), st.text(alphabet="ab<>=1 ", min_size=1, max_size=12)),
     st.sampled_from([
-        "",
-        " (select x from u where y = 1)",
-        " 'a where b'",
-        " -- where comment\n",
+        ("", []),
+        (", b = (select x from u where y = 1)", ["b"]),
+        (", b = 'a where b'", ["b"]),
+        (", b = 1 -- where comment\n", ["b"]),
+        (', "where" = 2', ["where"]),
     ]),
 )
-def test_split_where_tail_finds_only_top_level_where(body, cond, decoy):
-    """_split_where_tail must split at the TOP-LEVEL WHERE only:
-    a WHERE inside a subquery's parens, a string literal, or a comment
-    (the decoys) never mis-splits; with no top-level WHERE the whole
-    tail is the body. (Bodies are quote-balanced by construction — an
-    unterminated literal legitimately swallows everything after it.)"""
-    body = body.replace("where", "ab") + decoy
-    tail = body if cond is None else f"{body} where {cond}"
-    got_body, got_cond = dialect._split_where_tail(tail)
-    if cond is None:
-        assert got_cond is None
-        assert got_body == body.strip()
-    else:
-        assert got_cond == cond.strip()
-        assert got_body == body.strip()
+def test_update_delete_split_only_at_top_level_where(cond, decoy):
+    """UPDATE and DELETE split at the statement's own WHERE only: a
+    WHERE inside a subquery, a string literal, a comment or a quoted
+    identifier (the decoys) never splits, and the condition is the one
+    DuckDB reads after the top-level WHERE."""
+    sets, cols = decoy
+    tail = "" if cond is None else f" where {cond}"
+    try:
+        want = dialect._parse(f"select *{tail}").get("where_clause")
+        cond_sql = dialect._Emit().expr(want) if want else ""
+    except ValueError:  # a condition DuckDB or the emitter rejects
+        with pytest.raises(ValueError):
+            translate(f"delete from t{tail}")
+        with pytest.raises(ValueError):
+            translate(f"update t set a = 1{sets}{tail}")
+        return
+    up = translate(f"update t set a = 1{sets}{tail}")
+    assert up.kind == "update" and up.sql == cond_sql
+    assert [c for c, _ in up.meta["assigns"]] == ["a", *cols]
+    de = translate(f"delete from t{tail}")
+    assert de.kind == "delete" and de.sql == cond_sql
 
 
 @settings(max_examples=200, deadline=None)

@@ -750,11 +750,12 @@ def test_qualify_rewrite(conn):
         "QUALIFY rank() OVER (ORDER BY v DESC) <= 2 ORDER BY v DESC LIMIT 1"
     )
     assert t2.column("v").to_pylist() == [20]
-    with pytest.raises(SparkDBError):
-        conn.query(
-            "SELECT DISTINCT k FROM q "
-            "QUALIFY row_number() OVER (ORDER BY k) = 1"
-        )
+    # DISTINCT applies after the QUALIFY filter, as in DuckDB
+    t3 = conn.query(
+        "SELECT DISTINCT k FROM q "
+        "QUALIFY row_number() OVER (ORDER BY k) = 1"
+    )
+    assert t3.column("k").to_pylist() == [1]
     conn.query("DROP TABLE q")
 
 
