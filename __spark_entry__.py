@@ -55,16 +55,35 @@ def _registries():
 # The rule:
 #   (a) never-gated queries, then queries rewritten since their last
 #       green row (a changed plan makes the old row prove nothing);
-#   (b) then green queries, oldest green row first;
-#   (c) rows-only (no-oracle) queries last. `queries()` puts every
-#       unlisted rows-only query at the end; the two ML rows are listed
-#       inside the window on purpose, so their rows-only checks stay
-#       fresh.
+#   (b) then green queries, oldest green row first.
 # When a query is rewritten, move it to the head of (a); when a listed
 # name gets a green row, move it down.
 _GATE_PRIORITY = [
     # (a) rewritten since the last green row: the queries that run
     # their DuckDB-dialect text (their emitted Spark SQL is new)
+    "text_stats",
+    "text_langid",
+    "text_tokens",
+    "text_vocab_topk",
+    "text_repetition",
+    "text_pii_scan",
+    "text_gopher_flags",
+    "text_ngram_entropy",
+    "text_pmi_topk",
+    "sample_balanced",
+    "sample_split",
+    "corpus_mix_weights",
+    "doc_chunking",
+    "corpus_zipf_slope",
+    "corpus_source_divergence",
+    "corpus_token_regression",
+    "sample_weighted_priority",
+    "events_retention",
+    "events_sessionize",
+    "events_scd2",
+    "multimodal_meta",
+    "events_tumbling",
+    "events_rolling",
     "micro_topk_per_group",
     "extra_windows",
     "extra_set_ops",
@@ -118,7 +137,6 @@ _GATE_PRIORITY = [
     "corpus_source_overlap",
     "corpus_novelty",
     "corpus_stats",
-    "corpus_mix_weights",
     "corpus_health_report",
     "sample_mixture_budget",
     "pipeline_near_dedup_corpus",
@@ -132,12 +150,7 @@ _GATE_PRIORITY = [
     # (b) oldest green row first
     "sample_pack_sequences",
     "sample_token_budget",
-    # the two rows-only ML rows, listed inside the window (see (c))
-    "ann_brp_ml",
-    "dedup_minhash_ml",
-    # (b) continued
     "dedup_semdedup",
-    "events_scd2",
     "events_stream_join",
     "events_stream_sink",
     "extra_udtf_ngrams",
@@ -150,10 +163,6 @@ _GATE_PRIORITY = [
     "source_orc_roundtrip",
     "source_pydatasource",
     "text_fingerprint",
-    "text_langid",
-    "text_pii_scan",
-    "text_repetition",
-    "text_tokens",
 ]
 
 
@@ -161,30 +170,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     Emission order = _GATE_PRIORITY first, then the remaining
-    oracle-backed queries in registry order, then rows-only
-    (no-oracle) queries last — the driver walks this dict in insertion
-    order under a bounded correctness window, so the order IS the
+    queries in registry order — the correctness walk reads this dict
+    in insertion order under a bounded window, so the order IS the
     gating policy."""
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    oracles: dict[str, str] = {}
     for m in _registries():
         merged.update(m.QUERIES)
-        oracles.update(m.ORACLE)
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for k in _GATE_PRIORITY:
-        # No-oracle names are admitted on purpose: the walk records a
-        # rows-only check for them, which is still a gate row (when
-        # this loop required an oracle, ann_brp_ml got no row at all).
-        if k in merged:
-            out[k] = merged[k]
-    out.update({k: v for k, v in merged.items() if k in oracles})
-    out.update({k: v for k, v in merged.items() if k not in oracles})
+    out = {k: merged[k] for k in _GATE_PRIORITY if k in merged}
+    out.update(merged)
     return out
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL equivalent for each query (omitted for
-    non-SQL-expressible ops → driver records a rows-only check)."""
+    """DuckDB-runnable SQL equivalent for each query."""
     out: dict[str, str] = {}
     for m in _registries():
         out.update(m.ORACLE)

@@ -16,11 +16,8 @@ Modules
               budget, stratified train/val/test split)
   temporal    as-of join and range join — registered queries plus the
               reusable `asof_join` / `range_join` DataFrame APIs
-  ml_lsh      stock Spark-ML MinHashLSH / BucketedRandomProjectionLSH
-              comparison points (rows-only: JVM-internal hash families)
 
-Cross-engine determinism: every operator that is SQL-expressible ships a
-DuckDB oracle built from the SAME primitives — md5 for hashing,
+Cross-engine determinism: every operator ships a DuckDB oracle built from the SAME primitives — md5 for hashing,
 left-fold `aggregate`/`list_reduce` for float reductions, integer bit
 ops for signatures — so results hash-match bit-for-bit (the driver's
 correctness gate). Approximate operators (LSH family) are deterministic

@@ -57,7 +57,7 @@ from duckdb_wasm_spark.operators._text import (
     toks,
     trigrams,
 )
-from duckdb_wasm_spark.plans._util import sql_query
+from duckdb_wasm_spark.plans._util import register_texts
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
@@ -83,7 +83,6 @@ select md5(lower(trim(text))) fp,
 from documents
 group by 1
 """
-QUERIES["dedup_exact"] = sql_query("dedup_exact", ORACLE["dedup_exact"])
 
 
 # -------------------------------------------------- dedup_ngram_jaccard
@@ -3233,3 +3232,6 @@ from pj
 join documents da on pj.doc_a = da.doc_id
 join documents db on pj.doc_b = db.doc_id
 """
+
+
+register_texts(QUERIES, ORACLE)

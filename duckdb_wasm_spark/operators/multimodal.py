@@ -7,8 +7,9 @@ the BinaryType column, the metadata struct, partition-parallel
 Arrow-batched `mapInPandas` feature extraction with a stable schema, and
 the oracle-checked outputs.
 
-  multimodal_meta      pure built-in projection over payload + metadata
-                       (octet_length, md5 checksum, pixel geometry)
+  multimodal_meta      payload size, md5 checksum and pixel geometry;
+                       runs its DuckDB-dialect text through the dialect
+                       translator (`plans/_util.register_texts`)
   multimodal_features  mapInPandas over the binary payload: per-batch
                        numpy feature extraction (byte stats + checksum),
                        verified against a DuckDB oracle that recomputes
@@ -32,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_wasm_spark.plans._util import register_texts
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
@@ -183,22 +185,8 @@ def fake_decode(payload: bytes, width: int, height: int) -> np.ndarray:
 
 
 # -------------------------------------------------------- multimodal_meta
-@_q("multimodal_meta")
-def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata projection over the binary column: byte size, geometry,
-    checksum — all built-ins, no Python in the hot path."""
-    assets = with_assets(load_table(spark, sf_dir, "documents"))
-    return assets.select(
-        "doc_id",
-        F.octet_length("payload").alias("n_bytes"),
-        F.col("meta.width").alias("width"),
-        F.col("meta.height").alias("height"),
-        (F.col("meta.width") * F.col("meta.height") * F.col("meta.channels"))
-        .alias("n_samples"),
-        F.md5("text").alias("checksum"),
-    )
-
-
+# Metadata projection: payload byte size, the pixel geometry
+# `with_assets` derives from doc_id, and an md5 checksum.
 ORACLE["multimodal_meta"] = """
 select doc_id,
        octet_length(encode(text)) n_bytes,
@@ -504,3 +492,6 @@ select doc_id, cast(f as int) frame,
 from frames
 where f % {FRAME_STRIDE} = 0
 """
+
+
+register_texts(QUERIES, ORACLE)

@@ -1,16 +1,21 @@
 """End-to-end training-corpus pipeline compositions — the operators of
 text.py/dedup.py chained the way a real data-curation job runs them,
-registered as oracle-checked queries.
+registered as oracle-checked queries: quality cuts, exact and near
+dedup, corpus rollups and diagnostics, deterministic sampling and
+chunking.
 
-  pipeline_clean_corpus  quality-score → threshold filter → exact-dedup
-                         keeper selection → surviving documents
-  corpus_stats           corpus-level rollup: doc/token/char counts and
-                         mean quality per language
-
-Scale notes: the pipeline is one narrow projection (scoring) feeding
-one hash-shuffle (dedup groupBy) feeding a semi-join — three stages
-total for the full corpus pass; the rollup is a partial+final hash
-aggregate over the same single scan.
+Eight queries run their own oracle text through the dialect translator
+(`plans/_util.register_texts`): sample_balanced, sample_split,
+corpus_mix_weights, doc_chunking, corpus_zipf_slope,
+corpus_source_divergence, corpus_token_regression and
+sample_weighted_priority. The rest keep a DataFrame plan:
+  - sample_token_budget, sample_pack_sequences, sample_mixture_budget
+    and corpus_length_quantiles: their texts window each language's or
+    source's whole share of the corpus in one task, where the plans use
+    the two-phase offsets of ranks.py or reduce to a histogram first;
+  - the others, because their text measured 1.8x or more slower at
+    sf0.1. Most of them read the persisted quality-score frame
+    (`_scored_memo`).
 """
 
 from __future__ import annotations
@@ -26,6 +31,7 @@ from duckdb_wasm_spark.operators._text import (
     sql_toks,
     toks,
 )
+from duckdb_wasm_spark.plans._util import register_texts
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
@@ -231,28 +237,11 @@ def _hash_order():
 
 _SQL_HASH_ORDER = "md5(cast(doc_id as varchar)), doc_id"
 
-
-@_q("sample_balanced")
-def sample_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-balanced corpus selection: keep at most BALANCE_CAP
-    documents per language, chosen by deterministic hash order — the
-    standard rebalancing step before mixing a multilingual training
-    corpus (downsamples over-represented languages without an RNG, so
-    the sample is reproducible run to run and engine to engine).
-
-    Scale: one window rank per language partition — a single shuffle
-    by lang; skewed languages sort-spill, nothing collects."""
-    from pyspark.sql.window import Window
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    w = Window.partitionBy("lang").orderBy(*_hash_order())
-    return (
-        docs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= BALANCE_CAP)
-        .select("doc_id", "lang", "rk")
-    )
-
-
+# Language-balanced corpus selection: keep at most BALANCE_CAP documents
+# per language, chosen by deterministic hash order — the standard
+# rebalancing step before mixing a multilingual training corpus
+# (downsamples over-represented languages without an RNG, so the sample
+# is reproducible run to run and engine to engine).
 ORACLE["sample_balanced"] = f"""
 select doc_id, lang, rk
 from (
@@ -316,40 +305,28 @@ where cum_tokens <= {TOKEN_BUDGET}
 # ---------------------------------------------------------- sample_split
 SPLIT_PCT = (80, 10, 10)  # train / val / test
 
-
-@_q("sample_split")
-def sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified train/val/test assignment: each doc's
-    md5-derived bucket (0-99) maps to a split, so membership is a pure
-    function of doc_id — stable across runs, engines, and cluster
-    sizes (the property a reproducible pretraining mix needs). Output
-    is the per-(lang, split) doc/token rollup."""
-    docs = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("split"), F.col("doc_id").cast("string"))),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("int")
-        % 100
-    )
-    split = (
-        F.when(bucket < SPLIT_PCT[0], "train")
-        .when(bucket < SPLIT_PCT[0] + SPLIT_PCT[1], "val")
-        .otherwise("test")
-    )
-    return (
-        docs.select("lang", split.alias("split"), F.size(toks()).alias("n_tok"))
-        .groupBy("lang", "split")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tok").alias("n_tokens"),
-        )
-    )
+# Deterministic stratified train/val/test assignment: each doc's
+# md5-derived bucket (0-99) maps to a split, so membership is a pure
+# function of doc_id — stable across runs, engines, and cluster sizes
+# (the property a reproducible pretraining mix needs). Output is the
+# per-(lang, split) doc/token rollup.
+ORACLE["sample_split"] = f"""
+with assigned as (
+  select lang,
+         case
+           when b < {SPLIT_PCT[0]} then 'train'
+           when b < {SPLIT_PCT[0] + SPLIT_PCT[1]} then 'val'
+           else 'test'
+         end split,
+         len({sql_toks('text')}) n_tok
+  from (select lang, text,
+               ('0x' || substr(md5('split' || cast(doc_id as varchar)),
+                               1, 4))::int % 100 b
+        from documents))
+select lang, split, count(*) n_docs, cast(sum(n_tok) as bigint) n_tokens
+from assigned
+group by lang, split
+"""
 
 
 # ---------------------------------------------------- decontaminate_ngram
@@ -417,52 +394,12 @@ group by train_id
 # ------------------------------------------------------ corpus_mix_weights
 MIX_ALPHA = 0.7  # temperature exponent: upweights low-resource sources
 
-
-@_q("corpus_mix_weights")
-def corpus_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled source mixture weights: per-source token totals,
-    raw corpus share, and the sampling weight w_s ∝ tokens_s^α (α=0.7) —
-    the standard multilingual/multi-source rebalancing rule (upweights
-    low-resource sources relative to proportional sampling).
-
-    Determinism: token totals are exact long sums; the only float math is
-    pow(tokens, α) per row plus a sum over the handful of post-aggregate
-    source rows, and the weight is rounded to 12 decimals — far coarser
-    than the ~1-ulp pow/reassociation divergence between engines (the
-    policy set by the trig corpus / extra_stats' corr).
-
-    Scale: one partial+final hash aggregate by source over the scan; the
-    normalizing window runs over the tiny aggregated frame (rows =
-    distinct sources), not the corpus."""
-    from pyspark.sql.window import Window
-
-    # r15: n_tokens per doc is a quality_scores artifact column (the
-    # identical size(toks()) expression at build time) — the aggregate
-    # reads the feature frame instead of re-tokenizing the corpus
-    agg = (
-        _scored_memo(spark, sf_dir)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-        )
-    )
-    w = Window.orderBy("source").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    powered = F.pow(F.col("n_tokens").cast("double"), F.lit(MIX_ALPHA))
-    return agg.select(
-        "source",
-        "n_docs",
-        "n_tokens",
-        (
-            F.col("n_tokens").cast("double")
-            / F.sum("n_tokens").over(w).cast("double")
-        ).alias("token_share"),
-        F.round(powered / F.sum(powered).over(w), 12).alias("mix_weight_t07"),
-    )
-
-
+# Temperature-scaled source mixture weights: per-source token totals,
+# raw corpus share, and the sampling weight w_s ∝ tokens_s^α (α=0.7) —
+# the standard multilingual/multi-source rebalancing rule (upweights
+# low-resource sources relative to proportional sampling). The weight
+# is rounded to 12 decimals, far coarser than the ulp-level pow() and
+# summation-order differences between engines.
 ORACLE["corpus_mix_weights"] = f"""
 with s as (
   select source, count(*) n_docs,
@@ -475,25 +412,6 @@ select source, n_docs, n_tokens,
              / sum(pow(cast(n_tokens as double), {MIX_ALPHA})) over (), 12)
          mix_weight_t07
 from s
-"""
-
-
-ORACLE["sample_split"] = f"""
-with assigned as (
-  select lang,
-         case
-           when b < {SPLIT_PCT[0]} then 'train'
-           when b < {SPLIT_PCT[0] + SPLIT_PCT[1]} then 'val'
-           else 'test'
-         end split,
-         len({sql_toks('text')}) n_tok
-  from (select lang, text,
-               ('0x' || substr(md5('split' || cast(doc_id as varchar)),
-                               1, 4))::int % 100 b
-        from documents))
-select lang, split, count(*) n_docs, cast(sum(n_tok) as bigint) n_tokens
-from assigned
-group by lang, split
 """
 
 
@@ -583,40 +501,11 @@ group by lang, seq_id
 CHUNK_LEN = 64  # tokens per training/embedding chunk
 CHUNK_STRIDE = 48  # chunk start stride (CHUNK_LEN - CHUNK_STRIDE overlap)
 
-
-@_q("doc_chunking")
-def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window document chunking: cut each document's token
-    stream into CHUNK_LEN-token windows every CHUNK_STRIDE tokens (16
-    tokens of overlap) — the standard context-window chunking step
-    before embedding or long-context training. Output is the chunk
-    manifest (id, 1-based token start, length, text).
-
-    Determinism: pure integer arithmetic + string joins, no floats.
-
-    Scale (100 TB): one narrow projection + one explode — a ~n/stride
-    row expansion with NO shuffle anywhere; chunking streams through
-    the scan. The token array is materialized in a projection BEFORE
-    the explode so the tokenizer runs once per document, not once per
-    chunk (the explode-projection re-evaluation trap documented in
-    text_repetition)."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = toks()
-    base = docs.select("doc_id", t.alias("t"), F.size(t).alias("n"))
-    starts = F.sequence(
-        F.lit(0), F.greatest(F.col("n") - 1, F.lit(0)), F.lit(CHUNK_STRIDE)
-    )
-    ch = base.select("doc_id", "t", F.posexplode(starts).alias("chunk_id", "start"))
-    chunk = F.slice(F.col("t"), F.col("start") + 1, CHUNK_LEN)
-    return ch.select(
-        "doc_id",
-        "chunk_id",
-        (F.col("start") + 1).alias("chunk_start"),
-        F.size(chunk).alias("n_chunk_tokens"),
-        F.array_join(chunk, " ").alias("chunk_text"),
-    )
-
-
+# Sliding-window document chunking: cut each document's token stream
+# into CHUNK_LEN-token windows every CHUNK_STRIDE tokens (16 tokens of
+# overlap) — the standard context-window chunking step before embedding
+# or long-context training. Output is the chunk manifest (id, 1-based
+# token start, length, text).
 ORACLE["doc_chunking"] = f"""
 with base as (
   select doc_id, {sql_toks('text')} t, len({sql_toks('text')}) n
@@ -715,76 +604,13 @@ group by lang
 ZIPF_TOP = 100  # vocabulary ranks fitted (head of the distribution)
 _ZIPF_SCALE = 1 << 20  # fixed-point unit for the OLS sums
 
-
-@_q("corpus_zipf_slope")
-def corpus_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language Zipf slope — the corpus-health diagnostic: natural
-    language runs ≈ −1 on the log-rank/log-frequency line, while
-    synthetic/templated/deduplicated-to-death corpora bend away from
-    it. OLS over the top ZIPF_TOP vocabulary ranks:
-
-        slope = (R·Σxy − Σx·Σy) / (R·Σxx − Σx²),
-        x = ln(rank), y = ln(count)
-
-    Determinism: each per-rank x, y, x·y, x·x is floored to 2^20 fixed
-    point (bigint) BEFORE aggregation — integer sums are associative —
-    and the closed form is evaluated in exact bigint up to ONE double
-    division at the end (products stay < 2^63: Σ terms are ≲ 2^32 for
-    any corpus since R is fixed). Rank ties break on the token, so the
-    rank assignment is total in both engines.
-
-    Plan (100 TB): explode → one (lang, tok) map-side-combining hash
-    aggregate → per-lang top-R window over the aggregated vocabulary
-    (vocab-sized, not corpus-sized) → 5-row output."""
-    from pyspark.sql.window import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    freq = (
-        docs.select("lang", F.explode(toks()).alias("tok"))
-        .groupBy("lang", "tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = Window.partitionBy("lang").orderBy(
-        F.col("cnt").desc(), F.col("tok").asc()
-    )
-    top = freq.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= ZIPF_TOP
-    )
-    x = F.log(F.col("rank").cast("double"))
-    y = F.log(F.col("cnt").cast("double"))
-    fp = lambda e: F.floor(e * _ZIPF_SCALE).cast("long")  # noqa: E731
-    terms = top.select(
-        "lang",
-        fp(x).alias("fx"),
-        fp(y).alias("fy"),
-        fp(x * y).alias("fxy"),
-        fp(x * x).alias("fxx"),
-    )
-    agg = terms.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_terms"),
-        F.sum("fx").alias("sx"),
-        F.sum("fy").alias("sy"),
-        F.sum("fxy").alias("sxy"),
-        F.sum("fxx").alias("sxx"),
-    )
-    # exact bigint numerator/denominator, one double division at the end;
-    # sxy/sxx carry ONE 2^20 factor, sx*sy/sx*sx carry TWO — rescale the
-    # single-factor terms so both sides of the subtraction match
-    num = (
-        F.col("n_terms") * F.col("sxy") * F.lit(_ZIPF_SCALE)
-        - F.col("sx") * F.col("sy")
-    )
-    den = (
-        F.col("n_terms") * F.col("sxx") * F.lit(_ZIPF_SCALE)
-        - F.col("sx") * F.col("sx")
-    )
-    return agg.select(
-        "lang",
-        "n_terms",
-        (num.cast("double") / den.cast("double")).alias("zipf_slope"),
-    )
-
-
+# Per-language Zipf slope — the corpus-health diagnostic: natural
+# language runs ≈ −1 on the log-rank/log-frequency line, while
+# synthetic/templated/deduplicated-to-death corpora bend away from it.
+# OLS over the top ZIPF_TOP vocabulary ranks, x = ln(rank), y = ln(count):
+# slope = (R·Σxy − Σx·Σy) / (R·Σxx − Σx²). Each per-rank term is floored
+# to 2^20 fixed point before the bigint sums; one double division at the
+# end. Rank ties break on the token.
 ORACLE["corpus_zipf_slope"] = f"""
 with freq as (
   select lang, tok, count(*) cnt
@@ -907,96 +733,15 @@ from agg
 _JS_SCALE = 1 << 20  # fixed-point unit for deterministic JS-term sums
 DIV_VOCAB_CAP = 100_000  # top-K tokens by global count kept in the grid
 
-
-@_q("corpus_source_divergence")
-def corpus_source_divergence(
-    spark: SparkSession, sf_dir: str, _cap: int = DIV_VOCAB_CAP
-) -> DataFrame:
-    """Pairwise Jensen-Shannon divergence between the per-source token
-    unigram distributions — the corpus-drift / source-similarity
-    diagnostic used to spot near-duplicate crawls, schedule mixing, or
-    flag a source whose distribution shifted between snapshots.
-
-    JS(p,q) = ½·Σ p·ln(2p/(p+q)) + ½·Σ q·ln(2q/(p+q)); zero-count
-    terms contribute 0 (handled by a DENSE source×vocab grid with
-    zero-fill, so every pair sums over the identical support — no
-    outer-join asymmetry).
-
-    Determinism: counts are exact integers; each summand is floored to
-    2^20 fixed point before the bigint sum (associative), the policy
-    of text_ngram_entropy.
-
-    Scale (100 TB): the corpus contributes ONE (source, token)
-    map-side-combining hash aggregate — vocabulary×sources output
-    rows; the pairwise expansion joins the AGGREGATED grid to itself
-    on token (s_a < s_b), so pair cost is |vocab|·|sources|², never
-    corpus-sized. The vocabulary is CAPPED to the top-100k tokens by
-    global count (deterministic tie-break: count desc, token asc — the
-    CN_CAP/max_df discipline), so the grid is at most
-    |sources|·100k rows and broadcasts; at 100 TB the uncapped token
-    vocabulary is corpus-scale and would blow up both the grid and the
-    |vocab|·|sources|² pair expansion (r8 verdict "what's wrong" #1 —
-    the cap is now real, stated in the oracle, and pytest-pinned to be
-    inert at gated scale where |vocab| < 100k).  Distributions are
-    renormalized over the capped support on BOTH engines, so results
-    stay hash-exact."""
-    docs = load_table(spark, sf_dir, "documents")
-    counts = (
-        docs.select("source", F.explode(toks()).alias("tok"))
-        .groupBy("source", "tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    vocab = (
-        counts.groupBy("tok")
-        .agg(F.sum("c").alias("gc"))
-        .orderBy(F.desc("gc"), "tok")
-        .limit(_cap)
-        .select("tok")
-    )
-    sources = counts.select("source").distinct()
-    dense = (
-        sources.crossJoin(vocab)
-        .join(counts, ["source", "tok"], "left")
-        .select(
-            "source",
-            "tok",
-            F.coalesce(F.col("c"), F.lit(0)).alias("c"),
-        )
-    )
-    tot = dense.groupBy("source").agg(F.sum("c").alias("n"))
-    dense = dense.join(tot, "source").select(
-        "source", "tok", (F.col("c").cast("double") / F.col("n")).alias("p")
-    )
-    a = dense.select(
-        F.col("source").alias("src_a"), "tok", F.col("p").alias("pa")
-    )
-    b = dense.select(
-        F.col("source").alias("src_b"), "tok", F.col("p").alias("pb")
-    )
-    m = (F.col("pa") + F.col("pb")) / F.lit(2.0)
-    term = (
-        F.when(
-            F.col("pa") > 0, F.col("pa") * F.log(F.col("pa") / m)
-        ).otherwise(F.lit(0.0))
-        + F.when(
-            F.col("pb") > 0, F.col("pb") * F.log(F.col("pb") / m)
-        ).otherwise(F.lit(0.0))
-    ) / F.lit(2.0)
-    return (
-        a.join(b, "tok")
-        .where(F.col("src_a") < F.col("src_b"))
-        .select(
-            "src_a",
-            "src_b",
-            F.floor(term * _JS_SCALE).alias("fp"),
-        )
-        .groupBy("src_a", "src_b")
-        .agg(
-            (F.sum("fp").cast("double") / F.lit(float(_JS_SCALE))).alias(
-                "js_divergence"
-            )
-        )
-    )
+# Pairwise Jensen-Shannon divergence between the per-source token
+# unigram distributions — the corpus-drift / source-similarity
+# diagnostic used to spot near-duplicate crawls, schedule mixing, or
+# flag a source whose distribution shifted between snapshots. A dense
+# source×vocab grid with zero-fill gives every pair the same support,
+# and each summand is floored to 2^20 fixed point before the bigint sum.
+# The vocabulary is capped to the top DIV_VOCAB_CAP tokens by global
+# count, so the grid and the |vocab|·|sources|² pair expansion stay
+# bounded at any corpus size; the cap is inert at the test scales.
 
 
 def divergence_oracle_sql(cap: int = DIV_VOCAB_CAP) -> str:
@@ -1398,10 +1143,21 @@ def sample_mixture_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") == F.col("_min_id"))
         .select("doc_id", "source", "n_tokens")
     )
-    budgets = corpus_mix_weights(spark, sf_dir).select(
+    # corpus_mix_weights' weight over the artifact's per-doc token counts
+    powered = F.pow(F.col("n_tokens").cast("double"), F.lit(MIX_ALPHA))
+    w = Window.orderBy("source").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    weights = (
+        _scored_memo(spark, sf_dir)
+        .groupBy("source")
+        .agg(F.sum("n_tokens").alias("n_tokens"))
+        .select("source", F.round(powered / F.sum(powered).over(w), 12).alias("w"))
+    )
+    budgets = weights.select(
         "source",
         F.expr(
-            f"{MIXB_GLOBAL} * cast(round(mix_weight_t07 * {MIXB_SCALE}) "
+            f"{MIXB_GLOBAL} * cast(round(w * {MIXB_SCALE}) "
             f"as bigint) div {MIXB_SCALE}"
         ).alias("budget_tokens"),
     )
@@ -1473,140 +1229,14 @@ order by source
 # ------------------------------------------------- corpus_token_regression
 REG_FP = 1 << 20  # fixed-point unit for the residual-square sums
 
-
-@_q("corpus_token_regression")
-def corpus_token_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Closed-form distributed OLS — the one-pass "model fit is an
-    aggregate" pattern a 100 TB pipeline uses for cheap calibrators
-    (length→token-count predictors for budget planning, quality-score
-    recalibration): regress per-doc DISTINCT-token count (the
-    Heaps-law vocabulary curve — genuinely nonlinear in length, so the
-    fit has real residuals; total token count is spaces+1, perfectly
-    collinear with a feature, and would make the gate vacuous) on
-    (n_chars, n_spaces) via the NORMAL EQUATIONS. Pass 1 is ONE
-    map-side-combining aggregate of integer moment sums (all features
-    and the target are exact ints, so X'X and X'y are exact bigints —
-    no float-order nondeterminism); the 3×3 system solves in closed
-    form (Cramer's rule) as scalar double expressions both engines
-    evaluate identically from identical bigint moments; pass 2
-    broadcasts the betas and aggregates per-source residual stats,
-    flooring each squared residual to 2^20 fixed point before the
-    bigint sum (the repo's fixed-point law).
-
-    Output: one row per source — n_docs, rmse (from the exact
-    fixed-point SSE), plus the shared betas so the oracle hash pins
-    the solve itself. Scale: two linear passes, 10-value aggregate
-    state, a 3-float broadcast; nothing corpus-quadratic.
-
-    Reference parity: extension (the reference ships no regression);
-    the moments→Cramer shape is textbook OLS."""
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id",
-        "source",
-        F.length("text").cast("long").alias("x1"),
-        (
-            F.length("text")
-            - F.length(F.replace(F.col("text"), F.lit(" "), F.lit("")))
-        ).cast("long").alias("x2"),
-        F.size(F.array_distinct(F.split(F.col("text"), " ")))
-        .cast("long")
-        .alias("y"),
-    )
-    m = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x1").alias("s1"),
-        F.sum("x2").alias("s2"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x1") * F.col("x1")).alias("s11"),
-        F.sum(F.col("x1") * F.col("x2")).alias("s12"),
-        F.sum(F.col("x2") * F.col("x2")).alias("s22"),
-        F.sum(F.col("x1") * F.col("y")).alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).alias("s2y"),
-    )
-    # Cramer's rule over the exact integer moments, evaluated in
-    # doubles: X'X = [[n,s1,s2],[s1,s11,s12],[s2,s12,s22]],
-    # X'y = [sy,s1y,s2y]. Written out ONCE as column expressions whose
-    # text the oracle mirrors verbatim (same operand order).
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    det = (
-        d("n") * (d("s11") * d("s22") - d("s12") * d("s12"))
-        - d("s1") * (d("s1") * d("s22") - d("s12") * d("s2"))
-        + d("s2") * (d("s1") * d("s12") - d("s11") * d("s2"))
-    )
-    det0 = (
-        d("sy") * (d("s11") * d("s22") - d("s12") * d("s12"))
-        - d("s1") * (d("s1y") * d("s22") - d("s12") * d("s2y"))
-        + d("s2") * (d("s1y") * d("s12") - d("s11") * d("s2y"))
-    )
-    det1 = (
-        d("n") * (d("s1y") * d("s22") - d("s12") * d("s2y"))
-        - d("sy") * (d("s1") * d("s22") - d("s12") * d("s2"))
-        + d("s2") * (d("s1") * d("s2y") - d("s1y") * d("s2"))
-    )
-    det2 = (
-        d("n") * (d("s11") * d("s2y") - d("s1y") * d("s12"))
-        - d("s1") * (d("s1") * d("s2y") - d("s1y") * d("s2"))
-        + d("sy") * (d("s1") * d("s12") - d("s11") * d("s2"))
-    )
-    betas = m.select(
-        (det0 / det).alias("b0"),
-        (det1 / det).alias("b1"),
-        (det2 / det).alias("b2"),
-    )
-    scored = base.crossJoin(F.broadcast(betas)).select(
-        "source",
-        F.floor(
-            (
-                F.col("y").cast("double")
-                - (
-                    F.col("b0")
-                    + F.col("b1") * F.col("x1").cast("double")
-                    + F.col("b2") * F.col("x2").cast("double")
-                )
-            )
-            * (
-                F.col("y").cast("double")
-                - (
-                    F.col("b0")
-                    + F.col("b1") * F.col("x1").cast("double")
-                    + F.col("b2") * F.col("x2").cast("double")
-                )
-            )
-            * F.lit(float(REG_FP))
-        ).alias("sqfp"),
-        "b0",
-        "b1",
-        "b2",
-    )
-    return (
-        scored.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("sqfp").alias("ssefp"),
-            F.any_value("b0").alias("b0r"),
-            F.any_value("b1").alias("b1r"),
-            F.any_value("b2").alias("b2r"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            F.round(
-                F.sqrt(
-                    F.col("ssefp").cast("double")
-                    / F.col("n_docs").cast("double")
-                    / F.lit(float(REG_FP))
-                ),
-                12,
-            ).alias("rmse"),
-            F.round("b0r", 12).alias("b0"),
-            F.round("b1r", 12).alias("b1"),
-            F.round("b2r", 12).alias("b2"),
-        )
-        .orderBy("source")
-    )
-
-
+# Closed-form distributed OLS, the one-pass "model fit is an aggregate"
+# pattern: regress per-doc DISTINCT-token count (the Heaps-law curve,
+# nonlinear in length, so the fit has real residuals) on (n_chars,
+# n_spaces) via the normal equations. Pass 1 is one aggregate of exact
+# bigint moments; the 3×3 system is solved by Cramer's rule in doubles
+# from those identical moments; pass 2 crosses the 1-row betas into the
+# corpus and floors each squared residual to 2^20 fixed point before the
+# per-source bigint sum. Output: n_docs, rmse and the shared betas.
 ORACLE["corpus_token_regression"] = f"""
 with base as (
   select doc_id, source,
@@ -1684,53 +1314,13 @@ order by source
 # ---------------------------------------------- sample_weighted_priority
 WPRI_K = 40  # docs kept per source
 
-
-@_q("sample_weighted_priority")
-def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DETERMINISTIC weighted-priority sampling per source — the
-    Efraimidis–Spirakis one-pass reservoir SHAPE (assign each row a
-    priority from (hash, weight), keep the per-stratum top-K by
-    priority; mergeable across partitions because top-K of a union is
-    top-K of the per-partition top-Ks) with the repo's md5-derived
-    determinism: u = the 60-bit md5 fold of the doc id, priority =
-    u / weight, weight = n_chars — longer docs draw smaller priorities
-    and are proportionally favored, the standard length-weighted draw
-    a mixture sampler runs per source.
-
-    Honesty note: true A-ES uses u^(1/w) (exactly probability-
-    proportional-to-size without replacement); u/w is the monotone
-    single-IEEE-DIVISION variant — favoring is approximate, but the
-    arithmetic is ONE correctly-rounded IEEE op on engine-identical
-    doubles, so the selected SET is hash-exact cross-engine, where a
-    pow()/ln() form would ride each engine's libm ulp differences
-    straight into the gate hash. The mechanism under test —
-    deterministic, mergeable, per-stratum weighted top-K at corpus
-    scale — is identical.
-
-    Scale: one narrow scan; the per-source window executes as
-    WindowGroupLimit (only K rows per source survive the partial
-    stage); no corpus-sized state anywhere."""
-    docs = load_table(spark, sf_dir, "documents")
-    from pyspark.sql.window import Window
-
-    pri = (
-        F.expr(
-            "cast(conv(substring(md5(concat('wpri ', "
-            "cast(doc_id as string))), 1, 15), 16, 10) as bigint)"
-        ).cast("double")
-        / F.col("n_chars").cast("double")
-    )
-    w = Window.partitionBy("source").orderBy(
-        F.col("priority").asc(), F.col("doc_id").asc()
-    )
-    return (
-        docs.select("source", "doc_id", "n_chars", pri.alias("priority"))
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= WPRI_K)
-        .select("source", "doc_id", "n_chars", "rk")
-    )
-
-
+# Deterministic weighted-priority sampling per source, the
+# Efraimidis–Spirakis shape: each row gets a priority from (hash,
+# weight) and each source keeps its top-K by priority, which is
+# mergeable across partitions. u = the 60-bit md5 fold of the doc id,
+# priority = u / n_chars: one IEEE division on identical doubles, so the
+# selected set is hash-exact (true A-ES uses u^(1/w), whose pow() would
+# differ by an ulp between engines).
 ORACLE["sample_weighted_priority"] = f"""
 select source, doc_id, n_chars, rk from (
   select source, doc_id, n_chars,
@@ -1861,3 +1451,6 @@ from ranked where rk = 1
 
 
 ORACLE["pipeline_canonical_best"] = _canonical_best_sql()
+
+
+register_texts(QUERIES, ORACLE)

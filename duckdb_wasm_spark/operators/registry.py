@@ -6,7 +6,6 @@ from __future__ import annotations
 from duckdb_wasm_spark.operators import (
     dedup,
     graph,
-    ml_lsh,
     multimodal,
     pipeline,
     selection,
@@ -18,9 +17,6 @@ from duckdb_wasm_spark.operators import (
 
 QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
-# ml_lsh (the only no-oracle, rows-only queries) is merged LAST so the
-# driver's ordered correctness walk exercises every oracle-backed query
-# before the expensive ML comparison points (round-2 verdict #1).
-for _m in (text, dedup, similarity, multimodal, pipeline, temporal, sketches, graph, selection, ml_lsh):
+for _m in (text, dedup, similarity, multimodal, pipeline, temporal, sketches, graph, selection):
     QUERIES.update(_m.QUERIES)
     ORACLE.update(_m.ORACLE)

@@ -101,8 +101,8 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     risk — unreachable at the gated scales, where every source carries
     >= 1000 distinct trigrams >= 4m (the estimator sits in its
     bias-corrected sweet spot; a testdata regeneration shrinking
-    sources below ~640 distinct shingles would need this row demoted
-    to rows-only).
+    sources below ~640 distinct shingles would put that ln() on the
+    hash-compared path).
 
     Scale: state is |sources| x 256 registers, corpus-size-free."""
     docs = load_table(spark, sf_dir, "documents")

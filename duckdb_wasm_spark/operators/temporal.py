@@ -23,6 +23,17 @@ Scale notes (100 TB framing):
     for a small-side non-equi join (audited in the plan-guard BNLJ
     allowlist); the aggregate after it is a partial+final hash agg.
 
+The batch event queries live here too: retention, funnel, key skew,
+salted join, sessionization and SCD2.
+
+Five queries run their own oracle text through the dialect translator
+(`plans/_util.register_texts`): asof_click_attribution,
+events_retention, events_funnel, events_sessionize and events_scd2.
+range_join_price_bands keeps its DataFrame plan (its oracle sums an
+integer, a type-family mismatch as text); events_key_skew and
+events_salted_join keep theirs because the plan is the skew capability
+under test. The generic `asof_join` / `range_join` DataFrame APIs stay.
+
 Determinism: the window order (ts, is_p, event_id) is total (event_id
 unique), so frames are identical in both engines; band sums accumulate
 as decimal before the final double cast (plans/_util.py policy).
@@ -34,7 +45,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from duckdb_wasm_spark.plans._util import dec, dsum, sql_dec, sql_dsum, sql_query
+from duckdb_wasm_spark.plans._util import (
+    dec,
+    dsum,
+    register_texts,
+    sql_dec,
+    sql_dsum,
+)
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
@@ -75,9 +92,6 @@ select event_id, user_id, ts, click_ts, n_prior_clicks
 from merged
 where is_p = 1
 """
-QUERIES["asof_click_attribution"] = sql_query(
-    "asof_click_attribution", ORACLE["asof_click_attribution"]
-)
 
 
 # ---------------------------------------------- range_join_price_bands
@@ -199,34 +213,10 @@ def range_join(
 
 
 # ------------------------------------------------------- events_retention
-@_q("events_retention")
-def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention triangle: users cohorted by first-activity day,
-    counted on each later active day offset — the standard engagement
-    rollup every analytics stack ships (and the canonical input to a
-    retention curve).
-
-    Scale: first-day and distinct-active-day both shuffle once on
-    user_id (high cardinality, no skew hazard); the join is
-    co-partitioned on the same key, and the final rollup is a
-    partial+final hash agg on the tiny (cohort_date, offset) key. All
-    outputs are dates and counts — nothing float, nothing
-    order-dependent."""
-    ev = load_table(spark, sf_dir, "events")
-    firsts = ev.groupBy("user_id").agg(
-        F.min(F.to_date("ts")).alias("cohort_date")
-    )
-    active = ev.select("user_id", F.to_date("ts").alias("d")).distinct()
-    return (
-        active.join(firsts, "user_id")
-        .groupBy(
-            "cohort_date",
-            F.datediff("d", F.col("cohort_date")).alias("offset_days"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_active_users"))
-    )
-
-
+# Cohort retention triangle: users cohorted by first-activity day,
+# counted on each later active day offset — the standard engagement
+# rollup every analytics stack ships (and the canonical input to a
+# retention curve).
 ORACLE["events_retention"] = """
 with firsts as (
   select user_id, min(cast(ts as date)) cohort_date
@@ -273,7 +263,6 @@ select step, event_type, n_users,
          / (select n_users from counts where step = 1) conv_from_first
 from counts
 """
-QUERIES["events_funnel"] = sql_query("events_funnel", ORACLE["events_funnel"])
 
 
 # --------------------------------------------------- events_key_skew
@@ -439,67 +428,12 @@ group by event_type
 # ----------------------------------------------------- events_sessionize
 SESS_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap, in micros
 
-
-@_q("events_sessionize")
-def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based SESSIONIZATION with stable per-event session ids —
-    the batch form of the session window that emits the session KEY
-    (user_id, session_seq) rather than only the merged aggregate, so
-    downstream joins can attribute any event back to its session (the
-    classic gaps-and-islands cumulative-flag construction).
-
-    Construction: per user, events ordered by (ts, event_id); a row
-    opens a new session iff it is the user's first event or the gap
-    to the previous event exceeds 30 minutes; session_seq is the
-    running sum of open flags. One window partition per user — a
-    single hash shuffle by user_id, state linear in the user's events,
-    no self-join (the join-based alternative is quadratic per user).
-    This keyed-session shape is exactly what the streaming session
-    window (events_stream_session) maintains incrementally; here the
-    driver gates the batch law it must agree with.
-
-    Determinism: gaps compare MICROSECOND integers (unix_micros /
-    epoch_us) — no float time arithmetic, no seconds truncation
-    disagreement; the order (ts, event_id) is total."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.expr("unix_micros(cast(ts as timestamp))").alias("us"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.withColumn(
-        "new_sess",
-        F.when(
-            F.lag("us").over(w).isNull()
-            | (F.col("us") - F.lag("us").over(w) > SESS_GAP_US),
-            1,
-        ).otherwise(0),
-    ).withColumn(
-        "session_seq",
-        F.sum("new_sess").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    return (
-        flagged.groupBy("user_id", "session_seq")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("us").alias("start_us"),
-            F.max("us").alias("end_us"),
-        )
-        .select(
-            "user_id",
-            "session_seq",
-            "n_events",
-            (F.col("end_us") - F.col("start_us")).alias("duration_us"),
-        )
-        .orderBy("user_id", "session_seq")
-    )
-
-
+# Gap-based SESSIONIZATION with stable per-event session ids — the batch
+# form of the session window that emits the session KEY (user_id,
+# session_seq) rather than only the merged aggregate, so downstream
+# joins can attribute any event back to its session (the classic gaps-
+# and-islands cumulative-flag construction). Gaps compare microsecond
+# integers and the order (ts, event_id) is total.
 ORACLE["events_sessionize"] = f"""
 with ev as (
   select event_id, user_id, ts, epoch_us(ts) us from events),
@@ -526,75 +460,14 @@ order by user_id, session_seq
 
 
 # --------------------------------------------------------- events_scd2
-@_q("events_scd2")
-def events_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC change-log -> SCD TYPE-2 dimension build: collapse each
-    user's event stream into state-validity intervals (state =
-    event_type), one row per RUN of equal consecutive states, with
-    half-open [valid_from, valid_to) micros, a per-user version
-    counter, and is_current on the last run — the standard upsert
-    compaction that turns an append-only change feed into a
-    point-in-time-joinable dimension (the lakehouse MERGE/SCD2
-    pattern; the reference engine's users express it as window SQL,
-    which is exactly what this is).
-
-    Construction: per user, events ordered by the total order
-    (ts, event_id); a row opens a new version iff it is the user's
-    first event or its state differs from the previous event's
-    (lag); version = running sum of open flags (gaps-and-islands, the
-    same construction as events_sessionize but keyed on state CHANGE
-    rather than time gap); one hash aggregate by (user, version)
-    computes the interval and the run length, and valid_to is the
-    NEXT version's valid_from (lead over the per-user version order —
-    half-open intervals tile the user's timeline exactly).
-
-    Scale (100 TB feed): one shuffle by user_id, then windows and the
-    aggregate all reuse that partitioning — state is linear in each
-    user's events, no self-join (the join-on-next-change alternative
-    is quadratic per user), and the output is the COMPRESSED dimension
-    (runs, not events), so downstream as-of joins against it touch
-    versions, not raw log rows. Determinism: micros integers, total
-    tie-break, bigint version counters."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        F.col("event_type").alias("state"),
-        "ts",
-        F.expr("unix_micros(cast(ts as timestamp))").alias("us"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    versioned = ev.withColumn(
-        "open",
-        F.when(
-            F.lag("state").over(w).isNull()
-            | (F.lag("state").over(w) != F.col("state")),
-            1,
-        ).otherwise(0),
-    ).withColumn(
-        "version",
-        F.sum("open").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    runs = versioned.groupBy("user_id", "version").agg(
-        F.min("state").alias("state"),  # constant within a run
-        F.min("us").alias("valid_from_us"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-    wv = Window.partitionBy("user_id").orderBy("version")
-    return runs.select(
-        "user_id",
-        "version",
-        "state",
-        "valid_from_us",
-        F.lead("valid_from_us").over(wv).alias("valid_to_us"),
-        F.lead("valid_from_us").over(wv).isNull().alias("is_current"),
-        "n_events",
-    )
-
-
+# CDC change-log -> SCD TYPE-2 dimension build: collapse each user's
+# event stream into state-validity intervals (state = event_type), one
+# row per RUN of equal consecutive states, with half-open [valid_from,
+# valid_to) micros, a per-user version counter, and is_current on the
+# last run — the standard upsert compaction that turns an append-only
+# change feed into a point-in-time-joinable dimension. A new version
+# opens where the state differs from the previous event's (lag), and
+# valid_to is the next version's valid_from (lead).
 ORACLE["events_scd2"] = """
 with ev as (
   select event_id, user_id, event_type state, ts, epoch_us(ts) us
@@ -625,3 +498,6 @@ select user_id, "version", state, valid_from_us,
 from runs
 window wv as (partition by user_id order by "version")
 """
+
+
+register_texts(QUERIES, ORACLE)

@@ -1,22 +1,20 @@
 """Text-analysis operators over the `documents` table.
 
-Every query here is pure built-in-function DataFrame code (JVM-side,
-whole-stage codegen, no Python UDFs) and ships a DuckDB oracle built from
-the same primitives, so results hash-match exactly:
+Every query ships a DuckDB oracle text built from the same primitives
+as its plan (md5 hashing, the `_text` tokenizer, fixed-point float
+sums), so results hash-match exactly.
 
-  text_stats        per-doc token counts / type-token ratio / quality score
-  text_langid       stopword-ratio language-ID heuristic + accuracy flag
-  text_fingerprint  md5 + sorted-vocabulary + min-shingle fingerprints
-  text_tokens       whitespace vs regex ("BPE-ish") token counting
+Ten queries run their own oracle text through the dialect translator
+(`plans/_util.register_texts`): text_stats, text_langid, text_tokens,
+text_vocab_topk, text_repetition, text_pii_scan, text_gopher_flags,
+text_ngram_entropy, text_pmi_topk and text_robust_stats. The rest keep
+a DataFrame plan: text_fingerprint, text_tfidf_topk, text_lm_score,
+text_dup_spans, text_bpe_pair_counts, text_bpe_merge and corpus_novelty
+because their text measured 1.8x or more slower at sf0.1, and
+text_bm25_topk because it serves a persisted index.
 
-Scale notes (100 TB): all four are embarrassingly parallel projections —
-no shuffle at all (narrow, one scan, predicate/column pushdown reaches the
-parquet scan). Determinism: integer counts divided as doubles, identical
-operation order in both engines (see plans/_util.py for the policy).
-
-Reference surface being extended: the reference engine has no text
-operators; these are the driver-mandated LLM-pipeline extensions
-(SURVEY.md §7 phase 5).
+Determinism: integer counts divided as doubles, identical operation
+order in both engines (see plans/_util.py for the policy).
 """
 
 from __future__ import annotations
@@ -28,7 +26,6 @@ from duckdb_wasm_spark.operators._text import (
     STOPWORDS,
     bigrams,
     ngrams,
-    ngrams_all,
     sql_bigrams,
     sql_ngrams,
     sql_ngrams_all,
@@ -38,7 +35,7 @@ from duckdb_wasm_spark.operators._text import (
     toks,
     trigrams,
 )
-from duckdb_wasm_spark.plans._util import sql_query
+from duckdb_wasm_spark.plans._util import register_texts
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
@@ -54,52 +51,10 @@ def _q(name):
 
 
 # ----------------------------------------------------------- text_stats
-@_q("text_stats")
-def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document statistics + a composite quality score.
-
-    quality = 0.3·TTR + 0.4·min(1, n_tokens/50) + 0.3·(1 − stopword_ratio)
-    (length-, diversity- and function-word-based, the standard cheap
-    pretraining quality heuristics)."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = toks()
-    sw = STOPWORDS["en"]
-    d = docs.select(
-        "doc_id",
-        F.size(t).alias("n_tokens"),
-        F.size(F.array_distinct(t)).alias("n_distinct"),
-        F.aggregate(
-            F.transform(t, lambda x: F.length(x)), F.lit(0), lambda a, v: a + v
-        ).alias("char_sum"),
-        F.size(F.filter(t, lambda x: x.isin(*sw))).alias("n_stop"),
-        F.length("text").alias("n_chars"),
-    )
-    # nullif-guarded denominators (round-4 ADVICE): a zero-token doc
-    # must yield NULL ratios in BOTH engines — Spark's x/0 is NaN/Inf
-    # (and NaN sorts ABOVE every double) while DuckDB list_sum of an
-    # empty list is already NULL; nullif makes the two sides agree.
-    ntok = F.nullif(F.col("n_tokens"), F.lit(0))
-    ttr = F.col("n_distinct").cast("double") / ntok
-    swr = F.col("n_stop").cast("double") / ntok
-    return d.select(
-        "doc_id",
-        "n_tokens",
-        "n_distinct",
-        "n_chars",
-        ttr.alias("ttr"),
-        (F.col("char_sum").cast("double") / ntok).alias(
-            "avg_token_len"
-        ),
-        swr.alias("stopword_ratio"),
-        (
-            F.lit(0.3) * ttr
-            + F.lit(0.4)
-            * F.least(F.lit(1.0), F.col("n_tokens").cast("double") / F.lit(50.0))
-            + F.lit(0.3) * (F.lit(1.0) - swr)
-        ).alias("quality"),
-    )
-
-
+# Per-document statistics + a composite quality score:
+# quality = 0.3·TTR + 0.4·min(1, n_tokens/50) + 0.3·(1 − stopword_ratio).
+# The ratios are nullif-guarded, so a zero-token doc gets NULL ratios in
+# both engines (Spark's x/0 would be NaN, which sorts above every double).
 ORACLE["text_stats"] = f"""
 with d as (
   select doc_id,
@@ -125,38 +80,9 @@ from d
 # ---------------------------------------------------------- text_langid
 _LANGS = sorted(STOPWORDS)  # deterministic tie-break: alphabetical
 
-
-@_q("text_langid")
-def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N-gram-free language-ID heuristic: per-language function-word hit
-    ratio, argmax with alphabetical tie-break, compared to the labeled
-    `lang` column."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = toks()
-    def hit(lang):
-        # closure factory: a default-arg lambda would change the lambda's
-        # arity and make Spark pass the (element, index) pair
-        return F.size(F.filter(t, lambda x: x.isin(*STOPWORDS[lang])))
-
-    d = docs.select(
-        "doc_id",
-        "lang",
-        F.size(t).alias("n"),
-        *[hit(lang).alias(f"hit_{lang}") for lang in _LANGS],
-    )
-    scores = {
-        lang: F.col(f"hit_{lang}").cast("double") / F.col("n") for lang in _LANGS
-    }
-    best = F.greatest(*scores.values())
-    guess = F.lit(None).cast("string")
-    for lang in reversed(_LANGS):
-        guess = F.when(scores[lang] == best, F.lit(lang)).otherwise(guess)
-    return d.select(
-        "doc_id",
-        "lang",
-        *[scores[lang].alias(f"score_{lang}") for lang in _LANGS],
-        guess.alias("guess"),
-    ).withColumn("is_match", F.col("guess") == F.col("lang"))
+# N-gram-free language-ID heuristic: per-language function-word hit
+# ratio, argmax with alphabetical tie-break, compared to the labeled
+# `lang` column.
 
 
 def _langid_sql() -> str:
@@ -233,23 +159,8 @@ from documents
 # ---------------------------------------------------------- text_tokens
 _RE_TOKEN = "[a-z0-9]+"  # same semantics in Java regex and DuckDB RE2
 
-
-@_q("text_tokens")
-def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting: whitespace tokens vs regex word tokens (the BPE-ish
-    lower-alnum run splitter) + chars-per-token ratio."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = toks()
-    n_re = F.size(F.regexp_extract_all(F.col("text"), F.lit(_RE_TOKEN), 0))
-    return docs.select(
-        "doc_id",
-        F.size(t).alias("n_ws_tokens"),
-        n_re.alias("n_re_tokens"),
-        F.length("text").alias("n_chars"),
-        (F.length("text").cast("double") / F.size(t)).alias("chars_per_token"),
-    )
-
-
+# Token counting: whitespace tokens vs regex word tokens (the BPE-ish
+# lower-alnum run splitter) + chars-per-token ratio.
 ORACLE["text_tokens"] = f"""
 select doc_id,
        len({sql_toks('text')}) n_ws_tokens,
@@ -263,27 +174,9 @@ from documents
 # ------------------------------------------------------- text_vocab_topk
 VOCAB_K = 100
 
-
-@_q("text_vocab_topk")
-def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary: the K most frequent tokens with document
-    frequency — the first step of any tokenizer/vocab build. Token
-    counting is a map-side-combining hash aggregate over the exploded
-    tokens; the top-K is TakeOrderedAndProject (no global sort
-    materialization). Ties break on the token so the cut is total."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("doc_id", F.explode(toks()).alias("tok"))
-        .groupBy("tok")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(F.col("doc_id")).alias("df"),
-        )
-        .orderBy(F.col("n").desc(), F.col("tok").asc())
-        .limit(VOCAB_K)
-    )
-
-
+# Corpus vocabulary: the K most frequent tokens with document frequency
+# — the first step of any tokenizer/vocab build. Ties break on the token
+# so the cut is total.
 ORACLE["text_vocab_topk"] = f"""
 select tok, count(*) n, count(distinct doc_id) df
 from (select doc_id, unnest({sql_toks('text')}) tok from documents)
@@ -294,63 +187,11 @@ limit {VOCAB_K}
 
 
 # ------------------------------------------------------ text_repetition
-@_q("text_repetition")
-def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition signals per document: the share of bigram
-    occurrences taken by the single most frequent bigram, and the
-    duplicate-trigram fraction (1 − distinct/total). High values flag
-    boilerplate / looping generations for pretraining filtering.
-
-    Plan shape: the trigram signal is a pure narrow projection (counts
-    from shifted slices, no shuffle). The top-bigram count needs per-gram
-    occurrence counts, so it explodes NON-distinct bigrams and runs two
-    map-side-combining hash aggregates keyed by doc_id (+gram) — cost is
-    linear in token count, shuffle keyed on the high-cardinality
-    (doc_id, gram) pair so there is no skew hazard at 100 TB. Docs with
-    <2 tokens have no bigrams: left join, NULL fractions (same in the
-    oracle).
-
-    Do NOT fold the narrow branch into the explode to "save a pass":
-    expressions projected alongside explode() are re-evaluated per
-    exploded row, so carrying the trigram-distinct count through the
-    bigram explode re-runs array_distinct per bigram — measured 13.9s
-    vs 1.26s at sf0.1 (round 4). Two branches + one join is the fast
-    shape here."""
-    docs = load_table(spark, sf_dir, "documents").withColumn("_t", toks())
-    t = F.col("_t")
-    narrow = docs.select(
-        "doc_id",
-        F.size(t).alias("n_tokens"),
-        F.greatest(F.size(t) - 1, F.lit(0)).alias("n_bigrams"),
-        F.greatest(F.size(t) - 2, F.lit(0)).alias("n_trigrams"),
-        F.size(trigrams(t)).alias("n_distinct_trigrams"),
-    )
-    top = (
-        docs.select("doc_id", F.explode(bigrams(t)).alias("gram"))
-        .groupBy("doc_id", "gram")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy("doc_id")
-        .agg(F.max("cnt").alias("top_bigram_n"))
-    )
-    return narrow.join(top, "doc_id", "left").select(
-        "doc_id",
-        "n_tokens",
-        "n_bigrams",
-        "n_trigrams",
-        "n_distinct_trigrams",
-        "top_bigram_n",
-        F.when(
-            F.col("n_bigrams") > 0,
-            F.col("top_bigram_n").cast("double") / F.col("n_bigrams"),
-        ).alias("top_bigram_frac"),
-        F.when(
-            F.col("n_trigrams") > 0,
-            F.lit(1.0)
-            - F.col("n_distinct_trigrams").cast("double") / F.col("n_trigrams"),
-        ).alias("dup_trigram_frac"),
-    )
-
-
+# Gopher-style repetition signals per document: the share of bigram
+# occurrences taken by the single most frequent bigram, and the
+# duplicate-trigram fraction (1 − distinct/total). High values flag
+# boilerplate / looping generations for pretraining filtering. Docs
+# with <2 tokens have no bigrams: the left join gives NULL fractions.
 ORACLE["text_repetition"] = f"""
 with d as (
   select doc_id, {sql_toks('text')} t from documents),
@@ -470,33 +311,10 @@ _PII_PHONE = r"\+?[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}"
 _PII_IPV4 = r"[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}"
 
 
-@_q("text_pii_scan")
-def text_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII pre-redaction scan: per-document counts of email / phone /
-    IPv4 regex matches plus a redacted text length — the detection pass
-    a training-data pipeline runs before masking. Pure narrow
-    projection, zero shuffle; patterns live in the Java∩RE2 subset so
-    both engines count identical spans (the actual masking is the same
-    regexp_replace the redacted-length column already exercises)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(_PII_EMAIL), 0))
-        .alias("n_emails"),
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(_PII_PHONE), 0))
-        .alias("n_phones"),
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(_PII_IPV4), 0))
-        .alias("n_ipv4"),
-        F.length(
-            F.regexp_replace(
-                F.regexp_replace(F.col("text"), _PII_EMAIL, "<EMAIL>"),
-                _PII_PHONE,
-                "<PHONE>",
-            )
-        ).alias("redacted_len"),
-    )
-
-
+# PII pre-redaction scan: per-document counts of email / phone / IPv4
+# regex matches plus a redacted text length — the detection pass a
+# training-data pipeline runs before masking. The patterns live in the
+# Java∩RE2 subset, so both engines count identical spans.
 ORACLE["text_pii_scan"] = f"""
 select doc_id,
        len(regexp_extract_all(text, '{_PII_EMAIL}')) n_emails,
@@ -517,55 +335,13 @@ GOPHER_WORD_LEN_HI = 12.0
 GOPHER_MAX_SYMBOL_RATIO = 0.25
 GOPHER_MIN_ALPHA_RATIO = 0.6
 
-
-@_q("text_gopher_flags")
-def text_gopher_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style document-level filter rules as boolean flags plus
-    the final keep verdict: token-count bounds, mean word length in
-    range, symbol-to-token ratio, alphabetic-token fraction. The flag
-    columns let a pipeline audit WHICH rule rejected each document (the
-    standard way these rule suites are tuned); `keep` is their AND.
-    One narrow projection, zero shuffle, built-ins only."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = toks()
-    d = docs.select(
-        "doc_id",
-        F.size(t).alias("n_tokens"),
-        F.aggregate(
-            F.transform(t, lambda x: F.length(x)), F.lit(0), lambda a, v: a + v
-        ).alias("char_sum"),
-        F.size(
-            F.filter(t, lambda x: x.rlike("^[a-z]+$"))
-        ).alias("n_alpha"),
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[#$%^*=~|]"), 0))
-        .alias("n_symbols"),
-    )
-    # nullif-guarded like text_stats: zero-token docs → NULL ratios in
-    # both engines (Spark x/0 is NaN/Inf, which would silently flip the
-    # flag comparisons); ok_count is False for such docs so `keep`
-    # stays False under three-valued AND in both engines.
-    ntok = F.nullif(F.col("n_tokens"), F.lit(0))
-    mean_len = F.col("char_sum").cast("double") / ntok
-    sym_ratio = F.col("n_symbols").cast("double") / ntok
-    alpha_ratio = F.col("n_alpha").cast("double") / ntok
-    flags = {
-        "ok_count": (F.col("n_tokens") >= GOPHER_MIN_TOKENS)
-        & (F.col("n_tokens") <= GOPHER_MAX_TOKENS),
-        "ok_word_len": (mean_len >= GOPHER_WORD_LEN_LO)
-        & (mean_len <= GOPHER_WORD_LEN_HI),
-        "ok_symbols": sym_ratio <= GOPHER_MAX_SYMBOL_RATIO,
-        "ok_alpha": alpha_ratio >= GOPHER_MIN_ALPHA_RATIO,
-    }
-    keep = None
-    for c in flags.values():
-        keep = c if keep is None else (keep & c)
-    return d.select(
-        "doc_id",
-        *[c.alias(name) for name, c in flags.items()],
-        keep.alias("keep"),
-    )
-
-
+# Gopher-style document-level filter rules as boolean flags plus the
+# final keep verdict: token-count bounds, mean word length in range,
+# symbol-to-token ratio, alphabetic-token fraction. The flag columns let
+# a pipeline audit WHICH rule rejected each document (the standard way
+# these rule suites are tuned); `keep` is their AND. Ratios are
+# nullif-guarded like text_stats, and ok_count is false for zero-token
+# docs, so `keep` stays false under three-valued AND.
 ORACLE["text_gopher_flags"] = f"""
 with d as (
   select doc_id,
@@ -815,61 +591,13 @@ group by doc_id
 ENTROPY_N = 3  # shingle width for the entropy estimate
 _ENT_SCALE = 1 << 20  # fixed-point unit for deterministic entropy sums
 
-
-@_q("text_ngram_entropy")
-def text_ngram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document trigram Shannon entropy — the information-density
-    quality signal curation pipelines use to separate natural prose
-    (high entropy) from boilerplate/template/spam text (low): docs
-    whose n-gram distribution is concentrated score near 0 even when
-    plain dup-fraction misses the repetition structure.
-
-    entropy = -Σ p·ln(p) over the NON-distinct trigram distribution.
-
-    Determinism: a double Σ over a hash aggregate is
-    partial-aggregation-order-dependent, so each -p·ln(p) term is
-    floored to 2^20 fixed point (bigint) BEFORE summing; integer sums
-    are associative, and the final s/2^20 is an exact exponent shift —
-    bit-identical in both engines. A doc whose trigrams are all equal
-    (p=1, ln 1 = 0) scores exactly 0.
-
-    Plan (100 TB): the total gram count n is just size(grams) — known
-    BEFORE the distribution is built — so it rides the explode as an
-    O(1) attribute access (the gram ARRAY is materialized first; only
-    cheap attribute expressions may sit beside an explode, see
-    text_tfidf_topk) and the count-over-window pass a naive plan would
-    run disappears: explode → ONE (doc_id, n, gram) hash aggregate →
-    one per-doc sum. Two shuffles total (measured 1.51s → 1.43s at
-    sf0.1 vs the window form; the win is the removed corpus-wide sort,
-    which grows with data). Docs with < ENTROPY_N tokens have no
-    trigrams and drop out (both engines)."""
-    docs = load_table(spark, sf_dir, "documents")
-    d1 = docs.select(
-        "doc_id", ngrams_all(toks(), ENTROPY_N).alias("grams")
-    )
-    g = d1.select(
-        "doc_id",
-        F.size("grams").alias("n"),
-        F.explode("grams").alias("gram"),
-    )
-    c = g.groupBy("doc_id", "n", "gram").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    p = F.col("cnt").cast("double") / F.col("n").cast("double")
-    term = F.floor(-(p * F.log(p)) * _ENT_SCALE)
-    return (
-        c.select("doc_id", "n", term.alias("fp"))
-        .groupBy("doc_id")
-        .agg(
-            F.max("n").alias("n_grams"),
-            F.count(F.lit(1)).alias("n_distinct"),
-            (F.sum("fp").cast("double") / F.lit(float(_ENT_SCALE))).alias(
-                "entropy"
-            ),
-        )
-    )
-
-
+# Per-document trigram Shannon entropy — the information-density quality
+# signal curation pipelines use to separate natural prose (high entropy)
+# from boilerplate/template/spam text (low): docs whose n-gram
+# distribution is concentrated score near 0 even when plain dup-fraction
+# misses the repetition structure. Each -p·ln(p) term is floored to 2^20
+# fixed point before the bigint sum, so the sum is order-independent and
+# bit-identical in both engines.
 ORACLE["text_ngram_entropy"] = f"""
 with g as (
   select doc_id, unnest({sql_ngrams_all('t', ENTROPY_N)}) gram
@@ -940,8 +668,6 @@ def _char_pair_counts(frame: DataFrame) -> DataFrame:
         .groupBy("pair")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-
-
 
 
 # --------------------------------------------------------- text_bpe_merge
@@ -1027,82 +753,13 @@ limit {BPE_TOP_PAIRS}
 PMI_MIN_COUNT = 5  # bigram support floor (rare-pair PMI is noise)
 PMI_TOP = 20
 
-
-@_q("text_pmi_topk")
-def text_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top collocations by pointwise mutual information — PMI(x,y) =
-    ln(N·c_xy / (c_x·c_y)) over adjacent token pairs, support-floored
-    at PMI_MIN_COUNT. The classic collocation / multiword-expression
-    signal (also the "glued boilerplate" detector: templated corpora
-    show extreme-PMI pairs a quality pipeline flags for
-    tokenizer-vocab or filter decisions).
-
-    Determinism: all counts are exact bigint hash aggregates; the one
-    transcendental is a single ln() per OUTPUT row (vocabulary-sized,
-    post-aggregate) computed from integer-derived doubles with the
-    identical expression text in both engines, rounded to 12 decimals
-    (the trig-corpus policy); the top-K ties break on the pair.
-
-    Scale (100 TB): two map-side-combining hash aggregates over one
-    tokenized scan (bigrams + unigrams ride the SAME scan — unigram
-    counts derive from the bigram frame's word-1 column plus a
-    last-token correction... deliberately NOT: the clean two-aggregate
-    form costs one extra scan but keeps both counts exact and
-    independently combinable); unigram counts are vocabulary-sized →
-    BROADCAST to the bigram frame (two broadcast hash joins, zero
-    shuffle of the pair table); N is a 1-row broadcast scalar; final
-    TakeOrderedAndProject."""
-    docs = load_table(spark, sf_dir, "documents")
-    toked = docs.withColumn("_t", toks())
-    pair_counts = (
-        toked.select(F.explode(bigrams(F.col("_t"))).alias("pair"))
-        .groupBy("pair")
-        .agg(F.count(F.lit(1)).alias("c_xy"))
-        .where(F.col("c_xy") >= PMI_MIN_COUNT)
-    )
-    uni = (
-        toked.select(F.explode(F.col("_t")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    # N = total bigram occurrences (pre-floor), a 1-row broadcast scalar
-    total = (
-        toked.select(F.explode(bigrams(F.col("_t"))).alias("pair"))
-        .groupBy()
-        .agg(F.count(F.lit(1)).alias("n_bigrams"))
-    )
-    split = pair_counts.select(
-        "pair",
-        "c_xy",
-        F.split("pair", " ").getItem(0).alias("w1"),
-        F.split("pair", " ").getItem(1).alias("w2"),
-    )
-    joined = (
-        split.join(
-            F.broadcast(uni.select(F.col("tok").alias("w1"), F.col("c").alias("c_x"))),
-            "w1",
-        )
-        .join(
-            F.broadcast(uni.select(F.col("tok").alias("w2"), F.col("c").alias("c_y"))),
-            "w2",
-        )
-        .crossJoin(F.broadcast(total))
-    )
-    pmi = F.round(
-        F.log(
-            F.col("n_bigrams").cast("double")
-            * F.col("c_xy").cast("double")
-            / (F.col("c_x").cast("double") * F.col("c_y").cast("double"))
-        ),
-        12,
-    )
-    return (
-        joined.select("pair", "c_xy", "c_x", "c_y", pmi.alias("pmi"))
-        .orderBy(F.col("pmi").desc(), F.col("pair").asc())
-        .limit(PMI_TOP)
-    )
-
-
+# Top collocations by pointwise mutual information — PMI(x,y) =
+# ln(N·c_xy / (c_x·c_y)) over adjacent token pairs, support-floored at
+# PMI_MIN_COUNT. The classic collocation / multiword-expression signal
+# (also the "glued boilerplate" detector: templated corpora show
+# extreme-PMI pairs a quality pipeline flags for tokenizer-vocab or
+# filter decisions). Counts are exact; the one ln() per output row is
+# rounded to 12 decimals and the top-K ties break on the pair.
 ORACLE["text_pmi_topk"] = f"""
 with toked as (select {sql_toks('text')} t from documents),
 pc as (
@@ -1153,9 +810,6 @@ select m.source, m.n_docs, m.median_chars, a.mad_chars
 from med m join mad a using (source)
 order by source
 """
-QUERIES["text_robust_stats"] = sql_query(
-    "text_robust_stats", ORACLE["text_robust_stats"]
-)
 
 
 # ----------------------------------------------------- shared lexical index
@@ -1456,3 +1110,6 @@ select source,
 from per_doc
 group by 1, 2
 """
+
+
+register_texts(QUERIES, ORACLE)

@@ -101,3 +101,13 @@ def sql_query(
     fn.__name__ = name
     fn.__doc__ = f"{name}: its DuckDB-dialect text, translated and run."
     return fn
+
+
+def register_texts(queries: dict, oracle: dict[str, str]) -> None:
+    """Register every `oracle` name that has no DataFrame plan in
+    `queries` as `sql_query` over its own text. A family module calls
+    this last, so its DataFrame plans are exactly the queries whose
+    text cannot stand in for them."""
+    for name, text in oracle.items():
+        if name not in queries:
+            queries[name] = sql_query(name, text)

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from duckdb_wasm_spark.plans._util import dec, sql_dec, sql_dsum, sql_query
+from duckdb_wasm_spark.plans._util import dec, register_texts, sql_dec, sql_dsum
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
@@ -221,13 +221,6 @@ with agg as (
 select l_returnflag, measure, value
 from agg unpivot (value for measure in (sum_qty, sum_price, n_items))
 """
-
-
-for _name in (
-    "extra_windows", "extra_set_ops", "extra_grouping", "extra_full_outer",
-    "extra_recursive_walk", "extra_lateral", "extra_unpivot",
-):
-    QUERIES[_name] = sql_query(_name, ORACLE[_name])
 
 
 # ------------------------------------------------------ extra_string_fns
@@ -834,3 +827,6 @@ group by gram
 order by n desc, gram
 limit {UDTF_TOPK}
 """
+
+
+register_texts(QUERIES, ORACLE)

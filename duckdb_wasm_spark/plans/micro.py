@@ -36,7 +36,13 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_wasm_spark.plans._util import dec, dsum, sql_dec, sql_dsum, sql_query
+from duckdb_wasm_spark.plans._util import (
+    dec,
+    dsum,
+    register_texts,
+    sql_dec,
+    sql_dsum,
+)
 from duckdb_wasm_spark.tables import load_table, load_tables
 
 QUERIES: dict = {}
@@ -99,12 +105,6 @@ join orders on l_orderkey = o_orderkey
 join customer on o_custkey = c_custkey
 where l_quantity <= 5 and c_mktsegment = 'BUILDING'
 """
-
-for _name in (
-    "micro_sort", "micro_topk", "micro_grouped_sum",
-    "micro_regex", "micro_join2", "micro_join3",
-):
-    QUERIES[_name] = sql_query(_name, ORACLE[_name])
 
 
 # ----------------------------------------------------- micro_scalar_fns
@@ -460,9 +460,6 @@ ORACLE["profile_columns"] = "\nunion all\n".join(
 from lineitem"""
     for c in PROFILE_COLS
 ) + "\norder by column_name"
-QUERIES["profile_columns"] = sql_query(
-    "profile_columns", ORACLE["profile_columns"]
-)
 
 
 # ---------------------------------------- source_pydatasource_stream
@@ -921,6 +918,6 @@ select user_id, event_id, "value", rk from (
   from events)
 where rk <= {GROUP_TOP_K}
 """
-QUERIES["micro_topk_per_group"] = sql_query(
-    "micro_topk_per_group", ORACLE["micro_topk_per_group"]
-)
+
+
+register_texts(QUERIES, ORACLE)

@@ -21,7 +21,7 @@ both engines.
 
 from __future__ import annotations
 
-from duckdb_wasm_spark.plans._util import sql_dsum, sql_query
+from duckdb_wasm_spark.plans._util import register_texts, sql_dsum
 
 
 def _dec_sum(expr: str) -> str:
@@ -82,4 +82,7 @@ order by o_year
 """,
 }
 
-QUERIES: dict = {name: sql_query(name, text) for name, text in ORACLE.items()}
+QUERIES: dict = {}
+
+
+register_texts(QUERIES, ORACLE)

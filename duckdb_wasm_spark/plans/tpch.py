@@ -40,10 +40,10 @@ from pyspark.sql.window import Window
 
 from duckdb_wasm_spark.plans._util import (
     dec,
+    register_texts,
     sql_davg,
     sql_dec,
     sql_dsum,
-    sql_query,
     SQL_CHARGE,
     SQL_REV,
 )
@@ -532,5 +532,7 @@ order by cntrycode
 """
 
 
-QUERIES: dict = {name: sql_query(name, text) for name, text in ORACLE.items()}
-QUERIES["q17"] = q17
+QUERIES: dict = {"q17": q17}
+
+
+register_texts(QUERIES, ORACLE)

@@ -15,8 +15,11 @@ by user and sort within partitions (Spark's session_window does the
 merge sort-side; the lag/cumsum-islands text is the same algorithm
 spelled out).
 
-events_session and events_anomaly run their DuckDB-dialect text through
-the dialect translator (`plans/_util.sql_query`).
+events_tumbling, events_session, events_rolling and events_anomaly run
+their DuckDB-dialect text through the dialect translator
+(`plans/_util.register_texts`). events_sliding keeps its DataFrame plan
+(its text measured slower); the pruning and streaming queries keep
+theirs because the plan is the capability under test.
 """
 
 from __future__ import annotations
@@ -26,7 +29,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_wasm_spark.plans._util import dec, dsum, sql_dec, sql_dsum, sql_query
+from duckdb_wasm_spark.plans._util import (
+    dec,
+    dsum,
+    register_texts,
+    sql_dec,
+    sql_dsum,
+)
 from duckdb_wasm_spark.tables import load_table, write_events_daily
 
 QUERIES: dict = {}
@@ -42,27 +51,9 @@ def _q(name):
 
 
 # -------------------------------------------------------- events_tumbling
-@_q("events_tumbling")
-def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour tumbling windows per event_type: count + exact value sum.
-    Identical incremental form: readStream → withWatermark →
-    groupBy(window(ts, '1 hour'), event_type)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            dsum(dec("value")).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
+# 1-hour tumbling windows per event_type: count + exact value sum.
+# events_stream_tumbling runs the same aggregate as a stream and is
+# checked against this text.
 ORACLE["events_tumbling"] = f"""
 select time_bucket(interval 1 hour, ts) window_start,
        event_type,
@@ -130,9 +121,6 @@ select user_id, min(ts) session_start, count(*) n
 from numbered
 group by user_id, session_id
 """
-QUERIES["events_session"] = sql_query(
-    "events_session", ORACLE["events_session"]
-)
 
 
 # ---------------------------------------------------- events_daily_pruned
@@ -241,45 +229,12 @@ order by 1
 # ------------------------------------------------------- events_rolling
 ROLL_SECONDS = 600  # rolling 10-minute lookback
 
-
-@_q("events_rolling")
-def events_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-row rolling 10-minute lookback per user (RANGE frame over
-    event time): how many events and how much value this user produced
-    in the 10 minutes up to and including each event — the per-event
-    feature a rate limiter or fraud scorer computes. RANGE (value
-    range) frames, the window-frame class ROWS frames can't express:
-    the frame holds every row within 600s, however many there are.
-
-    Both engines order by integer epoch seconds so frame membership is
-    exact integer arithmetic (a raw timestamp order would make the
-    bound type engine-specific). One shuffle by user_id; the frame is
-    bounded by time, so state per row is bounded at any scale. Ties on
-    the same epoch second: RANGE puts peers in the same frame in both
-    engines — order within the second doesn't change membership."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events").where(F.col("user_id") < 40)
-    # ts is TIMESTAMP_NTZ (naive parquet timestamps) — not castable to
-    # long, and unix_timestamp() would re-interpret it in the session
-    # timezone. timestampdiff against a fixed NTZ epoch literal is pure
-    # tz-free integer arithmetic, matching DuckDB's epoch() on naive ts.
-    epoch = F.expr(
-        "timestampdiff(SECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(epoch)
-        .rangeBetween(-ROLL_SECONDS, 0)
-    )
-    return ev.select(
-        "user_id",
-        "event_id",
-        F.count(F.lit(1)).over(w).alias("n_10m"),
-        F.sum(dec("value")).over(w).cast("double").alias("sum_10m"),
-    )
-
-
+# Per-row rolling 10-minute lookback per user (RANGE frame over event
+# time): how many events and how much value this user produced in the 10
+# minutes up to and including each event — the per-event feature a rate
+# limiter or fraud scorer computes. The RANGE frame holds every row
+# within 600s, however many there are; ordering by integer epoch
+# seconds keeps frame membership exact in both engines.
 ORACLE["events_rolling"] = f"""
 select user_id, event_id,
        count(*) over w n_10m,
@@ -300,7 +255,6 @@ window w as (partition by user_id
 ANOM_TRAIL = 24  # trailing hourly buckets in the baseline
 ANOM_MIN_BUCKETS = 12  # need at least this much history to score
 ANOM_Z = 2.0
-
 
 # Per-hour event-count anomaly flags per event type: z-score of each
 # hour's count against the trailing ANOM_TRAIL hourly buckets (excluding
@@ -340,9 +294,6 @@ select hour_start, event_type, n, z,
        coalesce(abs(z) > {ANOM_Z}, false) is_anomaly
 from z
 """
-QUERIES["events_anomaly"] = sql_query(
-    "events_anomaly", ORACLE["events_anomaly"]
-)
 
 
 # ------------------------------------------------- events_stream_tumbling
@@ -850,3 +801,6 @@ from events
 group by user_id
 order by user_id
 """
+
+
+register_texts(QUERIES, ORACLE)

@@ -124,8 +124,7 @@ def run_gate_replica(
     """Full-registry replica of the driver's sf0.01 correctness gate,
     writing a COMMITTED artifact (r9 advice: the '163/163 green'
     sentence rested on session output nobody could audit). Per name:
-    ok/err under the same typed-hash comparison as assert_parity;
-    no-oracle names record a rows-only check like the driver does."""
+    ok/err under the same typed-hash comparison as assert_parity."""
     import json
     import traceback
 
@@ -135,13 +134,9 @@ def run_gate_replica(
     con = duck_con(sf_dir)
     results: dict[str, dict] = {}
     for name in names if names is not None else list(qs):
-        entry = {"ok": False, "mode": "hash", "err": None}
+        entry = {"ok": False, "err": None}
         try:
-            if name in osql:
-                assert_parity(qs[name](spark, sf_dir), osql[name], con, name)
-            else:
-                entry["mode"] = "rows_only"
-                assert qs[name](spark, sf_dir).count() >= 0
+            assert_parity(qs[name](spark, sf_dir), osql[name], con, name)
             entry["ok"] = True
         except Exception as exc:  # keep walking; the artifact IS the report
             entry["err"] = "".join(
@@ -152,9 +147,6 @@ def run_gate_replica(
         "sf_dir": sf_dir,
         "n_total": len(results),
         "n_ok": sum(1 for v in results.values() if v["ok"]),
-        "n_rows_only": sum(
-            1 for v in results.values() if v["mode"] == "rows_only"
-        ),
         "results": results,
     }
     if out_path:

@@ -13,11 +13,6 @@ from duckdb_wasm_spark.testing import assert_parity
 @pytest.mark.parametrize("name", sorted(registry.QUERIES))
 def test_operator_parity(name, spark, sf_dir, oracle):
     df = registry.QUERIES[name](spark, sf_dir)
-    if name not in registry.ORACLE:
-        # rows-only operators (Spark-ML LSH: JVM-internal hash families)
-        assert name in ("dedup_minhash_ml", "ann_brp_ml")
-        assert df.count() >= 0  # runs and returns a stable schema
-        return
     assert_parity(df, registry.ORACLE[name], oracle, name)
 
 
@@ -53,9 +48,7 @@ def test_entry_registry_exposes_operators():
     qs, osql = e.queries(), e.oracle_sql()
     for name in registry.QUERIES:
         assert name in qs
-        # rows-only (no oracle) is allowed only for the Spark-ML LSH pair
-        if name not in osql:
-            assert name in ("dedup_minhash_ml", "ann_brp_ml")
+        assert name in osql
 
 
 def test_entry_gate_priority_order():
@@ -214,6 +207,7 @@ def test_divergence_vocab_cap_binding_and_inert(spark, sf_dir, oracle):
     same-cap oracle (deterministic top-K: count desc, tok asc)."""
     from duckdb_wasm_spark.operators import pipeline
     from duckdb_wasm_spark.operators._text import toks
+    from duckdb_wasm_spark.plans._util import sql_query
     from duckdb_wasm_spark.tables import load_table
 
     n_vocab = (
@@ -225,10 +219,9 @@ def test_divergence_vocab_cap_binding_and_inert(spark, sf_dir, oracle):
     )
     assert n_vocab < pipeline.DIV_VOCAB_CAP  # cap inert at this scale
     # binding cap: exact parity against the identically-capped oracle
-    df = pipeline.corpus_source_divergence(spark, sf_dir, _cap=20)
-    assert_parity(
-        df, pipeline.divergence_oracle_sql(20), oracle, "divergence_cap20"
-    )
+    capped_sql = pipeline.divergence_oracle_sql(20)
+    df = sql_query("divergence_cap20", capped_sql)(spark, sf_dir)
+    assert_parity(df, capped_sql, oracle, "divergence_cap20")
     # and the capped run must differ from the registered (inert) run —
     # proof the cap actually restricts the support
     full = {
@@ -338,51 +331,6 @@ def test_zero_token_doc_ratio_parity(spark, tmp_path):
             con,
             f"{name}_zero_token",
         )
-
-
-def test_dedup_minhash_ml_matches_exact_jaccard(spark, sf_dir):
-    """Certify the rows-only (no_oracle) dedup_minhash_ml numerically
-    (round-4 verdict task #7): against the exact trigram-shingle
-    Jaccard ground truth computed from the same tokenizer, the
-    seed-pinned Spark-ML pair set must have FULL recall on pairs
-    comfortably above the 0.2 similarity threshold, no pair below
-    threshold-with-slack (precision), and report similarities within
-    HashingTF-collision distance of exact."""
-    import itertools
-
-    from pyspark.sql import functions as F
-
-    from duckdb_wasm_spark.operators import ml_lsh
-    from duckdb_wasm_spark.operators._text import toks, trigrams
-    from duckdb_wasm_spark.tables import load_table
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .withColumn("_t", toks())
-        .select("doc_id", trigrams(F.col("_t")).alias("sh"))
-    )
-    sets = {r.doc_id: set(r.sh) for r in docs.collect()}
-    exact = {}
-    for a, b in itertools.combinations(sorted(sets), 2):
-        u = sets[a] | sets[b]
-        if u:
-            exact[(a, b)] = len(sets[a] & sets[b]) / len(u)
-
-    ml = {
-        (r.doc_a, r.doc_b): 1.0 - r.jaccard_dist
-        for r in ml_lsh.QUERIES["dedup_minhash_ml"](spark, sf_dir).collect()
-    }
-
-    # recall: every pair well above the 0.2 boundary must be found
-    high = {p for p, j in exact.items() if j > 0.3}
-    assert high <= set(ml), f"missed high-similarity pairs: {high - set(ml)}"
-    # precision: nothing below the boundary minus collision slack
-    low = [(p, exact.get(p, 0.0)) for p in ml if exact.get(p, 0.0) < 0.15]
-    assert not low, f"pairs below threshold-with-slack: {low}"
-    # reported similarity tracks exact Jaccard up to HashingTF collisions
-    drift = {p: abs(s - exact[p]) for p, s in ml.items() if p in exact}
-    worst = max(drift.values(), default=0.0)
-    assert worst <= 0.05, f"similarity drift vs exact Jaccard: {worst}"
 
 
 def test_doc_chunking_invariants(spark, sf_dir):
@@ -661,8 +609,8 @@ def test_sketch_properties(spark, sf_dir):
         assert abs(r.rel_err) < 0.33, f"{r.source}: rel_err {r.rel_err}"
         assert r.n_hll > 2.5 * sketches.HLL_M, (
             "estimate fell into the small-range ln-correction regime — "
-            "cross-engine determinism no longer guaranteed, demote the "
-            "row to rows-only (see docstring)"
+            "cross-engine determinism no longer guaranteed (see "
+            "sketch_hll_distinct's docstring)"
         )
 
     cms = sketches.QUERIES["sketch_cms_heavy_hitters"](

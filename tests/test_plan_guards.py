@@ -81,7 +81,6 @@ BNLJ_ALLOWED = {
     # embed_covariance: the centering cross moved into the pca_top
     # artifact's one-time BUILD (r14 — the matrix is trained state);
     # the served plan is the 2080-row artifact scan with no BNLJ
-    "text_pmi_topk": "total-bigram-count scalar: exactly 1 row",
     "events_key_skew": "1-row stats frame x 1-row top-k scalar",
     "sketch_hll_merge": (
         "two 1-row HLL estimate folds x 1-row exact count — all scalar "
@@ -238,6 +237,25 @@ WINDOW_CLASSKEY_ALLOWED = {
     ),
 }
 
+# the allowances (above) whose stated bound is the two-phase offsets of
+# ranks.py (keyed_prefix_sum / global_ranks): their plans must contain
+# the offsets window ORDERED BY `_pid`. A text that windows the whole
+# class share in one task passes the name-keyed allowlists, not this.
+WINDOW_TWO_PHASE = {
+    "sample_token_budget",
+    "sample_pack_sequences",
+    "sample_mixture_budget",
+    "corpus_ppl_buckets",
+    "sketch_hist_quantiles",
+    "source_zonemap_skip",
+}
+
+# the allowances whose bound is a histogram reduced before the window:
+# every ORDERED class-key window in these plans must be the RANGE-frame
+# running count over the histogram's distinct values (a per-row
+# ROWS-frame rank would put the class's whole corpus share in one task)
+WINDOW_CLASSKEY_RANGE_OVER_HISTOGRAM = {"corpus_length_quantiles"}
+
 # the subset of the allowlist whose justification IS the group-limit
 # pushdown — their executed plans must contain a WindowGroupLimit
 # node, or the allowance is stale pre-authorization
@@ -314,7 +332,11 @@ def test_no_partitionless_window_outside_allowlist(plans):
     audited allowlist with a size-bound justification."""
     import re
 
-    pat = re.compile(r"windowspecdefinition\([^,()]+ (?:ASC|DESC) NULLS")
+    # an ORDER column first, or no spec at all before the frame (OVER ())
+    pat = re.compile(
+        r"windowspecdefinition\((?:[^,()]+ (?:ASC|DESC) NULLS"
+        r"|specifiedwindowframe)"
+    )
     offenders = sorted(
         n
         for n, p in plans.items()
@@ -337,32 +359,40 @@ def test_no_partitionless_window_outside_allowlist(plans):
     )
 
 
-def _classkey_window_specs(plan):
-    """Partition-column name lists of every windowspecdefinition whose
-    partition spec is NON-empty and consists ONLY of plain class-key
-    attributes (expressions and scaling columns exempt a window)."""
+def _classkey_windows(plan):
+    """(partition columns, ordered?, frame type) of every
+    windowspecdefinition whose partition spec is NON-empty and consists
+    ONLY of plain class-key attributes (expressions and scaling columns
+    exempt a window)."""
     import re
 
     out = []
     for m in re.finditer(r"windowspecdefinition\(", plan):
         # slice to the frame spec; partition+order cols precede it
         seg = plan[m.end():m.end() + 400]
-        head = seg.split("specifiedwindowframe", 1)[0]
+        head, _, frame = seg.partition("specifiedwindowframe(")
         parts = []
         only_class = True
+        ordered = False
         for tok in head.split(","):
             tok = tok.strip()
             if not tok:
                 continue
             if " ASC" in tok or " DESC" in tok:
+                ordered = True
                 break  # order columns start here
             name = tok.split("#")[0]
             parts.append(name)
             if "(" in tok or name not in CLASS_KEY_COLS:
                 only_class = False
         if parts and only_class:
-            out.append(parts)
+            out.append((parts, ordered, frame.split(",", 1)[0]))
     return out
+
+
+def _classkey_window_specs(plan):
+    """Partition-column name lists of every class-key-only window."""
+    return [parts for parts, _, _ in _classkey_windows(plan)]
 
 
 def test_no_classkey_only_window_outside_allowlist(plans):
@@ -405,6 +435,30 @@ def test_no_classkey_only_window_outside_allowlist(plans):
         f"longer contain one (the rank-limit pushdown regressed — "
         f"per-partition state is corpus-scale again): {no_limit}"
     )
+
+
+def test_two_phase_allowances_are_live(plans):
+    """The allowances whose bound is ranks.py's two-phase offsets (or a
+    histogram reduced before the window) must still have that shape: a
+    name-keyed allowlist would otherwise admit any plan registered
+    under the name, including a text that runs one class-key window
+    over the corpus."""
+    import re
+
+    pid_order = re.compile(r"windowspecdefinition\((?:[^(),]+, )*_pid#\d+ ASC")
+    no_offsets = sorted(
+        n for n in WINDOW_TWO_PHASE if not pid_order.search(plans.get(n, ""))
+    )
+    assert no_offsets == [], (
+        f"allowances justified by two-phase offsets whose plans contain "
+        f"no window ordered by _pid: {no_offsets}"
+    )
+    for n in sorted(WINDOW_CLASSKEY_RANGE_OVER_HISTOGRAM):
+        frames = [f for _, ordered, f in _classkey_windows(plans[n]) if ordered]
+        assert frames and set(frames) == {"RangeFrame"}, (
+            f"{n}: its ordered class-key windows must be the RANGE-frame "
+            f"running count over the histogram, got {frames}"
+        )
 
 
 def test_filters_pushed_to_scan(plans):
