@@ -20,8 +20,11 @@ which copies the caller's modifiable SQL confs and then sets ANSI mode
 (inserts range-check like the reference's strict typecheck,
 bindings.test.ts:86-142), UTC and double-quoted identifiers. The
 caller's session is never written. The child's temp views are the
-catalog: a table is a view over a lazy DataFrame, and a view is SQL
-text that Spark re-resolves on every query, so it sees later writes.
+catalog. A table is a materialized snapshot: every statement that
+writes rows (CTAS, INSERT, UPDATE, DELETE, the API appends) commits a
+new one with one eager local checkpoint, which is also where the ANSI
+casts raise. A view is SQL text that Spark re-resolves on every query,
+so it sees later writes.
 
 Scale notes: query() materializes via Spark's Arrow collect; send()
 pulls partitions incrementally (toLocalIterator) so the driver never
@@ -36,8 +39,10 @@ import os
 import tempfile
 
 import pyarrow as pa
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from duckdb_wasm_spark.dialect import (
     Translated,
@@ -58,6 +63,10 @@ class SparkDBError(RuntimeError):
     pass
 
 
+# the result of a statement that returns no rows (DDL, writes, COPY)
+_OK = pa.table({"ok": pa.array([], pa.bool_())})
+
+
 # the database session's own settings, set after the caller's confs
 _DUCKDB_CONFS = {
     "spark.sql.ansi.enabled": "true",
@@ -75,6 +84,22 @@ _INFER_FROM_GENERATE = (
 )
 
 
+def _java_error(e: Py4JJavaError) -> tuple[str, str]:
+    """Error class and message of a JVM exception that reached Python
+    raw (a failed task while Arrow results are collected): the first
+    exception in the cause chain that carries a Spark error class."""
+    cause = e.java_exception
+    while cause is not None:
+        try:
+            cls = cause.getCondition()
+        except Py4JError:  # not a SparkThrowable
+            cls = None
+        if cls:
+            return cls, cause.getMessage()
+        cause = cause.getCause()
+    return type(e).__name__, e.java_exception.toString()
+
+
 def _typed_errors(method):
     """Re-raise a Spark error, or a statement the translator rejects,
     as `SparkDBError`: the error class, then the first line of its
@@ -84,11 +109,13 @@ def _typed_errors(method):
     def wrapper(*args, **kwargs):
         try:
             return method(*args, **kwargs)
-        except (PySparkException, ValueError) as e:
-            cls = getattr(e, "condition", None) or type(e).__name__
+        except (PySparkException, Py4JJavaError, ValueError) as e:
+            cls, msg = getattr(e, "condition", None) or type(e).__name__, str(e)
             if isinstance(e, PySparkException):
                 cls = e.getCondition() or cls
-            line = next((ln for ln in str(e).splitlines() if ln.strip()), "")
+            elif isinstance(e, Py4JJavaError):
+                cls, msg = _java_error(e)
+            line = next((ln for ln in msg.splitlines() if ln.strip()), "")
             raise SparkDBError(f"{cls}: {line.removeprefix(f'[{cls}] ')}") from e
 
     return wrapper
@@ -150,8 +177,6 @@ class SparkDB:
         # ExportFileStatistics, webdb.cc:702-714; lib/src/io/file_stats.cc)
         self._file_stats: dict[str, dict] = {}
         self._stats_enabled: set[str] = set()
-        # per-table INSERT counter since the last plan compaction
-        self._insert_depth: dict[str, int] = {}
 
     # ------------------------------------------------------------ open
     @classmethod
@@ -189,7 +214,6 @@ class SparkDB:
         self._http_readers.clear()
         self._file_stats.clear()
         self._stats_enabled.clear()
-        self._insert_depth.clear()
 
     def close(self) -> None:
         """Release catalog state. The caller's session was never
@@ -318,8 +342,17 @@ class SparkDB:
 
     def _set_table(self, name: str, df: DataFrame) -> None:
         self._tables[name] = df
-        self._insert_depth.pop(name, None)  # fresh lineage
         df.createOrReplaceTempView(name)
+
+    def _commit(self, name: str, df: DataFrame) -> None:
+        """Make `df` the table's new snapshot. The eager checkpoint runs
+        every cast now (so an ANSI overflow raises at write time and
+        leaves the old snapshot in place; a count() would not, since the
+        optimizer prunes casts it does not need), reads source files
+        once, and gives the table a one-node lineage in at most one
+        partition per core, however many writes came before."""
+        par = self.spark.sparkContext.defaultParallelism
+        self._set_table(name, df.coalesce(par).localCheckpoint(eager=True))
 
     def list_tables(self) -> list[str]:
         return sorted({*self._tables, *self._views})
@@ -371,17 +404,21 @@ class ResultStream:
 
     BATCH_ROWS = 1024
 
-    def __init__(self, df: DataFrame, patch_bigint: bool):
-        self._patch = patch_bigint
-        # derive the arrow schema without executing the full plan
-        empty = df.limit(0).toArrow()
-        self.schema = (
-            _patch_bigint(empty) if patch_bigint else empty
-        ).schema
+    def __init__(self, df: DataFrame | None, patch_bigint: bool):
+        if df is None:  # a statement with no result rows
+            empty, self._ipc_rows = _OK, iter(())
+        else:
+            # the schema DataFrame.toArrow casts to, with no job run
+            empty = to_arrow_schema(
+                df.schema,
+                error_on_duplicated_field_names_in_struct=True,
+                prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes(),
+            ).empty_table()
+            self._ipc_rows = df.mapInArrow(
+                _ipc_repack, "ipc binary"
+            ).toLocalIterator(prefetchPartitions=False)
+        self.schema = (_patch_bigint(empty) if patch_bigint else empty).schema
         self._pending = empty  # spark-typed buffer of not-yet-fetched rows
-        self._ipc_rows = df.mapInArrow(_ipc_repack, "ipc binary").toLocalIterator(
-            prefetchPartitions=False
-        )
         self._done = False
 
     def fetch(self) -> pa.RecordBatch | None:
@@ -391,8 +428,10 @@ class ResultStream:
             except StopIteration:
                 self._done = True
                 break
+            # executor batches carry the physical plan's nullability,
+            # which can be stricter than the analyzed schema's
             with pa.ipc.open_stream(row.ipc) as reader:
-                incoming = reader.read_all()
+                incoming = reader.read_all().cast(self._pending.schema)
             self._pending = pa.concat_tables([self._pending, incoming])
         if self._pending.num_rows == 0:
             return None
@@ -427,42 +466,35 @@ class Connection:
         self._next_stmt = 1
 
     # ----------------------------------------------------------- query
-    def _dataframe(self, sql: str, args: list | None = None) -> DataFrame:
+    def _dataframe(self, sql: str, args: list | None = None) -> DataFrame | None:
         t = translate(sql)
         return self._run_translated(t, args)
 
-    def _run_translated(self, t: Translated, args: list | None = None) -> DataFrame:
+    def _run_translated(
+        self, t: Translated, args: list | None = None
+    ) -> DataFrame | None:
+        """The statement's result rows, or None for a statement that
+        returns none (DDL, writes, COPY, EXPORT)."""
         spark = self.db.spark
         self.db._register_catalog_views(t)
 
         if t.kind == "query":
             return spark.sql(t.sql, args=args)
-
-        if t.kind == "show_tables":
+        elif t.kind == "show_tables":
             names = self.db.list_tables()
             return spark.createDataFrame(
                 [(n,) for n in names] or [], "name string"
             )
-
-        if t.kind == "create_table_as":
-            df = spark.sql(t.sql, args=args)
-            # CTAS materializes in the reference; keep the plan lazy but
-            # pin the current snapshot via a local checkpoint-free cache
-            self.db._set_table(t.meta["name"], df)
-            return self._empty_ok()
-
-        if t.kind == "create_table":
+        elif t.kind == "create_table_as":
+            self.db._commit(t.meta["name"], spark.sql(t.sql, args=args))
+        elif t.kind == "create_table":
             ddl = columns_from_ddl(t.meta["columns_sql"])
             df = spark.createDataFrame([], ddl)
             self.db._set_table(t.meta["name"], df)
-            return self._empty_ok()
-
-        if t.kind == "create_view":
+        elif t.kind == "create_view":
             spark.sql(f"CREATE OR REPLACE TEMP VIEW {t.meta['name']} AS {t.sql}", args=args)
             self.db._views.add(t.meta["name"])
-            return self._empty_ok()
-
-        if t.kind == "drop":
+        elif t.kind == "drop":
             name = t.meta["name"]
             store = self.db._tables if t.meta["what"] == "table" else self.db._views
             if name in store:
@@ -471,63 +503,24 @@ class Connection:
                 spark.catalog.dropTempView(name)
             elif not t.meta["if_exists"]:
                 raise SparkDBError(f"{t.meta['what']} {name!r} does not exist")
-            return self._empty_ok()
-
-        if t.kind == "insert":
+        elif t.kind == "insert":
             name = t.meta["name"]
             if name not in self.db._tables:
                 raise SparkDBError(f"table {name!r} does not exist")
-            target = self.db._tables[name]
             body = t.sql
             if body.lower().startswith("values"):
                 body = f"SELECT * FROM ({body})"
             src = spark.sql(body, args=args)
-            # explicit column list: map source columns to the named
-            # targets, unnamed columns fill with NULL
-            insert_cols = t.meta.get("columns") or list(target.columns)
-            unknown = [c for c in insert_cols if c not in target.columns]
-            if unknown:
-                raise SparkDBError(
-                    f"INSERT column(s) {unknown} not in table {name!r}"
-                )
+            # explicit column list: source columns map to the named
+            # targets by position
+            insert_cols = t.meta.get("columns") or self.db._tables[name].columns
             if len(src.columns) != len(insert_cols):
                 raise SparkDBError(
                     f"INSERT has {len(src.columns)} columns, expected "
                     f"{len(insert_cols)}"
                 )
-            from pyspark.sql import functions as F
-
-            named = src.toDF(*insert_cols)
-            casted = named.select(
-                *[
-                    (named[f.name] if f.name in insert_cols
-                     else F.lit(None)).cast(f.dataType).alias(f.name)
-                    for f in target.schema
-                ]
-            )
-            # strict insert typecheck: ANSI casts raise on overflow
-            # (bindings.test.ts:86-142). Evaluate the INCREMENT only —
-            # O(insert), not O(table). Must MATERIALIZE, not count():
-            # count() projection-collapses to count(1) and prunes the
-            # cast expressions for INSERT ... SELECT, silently accepting
-            # overflow (round-3 ADVICE, medium) — same reason the UPDATE
-            # branch checkpoints. The checkpoint also keeps the union
-            # below referencing evaluated rows, not re-run source SQL.
-            casted = casted.localCheckpoint(eager=True)
-            merged = target.unionByName(casted)
-            # bound the union-plan depth: after K inserts the lineage is
-            # a K-deep union — compact it so the Nth insert never
-            # re-analyzes an N-node plan (at scale: write-through to the
-            # warehouse would go here instead)
-            depth = self.db._insert_depth.get(name, 0) + 1
-            if depth >= 16:
-                merged = merged.localCheckpoint(eager=True)
-                depth = 0
-            self.db._set_table(name, merged)
-            self.db._insert_depth[name] = depth
-            return self._empty_ok()
-
-        if t.kind == "describe":
+            self._append(name, src.toDF(*insert_cols))
+        elif t.kind == "describe":
             name = t.meta["name"]
             if name not in self.db._tables and name not in self.db._views:
                 raise SparkDBError(f"table {name!r} does not exist")
@@ -538,8 +531,7 @@ class Connection:
             return spark.createDataFrame(
                 rows, "column_name string, column_type string, null string"
             )
-
-        if t.kind == "alter":
+        elif t.kind == "alter":
             from pyspark.sql import functions as F
 
             name, op = t.meta["name"], t.meta["op"]
@@ -553,7 +545,7 @@ class Connection:
                 self.db._tables.pop(name)
                 spark.catalog.dropTempView(name)
                 self.db._set_table(new_name, target)
-                return self._empty_ok()
+                return None
             if op == "add_column":
                 ddl = columns_from_ddl(t.meta["column_sql"])
                 field = spark.createDataFrame([], ddl).schema[0]
@@ -579,9 +571,7 @@ class Connection:
                     )
                 new = target.withColumnRenamed(old, newc)
             self.db._set_table(name, new)
-            return self._empty_ok()
-
-        if t.kind in ("update", "delete"):
+        elif t.kind in ("update", "delete"):
             from pyspark.sql import functions as F
 
             if args:
@@ -599,7 +589,6 @@ class Connection:
             )
             if t.kind == "delete":
                 new = target.where(~pred) if t.sql else target.limit(0)
-                new.columns  # force analysis so a bad WHERE errors here
             else:
                 assigns = dict(t.meta["assigns"])
                 unknown = [c for c in assigns if c not in target.columns]
@@ -617,51 +606,48 @@ class Connection:
                         for f in target.schema
                     ]
                 )
-                # strict ANSI typecheck, same policy as INSERT: the
-                # assignment cast must raise on overflow/malformed now,
-                # not at some later read. A count()/agg probe gets
-                # optimized into count(1) without ever evaluating the
-                # casts (projection collapse), so materialize the rows:
-                # the eager checkpoint both validates every cast and
-                # compacts the lineage (an UPDATE is O(table) anyway)
-                new = new.localCheckpoint(eager=True)
-                self.db._insert_depth[name] = 0
-                self.db._set_table(name, new)
-                return self._empty_ok()
-            # DELETE deepens the lineage like inserts do — share the
-            # same compaction counter
-            depth = self.db._insert_depth.get(name, 0) + 1
-            if depth >= 16:
-                new = new.localCheckpoint(eager=True)
-                depth = 0
-            self.db._set_table(name, new)
-            self.db._insert_depth[name] = depth
-            return self._empty_ok()
-
-        if t.kind == "copy":
+            self.db._commit(name, new)
+        elif t.kind == "copy":
             from duckdb_wasm_spark import writers
 
             source = t.meta["source"]
             df = spark.table(source) if source else spark.sql(t.sql)
             writers.copy_to(df, t.meta["path"], t.meta["options"], self.db)
-            return self._empty_ok()
-
-        if t.kind == "export":
+        elif t.kind == "export":
             from duckdb_wasm_spark import writers
 
             writers.export_database(self.db, t.meta["dir"], t.meta["format"])
-            return self._empty_ok()
+        else:
+            raise SparkDBError(f"unsupported statement: {t.meta}")
+        return None
 
-        raise SparkDBError(f"unsupported statement: {t.meta}")
+    def _append(self, name: str, rows: DataFrame) -> None:
+        """Commit the table's rows plus `rows`: columns map by name and
+        cast to the table's types (ANSI, so an overflow raises at the
+        commit); table columns that `rows` lacks are NULL."""
+        from pyspark.sql import functions as F
 
-    def _empty_ok(self) -> DataFrame:
-        return self.db.spark.createDataFrame([], "ok boolean")
+        target = self.db._tables[name]
+        unknown = [c for c in rows.columns if c not in target.columns]
+        if unknown:
+            raise SparkDBError(f"column(s) {unknown} not in table {name!r}")
+        cast = rows.select(
+            *[
+                (rows[f.name] if f.name in rows.columns else F.lit(None))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in target.schema
+            ]
+        )
+        self.db._commit(name, target.unionByName(cast))
 
     @_typed_errors
     def query(self, sql: str, *params) -> pa.Table:
         """Materialized query → pyarrow.Table (ref RunQuery,
         webdb.cc:84-119 / 141-154)."""
         df = self._dataframe(sql, list(params) or None)
+        if df is None:
+            return _OK
         table = df.toArrow()
         return table if self.db.emit_bigint else _patch_bigint(table)
 
@@ -778,6 +764,6 @@ class Connection:
 
     def _create_or_insert(self, name: str, df: DataFrame, create: bool) -> None:
         if create or name not in self.db._tables:
-            self.db._set_table(name, df)
+            self.db._commit(name, df)
         else:
-            self.db._set_table(name, self.db._tables[name].unionByName(df))
+            self._append(name, df)

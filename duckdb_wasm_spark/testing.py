@@ -114,42 +114,3 @@ def assert_parity(sdf, sql: str, con: duckdb.DuckDBPyConnection, name: str = "?"
         sp, du, check_dtype=False, check_exact=True, obj=name
     )
 
-
-def run_gate_replica(
-    spark,
-    sf_dir: str,
-    names: list[str] | None = None,
-    out_path: str | None = None,
-) -> dict:
-    """Full-registry replica of the driver's sf0.01 correctness gate,
-    writing a COMMITTED artifact (r9 advice: the '163/163 green'
-    sentence rested on session output nobody could audit). Per name:
-    ok/err under the same typed-hash comparison as assert_parity."""
-    import json
-    import traceback
-
-    import __spark_entry__ as e
-
-    qs, osql = e.queries(), e.oracle_sql()
-    con = duck_con(sf_dir)
-    results: dict[str, dict] = {}
-    for name in names if names is not None else list(qs):
-        entry = {"ok": False, "err": None}
-        try:
-            assert_parity(qs[name](spark, sf_dir), osql[name], con, name)
-            entry["ok"] = True
-        except Exception as exc:  # keep walking; the artifact IS the report
-            entry["err"] = "".join(
-                traceback.format_exception_only(type(exc), exc)
-            )[:500]
-        results[name] = entry
-    summary = {
-        "sf_dir": sf_dir,
-        "n_total": len(results),
-        "n_ok": sum(1 for v in results.values() if v["ok"]),
-        "results": results,
-    }
-    if out_path:
-        with open(out_path, "w") as f:
-            json.dump(summary, f, indent=1, sort_keys=True)
-    return summary

@@ -107,19 +107,77 @@ def test_insert_with_column_list(conn):
     conn.query("DROP TABLE cl")
 
 
-def test_insert_plan_depth_bounded(conn, db):
-    # regression for the round-2 finding: N inserts must not build an
-    # N-deep union lineage — the plan is compacted every 16 inserts
+def test_insert_plan_depth_bounded(conn, db, spark):
+    # N inserts must not build an N-deep union lineage or an N-partition
+    # table: every insert commits one snapshot
     conn.query("CREATE TABLE deep AS SELECT 0::INTEGER AS v")
     for i in range(1, 41):
         conn.query(f"INSERT INTO deep VALUES ({i})")
-    assert db._insert_depth["deep"] < 16
-    plan = db._tables["deep"]._jdf.queryExecution().logical().toString()
+    df = db._tables["deep"]
+    plan = df._jdf.queryExecution().logical().toString()
     assert plan.count("Union") < 16  # not 40-deep
+    assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
     t = conn.query("SELECT count(*)::INTEGER AS n, sum(v)::INTEGER AS s FROM deep")
     assert t.column("n").to_pylist() == [41]
     assert t.column("s").to_pylist() == [820]
     conn.query("DROP TABLE deep")
+
+
+def test_api_appends_keep_a_flat_table(conn, db, spark):
+    """API appends commit a snapshot like INSERT does: after 40 of them
+    the table's plan has no Union and at most one partition per core."""
+    conn.insert_arrow_table(pa.table({"v": pa.array([0], pa.int32())}), name="flat")
+    for i in range(1, 41):
+        batch = pa.table({"v": pa.array([i], pa.int32())})
+        conn.insert_arrow_table(batch, name="flat", create=False)
+    df = db._tables["flat"]
+    assert "Union" not in df._jdf.queryExecution().logical().toString()
+    assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    t = conn.query("SELECT count(*)::INTEGER AS n, sum(v)::INTEGER AS s FROM flat")
+    assert t.column("n").to_pylist() == [41]
+    assert t.column("s").to_pylist() == [820]
+    conn.query("DROP TABLE flat")
+
+
+def test_api_append_casts_to_the_table_schema(conn):
+    """An API append casts to the table's column types, so an int64 of
+    2^40 into an INTEGER column overflows, as it does in DuckDB, and
+    the table keeps its schema and rows."""
+    import duckdb
+
+    big = pa.table({"a": pa.array([2**40], pa.int64())})
+    duck = duckdb.connect()
+    duck.execute("CREATE TABLE narrow3 (a INTEGER)")
+    duck.register("big", big)
+    with pytest.raises(duckdb.ConversionException):
+        duck.execute("INSERT INTO narrow3 SELECT * FROM big")
+    conn.query("CREATE TABLE narrow3 (a INTEGER)")
+    conn.query("INSERT INTO narrow3 VALUES (1)")
+    with pytest.raises(SparkDBError, match=r"^CAST_OVERFLOW"):
+        conn.insert_arrow_table(big, name="narrow3", create=False)
+    assert conn.query("DESCRIBE narrow3").column("column_type").to_pylist() == ["INTEGER"]
+    assert conn.query("SELECT a FROM narrow3").column("a").to_pylist() == [1]
+    conn.query("DROP TABLE narrow3")
+
+
+def test_written_table_is_a_snapshot_of_its_file(conn, db):
+    """A table holds the rows it was written with, as in DuckDB: a CSV
+    registered again with new content changes neither a CTAS table nor
+    an insert_csv_from_path table."""
+    import duckdb
+
+    path = db.register_file_text("snap.csv", "a\n1\n2\n")
+    duck = duckdb.connect()
+    duck.execute(f"CREATE TABLE snap AS SELECT * FROM read_csv_auto('{path}')")
+    conn.query("CREATE TABLE snap_ctas AS SELECT * FROM 'snap.csv'")
+    conn.insert_csv_from_path("snap.csv", table="snap_api")
+    db.register_file_text("snap.csv", "a\n10\n20\n30\n")
+    want = duck.execute("SELECT sum(a)::INTEGER AS s FROM snap").fetchall()
+    assert want == [(3,)]
+    for t in ("snap_ctas", "snap_api"):
+        got = conn.query(f"SELECT sum(a)::INTEGER AS s FROM {t}")
+        assert got.column("s").to_pylist() == [3], t
+        conn.query(f"DROP TABLE {t}")
 
 
 def test_caller_session_is_never_changed(spark, sf_dir):
@@ -219,6 +277,54 @@ def test_errors_are_typed(conn):
         conn.query("SELECT 1 +")
     with pytest.raises(SparkDBError, match=r"^ValueError: unsupported ALTER TABLE"):
         conn.query("ALTER TABLE t FROB x")
+
+
+def test_collect_time_errors_are_typed(conn, db):
+    """A task that fails while the Arrow result is collected surfaces as
+    SparkDBError with its Spark error class, not as a raw py4j error."""
+    path = db.register_file_text("lost.csv", "a\n1\n2\n")
+    conn.query("CREATE VIEW lost_v AS SELECT a FROM 'lost.csv'")
+    assert conn.query("SELECT sum(a)::INTEGER AS s FROM lost_v").column("s").to_pylist() == [3]
+    os.remove(path)
+    with pytest.raises(SparkDBError, match=r"^FAILED_READ_FILE"):
+        conn.query("SELECT sum(a)::INTEGER AS s FROM lost_v")
+    conn.query("DROP VIEW lost_v")
+
+
+def test_statements_without_rows_start_no_job(conn, spark):
+    """DDL returns the empty `ok boolean` table, or a stream of that
+    schema with no batches, without running a Spark job."""
+    sc = spark.sparkContext
+    ok = pa.schema([("ok", pa.bool_())])
+    conn.query("CREATE TABLE nj AS SELECT 1::INTEGER AS a")
+    sc.setJobGroup("no_rows", "statements with no result rows")
+    try:
+        dropped = conn.query("DROP TABLE IF EXISTS nope")
+        viewed = conn.query("CREATE VIEW nj_v AS SELECT a FROM nj")
+        stream = conn.send("DROP VIEW nj_v")
+        batches = list(stream)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("no_rows")) == []
+    for t in (dropped, viewed):
+        assert t.schema == ok and t.num_rows == 0
+    assert stream.schema == ok and batches == []
+    conn.query("DROP TABLE nj")
+
+
+def test_stream_schema_matches_query(conn):
+    """send() announces the schema query() returns and streams the same
+    rows, though executor batches can carry stricter nullability."""
+    sql = (
+        "SELECT 1.25::DECIMAL(10, 2) AS d, TIMESTAMP '2024-01-02 03:04:05' AS ts, "
+        "[v, v + 1] AS xs, v AS n FROM range(3) t(v)"
+    )
+    want = conn.query(sql)
+    stream = conn.send(sql)
+    got = pa.Table.from_batches(list(stream), stream.schema)
+    assert stream.schema == want.schema
+    assert got.equals(want)
 
 
 def test_create_view(conn):
