@@ -24,28 +24,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _registries():
-    """One registry module per query family. Imports are guarded
-    per-module and only for the module's OWN absence (a broken
-    transitive import must surface, not silently drop its queries from
-    the correctness gate)."""
-    from duckdb_wasm_spark.plans import tpch
+    """One registry module per query family."""
+    from duckdb_wasm_spark.operators import registry
+    from duckdb_wasm_spark.plans import extras, micro, reference_sql, tpch
+    from duckdb_wasm_spark.streaming import windows
 
-    modules = [tpch]
-    for modname in (
-        "duckdb_wasm_spark.plans.micro",
-        "duckdb_wasm_spark.plans.extras",
-        "duckdb_wasm_spark.plans.reference_sql",
-        "duckdb_wasm_spark.operators.registry",
-        "duckdb_wasm_spark.streaming.windows",
-    ):
-        try:
-            mod = __import__(modname, fromlist=["QUERIES"])
-        except ModuleNotFoundError as e:
-            if e.name != modname:
-                raise
-            continue
-        modules.append(mod)
-    return modules
+    return [tpch, micro, extras, reference_sql, registry, windows]
 
 
 # Emission order for the bounded correctness walk, which gates about 50

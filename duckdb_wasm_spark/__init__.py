@@ -13,14 +13,23 @@ Architecture (Spark-first, not a port):
   - ``sources``    CSV option surface, JSON (row-array + column-object with
                    the inference lattice), Arrow ingestion, type-name
                    grammar (reference lib/src/json_*.cc, csv_*.cc).
-  - ``plans``      the query corpus: adapted TPC-H q1–q22 (plans.tpch) and
-                   the system micro-benchmarks (plans.micro).
+  - ``plans``      the query corpus: adapted TPC-H q1–q22 (plans.tpch),
+                   the system micro-benchmarks (plans.micro), the
+                   window/set-op/events extensions (plans.extras) and the
+                   reference's own SQL tests (plans.reference_sql).
   - ``operators``  LLM-data-pipeline extensions: dedup (exact / n-gram
                    Jaccard / MinHash-LSH / SimHash / embedding LSH),
-                   similarity search (brute-force + IVF), text analysis,
-                   multimodal binary-column plumbing.
-  - ``streaming``  Structured Streaming over the events table (planned —
-                   not yet on disk).
+                   similarity search (brute-force / IVF / PQ), text
+                   analysis, graph analytics (PageRank, common
+                   neighbors), probabilistic sketches (HLL, Count-Min,
+                   Bloom), data selection (SemDeDup, DSIR), curation
+                   pipelines, temporal joins, multimodal binary-column
+                   plumbing.
+  - ``streaming``  event-time windows over the events table as batch
+                   queries (streaming.windows) and Structured Streaming
+                   pipelines with watermarks and state (streaming.live).
+  - ``artifacts``  the disk store for built index frames, keyed by the
+                   source tables and the package code.
 
 Everything is DataFrame/Spark-SQL declarative so Catalyst does pushdown,
 pruning, join selection, and AQE; Python appears only where built-ins

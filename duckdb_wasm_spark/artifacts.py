@@ -17,11 +17,13 @@ replaces (scripts/artifact_kinds.py: one consumer per kind, sf0.1,
 (lsh_sigs) to 128× (cc_labels_emb) slower, so every kind stays.
 
 Staleness: the fingerprint hashes (mtime_ns, size) of every source
-table the artifact derives from plus the builder's constants token, so
-regenerated data or a bumped constant invalidates automatically. A
-build deletes the superseded fingerprints of its own source directory
-and the subtrees of source directories that no longer exist, so the
-store stays bounded.
+table the artifact derives from plus the package code (`_CODE`, every
+`*.py` file under the package), so regenerated data or any edit to the
+package invalidates automatically: no stored frame was written by
+another version of the code. The first session after an edit rebuilds
+every kind it uses. A build deletes the superseded fingerprints of its
+own source directory and the subtrees of source directories that no
+longer exist, so the store stays bounded.
 
 Determinism: every builder is deterministic of its source tables
 (seeded, order-independent), so reload ≡ rebuild value-for-value;
@@ -54,15 +56,35 @@ _LOCK = threading.RLock()
 _DONE = "_ALL_PARTS_COMMITTED"
 
 
+def _code_hash(pkg_dir: str) -> str:
+    """md5 over the relative path and bytes of every `*.py` file under
+    `pkg_dir`, in sorted order. The whole package, not the builder's
+    module: builders call helpers in other modules (the token helpers,
+    load_table's timestamp cast, ranks)."""
+    h = hashlib.md5()
+    for root, dirs, files in os.walk(pkg_dir):
+        dirs.sort()
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                h.update(os.path.relpath(path, pkg_dir).encode() + b"\0")
+                with open(path, "rb") as fh:
+                    h.update(fh.read())
+    return h.hexdigest()
+
+
+_CODE = _code_hash(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _fingerprint(
     sf_dir: str, sources: tuple[str, ...], version: str = ""
 ) -> str:
-    """Hash of the source tables' (mtime, size) plus the builder's
-    constants token: persisted frames bake constants into the data
-    (the SemDeDup 'dups' frame bakes SEMDEDUP_TAU, graph edges the node
-    encoding), so a constant bump must invalidate the stored artifact
-    exactly like regenerated data does."""
-    parts = [os.path.abspath(sf_dir)]
+    """Hash of the source tables' (mtime, size) plus the package code:
+    persisted frames bake the builders' constants and logic into the
+    data, so a code edit must invalidate the stored artifact exactly
+    like regenerated data does. No package caller passes `version`;
+    perfbench/spans.py passes its recorded value to label outcomes."""
+    parts = [os.path.abspath(sf_dir), _CODE]
     for s in sources:
         st = os.stat(os.path.join(sf_dir, f"{s}.parquet"))
         parts.append(f"{s}:{st.st_mtime_ns}:{st.st_size}")
@@ -165,15 +187,14 @@ def persisted_frames(
     sources: tuple[str, ...],
     build: Callable[[], dict[str, DataFrame]],
     layout: dict[str, list[str]] | None = None,
-    version: str = "",
     meta_build: Callable[[dict[str, DataFrame]], dict] | None = None,
 ) -> _LazyFrames:
     """Serve `kind`'s artifact frames for `sf_dir`: from the session
     memo, else from the on-disk parquet layout, else build → persist →
-    reload. Thread-safe: the repo runs intra-query thread pools.
+    reload. Thread-safe: the repo runs intra-query thread pools. The
+    on-disk copy is keyed by source stats + package code
+    (`_fingerprint`), so any edit to the package rebuilds it.
 
-    `version` is the builder-constants token mixed into the
-    fingerprint (bump a baked-in constant → the artifact rebuilds).
     `meta_build(built_frames) -> dict` computes JSON-serializable
     SCALARS at build time (e.g. the graph node count), persisted in a
     `_META.json` sidecar and served as `.meta`, so consumers that need
@@ -204,7 +225,7 @@ def persisted_frames(
         base = committed_dir(
             os.path.join(_ROOT, kind),
             sf_dir,
-            _fingerprint(sf_dir, sources, version),
+            _fingerprint(sf_dir, sources),
             _write,
         )
         names = sorted(

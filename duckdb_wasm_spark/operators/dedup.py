@@ -483,10 +483,9 @@ def _minhash_sigs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_minhash and dedup_lsh_tuning each re-ran it per call
     (~3.9s of each wall at sf0.1). One frame "sigs" = (doc_id,
     s0..s15), reloaded raw (consumers explode it to band keys and
-    shuffle anyway). The hash-family constants ride the fingerprint;
-    subset consumers (pipeline compositions, incremental ingest) keep
-    computing signatures live over their own frames — only the
-    full-table path serves the artifact."""
+    shuffle anyway). Subset consumers (pipeline compositions,
+    incremental ingest) keep computing signatures live over their own
+    frames — only the full-table path serves the artifact."""
     from duckdb_wasm_spark.artifacts import persisted_frames
 
     def _build() -> dict[str, DataFrame]:
@@ -501,16 +500,6 @@ def _minhash_sigs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("documents",),
         _build,
         layout={"sigs": "raw"},
-        # ALL N_HASHES coefficients of each Carter-Wegman family ride
-        # the fingerprint (r14 ADVICE: two sampled terms would miss a
-        # retune that happens to agree at j=1 and j=N_HASHES-1 and
-        # serve stale signatures — the r12 stale-artifact class the
-        # version mechanism exists to close; 2×16 small ints, cheap)
-        version=(
-            f"h{N_HASHES};p{MH_PRIME};"
-            f"a={','.join(str(_mh_a(j)) for j in range(N_HASHES))};"
-            f"b={','.join(str(_mh_b(j)) for j in range(N_HASHES))}"
-        ),
     )["sigs"]
 
 
@@ -750,9 +739,7 @@ def connected_components(
     return labels
 
 
-def _cc_labels_memo(
-    spark, sf_dir, kind, sources, build_nodes_edges, version=""
-):
+def _cc_labels_memo(spark, sf_dir, kind, sources, build_nodes_edges):
     """DISK-PERSISTED connected-component labels (r12, the artifact
     lifecycle): a cluster-assignment table is the canonical thing a
     production dedup pipeline MATERIALIZES — the CC loop runs once per
@@ -767,9 +754,7 @@ def _cc_labels_memo(
         nodes, edges = build_nodes_edges()
         return {"labels": connected_components(nodes, edges)}
 
-    return persisted_frames(
-        spark, kind, sf_dir, sources, _build, version=version
-    )["labels"]
+    return persisted_frames(spark, kind, sf_dir, sources, _build)["labels"]
 
 
 def _minhash_cc_nodes_edges(spark, sf_dir):
@@ -815,9 +800,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cc_labels_minhash",
         ("documents",),
         lambda: _minhash_cc_nodes_edges(spark, sf_dir),
-        version=(
-            f"h={N_HASHES};b={N_BANDS};t={JACCARD_THRESHOLD};tri-v1"
-        ),
     )
     return labels.select(
         "doc_id",
@@ -1222,10 +1204,7 @@ def _emb_sigs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
         return {"sigs": _emb_signatures(emb, bits)}
 
     return persisted_frames(
-        spark, "lsh_sigs", sf_dir, ("embeddings",), _build,
-        # the signatures bake the band count and the md5 plane
-        # derivation (r12 ADVICE: constants ride the fingerprint)
-        version=f"bands={HP_BANDS};flips={HP_MAX_FLIPS};planes=md5v1",
+        spark, "lsh_sigs", sf_dir, ("embeddings",), _build
     )["sigs"]
 
 
@@ -1289,9 +1268,6 @@ def _lsh_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
             sf_dir,
             ("embeddings",),
             lambda: {"pairs": _lsh_candidate_pairs(spark, sf_dir)},
-            version=(
-                f"bands={HP_BANDS};flips={HP_MAX_FLIPS};planes=md5v1"
-            ),
         )["pairs"]
         # merge-join hint: the reloaded artifact reports its TRUE
         # (tiny) on-disk size, which flips Catalyst into broadcasting
@@ -1464,7 +1440,6 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cc_labels_emb",
         ("embeddings",),
         lambda: _emb_cc_nodes_edges(spark, sf_dir),
-        version=f"bands={HP_BANDS};flips={HP_MAX_FLIPS};planes=md5v1",
     )
     return labels.select(
         F.col("doc_id").alias("vec_id"),
@@ -1651,7 +1626,6 @@ def _window_index_memo(spark: SparkSession, sf_dir: str):
         ("documents",),
         _build,
         layout={"posts": "raw"},
-        version=f"n={DUP_SUBSTR_N};sorted-v1",
     )
 
 
@@ -2491,9 +2465,7 @@ def knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("query_id").alias("src"), F.col("neighbor_id").alias("nbr")
         )
     )
-    n_true = panel.meta.get(f"n_top{KNN_K}")
-    if n_true is None:  # meta-less legacy artifact: count fallback
-        n_true = truth.count()
+    n_true = panel.meta[f"n_top{KNN_K}"]
     # ONE flip-tagged probe join for all configs: nflips derives from
     # the mask's position in _probe_masks ([identity, 1-flips,
     # 2-flips] — documented order)
@@ -2753,9 +2725,6 @@ def lsh_candidate_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda e=emb_sub, b=bits: {
                     "sigs": _emb_signatures(e, b)
                 },
-                version=(
-                    f"bands={HP_BANDS};flips={HP_MAX_FLIPS};planes=md5v1"
-                ),
             )["sigs"]
             probe = _probe_stream(sigs, bits, "a_id")
             base = sigs.select(
@@ -2865,7 +2834,6 @@ def _gram_index_memo(spark: SparkSession, sf_dir: str):
         ("documents",),
         _build,
         layout={"arrays": "raw"},
-        version="tri-v1",
     )
 
 

@@ -238,10 +238,6 @@ def _edges_artifact(spark: SparkSession, sf_dir: str):
         # so any materialization job costs more than the re-scans.
         layout={"cs": ["cust"], "sym": ["src"], "symw": ["src"],
                 "deg_sym": "raw"},
-        # the node ENCODING (cust -> 2c, supp -> 2s+1) is baked into
-        # the persisted frames — changing it must invalidate them
-        # (r12 ADVICE); "meta1" adds the persisted n_nodes scalar
-        version="enc=2c|2s+1;meta1",
         # n_nodes rides in the artifact's _META.json so PageRank's
         # per-session deg.count() job disappears (r12 verdict #1):
         # the count is a property of the persisted degree frame, so

@@ -105,14 +105,10 @@ def _scored_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     every downstream stage reads the feature columns. Shared derived
     state under the r14 artifact line (never a single query's own
     output — every consumer still runs its own filter/aggregate/join
-    logic over these per-doc features). All scoring constants, the
-    tokenizer version, the fingerprint formula and the stopword list
-    ride the artifact fingerprint; reload ≡ rebuild is pinned in
+    logic over these per-doc features). Reload ≡ rebuild is pinned in
     tests/test_artifacts.py. Served raw: the frame is one narrow row
     per document and every consumer aggregates or joins it (shuffles
     anyway), so a respread job would cost more than the rescans."""
-    import hashlib
-
     from duckdb_wasm_spark.artifacts import persisted_frames
 
     def _build() -> dict[str, DataFrame]:
@@ -130,9 +126,6 @@ def _scored_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         }
 
-    sw = hashlib.md5(
-        ",".join(sorted(STOPWORDS["en"])).encode()
-    ).hexdigest()[:12]
     return persisted_frames(
         spark,
         "quality_scores",
@@ -140,10 +133,6 @@ def _scored_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("documents",),
         _build,
         layout={"scored": "raw"},
-        version=(
-            "q=.3ttr+.4min(1,n/50)+.3(1-swr);tok=ws-v1;"
-            f"fp=md5(lower(trim));sw={sw}"
-        ),
     )["scored"]
 
 

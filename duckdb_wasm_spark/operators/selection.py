@@ -292,12 +292,7 @@ def _semdedup_index_memo(
         }
 
     return persisted_frames(
-        spark, "semdedup_index", sf_dir, ("embeddings",), _build,
-        # the dup verdicts bake tau; the assignment bakes the codebook
-        # constants (r12 ADVICE: constants ride the fingerprint)
-        version=(
-            f"tau={SEMDEDUP_TAU};C={N_CENTROIDS};iters={TRAIN_ITERS}"
-        ),
+        spark, "semdedup_index", sf_dir, ("embeddings",), _build
     )
 
 
@@ -426,9 +421,7 @@ def semdedup_cell_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from disk, so every cold session re-paid the HALF-corpus train +
     assign, 6.1s cold vs 1.7s warm): cold sessions read two C-row
     parquet frames and run two C-row aggregates. Reload ≡ rebuild is
-    parity-tested in tests/test_selection.py; the constants baked
-    into the frames (C, Lloyd iters, the subset rule) ride in the
-    artifact fingerprint so bumping any of them rebuilds."""
+    parity-tested in tests/test_selection.py."""
     from duckdb_wasm_spark.artifacts import persisted_frames
 
     def _occupancy(mod: int, c: int) -> DataFrame:
@@ -470,13 +463,6 @@ def semdedup_cell_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         layout={
             f"mem_{label}": "raw" for label, _, _ in SEMDEDUP_GROWTH_SUBSETS
         },
-        version=(
-            f"iters={TRAIN_ITERS};"
-            + ";".join(
-                f"{label}:mod{mod}:C{c}"
-                for label, mod, c in SEMDEDUP_GROWTH_SUBSETS
-            )
-        ),
     )
     rows = []
     for label, mod, c in SEMDEDUP_GROWTH_SUBSETS:

@@ -151,10 +151,6 @@ def panel_truth_memo(spark: SparkSession, sf_dir: str):
         ("embeddings",),
         _build,
         layout={"truth": "raw"},
-        # every baked consumer constant rides the fingerprint (the
-        # r14 artifact-lifecycle line): a panel or k bump rebuilds
-        # instead of serving a stale truth set
-        version=f"Q={N_QUERIES};K={panel_k};meta={TOP_K},{KNN_K}",
         meta_build=_meta,
     )
 
@@ -711,10 +707,7 @@ def _trained_centroids_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_wasm_spark.artifacts import persisted_frames
 
     return persisted_frames(
-        spark, "ivf_centroids", sf_dir, ("embeddings",), _build,
-        # the codebook bakes these (r12 ADVICE: constants ride the
-        # fingerprint so a bump rebuilds instead of serving stale)
-        version=f"C={N_CENTROIDS};iters={TRAIN_ITERS};fp={_FP_SCALE}",
+        spark, "ivf_centroids", sf_dir, ("embeddings",), _build
     )["cent"]
 
 
@@ -1040,8 +1033,7 @@ def _pq_encoded_memo(spark: SparkSession, sf_dir: str):
     from duckdb_wasm_spark.artifacts import persisted_frames
 
     got = persisted_frames(
-        spark, "pq_index", sf_dir, ("embeddings",), _build,
-        version=f"M={PQ_M};K={PQ_K};fp={_FP_SCALE}",
+        spark, "pq_index", sf_dir, ("embeddings",), _build
     )
     return got["codes"], got["qd"]
 
@@ -1638,10 +1630,6 @@ def _residual_index_memo(spark: SparkSession, sf_dir: str):
         sf_dir,
         ("embeddings",),
         lambda: _residual_index_build(spark, sf_dir),
-        version=(
-            f"C={N_CENTROIDS};iters={TRAIN_ITERS};M={PQ_M};K={PQ_K};"
-            f"fp={_FP_SCALE}"
-        ),
     )
     return got["ranked"], got["cu"], got["cb"], got["codes"]
 
@@ -2020,10 +2008,6 @@ def ivf_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 seed_where=F.col("vec_id") < INGEST_SEED_BOUND,
             )
         },
-        version=(
-            f"mod={INGEST_MOD};seed<{INGEST_SEED_BOUND};"
-            f"iters={TRAIN_ITERS};fp={_FP_SCALE}"
-        ),
     )["cent"]
     assigned = (
         _assign_cells(normed, cent)
@@ -2158,9 +2142,7 @@ def _pca_artifact(spark: SparkSession, sf_dir: str):
     across the three rows at sf0.1); a production pipeline trains the
     whitening/ABTT statistics once on ingest and serves 128 doubles
     forever — exactly the _trained_centroids_memo lifecycle. Both
-    frames reload "raw" (1-row parquet scans, no respread job);
-    PCA_ITERS / _FP_SCALE / the v₀ seed ride the fingerprint so a
-    constant bump rebuilds instead of serving stale (r12 ADVICE).
+    frames reload "raw" (1-row parquet scans, no respread job).
     Reload ≡ rebuild parity is pinned in tests/test_artifacts.py."""
     from duckdb_wasm_spark.artifacts import persisted_frames
 
@@ -2242,7 +2224,6 @@ def _pca_artifact(spark: SparkSession, sf_dir: str):
         ("embeddings",),
         _build,
         layout={"mu": "raw", "v": "raw", "cov": "raw"},
-        version=f"iters={PCA_ITERS};fp={_FP_SCALE};v0=0.125;cov1",
     )
 
 
@@ -2423,9 +2404,7 @@ def embed_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIFECYCLE (r14): the matrix is trained state exactly like μ and
     the top component — whitening/Mahalanobis consumers load it, they
     don't re-derive it — so it rides the SAME pca_top disk artifact
-    (one corpus pass at build, a 2080-row scan at query time; the
-    fingerprint invalidates with the embeddings table and the
-    fixed-point constants)."""
+    (one corpus pass at build, a 2080-row scan at query time)."""
     return _pca_artifact(spark, sf_dir)["cov"]
 
 
@@ -2975,7 +2954,6 @@ def _kmeanspp_cand_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         ("embeddings",),
         lambda: {"cand": _kmeanspp_cand_build(spark, sf_dir)},
-        version=f"T={KPP_T};L={KPP_L};fp={_KPP_SCALE}",
     )["cand"]
 
 

@@ -427,8 +427,7 @@ def _lm_artifact(spark: SparkSession, sf_dir: str):
     """DISK-PERSISTED bigram-LM document scores (r13 verdict #2):
     one frame "scores" = (doc_id, n_bigrams, avg_prob) — the
     text_lm_score output. Served "raw" (per-doc-sized, both consumers
-    shuffle it by doc_id/lang anyway); LM_ALPHA + the rounding/decimal
-    policy ride the fingerprint so a smoothing retune rebuilds."""
+    shuffle it by doc_id/lang anyway)."""
     from pyspark.sql.window import Window
 
     from duckdb_wasm_spark.artifacts import persisted_frames
@@ -494,7 +493,6 @@ def _lm_artifact(spark: SparkSession, sf_dir: str):
         ("documents",),
         _build,
         layout={"scores": "raw"},
-        version=f"alpha={LM_ALPHA};round12;dec=28,12",
     )
 
 
@@ -837,9 +835,7 @@ def _text_index_memo(spark: SparkSession, sf_dir: str):
 
     All frames reload RAW (plain scans, no materialization job): each
     consumer references each frame once and shuffles/broadcasts it
-    anyway. Stale-safe via the documents fingerprint; the tokenizer
-    rule and the BM25 constants ride the version token so changing
-    either rebuilds. Reload ≡ rebuild parity is pinned in
+    anyway. Reload ≡ rebuild parity is pinned in
     tests/test_artifacts.py.
 
     At 100 TB the index is written BUCKETED by tok (posting-list
@@ -904,9 +900,6 @@ def _text_index_memo(spark: SparkSession, sf_dir: str):
         layout={
             "tf": "raw", "dfs": "raw", "stats": "raw", "impacts": "raw"
         },
-        # the tokenizer rule AND the BM25 constants baked into the
-        # impacts frame ride the fingerprint
-        version=f"tok=ws-split-v1;k1={BM25_K1};b={BM25_B}",
     )
 
 

@@ -36,6 +36,7 @@ from __future__ import annotations
 import fnmatch
 import functools
 import os
+import shutil
 import tempfile
 
 import pyarrow as pa
@@ -216,9 +217,11 @@ class SparkDB:
         self._stats_enabled.clear()
 
     def close(self) -> None:
-        """Release catalog state. The caller's session was never
-        written, so there is nothing to give back."""
+        """Release catalog state and remove the staging directory of
+        registered buffers (`reset` keeps it). The caller's session was
+        never written, so there is nothing to give back."""
         self.reset()
+        shutil.rmtree(self._tmpdir, ignore_errors=True)
 
     # --------------------------------------------------- file registry
     def register_file_url(self, name: str, path: str) -> None:

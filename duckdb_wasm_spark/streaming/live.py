@@ -149,7 +149,8 @@ def _staged_stream_source(
     setup (the stand-in for the Kafka topic / landing directory a
     deployment already has), not operator cost — it persists across
     sessions through the artifact store's commit protocol
-    (artifacts.committed_dir, fingerprinted on the events table), so
+    (artifacts.committed_dir, fingerprinted on the events table and the
+    package code), so
     cold sessions replay the existing landing dir instead of
     re-writing the table."""
     memo: dict = spark.__dict__.setdefault("_dws_stream_src", {})

@@ -126,12 +126,16 @@ group by user_id, session_id
 # ---------------------------------------------------- events_daily_pruned
 def daily_layout(spark: SparkSession, sf_dir: str) -> str:
     """The date-partitioned events layout for this session (written once
-    per (session, sf_dir); see tables.write_events_daily)."""
+    per (session, sf_dir); see tables.write_events_daily), removed with
+    the process (atexit), like micro._orc_staged."""
+    import atexit
+    import shutil
     import tempfile
 
     memo: dict = spark.__dict__.setdefault("_dws_events_daily", {})
     if sf_dir not in memo:
         out = tempfile.mkdtemp(prefix="dws_events_daily_")
+        atexit.register(shutil.rmtree, out, ignore_errors=True)
         memo[sf_dir] = write_events_daily(spark, sf_dir, out)
     return memo[sf_dir]
 

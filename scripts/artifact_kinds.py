@@ -77,10 +77,10 @@ def main() -> int:
         persisted = artifacts.persisted_frames
 
         def unpersisted(spark_, k, sf, sources, build, layout=None,
-                        version="", meta_build=None):
+                        meta_build=None):
             if k != kind:
                 return persisted(spark_, k, sf, sources, build, layout,
-                                 version, meta_build)
+                                 meta_build)
             memo = spark_.__dict__.setdefault("_dws_disk_artifacts", {})
             if (k, sf) not in memo:
                 built = build()

@@ -404,11 +404,12 @@ def test_gram_index_reload_equals_rebuild(spark, sf_dir):
     assert fresh_arrays.exceptAll(idx["arrays"]).count() == 0
 
 
-def test_version_token_invalidates(spark, scratch_sf, store):
-    """Bumping the builder-constants version token must rebuild the
-    artifact exactly like regenerated source data does (r12 ADVICE:
-    frames bake constants into the data, so a constant change served
-    a stale artifact until a parity test happened to run)."""
+def test_code_change_rebuilds(spark, scratch_sf, store, monkeypatch):
+    """An edit to the package must rebuild the artifact exactly like
+    regenerated source data does: frames bake the builders' constants
+    and logic into the data, so a stored frame written by other code
+    would be served stale (a hand-kept per-builder token once missed
+    such an edit)."""
     calls = {"n": 0}
 
     def build():
@@ -416,21 +417,40 @@ def test_version_token_invalidates(spark, scratch_sf, store):
         return {"a": spark.range(4).select(F.col("id").alias("x"))}
 
     artifacts.persisted_frames(
-        spark, "t_ver", scratch_sf, ("embeddings",), build, version="tau=0.5"
+        spark, "t_code", scratch_sf, ("embeddings",), build
     )
     assert calls["n"] == 1
-    # same version, fresh session memo -> reload, no rebuild
-    spark.__dict__["_dws_disk_artifacts"].pop(("t_ver", scratch_sf))
+    # same code, fresh session memo -> reload, no rebuild
+    spark.__dict__["_dws_disk_artifacts"].pop(("t_code", scratch_sf))
     artifacts.persisted_frames(
-        spark, "t_ver", scratch_sf, ("embeddings",), build, version="tau=0.5"
+        spark, "t_code", scratch_sf, ("embeddings",), build
     )
     assert calls["n"] == 1
-    # bumped version -> rebuild
-    spark.__dict__["_dws_disk_artifacts"].pop(("t_ver", scratch_sf))
+    # other code -> rebuild
+    spark.__dict__["_dws_disk_artifacts"].pop(("t_code", scratch_sf))
+    monkeypatch.setattr(artifacts, "_CODE", artifacts._CODE + "-edited")
     artifacts.persisted_frames(
-        spark, "t_ver", scratch_sf, ("embeddings",), build, version="tau=0.6"
+        spark, "t_code", scratch_sf, ("embeddings",), build
     )
     assert calls["n"] == 2
+
+
+def test_code_hash_covers_every_module_and_only_source(tmp_path):
+    """_code_hash changes with one byte of any module, nested ones
+    included, and ignores compiled caches."""
+    pkg = os.path.dirname(artifacts.__file__)
+    copy = tmp_path / "pkg"
+    shutil.copytree(pkg, copy, ignore=shutil.ignore_patterns("__pycache__"))
+    h0 = artifacts._code_hash(str(copy))
+    assert h0 == artifacts._code_hash(pkg) == artifacts._CODE
+    cache = copy / "operators" / "__pycache__"
+    cache.mkdir()
+    (cache / "text.cpython-311.pyc").write_bytes(b"\x00compiled")
+    assert artifacts._code_hash(str(copy)) == h0
+    mod = copy / "operators" / "_text.py"
+    src = mod.read_bytes()
+    mod.write_bytes(src[:-1] + bytes([src[-1] ^ 1]))
+    assert artifacts._code_hash(str(copy)) != h0
 
 
 def test_meta_build_persists_scalars(spark, scratch_sf, store):

@@ -50,9 +50,9 @@ def test_float_vs_int_kind_fails(spark, oracle):
 def test_documented_registry_counts_match():
     """SURVEY §8 and README registry counts must track the live
     registry (round-5 verdict task #8 — the r4 docs drifted once).
-    Both docs state the counts as '<total> registered/total' and
-    '<oracle> oracle-backed/checked'; this fails if either number
-    drifts from __spark_entry__.queries()/oracle_sql()."""
+    README states '<total>, each oracle-checked', SURVEY
+    '<total> registered' and '<oracle> oracle-backed'; this fails if
+    any number drifts from __spark_entry__.queries()/oracle_sql()."""
     import re
 
     import __spark_entry__ as e
@@ -62,13 +62,11 @@ def test_documented_registry_counts_match():
 
     readme = open("README.md").read()
     m = re.search(
-        r"Every registered query \((\d+) oracle-checked \+ (\d+) rows-only"
-        r"[^)]*,\s*(\d+) total\)",
-        readme,
+        r"Every registered query \((\d+), each oracle-checked\)", readme
     )
     assert m, "README registry-count sentence not found"
-    assert int(m.group(1)) == n_oracle, "README oracle-checked count drifted"
-    assert int(m.group(3)) == n_total, "README total count drifted"
+    assert int(m.group(1)) == n_total, "README total count drifted"
+    assert n_oracle == n_total, "a registered query has no oracle"
 
     survey = open("SURVEY.md").read()
     m = re.search(

@@ -662,6 +662,18 @@ def test_reset(spark):
     assert db2.glob_files("*") == []
 
 
+def test_close_removes_the_buffer_staging_dir(spark):
+    db2 = SparkDB(spark=spark)
+    staged = db2.register_file_buffer("b.csv", b"a\n1\n")
+    staging_dir = os.path.dirname(staged)
+    db2.reset()  # reset keeps the directory: the database stays open
+    assert os.path.isdir(staging_dir)
+    db2.register_file_buffer("b.csv", b"a\n2\n")
+    assert db2.connect().query("SELECT a FROM 'b.csv'").column("a").to_pylist() == [2]
+    db2.close()
+    assert not os.path.exists(staging_dir)
+
+
 # --------------------------------------- batch-stream type matrix
 # (batch_stream.test.ts:23-283: typed streamed results, value-exact)
 @pytest.mark.parametrize(
