@@ -165,7 +165,7 @@ def CARDINALITY(spark: SparkSession, sf_dir: str) -> dict[str, int]:
 # --------------------------------------------------- source_orc_roundtrip
 def _orc_staged(spark: SparkSession, sf_dir: str) -> str:
     """lineitem staged once per (session, sf_dir) as ORC; dies with the
-    process (atexit), like streaming/live.py's staged stream source."""
+    process (atexit)."""
     import atexit
     import shutil
     import tempfile
@@ -464,7 +464,7 @@ from lineitem"""
 
 # ---------------------------------------- source_pydatasource_stream
 PYDS_STREAM_N = 50_000
-PYDS_STREAM_BATCH = 25_000  # -> 2 micro-batches (r10 verdict #5: the offset/replay contract needs one batch boundary, not three)
+PYDS_STREAM_BATCH = 25_000  # -> 2 micro-batches: the offset/replay contract needs one batch boundary
 
 
 @_q("source_pydatasource_stream")
@@ -485,11 +485,7 @@ def source_pydatasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-planned batch half of this source covers the
     executor-parallel shape."""
     from duckdb_wasm_spark.sources import pydatasource
-    from duckdb_wasm_spark.streaming.live import (
-        no_trailing_empty_batch,
-        scratch_checkpoint,
-        state_partitions,
-    )
+    from duckdb_wasm_spark.streaming.live import drain
 
     pydatasource.register(spark)
     stream = (
@@ -505,24 +501,7 @@ def source_pydatasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("id").alias("max_id"),
         )
     )
-    import os
-
-    name = f"pyds_stream_{os.getpid()}"
-    with state_partitions(spark), no_trailing_empty_batch(
-        spark
-    ), scratch_checkpoint() as _ck:
-        q = (
-            stream.writeStream.option("checkpointLocation", _ck)
-            .format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(stream, "complete", "source_pydatasource_stream_sink")
 
 
 ORACLE["source_pydatasource_stream"] = f"""

@@ -169,7 +169,9 @@ class SparkDB:
         # staged to a local path only on FIRST scan, footer reads cost
         # tail bytes only (sources/http_range.py)
         self._http_readers: dict = {}
-        self._tmpdir = tempfile.mkdtemp(prefix="sparkdb_files_")
+        # staging directory of buffers and fetched http files, made on
+        # first use: a database that stages nothing leaves nothing behind
+        self._tmpdir: str | None = None
         # in-memory catalog: table name -> DataFrame, and view names
         # (the view bodies live in the session as SQL temp views)
         self._tables: dict[str, DataFrame] = {}
@@ -221,7 +223,9 @@ class SparkDB:
         registered buffers (`reset` keeps it). The caller's session was
         never written, so there is nothing to give back."""
         self.reset()
-        shutil.rmtree(self._tmpdir, ignore_errors=True)
+        if self._tmpdir is not None:
+            shutil.rmtree(self._tmpdir, ignore_errors=True)
+            self._tmpdir = None
 
     # --------------------------------------------------- file registry
     def register_file_url(self, name: str, path: str) -> None:
@@ -256,11 +260,16 @@ class SparkDB:
     def register_file_buffer(self, name: str, data: bytes) -> str:
         """Bind a name to an in-memory buffer; staged to a local file so
         distributed scans can read it (ref RegisterFileBuffer)."""
-        path = os.path.join(self._tmpdir, name.replace("/", "_"))
+        path = self._staging_path(name)
         with open(path, "wb") as f:
             f.write(data)
         self._files[name] = path
         return path
+
+    def _staging_path(self, name: str) -> str:
+        if self._tmpdir is None:
+            self._tmpdir = tempfile.mkdtemp(prefix="sparkdb_files_")
+        return os.path.join(self._tmpdir, name.replace("/", "_"))
 
     def register_file_text(self, name: str, text: str) -> str:
         return self.register_file_buffer(name, text.encode("utf-8"))
@@ -294,10 +303,9 @@ class SparkDB:
                 # first scan of a lazily-registered http file: stage it
                 # now via chunked ranged requests (never a full GET),
                 # then serve the local path on every later resolve
-                staged = os.path.join(
-                    self._tmpdir, name.replace("/", "_")
+                path = self._http_readers[name].stage_to(
+                    self._staging_path(name)
                 )
-                path = self._http_readers[name].stage_to(staged)
                 self._files[name] = path
         elif os.path.exists(name):
             path = name

@@ -3,12 +3,12 @@
 processing is the driver-mandated extension, SURVEY §7 phase 5).
 
   windows   event-time window aggregations (tumbling / sliding /
-            session) as BATCH DataFrame queries with DuckDB oracles —
-            the same expressions Structured Streaming executes
-            incrementally, registered in the driver correctness gate
-  live      true Structured Streaming pipelines: file-source readStream
-            with watermark + windowed aggregation into a memory sink,
-            and an applyInPandasWithState custom stateful operator;
-            exercised in tests (a streaming sink can't be hash-compared
-            by the batch oracle driver)
+            session) with DuckDB oracles, and nine registered streaming
+            gates that run a real stream and hash-compare its sink
+            against the oracle (the tenth is
+            plans/micro.source_pydatasource_stream)
+  live      the Structured Streaming pipelines and their harness: staged
+            parquet replays (`replay`), one `drain` that runs a stream
+            to the end of its input, and the custom GroupState, dedup,
+            join and sink pipelines the gates run
 """

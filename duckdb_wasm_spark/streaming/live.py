@@ -1,136 +1,99 @@
-"""True Structured Streaming pipelines over the events data:
+"""Structured Streaming pipelines over the events data, each run by a
+gate in `streaming.windows` and checked against DuckDB.
 
-  stream_tumbling_counts  file-source readStream → watermark → windowed
-                          aggregation → memory sink; processes all
-                          available input and must equal the batch form
-  run_stateful_counts     applyInPandasWithState custom stateful
-                          operator: per-event-type running totals kept
-                          in GroupState across micro-batches
-
-Scale notes: the file source feeds micro-batches per file
-(maxFilesPerTrigger); watermark bounds state for late data; the
-stateful operator's state is per-group and partition-local — the same
-code runs against a Kafka source on a cluster unchanged.
-
-Family floor ledger (r11 verdict #5; sf0.1/local[32], warm, measured
-from recentProgress.durationMs): a drained 2-batch stateful gate pays
-~0.9s batch-0 (addBatch ~0.4s + incremental queryPlanning ~0.25s +
-first commitOffsets ~0.15s) + ~0.5s batch-1 + ~0.2s start/stop — a
-~1.1-1.7s floor per gate that is FIXED cost, flat in data volume
-(production amortizes it over unbounded input; a finite replay cannot).
-The r12 trims: RAM-backed checkpoints (scratch_checkpoint — offset/
-commit/state-store I/O off disk), trailing no-data micro-batch
-disabled wherever the sink's emission is not watermark-flushed
-(stream_late_data_drop keeps it: append-mode session windows flush ON
-the no-data batch), and the outer join's layout at one data file.
-Family warm total 20.3s → 17.6s across the ten gates, every gate
-hash-green; what remains is ten × the per-query floor above, with the
-two stream-stream joins (2.4s, 3.4s — two sources per side, 4 state
-stores per batch) and the Python-datasource gate (2.5s — ~1s/batch
-driver-side Python read through the runner) the priced outliers.
-
-r13 irreducibility sweep (the extra_stats discipline — measure the
-candidate cuts, keep the floor if they lose):
-  - UNIFYING the two join gates on the ordered_1 layout (r12 verdict
-    #4) was implemented and MEASURED WORSE: the inner join went from
-    2 heavy batches (3.0s) to 1 heavy + 2 sentinel batches (4.7s),
-    because a sentinel batch against a stream-stream join is NOT
-    cheap — its eviction pass SCANS the buffered state (measured
-    1.0-1.1s for a 4-row input batch; addBatch dominates) — and the
-    round-robin interleave is what makes the inner gate genuinely
-    CROSS-batch (matches flow through state between batch 0 and 1);
-    the ordered layout would put every match in batch 0. Reverted.
-  - State-partition sweep (2/4/8/16 for the join gates): n=2 and n=4
-    are within noise of each other (3.0-3.4s inner), n >= 8 regresses
-    (per-partition state-store commit overhead × 4 stores). Kept 2.
-  - Batch counts are at their semantic minimum: inner 2 (the minimum
-    that proves cross-batch matching), outer 3 (data + watermark
-    advance + eviction pass — eviction needs the watermark computed
-    by the PREVIOUS batch, so 2 sentinels is the floor; one sentinel
-    + a trailing no-data batch just renames the third batch), every
-    windowed/stateful gate 2.
-The family wall is therefore ~batch-count × the per-batch floor
-(plan ~0.2s + addBatch incl. state scan/commit ~0.5-1.3s + offsets/
-wal ~0.2s), a fixed cost that production amortizes over unbounded
-input and a finite replay cannot.
+Every stream replays a staged parquet layout one file per micro-batch
+(`replay`) and runs to the end of its input through `drain`. A gate's
+wall is therefore its batch count times a fixed per-batch floor (at
+sf0.1: planning ~0.2 s, addBatch with the state scan and commit
+~0.5-1.3 s, offset and commit logs ~0.2 s), flat in data volume:
+production amortizes that floor over unbounded input, a finite replay
+cannot. The batch counts are at their semantic minimum: 2 for every
+windowed, stateful and inner-join gate (the least that crosses a batch
+boundary) and 3 for the outer join (data, a watermark advance, and the
+eviction pass under the watermark the previous batch computed). The
+two stream-stream joins stay separate gates: on the time-ordered layout
+every inner match falls in one batch, so the inner gate would no longer
+join across batches, and a sentinel batch against a join is not cheap
+(its eviction pass scans the buffered state).
 """
 
 from __future__ import annotations
 
 import atexit
+import datetime as dt
 import os
 import shutil
 import tempfile
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from duckdb_wasm_spark.artifacts import _fingerprint, committed_dir
 from duckdb_wasm_spark.tables import load_table
 
+# A streaming query pins spark.sql.shuffle.partitions as its state-store
+# count at first start, and every store commits once per micro-batch.
+# The results do not depend on the count; 2 and 4 time within noise of
+# each other, 8 and more are slower.
+STATE_PARTITIONS = 2
 
-from contextlib import contextmanager
 
+def drain(
+    stream: DataFrame,
+    mode: str,
+    sink: str | Callable[[DataStreamWriter], DataStreamWriter],
+    keep_no_data_batch: bool = False,
+) -> DataFrame | None:
+    """Run `stream` in output `mode` to the end of its input, then stop
+    it. A str `sink` names a memory sink, whose table is returned (a
+    rerun replaces it); a callable configures any other sink.
 
-@contextmanager
-def state_partitions(spark: SparkSession, n: int = 2):
-    """Run a streaming query start/drain under a right-sized stateful
-    shuffle-partition count. A streaming query pins
-    spark.sql.shuffle.partitions as its STATE STORE count at first
-    start; the batch default (32) means 32 store instances per
-    stateful operator paying per-micro-batch commit overhead — pure
-    fixed cost at toy volume, and a number production sizes to state
-    volume anyway. Restores the previous value so batch plans are
-    unaffected (events_stream_join: 7.3s -> 3.7s at sf0.1 going
-    32 -> 8; r10 verdict #5 re-measured 8 -> 2:
-    events_stream_outer_join 8.9s -> 5.8s, hash unchanged — the
-    results are partition-count-invariant, only the per-micro-batch
-    store-commit fixed cost moves)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    The query runs with STATE_PARTITIONS state stores and a checkpoint
+    on tmpfs, which a finite replay never reads again, so it is removed
+    after. The trailing no-data micro-batch is skipped unless
+    `keep_no_data_batch`: only an append-mode flush that waits on the
+    watermark alone needs it."""
+    spark = stream.sparkSession
+    conf = {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
+    if not keep_no_data_batch:
+        conf["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    prev = {k: spark.conf.get(k) for k in conf}
+    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    checkpoint = tempfile.mkdtemp(prefix="dws_ckpt_", dir=shm)
     try:
-        yield
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        writer = stream.writeStream.outputMode(mode).option(
+            "checkpointLocation", checkpoint
+        )
+        if isinstance(sink, str):
+            writer = writer.format("memory").queryName(sink)
+        else:
+            writer = sink(writer)
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+        shutil.rmtree(checkpoint, ignore_errors=True)
+    return spark.table(sink) if isinstance(sink, str) else None
 
 
-@contextmanager
-def scratch_checkpoint():
-    """RAM-backed checkpoint directory for one finite replay drain
-    (r11 verdict #5). Without an explicit location Spark creates a
-    temporary checkpoint under java.io.tmpdir — DISK here — and every
-    micro-batch pays offset-log, commit-log, and state-store file
-    I/O against it; a production deployment puts checkpoints on the
-    fastest durable store it has, and for a drain whose sink is an
-    in-memory table the checkpoint has no post-query value at all.
-    /dev/shm (tmpfs) is the single-node stand-in; falls back to the
-    default temp dir when absent. Removed on exit — bounded memory."""
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    d = tempfile.mkdtemp(prefix="dws_ckpt_", dir=base)
-    try:
-        yield d
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-@contextmanager
-def no_trailing_empty_batch(spark: SparkSession):
-    """Disable the trailing NO-DATA micro-batch for a drain whose
-    final state flush is driven by DATA (the heartbeat sentinels
-    advance the watermark as real rows), so the extra empty batch is
-    pure per-query fixed cost. NOT used by gates whose append-mode
-    flush relies on the no-data batch (they keep the default)."""
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+def replay(spark: SparkSession, src_dir: str, schema: T.StructType) -> DataFrame:
+    """A staged parquet layout as a stream, one file per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
 
 
 def _layouts_dir(kind: str) -> str:
@@ -141,145 +104,108 @@ def _layouts_dir(kind: str) -> str:
     return os.path.join(os.path.dirname(artifacts._ROOT), "stream_layouts", kind)
 
 
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # watermarks require TIMESTAMP (with zone): the naive-parquet ts
+    # column arrives as TIMESTAMP_NTZ, which EventTimeWatermark rejects.
+    # The session tz is UTC, so the cast is the identity a naive event
+    # log means.
+    ev = load_table(spark, sf_dir, "events")
+    return ev.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _write_file(df: DataFrame, dst: str) -> None:
+    """Write `df` as the single parquet file `dst`."""
+    scratch = tempfile.mkdtemp(prefix="dws_file_")
+    try:
+        df.coalesce(1).write.mode("overwrite").parquet(scratch)
+        part = next(f for f in os.listdir(scratch) if f.startswith("part-"))
+        shutil.move(os.path.join(scratch, part), dst)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
 def _staged_stream_source(
-    spark: SparkSession, sf_dir: str, n_files: int = 2
+    spark: SparkSession, sf_dir: str
 ) -> tuple[str, T.StructType]:
-    """Stage the events table as N parquet files so the file stream
-    source delivers several micro-batches. The layout is environment
-    setup (the stand-in for the Kafka topic / landing directory a
-    deployment already has), not operator cost — it persists across
-    sessions through the artifact store's commit protocol
-    (artifacts.committed_dir, fingerprinted on the events table and the
-    package code), so
-    cold sessions replay the existing landing dir instead of
-    re-writing the table."""
+    """The events table staged as 2 parquet files, rows dealt
+    round-robin, so the file stream source delivers 2 micro-batches that
+    each span the whole time range. The layout is environment setup (the
+    stand-in for the landing directory a deployment already has), not
+    operator cost: it persists across sessions through
+    artifacts.committed_dir, fingerprinted on the events table and the
+    package code."""
     memo: dict = spark.__dict__.setdefault("_dws_stream_src", {})
-    key = (sf_dir, n_files)
-    if key not in memo:
-        ev = load_table(spark, sf_dir, "events")
-        # watermarks require TIMESTAMP (with zone): the naive-parquet ts
-        # column arrives as TIMESTAMP_NTZ, which EventTimeWatermark
-        # rejects. Cast at the staging boundary — session tz is UTC, so
-        # the mapping is the identity a naive event log means.
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
+    if sf_dir not in memo:
+        ev = _events(spark, sf_dir)
         out = committed_dir(
-            _layouts_dir(f"roundrobin_{n_files}"),
+            _layouts_dir("roundrobin_2"),
             sf_dir,
             _fingerprint(sf_dir, ("events",)),
-            lambda out: ev.repartition(n_files)
-            .write.mode("overwrite")
-            .parquet(out),
+            lambda out: ev.repartition(2).write.mode("overwrite").parquet(out),
         )
-        memo[key] = (out, ev.schema)
-    return memo[key]
+        memo[sf_dir] = (out, ev.schema)
+    return memo[sf_dir]
+
+
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a 2-micro-batch stream (the round-robin
+    layout replayed)."""
+    return replay(spark, *_staged_stream_source(spark, sf_dir))
 
 
 def _staged_stream_source_ordered(
-    spark: SparkSession, sf_dir: str, n_files: int = 2
+    spark: SparkSession, sf_dir: str
 ) -> tuple[str, T.StructType]:
-    """Time-ORDERED staged layout + heartbeat sentinels: files are
-    range-partitioned on ts and ascending in replay order, so the file
-    stream source delivers micro-batches whose event times advance
-    monotonically — the arrival pattern a real ingest feed has, and
-    the one a PRODUCTION watermark (a day, not the replay-safe 60-day
-    delay) needs: the round-robin staging of _staged_stream_source
-    interleaves the full time span into every batch, so any watermark
-    shorter than the span would DROP rows there.
+    """The events table as one data file plus two trailing heartbeat
+    sentinels, replayed in that order (one micro-batch each, so the
+    order inside the data file does not matter). A production watermark
+    (a day, not the replay-safe 60 days) needs event time to advance
+    with arrival; the round-robin layout interleaves the full time span
+    into every batch, so any watermark shorter than the span drops rows
+    there.
 
-    Two trailing sentinel files (ts = max+10d + i hours) replay
-    AFTER the data and push the watermark PAST it — the finite-replay
-    stand-in for a live feed's continuous arrivals, without which
-    end-of-stream state is never certified and append-mode outer rows
-    stay withheld forever (watermarks only advance on data). Each
-    sentinel carries one 'click' and one 'purchase' row with
-    user_id = -1: a neutral event_type would be PUSHED-DOWN-filtered
-    below the EventTimeWatermark operator by consumers' event-type
-    predicates and never advance event time (measured: the watermark
-    froze at max_data - delay and the join withheld the tail), while
-    typed rows pass the per-side filters, advance BOTH sides'
-    watermarks, match nothing (user -1 never occurs in data), and are
-    never themselves certified (the watermark never passes their own
-    far-future ts), so they add zero output rows. Standard punctuation
-    discipline, stated rather than hidden. Persists across sessions
-    like the unordered variant."""
+    The sentinels (ts = max + 10 d, then + 1 h more) push the watermark
+    past the data, the finite-replay stand-in for a live feed's
+    continuous arrivals: the watermark computed from one batch drives
+    eviction in the next, so sentinel 0 advances it past the data and
+    sentinel 1's batch runs the final eviction pass. Without them
+    append-mode outer rows stay withheld forever. Each sentinel is the
+    data's last row as one 'click' and one 'purchase' with user_id = -1:
+    a neutral event type would be pushed below the EventTimeWatermark
+    operator by the consumers' event-type filters and never advance
+    event time, while typed rows pass the filters, advance both sides'
+    watermarks, and match only each other (user -1 never occurs in the
+    data). Persists across sessions like the round-robin layout."""
     memo: dict = spark.__dict__.setdefault("_dws_stream_src_ord", {})
-    key = (sf_dir, n_files)
-    if key not in memo:
-        import calendar
-        import glob as globmod
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        ev = load_table(spark, sf_dir, "events")
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
+    if sf_dir not in memo:
+        ev = _events(spark, sf_dir)
 
         def _write(out):
-            staging = tempfile.mkdtemp(prefix="events_stream_ord_stage_")
-            (
-                ev.repartitionByRange(n_files, "ts")
-                .sortWithinPartitions("ts")
-                .write.mode("overwrite")
-                .parquet(staging)
+            # the names carry the replay order (zz- sorts after the
+            # data); _stamp_replay_order turns them into mtimes
+            _write_file(ev, f"{out}/0000-chunk.parquet")
+            kinds = F.array(F.lit("click"), F.lit("purchase"))
+            last = (
+                ev.orderBy(F.desc("ts"))
+                .limit(1)
+                .withColumn("event_type", F.explode(kinds))
+                .withColumn("user_id", F.lit(-1).cast(ev.schema["user_id"].dataType))
             )
-            # sequential names carry the range order; _stamp_replay_order
-            # turns them into the mtimes the stream source replays by
-            parts = sorted(globmod.glob(f"{staging}/part-*.parquet"))
-            for i, p in enumerate(parts):
-                shutil.copyfile(p, f"{out}/{i:04d}-chunk.parquet")
-            shutil.rmtree(staging, ignore_errors=True)
-            max_ts = ev.agg(F.max("ts")).collect()[0][0]
-            base_us = (
-                calendar.timegm(max_ts.utctimetuple()) * 1_000_000
-                + max_ts.microsecond
-            )
-        # TWO sentinels (r10 verdict #5 trimmed the third: the gate
-        # hash over the REAL rows is unchanged — the extra sentinel
-        # only ever matched the other sentinels): the watermark
-        # computed from batch k's data drives eviction in batch k+1,
-        # so sentinel 1 advances the watermark past the data and
-        # sentinel 2's batch runs the final eviction pass under it
-            proto = pq.read_table(f"{out}/0000-chunk.parquet").slice(0, 2)
             for i in range(2):
-                us = base_us + (10 * 86_400 + i * 3_600) * 1_000_000
-                cols = []
-                fields = []
-                for name in proto.schema.names:
-                    col = proto.column(name)
-                    if name == "ts":
-                        # MUST be UTC-adjusted (isAdjustedToUTC=true): the
-                        # Spark-written chunks carry INT96 timestamps the
-                        # reader maps to TIMESTAMP, and an NTZ-annotated
-                        # sentinel fails the stream's schema with
-                        # PARQUET_COLUMN_DATA_TYPE_MISMATCH
-                        ts_type = pa.timestamp("us", tz="UTC")
-                        cols.append(
-                            pa.array([us, us], type=pa.int64()).cast(ts_type)
-                        )
-                        fields.append(pa.field(name, ts_type))
-                    elif name == "event_type":
-                        cols.append(
-                            pa.array(["click", "purchase"], type=col.type)
-                        )
-                        fields.append(proto.schema.field(name))
-                    elif name == "user_id":
-                        cols.append(pa.array([-1, -1], type=col.type))
-                        fields.append(proto.schema.field(name))
-                    else:
-                        cols.append(col)
-                        fields.append(proto.schema.field(name))
-                # zz- prefix: sorts, so replays, strictly after the data
-                dst = f"{out}/zz-sentinel-{i}.parquet"
-                pq.write_table(pa.table(cols, schema=pa.schema(fields)), dst)
+                ts = F.expr(f"ts + interval 10 days + interval {i} hours")
+                _write_file(
+                    last.withColumn("ts", ts), f"{out}/zz-sentinel-{i}.parquet"
+                )
+
         out = committed_dir(
-            _layouts_dir(f"ordered_{n_files}"),
+            _layouts_dir("ordered_1"),
             sf_dir,
             _fingerprint(sf_dir, ("events",)),
             _write,
         )
-        memo[key] = (out, ev.schema)
-    _stamp_replay_order(memo[key][0])
-    return memo[key]
+        memo[sf_dir] = (out, ev.schema)
+    _stamp_replay_order(memo[sf_dir][0])
+    return memo[sf_dir]
 
 
 # a fixed base keeps the stamps idempotent across serves and processes
@@ -299,44 +225,17 @@ def _stamp_replay_order(layout: str) -> None:
         os.utime(os.path.join(layout, n), (t, t))
 
 
-def stream_outer_join(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, object]:
-    """STREAM-STREAM LEFT OUTER interval join with a PRODUCTION-scale
-    watermark — the state-EVICTION semantics the inner gate cannot
-    exercise: a purchase with no click in its 30-minute lookback is
-    emitted (click side NULL) only once the watermark certifies no
-    match can still arrive, i.e. null-emission IS the eviction event.
-    Both sides run a 1-day delay over the time-ordered staged layout
-    (see _staged_stream_source_ordered — with the round-robin layout
-    a 1-day watermark would drop rows and the hash gate would catch
-    it), so join state stays bounded by arrival-rate × (delay +
-    interval) instead of the replay-safe inner gate's
-    buffer-everything 60 days.
-
-    The staged layout's trailing heartbeat sentinels push the final
-    watermark PAST the data (the finite-replay stand-in for a live
-    feed's continuous arrivals), so EVERY purchase is certified —
-    matched multiplicities and eviction nulls both — and the streamed
-    set equals the complete batch left join. The watermark operator
-    sits BEFORE the event-type filter on each side so the heartbeat
-    rows advance event time without entering the join.
-
-    Returns the streamed join rows."""
-    # ONE data file (r11 verdict #5): the matched multiplicities are
-    # in-batch either way, and the eviction semantics the gate exists
-    # for live entirely in the sentinel batches' watermark trajectory
-    # (WM = max_data - 1d after the data batch certifies part of the
-    # purchases, then WM past max_data certifies the rest) — the
-    # second data batch was one fixed micro-batch round buying
-    # nothing (measured 4.5s -> 3.2s at sf0.1, hash unchanged)
-    src_dir, schema = _staged_stream_source_ordered(spark, sf_dir, n_files=1)
+def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Purchases LEFT OUTER JOIN clicks of the same user in the 30
+    minutes before, under a 1-day watermark per side, over the ordered
+    layout; returns the streamed rows, sentinel rows included."""
+    staged = _staged_stream_source_ordered(spark, sf_dir)
 
     def side(event_type: str, prefix: str) -> DataFrame:
+        # the watermark sits before the event-type filter so the
+        # sentinel rows advance event time without entering the join
         return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+            replay(spark, *staged)
             .withWatermark("ts", "1 day")
             .where(F.col("event_type") == event_type)
             .select(
@@ -363,62 +262,7 @@ def stream_outer_join(
         ),
         "leftOuter",
     ).select("p_id", "p_user", "p_ts", "c_id")
-    name = f"sojoin_{os.getpid()}_{abs(hash(src_dir)) % 10000}"
-    with state_partitions(spark), no_trailing_empty_batch(
-        spark
-    ), scratch_checkpoint() as _ck:
-        q = (
-            joined.writeStream.option("checkpointLocation", _ck)
-            .outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
-
-
-def stream_tumbling_counts(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Run the 1-hour tumbling count as a real stream (watermarked) into
-    a memory sink; returns (streamed_result, batch_expected)."""
-    src_dir, schema = _staged_stream_source(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-    name = f"tumbling_{os.getpid()}_{abs(hash(src_dir)) % 10000}"
-    with state_partitions(spark), no_trailing_empty_batch(
-        spark
-    ), scratch_checkpoint() as _ck:
-        q = (
-            stream.writeStream.option("checkpointLocation", _ck)
-            .outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    got = spark.table(name)
-    expected = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-    return got, expected
+    return drain(joined, "append", "events_stream_outer_join_sink")
 
 
 _STATE_SCHEMA = T.StructType([T.StructField("total", T.LongType())])
@@ -441,14 +285,10 @@ def _running_count(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
 
 
 def run_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """applyInPandasWithState running per-type counts over the staged
-    event stream; returns the final memory-sink table (last update per
-    key = total count)."""
-    src_dir, schema = _staged_stream_source(spark, sf_dir)
+    """Per-type running counts kept in GroupState; returns the
+    update-mode sink (every per-batch emission)."""
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+        events_stream(spark, sf_dir)
         .groupBy("event_type")
         .applyInPandasWithState(
             _running_count,
@@ -458,127 +298,31 @@ def run_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    name = f"stateful_{os.getpid()}_{abs(hash(src_dir)) % 10000}"
-    with state_partitions(spark), no_trailing_empty_batch(
-        spark
-    ), scratch_checkpoint() as _ck:
-        q = (
-            stream.writeStream.option("checkpointLocation", _ck)
-            .outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(stream, "update", "events_stream_stateful_sink")
 
 
-def stream_dedup_keys(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Streaming exact dedup: watermarked
-    ``dropDuplicatesWithinWatermark`` over the (user_id, event_type)
-    key — the streaming form of the batch exact-dedup operator. The
-    watermark delay bounds the dedup state (keys older than the delay
-    are evicted — the property that makes streaming dedup viable on an
-    unbounded 100 TB feed); the delay here exceeds the staged data's
-    span, so the kept KEY SET equals the batch distinct exactly.
-    Returns (streamed keys, batch expected keys)."""
-    src_dir, schema = _staged_stream_source(spark, sf_dir)
+def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, event_type) keys deduplicated within a 60-day
+    watermark; returns the append-mode sink."""
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+        events_stream(spark, sf_dir)
         .select("user_id", "event_type", "ts")
         .withWatermark("ts", "60 days")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"dedup_{os.getpid()}_{abs(hash(src_dir)) % 10000}"
-    with state_partitions(spark), no_trailing_empty_batch(
-        spark
-    ), scratch_checkpoint() as _ck:
-        q = (
-            stream.writeStream.option("checkpointLocation", _ck)
-            .outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    got = spark.table(name)
-    expected = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id", "event_type")
-        .distinct()
-    )
-    return got, expected
-
-
-def stream_session_counts(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Run the 10-minute-gap session count as a real watermarked stream
-    (session_window is the stateful streaming session operator; batch
-    events_session runs the same operator in batch mode). The watermark
-    delay exceeds the staged data's span so no session is dropped and
-    the final memory sink equals the batch result exactly.
-    Returns (streamed_result, batch_expected)."""
-    src_dir, schema = _staged_stream_source(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .withWatermark("ts", "365 days")
-        .groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "user_id", F.col("w.start").alias("session_start"), "n"
-        )
-    )
-    name = f"session_{os.getpid()}_{abs(hash(src_dir)) % 10000}"
-    with state_partitions(spark), no_trailing_empty_batch(
-        spark
-    ), scratch_checkpoint() as _ck:
-        q = (
-            stream.writeStream.option("checkpointLocation", _ck)
-            .outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    got = spark.table(name)
-    expected = (
-        load_table(spark, sf_dir, "events")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "user_id", F.col("w.start").alias("session_start"), "n"
-        )
-    )
-    return got, expected
+    return drain(stream, "append", "events_stream_dedup_sink")
 
 
 def stream_late_data_drop(
     spark: SparkSession,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Pin the WATERMARK SEMANTICS, not just the happy path (round-5
-    verdict task #7): a controlled three-micro-batch source where batch
-    0 advances the watermark past a session and batch 2 delivers a LATE
-    row into it. The stream must DROP the late row; a batch query over
-    the same rows reproduces the stream only after filtering rows that
-    arrived behind the watermark — and differs without the filter.
+    """Pin the WATERMARK SEMANTICS, not just the happy path: a
+    controlled three-micro-batch source where batch 0 advances the
+    watermark past a session and batch 2 delivers a LATE row into it.
+    The stream must DROP the late row; a batch query over the same rows
+    reproduces the stream only after filtering rows that arrived behind
+    the watermark — and differs without the filter.
 
     Timeline (session gap 10 min, watermark delay 1 hour):
       batch 0: user 1 at 10:00/10:03/10:06 (one session, ends 10:16),
@@ -591,12 +335,10 @@ def stream_late_data_drop(
       batch 2: user 1 at 10:01 — LATE (10:01 < 19:00) → dropped
     Append mode then finalizes user 1's session with n=3 (4 would mean
     the late row leaked in); user 2's session stays open (its end is
-    past the final watermark) and never emits.
+    past the final watermark) and never emits. The session flush rides
+    the trailing no-data batch, so this drain keeps it.
 
     Returns (streamed, batch_with_filter, batch_naive)."""
-    import datetime as dt
-    import shutil
-
     schema = T.StructType(
         [
             T.StructField("user_id", T.LongType()),
@@ -611,47 +353,26 @@ def stream_late_data_drop(
     filler = [(2, t(20, 1))]
     late = [(1, t(10, 1))]
 
-    # flat single-file-per-micro-batch staging; the file source orders
-    # micro-batches by modification time, so stamp strictly increasing
-    # mtimes (a dir-per-batch layout put part files + markers in one
-    # listing and broke the 1-file-per-trigger split)
+    # one file per micro-batch, replayed in name order
     src = tempfile.mkdtemp(prefix="events_late_")
-    now = dt.datetime.now().timestamp()
-    for i, rows in enumerate((on_time, filler, late)):
-        scratch = tempfile.mkdtemp()
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(scratch)
-        part = next(f for f in os.listdir(scratch) if f.startswith("part-"))
-        dst = os.path.join(src, f"{i:02d}.parquet")
-        shutil.move(os.path.join(scratch, part), dst)
-        base = now - 120 * (3 - i)
-        os.utime(dst, (base, base))
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("user_id", F.col("w.start").alias("session_start"), "n")
-    )
-    name = f"late_{os.getpid()}_{abs(hash(src)) % 10000}"
-    with state_partitions(spark), scratch_checkpoint() as _ck:
-        q = (
-            stream.writeStream.option("checkpointLocation", _ck)
-            .outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
+    try:
+        for i, rows in enumerate((on_time, filler, late)):
+            _write_file(
+                spark.createDataFrame(rows, schema), f"{src}/{i:02d}.parquet"
+            )
+        _stamp_replay_order(src)
+        stream = (
+            replay(spark, src, schema)
+            .withWatermark("ts", "1 hour")
+            .groupBy(
+                F.session_window("ts", "10 minutes").alias("w"), "user_id"
+            )
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select("user_id", F.col("w.start").alias("session_start"), "n")
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    got = spark.table(name)
+        got = drain(stream, "append", "late_data_sink", keep_no_data_batch=True)
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
 
     all_rows = spark.createDataFrame(on_time + filler + late, schema)
     wm_at_late = t(19, 0)  # in effect when the late file arrived
@@ -682,40 +403,14 @@ def stream_late_data_drop(
     return got, batch_filtered, batch_naive
 
 
-def stream_interval_join(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """STREAM-STREAM inner interval join — the remaining hard streaming
-    class after windowed agg / session merge / custom state / dedup:
-    purchases join clicks of the same user whose event time falls in
-    the 30 minutes before the purchase. Both sides are watermarked
-    (required: the watermark + the time-range condition are what let
-    the engine bound join state on an unbounded feed); the delay here
-    exceeds the staged data's 30-day span, so no buffered row is
-    evicted mid-replay and the streamed match set equals the batch
-    join exactly. Inner stream-stream joins emit matches as soon as
-    both rows are buffered — nothing is withheld for watermark
-    advance (that is the OUTER-join behavior) — so append mode
-    delivers the complete result for a finite source.
-
-    Scale (100 TB feed): with a production-sized delay, each side
-    buffers only rows inside watermark + interval; state follows the
-    arrival rate times the join window, not stream length.
-    Returns (streamed pairs, batch expected pairs).
-
-    Cost note: stream-stream joins instantiate the source once PER
-    SIDE, so each staged file is read by both branches and every
-    micro-batch pays both sides' join state stores; this harness
-    stages 2 files (not the other gates' 4) — still a genuinely
-    cross-batch join at half the fixed micro-batch rounds
-    (11.2s -> ~6s at sf0.1, ORACLE_BENCH r7)."""
-    src_dir, schema = _staged_stream_source(spark, sf_dir, n_files=2)
+def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Purchases INNER JOIN clicks of the same user in the 30 minutes
+    before, under a 60-day watermark per side; returns the streamed
+    pairs."""
 
     def side(event_type: str, prefix: str) -> DataFrame:
         return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+            events_stream(spark, sf_dir)
             .where(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -733,72 +428,18 @@ def stream_interval_join(
             "c_ts >= p_ts - interval 30 minutes and c_ts <= p_ts"
         ),
     ).select("p_id", "c_id", "p_user")
-    name = f"sjoin_{os.getpid()}_{abs(hash(src_dir)) % 10000}"
-    with state_partitions(spark), no_trailing_empty_batch(
-        spark
-    ), scratch_checkpoint() as _ck:
-        q = (
-            joined.writeStream.option("checkpointLocation", _ck)
-            .outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    got = spark.table(name)
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    c = ev.where("event_type = 'click'").select(
-        F.col("event_id").alias("c_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-    )
-    p = ev.where("event_type = 'purchase'").select(
-        F.col("event_id").alias("p_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-    )
-    expected = p.join(
-        c,
-        F.expr(
-            "p_user = c_user and "
-            "c_ts >= p_ts - interval 30 minutes and c_ts <= p_ts"
-        ),
-    ).select("p_id", "c_id", "p_user")
-    return got, expected
+    return drain(joined, "append", "events_stream_join_sink")
 
 
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM-STATIC broadcast enrichment — the canonical dimension
-    join of a production feed: the events stream is joined per
-    micro-batch to the STATIC customer dimension (broadcast hash join;
-    Structured Streaming re-plans the batch side each micro-batch,
-    which is exactly how slowly-changing dims are refreshed under the
-    hood) and aggregated by market segment in complete mode. No
-    watermark: a stream-static inner equi-join is stateless — only the
-    downstream aggregate keeps state (|segments| rows).
-
-    Determinism: the double `value` column is floored to integer
-    micros PER EVENT before the bigint sum, so the segment totals are
-    micro-batch-order-independent and hash-comparable to the batch
-    oracle.
-
-    Scale (100 TB feed): the dim side broadcasts (it is the small
-    side by construction); the stream side never shuffles before the
-    aggregate, and aggregate state is bounded by segment cardinality,
-    not stream length."""
-    src_dir, schema = _staged_stream_source(spark, sf_dir)
+    """The events stream joined per micro-batch to the broadcast
+    customer dimension and totalled by market segment; returns the
+    complete-mode sink."""
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+        events_stream(spark, sf_dir)
         .join(F.broadcast(dim), "user_id")
         .groupBy("c_mktsegment")
         .agg(
@@ -810,56 +451,17 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("event_id").alias("max_event_id"),
         )
     )
-    name = f"senrich_{os.getpid()}_{abs(hash(src_dir)) % 10000}"
-    with state_partitions(spark), no_trailing_empty_batch(
-        spark
-    ), scratch_checkpoint() as _ck:
-        q = (
-            stream.writeStream.option("checkpointLocation", _ck)
-            .outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return drain(stream, "complete", "events_stream_static_join_sink")
 
 
 def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UPDATE-MODE + foreachBatch IDEMPOTENT UPSERT — the standard
-    production pattern for sinks with no native merge (plain parquet /
-    object storage): a per-user running aggregate streams in UPDATE
-    mode, so each micro-batch emits ONLY the keys whose state changed,
-    and foreachBatch lands every emission as (key, state, batch_id)
-    appends into a keyed store directory. The read-back resolves each
-    key to its LATEST batch's row — an upsert materialized as
-    append + last-writer-wins resolution, which is also what makes
-    replay IDEMPOTENT: a re-delivered batch re-appends identical rows
-    under the same batch_id, and the max-batch resolution collapses
-    them (same contract the exactly-once file-sink gate checks via
-    _spark_metadata; here the dedup key is explicit).
-
-    The final resolved state per user must equal the batch aggregate
-    over the full events table — checked by the gate's oracle hash.
-    No watermark: a running (unwindowed) aggregate's state is keyed by
-    user only; update mode emits deltas without one.
-
-    Scale (100 TB feed): update mode's per-batch output is bounded by
-    keys TOUCHED in the batch, not total key cardinality (complete
-    mode would re-emit the world each batch); the store grows by one
-    row per touched key per batch and compacts on read by the
-    (key, max batch) window — production compacts the same way, just
-    scheduled. State store count is right-sized by state_partitions."""
-    src_dir, schema = _staged_stream_source(spark, sf_dir)
+    """Per-user running totals in update mode, landed by foreachBatch
+    as (key, state, batch_id) appends to a store directory; returns the
+    store resolved to each user's latest batch."""
     store = tempfile.mkdtemp(prefix="events_upsert_store_")
     atexit.register(shutil.rmtree, store, ignore_errors=True)
     counts = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+        events_stream(spark, sf_dir)
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -876,19 +478,7 @@ def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(store)
         )
 
-    with state_partitions(spark), no_trailing_empty_batch(
-        spark
-    ), scratch_checkpoint() as _ck:
-        q = (
-            counts.writeStream.option("checkpointLocation", _ck)
-            .outputMode("update")
-            .foreachBatch(upsert_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    drain(counts, "update", lambda w: w.foreachBatch(upsert_batch))
     return _resolve_upsert_store(spark, store)
 
 

@@ -24,8 +24,6 @@ theirs because the plan is the capability under test.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,6 +34,7 @@ from duckdb_wasm_spark.plans._util import (
     sql_dec,
     sql_dsum,
 )
+from duckdb_wasm_spark.streaming import live
 from duckdb_wasm_spark.tables import load_table, write_events_daily
 
 QUERIES: dict = {}
@@ -304,57 +303,31 @@ from z
 @_q("events_stream_tumbling")
 def events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events_tumbling aggregate run THROUGH the Structured
-    Streaming engine — readStream file source over the same parquet,
-    groupBy(window(ts, 1h), type), complete-mode memory sink, ONE
-    AvailableNow trigger — then the sink table is returned and
-    hash-checked against the same batch SQL oracle. This is the
-    registered proof that the incremental operator graph computes the
-    batch answer (the stream ≡ batch law the pytest suite pins for
-    watermarks/state is here gated by the driver on real streaming
-    execution, not a batch stand-in).
+    Streaming engine: the staged events stream (2 micro-batches, each
+    spanning the whole time range, so every window's state carries
+    across the batch boundary), groupBy(window(ts, 1h), type) into a
+    complete-mode memory sink, hash-checked against the same batch SQL
+    oracle. This is the registered proof that the incremental operator
+    graph computes the batch answer.
 
     Complete output mode deliberately: append mode only emits windows
-    the watermark has closed, so a static file's LAST window would be
+    the watermark has closed, so the replay's LAST window would be
     withheld and the result could never equal the batch oracle;
     complete mode emits the full aggregation state after the final
-    micro-batch, which for a finite source IS the batch result.
+    micro-batch, which for a finite source IS the batch result. No
+    watermark: complete mode evicts no state, so one would change
+    nothing.
 
-    Scale (100 TB / production): the same graph runs unbounded with
-    update mode + a watermark (see streaming/live.py for the
-    state-eviction tests); AvailableNow is the standard backfill
-    trigger — process everything available as micro-batches, then
-    stop. Memory sink is the gate harness; a real deployment writes
-    to a table sink.
+    Scale (production): the same graph runs unbounded in update mode
+    with a watermark bounding state; the memory sink is the gate
+    harness, a deployment writes to a table sink.
 
-    Determinism: window boundaries are epoch-integer arithmetic;
-    sums follow the decimal policy; micro-batch count does not affect
-    the final complete-mode state (aggregation is associative)."""
-    import os
-
-    # The file source needs a DIRECTORY. Raw layout: events.parquet is
-    # a FILE in the multi-table sf_dir → read the dir with a
-    # pathGlobFilter (which matches LEAF names). Spark-written layout
-    # (e.g. a test corpus): events.parquet IS a directory of part
-    # files → point at it directly; a pathGlobFilter would match zero leaves
-    # and silently stream an EMPTY source (review finding, reproduced).
-    path = f"{sf_dir}/events.parquet"
-    raw = spark.read.parquet(path)  # raw schema, pre ts-conversion
-    if os.path.isdir(path):
-        stream = spark.readStream.schema(raw.schema).parquet(path)
-    else:
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-    # mirror load_table's nanosAsLong guard: a regenerated
-    # TIMESTAMP(NANOS) events file arrives as INT64 ns
-    if dict(raw.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
+    Determinism: window boundaries are epoch-integer arithmetic; sums
+    follow the decimal policy and are associative, so the micro-batch
+    split does not change the final state."""
     agg = (
-        stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        live.events_stream(spark, sf_dir)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             dsum(dec("value")).alias("sum_value"),
@@ -366,27 +339,7 @@ def events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    # suffixed + try/finally for the same reasons as events_stream_session
-    name = f"events_stream_tumbling_{os.getpid()}_{abs(hash(sf_dir)) % 10000}"
-    from duckdb_wasm_spark.streaming.live import (
-        scratch_checkpoint,
-        state_partitions,
-    )
-
-    with state_partitions(spark), scratch_checkpoint() as _ck:
-        q = (
-            agg.writeStream.option("checkpointLocation", _ck)
-            .format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return live.drain(agg, "complete", "events_stream_tumbling_sink")
 
 
 # the whole point is stream ≡ batch against the SAME oracle text —
@@ -400,46 +353,31 @@ def events_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_session run THROUGH the Structured Streaming engine —
     session_window is the hardest stateful streaming shape (windows
     MERGE as events arrive: two open sessions fuse when a bridging
-    event lands, so state is not a static key space like tumbling),
-    and this gates that the incremental merge computes exactly the
-    batch islands answer on real streaming execution.
+    event lands, so state is not a static key space like tumbling).
+    The staged stream's 2 micro-batches each span the whole time
+    range, so sessions opened in batch 0 merge with batch 1's events,
+    and the gate checks that incremental merge against the batch
+    islands answer.
 
-    Same harness shape as events_stream_tumbling: file readStream over
-    the same parquet, complete-mode memory sink, ONE AvailableNow
-    trigger. Complete mode both (a) emits the full final state for a
-    finite source (≡ batch) and (b) is the mode where streaming
-    session aggregation needs no watermark — nothing is evicted, so
-    late arrivals within the replay cannot change the final merge
-    result vs batch.
+    Same harness as events_stream_tumbling: complete-mode memory sink,
+    no watermark. Complete mode both emits the full final state for a
+    finite source (≡ batch) and is the mode where streaming session
+    aggregation needs no watermark — nothing is evicted, so arrival
+    order within the replay cannot change the final merge.
 
-    Scale (100 TB / production): unbounded deployments run this graph
-    in append/update mode with a watermark bounding session state
-    (streaming/live.py::stream_session_counts pins the watermark-drop
-    law); state is per-user and partition-local, so the merge cost
-    follows per-user event density, not corpus size.
+    Scale (production): unbounded deployments run this graph in
+    append/update mode with a watermark bounding session state
+    (live.stream_late_data_drop pins the watermark-drop law); state is
+    per-user and partition-local, so the merge cost follows per-user
+    event density, not corpus size.
 
     Determinism: session boundaries are exact timestamp arithmetic
     (gap >= 10 min starts a new island in the oracle; session_window
     merges on gap < 10 min — the same partition of the event
     sequence); counts are integers."""
-    import os
-
-    path = f"{sf_dir}/events.parquet"
-    raw = spark.read.parquet(path)
-    if os.path.isdir(path):
-        stream = spark.readStream.schema(raw.schema).parquet(path)
-    else:
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-    if dict(raw.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
     agg = (
-        stream.groupBy(
+        live.events_stream(spark, sf_dir)
+        .groupBy(
             F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("w"),
             "user_id",
         )
@@ -450,29 +388,7 @@ def events_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    # pid/hash-suffixed like live.py's sinks (a fixed name would
-    # collide with a concurrent run in the same session), and stopped
-    # in a finally so a mid-query failure can't leak a running stream
-    name = f"events_stream_session_{os.getpid()}_{abs(hash(sf_dir)) % 10000}"
-    from duckdb_wasm_spark.streaming.live import (
-        scratch_checkpoint,
-        state_partitions,
-    )
-
-    with state_partitions(spark), scratch_checkpoint() as _ck:
-        q = (
-            agg.writeStream.option("checkpointLocation", _ck)
-            .format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return live.drain(agg, "complete", "events_stream_session_sink")
 
 
 ORACLE["events_stream_session"] = ORACLE["events_session"]
@@ -482,7 +398,7 @@ ORACLE["events_stream_session"] = ORACLE["events_session"]
 @_q("events_stream_stateful")
 def events_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The applyInPandasWithState CUSTOM stateful operator, driver-
-    gated: live.run_stateful_counts streams the events table as 4
+    gated: live.run_stateful_counts streams the events table as 2
     micro-batches through a per-event-type GroupState running total
     (update-mode memory sink keeps every per-batch emission). The
     running totals are MONOTONE, so max(total) per key is the final
@@ -496,15 +412,12 @@ def events_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     final max is batch-order-independent, so the gate does not depend
     on micro-batch boundaries.
 
-    Cost note (sf0.1, local[32]): ~4.7s best-of-2 — almost entirely
-    the 4 micro-batch rounds' fixed cost (streaming-query start +
-    per-batch Python state workers; the staged source is memoized per
-    session). The batch oracle is a near-zero count(*): the comparison
+    Cost note: the wall is almost entirely the micro-batch rounds'
+    fixed cost (streaming-query start + per-batch Python state
+    workers). The batch oracle is a near-zero count(*): the comparison
     buys the gate, not a like-for-like speed race — unbounded
     deployments amortize exactly this machinery across the stream."""
-    from duckdb_wasm_spark.streaming.live import run_stateful_counts
-
-    got = run_stateful_counts(spark, sf_dir)
+    got = live.run_stateful_counts(spark, sf_dir)
     return got.groupBy("event_type").agg(F.max("total").alias("n"))
 
 
@@ -536,9 +449,7 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     evicted, so state follows the distinct-key arrival rate within
     the window, not stream length (the eviction law itself is pinned
     by tests/test_streaming.py's late-data cases)."""
-    from duckdb_wasm_spark.streaming.live import stream_dedup_keys
-
-    got, _ = stream_dedup_keys(spark, sf_dir)
+    got = live.stream_dedup_keys(spark, sf_dir)
     return got.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_users")
     )
@@ -557,24 +468,29 @@ def events_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-STREAM interval join through the engine, driver-gated:
     live.stream_interval_join runs purchases ⨝ clicks (same user,
     click within the 30 minutes before the purchase) as two watermarked
-    readStreams over the staged 2-file source (stream-stream joins read
-    the source once per side, so live.py stages n_files=2) — the last
-    hard streaming
-    operator class after windowed agg / session merge / custom state /
-    dedup. Inner stream-stream joins emit matches as both sides buffer
-    (no watermark withholding — that is outer-join behavior), and the
-    60-day delay exceeds the staged span so no buffered row is evicted
-    mid-replay: the streamed match set equals the batch join exactly,
-    hash-checked as per-purchase click counts (the count over the sink
-    is batch-side presentation; the JOIN ran on the stream).
+    readStreams over the staged round-robin source — the last hard
+    streaming operator class after windowed agg / session merge /
+    custom state / dedup. The round-robin layout puts a user's clicks
+    and purchases in both micro-batches, so matches flow through the
+    join state across the batch boundary. Both sides must be
+    watermarked: the watermark plus the time-range condition are what
+    let the engine bound join state. Inner stream-stream joins emit
+    matches as both sides buffer (no watermark withholding — that is
+    outer-join behavior), and the 60-day delay exceeds the staged
+    data's 30-day span so no buffered row is evicted mid-replay: the
+    streamed match set equals the batch join exactly, hash-checked as
+    per-purchase click counts (the count over the sink is batch-side
+    presentation; the JOIN ran on the stream).
+
+    Cost: stream-stream joins instantiate the source once PER SIDE, so
+    each staged file is read by both branches and every micro-batch
+    pays both sides' join state stores.
 
     Scale (100 TB feed): with a production delay, each side buffers
     arrival-rate × (delay + interval) rows — the watermark plus the
     time-range predicate are precisely what make an unbounded
     stream-stream join's state finite."""
-    from duckdb_wasm_spark.streaming.live import stream_interval_join
-
-    got, _ = stream_interval_join(spark, sf_dir)
+    got = live.stream_interval_join(spark, sf_dir)
     return got.groupBy("p_id").agg(
         F.any_value("p_user").alias("user_id"),
         F.count(F.lit(1)).alias("n_clicks"),
@@ -611,9 +527,10 @@ def events_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     gates all prove operator state through a memory sink; production
     pipelines land on files).
 
-    Fresh sink/checkpoint dirs per invocation (a second AvailableNow
-    run over the same checkpoint would be a no-op and stage nothing),
-    atexit-reaped like every staging dir here.
+    A fresh sink dir per invocation, removed at exit: the sink's
+    _spark_metadata log skips batch ids it already holds, so a second
+    run into the same dir would write nothing. The sink dir stays on
+    disk — it IS the gated output.
 
     Scale: the file sink is the standard lakehouse landing pattern —
     per-batch manifests commute with any executor parallelism, and the
@@ -622,38 +539,14 @@ def events_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from duckdb_wasm_spark.streaming.live import (
-        _staged_stream_source,
-        state_partitions,
-    )
-
-    src_dir, schema = _staged_stream_source(spark, sf_dir)
     out = tempfile.mkdtemp(prefix="events_sink_")
-    # checkpoint on tmpfs (see live.scratch_checkpoint); the sink dir
-    # stays on disk — it IS the gated output
-    _shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    cp = tempfile.mkdtemp(prefix="events_sink_cp_", dir=_shm)
-    for d in (out, cp):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    atexit.register(shutil.rmtree, out, ignore_errors=True)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+        live.events_stream(spark, sf_dir)
         .where(F.col("event_type").isin("click", "purchase"))
         .select("event_id", "user_id", "event_type", "value")
     )
-    with state_partitions(spark):
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    live.drain(stream, "append", lambda w: w.format("parquet").option("path", out))
     sunk = spark.read.parquet(out)  # reads via the _spark_metadata log
     return sunk.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -694,6 +587,14 @@ def events_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     past the data so end-of-replay state fully certifies — the
     finite-replay stand-in for a live feed's continuous arrivals.
 
+    One data file, then the two sentinels: the matched multiplicities
+    are in-batch either way, and the eviction semantics the gate exists
+    for live in the sentinel batches' watermark trajectory (after the
+    data batch the watermark is max_data - 1 d and certifies part of
+    the purchases; past max_data it certifies the rest). Each side's
+    watermark sits BEFORE its event-type filter, so the sentinel rows
+    advance event time without entering the join.
+
     The streamed rows — matched multiplicities AND eviction nulls —
     must hash-equal the COMPLETE batch left join: per purchase,
     n_clicks counts non-null click ids, first_click_id is NULL
@@ -702,9 +603,7 @@ def events_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB feed): state = arrival-rate × (1 day + 30 min) per
     side; the inner gate's replay-safe 60-day delay buffers the whole
     feed instead — THIS is the production configuration."""
-    from duckdb_wasm_spark.streaming.live import stream_outer_join
-
-    got = stream_outer_join(spark, sf_dir)
+    got = live.stream_outer_join(spark, sf_dir)
     # drop the user=-1 sentinel punctuation rows HERE, batch-side over
     # the sink: a streaming-plan predicate would be pushed below the
     # EventTimeWatermark operator and starve the watermark (see
@@ -754,10 +653,10 @@ def events_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB feed): dim broadcasts; the only streaming state is
     |segments| aggregate rows. A dim too big to broadcast shuffles
     BOTH sides per micro-batch — that is the signal to pre-key the
-    stream by the dim's bucketing instead."""
-    from duckdb_wasm_spark.streaming.live import stream_static_enrich
-
-    return stream_static_enrich(spark, sf_dir).orderBy("c_mktsegment")
+    stream by the dim's bucketing instead. No watermark: a
+    stream-static inner equi-join is stateless; only the downstream
+    aggregate keeps state."""
+    return live.stream_static_enrich(spark, sf_dir).orderBy("c_mktsegment")
 
 
 ORACLE["events_stream_static_join"] = """
@@ -785,15 +684,18 @@ def events_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     production pipelines use against merge-less sinks (plain parquet
     lakes). live.stream_upsert runs the real micro-batches; the
     resolved store (latest batch per user) must hash-equal the batch
-    per-user aggregate over the full table.
+    per-user aggregate over the full table. Replay is IDEMPOTENT: a
+    re-delivered batch re-appends identical rows under the same
+    batch_id, and the latest-batch resolution collapses them
+    (tests/test_streaming.py::test_upsert_store_replay_idempotent).
+    No watermark: a running (unwindowed) aggregate's state is keyed by
+    user only, and update mode emits deltas without one.
 
     Per-event fixed-point flooring keeps the running sums micro-batch-
     order-independent (the repo's law); update-mode output is bounded
     by keys touched per batch, not key cardinality — the property
     that makes this shape viable at 100 TB feeds."""
-    from duckdb_wasm_spark.streaming.live import stream_upsert
-
-    return stream_upsert(spark, sf_dir).orderBy("user_id")
+    return live.stream_upsert(spark, sf_dir).orderBy("user_id")
 
 
 ORACLE["events_stream_upsert"] = """

@@ -22,7 +22,7 @@ _PRODUCTS_CSV = (
 def db(spark):
     d = SparkDB(spark=spark)
     yield d
-    d.reset()
+    d.close()
 
 
 def test_github_332_csv_case_insensitive_group_by(db):

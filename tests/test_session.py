@@ -3,7 +3,9 @@ test/bindings.test.ts (generate_series, prepared statements, typecheck,
 bigint patch, tokenizer goldens) and test/filesystem.test.ts (parquet
 scan via registry, COPY round-trips, EXPORT DATABASE)."""
 
+import glob
 import os
+import tempfile
 
 import pyarrow as pa
 import pytest
@@ -13,7 +15,9 @@ from duckdb_wasm_spark.session import Connection, SparkDB, SparkDBError
 
 @pytest.fixture(scope="module")
 def db(spark):
-    return SparkDB(spark=spark)
+    d = SparkDB(spark=spark)
+    yield d
+    d.close()
 
 
 @pytest.fixture()
@@ -660,6 +664,7 @@ def test_reset(spark):
     db2.reset()
     assert db2.list_tables() == []
     assert db2.glob_files("*") == []
+    db2.close()
 
 
 def test_close_removes_the_buffer_staging_dir(spark):
@@ -672,6 +677,20 @@ def test_close_removes_the_buffer_staging_dir(spark):
     assert db2.connect().query("SELECT a FROM 'b.csv'").column("a").to_pylist() == [2]
     db2.close()
     assert not os.path.exists(staging_dir)
+
+
+def test_staging_dir_is_made_on_first_buffer(spark):
+    def staging_dirs():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "sparkdb_files_*")))
+
+    before = staging_dirs()
+    db2 = SparkDB(spark=spark)
+    assert db2.connect().query("SELECT 1 AS a").column("a").to_pylist() == [1]
+    assert staging_dirs() == before  # nothing staged, nothing made
+    staging_dir = os.path.dirname(db2.register_file_buffer("c.csv", b"a\n1\n"))
+    assert staging_dirs() == before | {staging_dir}
+    db2.close()
+    assert staging_dirs() == before
 
 
 # --------------------------------------- batch-stream type matrix
