@@ -17,13 +17,14 @@ replaces (scripts/artifact_kinds.py: one consumer per kind, sf0.1,
 (lsh_sigs) to 128× (cc_labels_emb) slower, so every kind stays.
 
 Staleness: the fingerprint hashes (mtime_ns, size) of every source
-table the artifact derives from plus the package code (`_CODE`, every
-`*.py` file under the package), so regenerated data or any edit to the
-package invalidates automatically: no stored frame was written by
-another version of the code. The first session after an edit rebuilds
-every kind it uses. A build deletes the superseded fingerprints of its
-own source directory and the subtrees of source directories that no
-longer exist, so the store stays bounded.
+table the artifact derives from, the package code (`_CODE`, every
+`*.py` file under the package) and the pyspark version, so regenerated
+data, any edit to the package or a Spark upgrade invalidates
+automatically: no stored frame was written by another version of the
+code or computed by another Spark. The first session after such a
+change rebuilds every kind it uses. A build deletes the superseded
+fingerprints of its own source directory and the subtrees of source
+directories that no longer exist, so the store stays bounded.
 
 Determinism: every builder is deterministic of its source tables
 (seeded, order-independent), so reload ≡ rebuild value-for-value;
@@ -42,6 +43,7 @@ import threading
 from functools import reduce
 from typing import Callable
 
+import pyspark
 from pyspark.sql import DataFrame, SparkSession
 
 _ROOT = os.path.join(
@@ -79,12 +81,13 @@ _CODE = _code_hash(os.path.dirname(os.path.abspath(__file__)))
 def _fingerprint(
     sf_dir: str, sources: tuple[str, ...], version: str = ""
 ) -> str:
-    """Hash of the source tables' (mtime, size) plus the package code:
-    persisted frames bake the builders' constants and logic into the
-    data, so a code edit must invalidate the stored artifact exactly
-    like regenerated data does. No package caller passes `version`;
+    """Hash of the source tables' (mtime, size), the package code and
+    the pyspark version: persisted frames bake the builders' constants
+    and logic, and Spark's own semantics, into the data, so a code edit
+    or a Spark upgrade must invalidate the stored artifact exactly like
+    regenerated data does. No package caller passes `version`;
     perfbench/spans.py passes its recorded value to label outcomes."""
-    parts = [os.path.abspath(sf_dir), _CODE]
+    parts = [os.path.abspath(sf_dir), _CODE, f"spark:{pyspark.__version__}"]
     for s in sources:
         st = os.stat(os.path.join(sf_dir, f"{s}.parquet"))
         parts.append(f"{s}:{st.st_mtime_ns}:{st.st_size}")

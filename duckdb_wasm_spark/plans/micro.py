@@ -43,6 +43,7 @@ from duckdb_wasm_spark.plans._util import (
     sql_dec,
     sql_dsum,
 )
+from duckdb_wasm_spark.scratch import session_dir
 from duckdb_wasm_spark.tables import load_table, load_tables
 
 QUERIES: dict = {}
@@ -164,21 +165,13 @@ def CARDINALITY(spark: SparkSession, sf_dir: str) -> dict[str, int]:
 
 # --------------------------------------------------- source_orc_roundtrip
 def _orc_staged(spark: SparkSession, sf_dir: str) -> str:
-    """lineitem staged once per (session, sf_dir) as ORC; dies with the
-    process (atexit)."""
-    import atexit
-    import shutil
-    import tempfile
+    """lineitem staged once per (session, sf_dir) as ORC in a
+    `scratch.session_dir`."""
 
-    memo: dict = spark.__dict__.setdefault("_dws_orc_src", {})
-    if sf_dir not in memo:
-        out = tempfile.mkdtemp(prefix="lineitem_orc_")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-        load_table(spark, sf_dir, "lineitem").write.mode(
-            "overwrite"
-        ).orc(out)
-        memo[sf_dir] = out
-    return memo[sf_dir]
+    def write(out: str) -> None:
+        load_table(spark, sf_dir, "lineitem").write.mode("overwrite").orc(out)
+
+    return session_dir(spark, "lineitem_orc_", sf_dir, write)
 
 
 @_q("source_orc_roundtrip")
@@ -221,24 +214,17 @@ group by l_returnflag, l_linestatus
 
 # --------------------------------------- source_csv/json_roundtrip
 def _fmt_staged(spark: SparkSession, sf_dir: str, fmt: str) -> str:
-    """orders staged once per (session, sf_dir, fmt) as CSV/JSON; dies
-    with the process (atexit), like _orc_staged."""
-    import atexit
-    import shutil
-    import tempfile
+    """orders staged once per (session, sf_dir, fmt) as CSV/JSON in a
+    `scratch.session_dir`."""
 
-    memo: dict = spark.__dict__.setdefault("_dws_fmt_src", {})
-    key = (sf_dir, fmt)
-    if key not in memo:
-        out = tempfile.mkdtemp(prefix=f"orders_{fmt}_")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
+    def write(out: str) -> None:
         w = load_table(spark, sf_dir, "orders").write.mode("overwrite")
         if fmt == "csv":
             w.option("header", "true").csv(out)
         else:
             w.json(out)
-        memo[key] = out
-    return memo[key]
+
+    return session_dir(spark, f"orders_{fmt}_", sf_dir, write)
 
 
 def _roundtrip_agg(df: DataFrame) -> DataFrame:
@@ -358,19 +344,14 @@ def _bucketed_gate_db(spark: SparkSession, sf_dir: str) -> str:
     """lineitem + orders staged ONCE per (session, sf_dir) as external
     parquet tables bucketed (and sorted) by the order key — the
     co-located-join layout write_bucketed documents (tables.py). Files
-    live in a tempdir (atexit-reaped) so the catalog write never
-    touches the repo/warehouse dir; the bucket shuffle is environment
-    setup paid once, like the streaming/ORC staging helpers."""
-    import atexit
+    live in a `scratch.session_dir` so the catalog write never touches
+    the repo/warehouse dir; the bucket shuffle is environment setup
+    paid once, like the streaming/ORC staging helpers."""
     import re
-    import shutil
-    import tempfile
 
-    memo: dict = spark.__dict__.setdefault("_dws_bucketed_gate", {})
-    if sf_dir not in memo:
-        db = "bucketed_gate_" + re.sub(r"\W", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-        out = tempfile.mkdtemp(prefix="bucketed_gate_")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
+    db = "bucketed_gate_" + re.sub(r"\W", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+
+    def write(out: str) -> None:
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
         for name, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
             (
@@ -382,8 +363,9 @@ def _bucketed_gate_db(spark: SparkSession, sf_dir: str) -> str:
                 .format("parquet")
                 .saveAsTable(f"{db}.{name}")
             )
-        memo[sf_dir] = db
-    return memo[sf_dir]
+
+    session_dir(spark, "bucketed_gate_", sf_dir, write)
+    return db
 
 
 @_q("source_bucketed_join")
@@ -551,8 +533,8 @@ def source_zonemap_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     state: n_rows/256 chunks); the rank-picked bounds come from the
     TWO-PHASE distributed rank (ranks.global_ranks — range
     repartition + per-block row_number + <=32-row offset prefix sum;
-    r9 verdict #2: the old partition-less corpus Window funneled the
-    whole table through one task), then cross in as a 1-row broadcast
+    a partition-less corpus Window would funnel the whole table
+    through one task), then cross in as a 1-row broadcast
     (BNLJ-allowlisted); micros integers end-to-end.
     """
     from duckdb_wasm_spark.ranks import global_ranks
@@ -677,7 +659,7 @@ def _scoped_confs(spark: SparkSession, confs: dict):
     """Set confs, returning a restore closure (None-valued = unset).
 
     SQL confs are SESSION-GLOBAL: any query PLANNED while the scoped
-    confs are live would plan under them (round-10 ADVICE). Callers
+    confs are live would plan under them. Callers
     must hold `_SCOPED_CONF_LOCK` for the whole set→plan→restore
     window (see `scoped_confs` context manager below); the registry
     runners execute gates sequentially, but intra-query thread pools
@@ -704,7 +686,7 @@ def _scoped_confs(spark: SparkSession, confs: dict):
 @contextlib.contextmanager
 def scoped_confs(spark: SparkSession, confs: dict):
     """Lock-guarded conf scope: no other `scoped_confs` block can plan
-    a query under this block's confs (round-10 ADVICE)."""
+    a query under this block's confs."""
     with _SCOPED_CONF_LOCK:
         restore = _scoped_confs(spark, confs)
         try:

@@ -37,7 +37,6 @@ import fnmatch
 import functools
 import os
 import shutil
-import tempfile
 
 import pyarrow as pa
 from py4j.protocol import Py4JError, Py4JJavaError
@@ -51,6 +50,7 @@ from duckdb_wasm_spark.dialect import (
     tokenize,
     translate,
 )
+from duckdb_wasm_spark.scratch import scratch_dir
 from duckdb_wasm_spark.sources import arrow_source, csv_source, json_source
 
 __version__ = "0.2.0"
@@ -236,12 +236,12 @@ class SparkDB:
         (runtime_browser.ts:161-235). Plain http(s) URLs — which the
         reference reads via XHR/Range (runtime_browser.ts:161-177,
         224-235; exercised by test/filesystem.test.ts:25-79 against a
-        local server) — get a LAZY ranged reader (r9 verdict #7; was
-        eager full-file staging): registration fetches zero bytes,
+        local server) — get a LAZY ranged reader rather than eager
+        full-file staging: registration fetches zero bytes,
         parquet-footer access reads tail bytes only
         (`http_reader(name)` is a pyarrow-compatible file-like), and a
-        full scan stages chunked `Range:` requests to the session
-        tmpdir on FIRST use so every executor can read a local path.
+        full scan stages chunked `Range:` requests to the database's
+        scratch dir on FIRST use so every executor can read a local path.
         (ref RegisterFileURL, webdb.cc:579-627)"""
         if path.startswith(("http://", "https://")):
             from duckdb_wasm_spark.sources.http_range import HttpRangeReader
@@ -268,7 +268,7 @@ class SparkDB:
 
     def _staging_path(self, name: str) -> str:
         if self._tmpdir is None:
-            self._tmpdir = tempfile.mkdtemp(prefix="sparkdb_files_")
+            self._tmpdir = scratch_dir("sparkdb_files_")
         return os.path.join(self._tmpdir, name.replace("/", "_"))
 
     def register_file_text(self, name: str, text: str) -> str:

@@ -19,11 +19,9 @@ join across batches, and a sentinel batch against a join is not cheap
 
 from __future__ import annotations
 
-import atexit
 import datetime as dt
 import os
 import shutil
-import tempfile
 from typing import Callable, Iterator
 
 import pandas as pd
@@ -34,7 +32,9 @@ from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from duckdb_wasm_spark.artifacts import _fingerprint, committed_dir
+from duckdb_wasm_spark.scratch import scratch_dir
 from duckdb_wasm_spark.tables import load_table
+from duckdb_wasm_spark.writers import write_one_file
 
 # A streaming query pins spark.sql.shuffle.partitions as its state-store
 # count at first start, and every store commits once per micro-batch.
@@ -63,8 +63,7 @@ def drain(
     if not keep_no_data_batch:
         conf["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     prev = {k: spark.conf.get(k) for k in conf}
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    checkpoint = tempfile.mkdtemp(prefix="dws_ckpt_", dir=shm)
+    checkpoint = scratch_dir("dws_ckpt_", tmpfs=True)
     try:
         for k, v in conf.items():
             spark.conf.set(k, v)
@@ -111,17 +110,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # log means.
     ev = load_table(spark, sf_dir, "events")
     return ev.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def _write_file(df: DataFrame, dst: str) -> None:
-    """Write `df` as the single parquet file `dst`."""
-    scratch = tempfile.mkdtemp(prefix="dws_file_")
-    try:
-        df.coalesce(1).write.mode("overwrite").parquet(scratch)
-        part = next(f for f in os.listdir(scratch) if f.startswith("part-"))
-        shutil.move(os.path.join(scratch, part), dst)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def _staged_stream_source(
@@ -183,7 +171,7 @@ def _staged_stream_source_ordered(
         def _write(out):
             # the names carry the replay order (zz- sorts after the
             # data); _stamp_replay_order turns them into mtimes
-            _write_file(ev, f"{out}/0000-chunk.parquet")
+            write_one_file(ev, f"{out}/0000-chunk.parquet")
             kinds = F.array(F.lit("click"), F.lit("purchase"))
             last = (
                 ev.orderBy(F.desc("ts"))
@@ -193,7 +181,7 @@ def _staged_stream_source_ordered(
             )
             for i in range(2):
                 ts = F.expr(f"ts + interval 10 days + interval {i} hours")
-                _write_file(
+                write_one_file(
                     last.withColumn("ts", ts), f"{out}/zz-sentinel-{i}.parquet"
                 )
 
@@ -354,10 +342,10 @@ def stream_late_data_drop(
     late = [(1, t(10, 1))]
 
     # one file per micro-batch, replayed in name order
-    src = tempfile.mkdtemp(prefix="events_late_")
+    src = scratch_dir("events_late_")
     try:
         for i, rows in enumerate((on_time, filler, late)):
-            _write_file(
+            write_one_file(
                 spark.createDataFrame(rows, schema), f"{src}/{i:02d}.parquet"
             )
         _stamp_replay_order(src)
@@ -458,8 +446,7 @@ def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user running totals in update mode, landed by foreachBatch
     as (key, state, batch_id) appends to a store directory; returns the
     store resolved to each user's latest batch."""
-    store = tempfile.mkdtemp(prefix="events_upsert_store_")
-    atexit.register(shutil.rmtree, store, ignore_errors=True)
+    store = scratch_dir("events_upsert_store_")
     counts = (
         events_stream(spark, sf_dir)
         .groupBy("user_id")

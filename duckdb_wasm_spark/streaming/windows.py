@@ -34,6 +34,7 @@ from duckdb_wasm_spark.plans._util import (
     sql_dec,
     sql_dsum,
 )
+from duckdb_wasm_spark.scratch import scratch_dir, session_dir
 from duckdb_wasm_spark.streaming import live
 from duckdb_wasm_spark.tables import load_table, write_events_daily
 
@@ -124,19 +125,12 @@ group by user_id, session_id
 
 # ---------------------------------------------------- events_daily_pruned
 def daily_layout(spark: SparkSession, sf_dir: str) -> str:
-    """The date-partitioned events layout for this session (written once
-    per (session, sf_dir); see tables.write_events_daily), removed with
-    the process (atexit), like micro._orc_staged."""
-    import atexit
-    import shutil
-    import tempfile
-
-    memo: dict = spark.__dict__.setdefault("_dws_events_daily", {})
-    if sf_dir not in memo:
-        out = tempfile.mkdtemp(prefix="dws_events_daily_")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-        memo[sf_dir] = write_events_daily(spark, sf_dir, out)
-    return memo[sf_dir]
+    """The date-partitioned events layout for this session, written once
+    per (session, sf_dir) into a `scratch.session_dir` (see
+    tables.write_events_daily)."""
+    return session_dir(
+        spark, "dws_events_daily_", sf_dir, lambda out: write_events_daily(spark, sf_dir, out)
+    )
 
 
 @_q("events_daily_pruned")
@@ -527,20 +521,15 @@ def events_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     gates all prove operator state through a memory sink; production
     pipelines land on files).
 
-    A fresh sink dir per invocation, removed at exit: the sink's
+    A fresh `scratch.scratch_dir` sink per invocation: the sink's
     _spark_metadata log skips batch ids it already holds, so a second
-    run into the same dir would write nothing. The sink dir stays on
-    disk — it IS the gated output.
+    run into the same dir would write nothing. The sink dir stays until
+    exit — it IS the gated output.
 
     Scale: the file sink is the standard lakehouse landing pattern —
     per-batch manifests commute with any executor parallelism, and the
     downstream batch read is an ordinary pruned parquet scan."""
-    import atexit
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="events_sink_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    out = scratch_dir("events_sink_")
     stream = (
         live.events_stream(spark, sf_dir)
         .where(F.col("event_type").isin("click", "purchase"))

@@ -4,8 +4,9 @@ HEADER/DELIMITER, parquet, EXPORT DATABASE with schema.sql + load.sql).
 
 The reference writes ONE file at the target path; Spark natively writes
 a directory of part files. copy_to() keeps the reference contract:
-single-partition write to a temp dir, then the lone part file moves to
-the requested path (driver-local rename, no data through the driver).
+single-partition write to a `scratch.scratch_dir`, then the lone part
+file moves to the requested path (driver-local rename, no data through
+the driver); the scratch dir goes whether or not the write succeeds.
 At cluster scale a single output file is itself the bottleneck — the
 directory form (`spark_write_dir` option) keeps the parallel layout.
 """
@@ -15,11 +16,11 @@ from __future__ import annotations
 import glob as _glob
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame
-
 from pyspark.sql import types as T
+
+from duckdb_wasm_spark.scratch import scratch_dir
 
 
 def _spark_sql_type(dt: T.DataType) -> str:
@@ -43,25 +44,28 @@ def copy_to(df: DataFrame, path: str, options: dict, db=None) -> None:
             ).option("sep", options.get("delimiter", ",")).csv(path)
         return
 
-    tmp = tempfile.mkdtemp(prefix="sparkdb_copy_")
-    out = os.path.join(tmp, "out")
-    one = df.coalesce(1)
     if fmt == "parquet":
-        one.write.mode("overwrite").parquet(out)
-        part = _glob.glob(os.path.join(out, "part-*.parquet"))[0]
+        write_one_file(df, path)
     elif fmt == "csv":
         header = str(options.get("header", "false")).lower() in ("true", "1", "")
-        one.write.mode("overwrite").option("header", str(header).lower()).option(
-            "sep", options.get("delimiter", ",")
-        ).csv(out)
-        part = _glob.glob(os.path.join(out, "part-*.csv"))[0]
+        sep = options.get("delimiter", ",")
+        write_one_file(df, path, "csv", header=str(header).lower(), sep=sep)
     else:
         raise ValueError(f"unsupported COPY format: {fmt}")
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    shutil.move(part, path)
-    shutil.rmtree(tmp, ignore_errors=True)
     if db is not None:
         db.register_file_url(os.path.basename(path), path)
+
+
+def write_one_file(df: DataFrame, path: str, fmt: str = "parquet", **options) -> None:
+    """Write `df` as the single `fmt` file `path`, with writer `options`."""
+    tmp = scratch_dir("sparkdb_copy_")
+    try:
+        df.coalesce(1).write.mode("overwrite").options(**options).format(fmt).save(tmp)
+        part = _glob.glob(os.path.join(tmp, f"part-*.{fmt}"))[0]
+        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+        shutil.move(part, path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def export_database(db, out_dir: str, fmt: str = "csv") -> None:

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Same-day A/B harness for wall-regression attribution (r14 verdict #1).
+"""Same-day A/B harness for wall-regression attribution.
 
 Usage:
     python scripts/ab_regression.py <tree> q1,q2,...   [env SPARK_GRAFT_*]
@@ -7,7 +7,10 @@ Usage:
 Runs the named registry queries from the code at <tree> (a git worktree
 or the live repo root) in a FRESH session with bench.py's exact warm-up
 and inter-query hygiene, and prints one JSON line with per-query walls
-(run 1 = cold, rest = warm candidates). The tree's own
+(run 1 = cold, rest = warm candidates). Each run times every query
+once, in its own order: a permutation seeded by the run index, so both
+arms see the same orders but no query always follows the same
+neighbours; the orders are printed with the walls. The tree's own
 `spark-warehouse` artifact store is used (artifacts._ROOT derives from
 the imported module's location), so pre-warm the worktree once with a
 throwaway pass before trusting its warm numbers.
@@ -17,8 +20,10 @@ so neither tree systematically inherits the other's page cache) lives
 in the calling shell; this script is one arm.
 """
 
+import gc
 import json
 import os
+import random
 import subprocess
 import sys
 import time
@@ -49,22 +54,21 @@ def main() -> int:
         lambda it: it, "id long"
     ).count()
 
-    out = {"tree": tree, "sha": sha, "runs": runs, "queries": {}}
-    for n in names:
-        walls = []
-        for _ in range(runs):
+    out = {"tree": tree, "sha": sha, "runs": runs, "orders": [],
+           "queries": {n: [] for n in names}}
+    for run in range(runs):
+        order = random.Random(run).sample(names, len(names))
+        out["orders"].append(order)
+        for n in order:
             t0 = time.perf_counter()
             qs[n](spark, sf_dir).collect()
-            walls.append(round(time.perf_counter() - t0, 3))
-        out["queries"][n] = walls
-        # bench.py's untimed inter-query hygiene, verbatim
-        import gc
-
-        gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
+            out["queries"][n].append(round(time.perf_counter() - t0, 3))
+            # bench.py's untimed inter-query hygiene, verbatim
+            gc.collect()
+            try:
+                spark.sparkContext._jvm.System.gc()
+            except Exception:
+                pass
     print(json.dumps(out), flush=True)
     spark.stop()
     return 0

@@ -12,6 +12,7 @@ import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pyspark
 import pytest
 from pyspark.sql import functions as F
 
@@ -405,11 +406,12 @@ def test_gram_index_reload_equals_rebuild(spark, sf_dir):
 
 
 def test_code_change_rebuilds(spark, scratch_sf, store, monkeypatch):
-    """An edit to the package must rebuild the artifact exactly like
-    regenerated source data does: frames bake the builders' constants
-    and logic into the data, so a stored frame written by other code
-    would be served stale (a hand-kept per-builder token once missed
-    such an edit)."""
+    """An edit to the package or a Spark upgrade must rebuild the
+    artifact exactly like regenerated source data does: frames bake the
+    builders' constants and logic, and Spark's semantics, into the data,
+    so a stored frame written by other code or another Spark would be
+    served stale (a hand-kept per-builder token once missed such an
+    edit)."""
     calls = {"n": 0}
 
     def build():
@@ -433,6 +435,13 @@ def test_code_change_rebuilds(spark, scratch_sf, store, monkeypatch):
         spark, "t_code", scratch_sf, ("embeddings",), build
     )
     assert calls["n"] == 2
+    # same code, other Spark -> rebuild
+    spark.__dict__["_dws_disk_artifacts"].pop(("t_code", scratch_sf))
+    monkeypatch.setattr(pyspark, "__version__", pyspark.__version__ + "-upgraded")
+    artifacts.persisted_frames(
+        spark, "t_code", scratch_sf, ("embeddings",), build
+    )
+    assert calls["n"] == 3
 
 
 def test_code_hash_covers_every_module_and_only_source(tmp_path):

@@ -627,6 +627,24 @@ def test_copy_parquet_roundtrip(conn, db, tmp_path):
     conn.query("DROP TABLE cp")
 
 
+def test_failed_copy_leaves_no_scratch_dir(conn, tmp_path):
+    # the cast raises inside the COPY's write; its scratch dir must go too
+    def copy_dirs():
+        tmp = tempfile.gettempdir()
+        return set(
+            glob.glob(os.path.join(tmp, "sparkdb_copy_*"))
+            + glob.glob(os.path.join(tmp, f"dws-{os.getpid()}", "sparkdb_copy_*"))
+        )
+
+    before = copy_dirs()
+    conn.query("CREATE VIEW bad_cast AS SELECT CAST(s AS INTEGER) AS a FROM (SELECT 'x' AS s)")
+    with pytest.raises(SparkDBError, match="CAST_INVALID_INPUT"):
+        conn.query(f"COPY bad_cast TO '{tmp_path / 'out.parquet'}' (FORMAT PARQUET)")
+    assert copy_dirs() == before
+    assert not (tmp_path / "out.parquet").exists()
+    conn.query("DROP VIEW bad_cast")
+
+
 def test_export_database(conn, db, tmp_path):
     # filesystem.test.ts:183-214
     conn.query("CREATE TABLE ex1 AS SELECT 1::INTEGER AS a")
@@ -681,7 +699,8 @@ def test_close_removes_the_buffer_staging_dir(spark):
 
 def test_staging_dir_is_made_on_first_buffer(spark):
     def staging_dirs():
-        return set(glob.glob(os.path.join(tempfile.gettempdir(), "sparkdb_files_*")))
+        root = os.path.join(tempfile.gettempdir(), f"dws-{os.getpid()}")
+        return set(glob.glob(os.path.join(root, "sparkdb_files_*")))
 
     before = staging_dirs()
     db2 = SparkDB(spark=spark)
