@@ -38,12 +38,13 @@ def _sf_from_dir(sf_dir: str) -> float:
 
 
 def _build_session(cpus: int):
+    """A local[cpus] session with one shuffle partition per core."""
     from pyspark.sql import SparkSession
 
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("duckdb_wasm_spark-bench")
-        .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -53,8 +54,9 @@ def _build_session(cpus: int):
     )
 
 
-def _machine() -> dict:
-    """Where the numbers came from: cores, memory, engine versions."""
+def _machine(spark) -> dict:
+    """Where the numbers came from: cores, memory, engine versions and
+    the session's shuffle partition count."""
     import duckdb
     import pyspark
 
@@ -64,6 +66,7 @@ def _machine() -> dict:
         "mem_gb": round(mem / 2**30, 1),
         "pyspark": pyspark.__version__,
         "duckdb": duckdb.__version__,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
     }
 
 
@@ -247,7 +250,7 @@ def main() -> int:
         else f"BENCH_FULL_sf{sf}_c{cpus}"
         f"{'_duckdb' if duck_enabled else ''}.json"
     )
-    machine = _machine()
+    machine = _machine(spark)
     with open(
         os.path.join(
             os.path.dirname(os.path.abspath(__file__)), full_name

@@ -54,17 +54,15 @@ from duckdb_wasm_spark.operators._text import (
     sql_toks,
     toks,
 )
-from duckdb_wasm_spark.operators.dedup import (
-    _pair_dot_udf,
-    dot_fold,
-    sql_dot,
-)
+from duckdb_wasm_spark.operators.dedup import _pair_dot_udf, sql_dot
 from duckdb_wasm_spark.operators.similarity import (
-    _FP_SCALE,
+    _SQL_ARN,
+    _SQL_CSIM,
     N_CENTROIDS,
     TRAIN_ITERS,
     _assign_cells,
-    _sql_refine_iter,
+    _normed,
+    _sql_trained,
     _trained_centroids,
     _trained_centroids_memo,
 )
@@ -86,38 +84,14 @@ def _q(name):
 _SCALE = 1 << 20  # shared fixed-point unit for ln()-bearing sums
 
 
-def _normed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(dot_fold("embedding", "embedding")).alias("nrm"),
-    )
-
-
-def _sql_cent_prefix() -> str:
-    """The trained-centroid CTE chain (normed → c0 → TRAIN_ITERS Lloyd
-    iterations) shared with similarity.sim_topk_ivf_trained's oracle —
-    generated from the same constants so the codebook is bit-identical
-    to the Spark side's disk-persisted artifact."""
-    return f"""
-normed as (
-  select vec_id, embedding,
-         sqrt({sql_dot('embedding', 'embedding')}) nrm
-  from embeddings),
-c0 as (select vec_id c_id, embedding ec, nrm nc from normed
-       where vec_id < {N_CENTROIDS}),
-{','.join(_sql_refine_iter(i + 1, f'c{i}') for i in range(TRAIN_ITERS))}"""
-
-
-_SQL_RANKED_CELLS = f"""
+# The trained codebook's assignment as oracle CTEs (similarity's
+# _sql_trained chain, so the codebook is bit-identical to the Spark
+# side's disk-persisted artifact).
+_SQL_RANKED_CELLS = f"""{_sql_trained()},
 ranked_cells as (
   select e.vec_id, e.embedding, e.nrm, c.c_id,
-         {sql_dot('e.embedding', 'c.ec')} / (e.nrm * c.nc) c_sim,
-         row_number() over (
-           partition by e.vec_id
-           order by {sql_dot('e.embedding', 'c.ec')} / (e.nrm * c.nc) desc,
-                    c.c_id asc) arn
+         {_SQL_CSIM} c_sim,
+         {_SQL_ARN}
   from normed e, c{TRAIN_ITERS} c)"""
 
 
@@ -179,8 +153,7 @@ def embed_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE["embed_silhouette"] = f"""
-with {_sql_cent_prefix()},
-{_SQL_RANKED_CELLS},
+with {_SQL_RANKED_CELLS},
 ab as (
   select vec_id,
          max(case when arn = 1 then c_id end) cell,
@@ -271,7 +244,7 @@ def _semdedup_dups_build(spark: SparkSession, ranked: DataFrame) -> DataFrame:
 def _semdedup_index_memo(
     spark: SparkSession, sf_dir: str
 ) -> dict[str, DataFrame]:
-    """DISK-PERSISTED SemDeDup index (r11 verdict #1): the assignment
+    """DISK-PERSISTED SemDeDup index: the assignment
     + two-phase rank chain AND the Arrow-UDF pair stage rebuilt every
     cold session were the worst cold/warm gap in the corpus (11.6s vs
     4.1s) even though the centroids they derive from already reload
@@ -331,8 +304,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded cell size.
 
     The ranked assignment AND the pair-stage verdicts are one
-    disk-persisted artifact (r11 verdict #1 — see
-    _semdedup_index_memo): cold sessions reload both instead of
+    disk-persisted artifact (see _semdedup_index_memo): cold sessions reload both instead of
     replaying assign + two-phase rank + the Arrow-UDF pair stage."""
     idx = _semdedup_index_memo(spark, sf_dir)
     ranked, dups = idx["ranked"], idx["dups"]
@@ -354,8 +326,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE["dedup_semdedup"] = f"""
-with {_sql_cent_prefix()},
-{_SQL_RANKED_CELLS},
+with {_SQL_RANKED_CELLS},
 assigned as (
   select vec_id, embedding, nrm, c_id cell, c_sim
   from ranked_cells where arn = 1),
@@ -391,8 +362,8 @@ SEMDEDUP_GROWTH_SUBSETS = [
 
 @_q("semdedup_cell_growth")
 def semdedup_cell_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GATED cell-scaling growth audit for SemDeDup (r11 verdict #1,
-    the lsh_candidate_growth mold): dedup_semdedup's docstring claims
+    """GATED cell-scaling growth audit for SemDeDup (the
+    lsh_candidate_growth mold): dedup_semdedup's docstring claims
     the within-cell pair stage stays bounded because production scales
     the cell count C with the corpus — this gate EXECUTES that claim
     instead of asserting it. It runs the identical Lloyd-trained
@@ -416,10 +387,10 @@ def semdedup_cell_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     one C×64-row aggregate); the audit itself is ONE (cell) count
     aggregate — the pair frame is NEVER materialized (its cardinality
     is computed exactly from the occupancy counts). BOTH subsets'
-    per-cell occupancy frames are one disk-persisted artifact (r12
-    verdict #1 — previously only the full-corpus chain was served
-    from disk, so every cold session re-paid the HALF-corpus train +
-    assign, 6.1s cold vs 1.7s warm): cold sessions read two C-row
+    per-cell occupancy frames are one disk-persisted artifact
+    (serving only the full-corpus chain from disk made every cold
+    session re-pay the HALF-corpus train + assign, 6.1s cold vs 1.7s
+    warm): cold sessions read two C-row
     parquet frames and run two C-row aggregates. Reload ≡ rebuild is
     parity-tested in tests/test_selection.py."""
     from duckdb_wasm_spark.artifacts import persisted_frames
@@ -455,7 +426,7 @@ def semdedup_cell_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         # dict comprehension, not a loop of closures: each
         # _occupancy(mod, c) is invoked eagerly with ITS iteration's
         # bindings, so nothing late-binds no matter when the build
-        # runs (r12 ADVICE on the old per-subset lambda)
+        # runs (a per-subset lambda would late-bind)
         lambda: {
             f"mem_{label}": _occupancy(mod, c)
             for label, mod, c in SEMDEDUP_GROWTH_SUBSETS
@@ -488,57 +459,17 @@ def semdedup_cell_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("subset")
 
 
-def _sql_refine_iter_t(i: int, prev: str, t: str) -> str:
-    """One tagged Lloyd iteration (the _sql_refine_iter arithmetic
-    with `{t}`-suffixed CTE names and source) so two independent
-    train chains coexist in one oracle query."""
-    return f"""
-a{t}{i} as (
-  select embedding, cell from (
-    select e.embedding, c.c_id cell,
-           row_number() over (
-             partition by e.vec_id
-             order by {sql_dot('e.embedding', 'c.ec')} / (e.nrm * c.nc) desc,
-                      c.c_id asc) arn
-    from normed{t} e, {prev} c)
-  where arn = 1),
-m{t}{i} as (
-  select cell, pos - 1 pos,
-         cast(floor(cast(v as double) * {_FP_SCALE}) as bigint) sv
-  from (select cell, unnest(embedding) v,
-               generate_subscripts(embedding, 1) pos
-        from a{t}{i})),
-g{t}{i} as (
-  select cell, pos,
-         cast(sum(sv) as double) / cast(count(*) as double)
-           / {float(_FP_SCALE)} c
-  from m{t}{i} group by cell, pos),
-r{t}{i} as (
-  select cell c_id, list(c order by pos) ec from g{t}{i} group by cell),
-c{t}{i} as (
-  select c_id, ec, sqrt({sql_dot('ec', 'ec')}) nc from r{t}{i})"""
-
-
 def _semdedup_growth_sql() -> str:
     chains = []
     selects = []
     for label, mod, c in SEMDEDUP_GROWTH_SUBSETS:
         t = f"_{label[0]}"
         where = "" if mod == 1 else f" where vec_id % {mod} = 0"
-        chains.append(f"""normed{t} as (
-  select vec_id, embedding,
-         sqrt({sql_dot('embedding', 'embedding')}) nrm
-  from embeddings{where}),
-c{t}0 as (select vec_id c_id, embedding ec, nrm nc from normed{t}
-          where vec_id < {c * mod}),
-{','.join(_sql_refine_iter_t(i + 1, f'c{t}{i}', t) for i in range(TRAIN_ITERS))},
+        chains.append(f"""{_sql_trained(t, where, c * mod)},
 asg{t} as (
   select cell from (
     select e.vec_id, c.c_id cell,
-           row_number() over (
-             partition by e.vec_id
-             order by {sql_dot('e.embedding', 'c.ec')} / (e.nrm * c.nc) desc,
-                      c.c_id asc) arn
+           {_SQL_ARN}
     from normed{t} e, c{t}{TRAIN_ITERS} c)
   where arn = 1),
 mem{t} as (select cell, count(*) m from asg{t} group by cell),
@@ -640,7 +571,7 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sum(F.col("c") * F.col("term")).alias("w_fp"))
     )
-    # clamp u away from 0 (r11 advice): the 60-bit md5 fraction can be
+    # clamp u away from 0: the 60-bit md5 fraction can be
     # exactly 0 (~2^-60 per doc, deterministic for a given corpus), and
     # ln(0) is -inf on Spark but OutOfRangeException in DuckDB — a
     # divergent hard-failure mode. greatest(u, 2^-60) keeps u in
@@ -732,10 +663,9 @@ def corpus_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sums, and min/max over identical doubles.
 
     Plan (100 TB): the LM scores are the DISK-PERSISTED bigram-LM
-    artifact (text._lm_artifact, r13 verdict #2 — previously this
-    query re-executed text_lm_score's whole lineage per call, 1.76s
-    of its 3.29s wall; now both queries serve the same build-once
-    frame); the terciles ride ranks.global_ranks(keys=[lang]) — the
+    artifact (text._lm_artifact — re-executing text_lm_score's whole
+    lineage per call cost 1.76s of a 3.29s wall; both queries serve
+    the same build-once frame); the terciles ride ranks.global_ranks(keys=[lang]) — the
     two-phase distributed rank, not a lang-partitioned corpus window
     — plus one languages-sized count frame broadcast back; the output
     is |langs|·3 rows."""

@@ -30,9 +30,6 @@ double results are bit-stable across engines and partition orders.
 
 from __future__ import annotations
 
-import contextlib
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,7 +41,7 @@ from duckdb_wasm_spark.plans._util import (
     sql_dsum,
 )
 from duckdb_wasm_spark.scratch import session_dir
-from duckdb_wasm_spark.tables import load_table, load_tables
+from duckdb_wasm_spark.tables import load_table, load_tables, scoped_confs
 
 QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
@@ -650,49 +647,6 @@ _BLOOM_CONFS = {
     "spark.sql.optimizer.runtime.bloomFilter"
     ".applicationSideScanSizeThreshold": "0",
 }
-
-
-_SCOPED_CONF_LOCK = threading.Lock()
-
-
-def _scoped_confs(spark: SparkSession, confs: dict):
-    """Set confs, returning a restore closure (None-valued = unset).
-
-    SQL confs are SESSION-GLOBAL: any query PLANNED while the scoped
-    confs are live would plan under them. Callers
-    must hold `_SCOPED_CONF_LOCK` for the whole set→plan→restore
-    window (see `scoped_confs` context manager below); the registry
-    runners execute gates sequentially, but intra-query thread pools
-    exist elsewhere in the repo, so the lock is enforced rather than
-    assumed."""
-    old: dict = {}
-    for k, v in confs.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-
-    def restore():
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-    return restore
-
-
-@contextlib.contextmanager
-def scoped_confs(spark: SparkSession, confs: dict):
-    """Lock-guarded conf scope: no other `scoped_confs` block can plan
-    a query under this block's confs."""
-    with _SCOPED_CONF_LOCK:
-        restore = _scoped_confs(spark, confs)
-        try:
-            yield
-        finally:
-            restore()
 
 
 def _bloom_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

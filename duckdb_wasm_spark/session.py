@@ -143,11 +143,11 @@ class SparkDB:
         self.config = dict(config or {})
         self.emit_bigint = bool(self.config.get("emitBigInt", False))
         if spark is None:
-            threads = int(self.config.get("maximumThreads", 0)) or "*"
+            threads = int(self.config.get("maximumThreads", 0)) or os.cpu_count()
             spark = (
                 SparkSession.builder.master(f"local[{threads}]")
                 .appName("duckdb_wasm_spark")
-                .config("spark.sql.shuffle.partitions", "32")
+                .config("spark.sql.shuffle.partitions", str(threads))
                 .config("spark.sql.adaptive.enabled", "true")
                 .config("spark.sql.execution.arrow.pyspark.enabled", "true")
                 .config("spark.ui.enabled", "false")

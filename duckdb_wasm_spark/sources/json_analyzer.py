@@ -276,74 +276,6 @@ def _infer_scalar(stats: Stats, samples: list, row_shape: bool) -> JType:
 class TableType:
     shape: Shape
     type: JType | None = None
-    column_boundaries: dict[str, tuple[int, int]] = dfield(default_factory=dict)
-
-
-def _column_spans(text: str) -> dict[str, tuple[int, int]] | None:
-    """Byte spans (offset, size) of each top-level `"key": [...]` array in
-    a COLUMN_OBJECT document — a tiny scanner tracking strings/escapes and
-    bracket depth (ref FindColumnBoundaries, json_analyzer.cc:700-760)."""
-    spans: dict[str, tuple[int, int]] = {}
-    i, n = 0, len(text)
-
-    def skip_ws(j):
-        while j < n and text[j] in " \t\r\n":
-            j += 1
-        return j
-
-    def read_string(j):  # at opening quote; returns (value, next)
-        assert text[j] == '"'
-        out, j = [], j + 1
-        while j < n:
-            c = text[j]
-            if c == "\\":
-                out.append(text[j : j + 2])
-                j += 2
-                continue
-            if c == '"':
-                return "".join(out), j + 1
-            out.append(c)
-            j += 1
-        raise ValueError("unterminated string")
-
-    i = skip_ws(i)
-    if i >= n or text[i] != "{":
-        return None
-    i = skip_ws(i + 1)
-    while i < n and text[i] != "}":
-        if text[i] != '"':
-            return None
-        key_raw, i = read_string(i)
-        key = json.loads(f'"{key_raw}"')
-        i = skip_ws(i)
-        if i >= n or text[i] != ":":
-            return None
-        i = skip_ws(i + 1)
-        if i >= n or text[i] != "[":
-            return None  # non-array column → UNRECOGNIZED upstream
-        start, depth, in_str = i, 0, False
-        while i < n:
-            c = text[i]
-            if in_str:
-                if c == "\\":
-                    i += 1
-                elif c == '"':
-                    in_str = False
-            elif c == '"':
-                in_str = True
-            elif c == "[":
-                depth += 1
-            elif c == "]":
-                depth -= 1
-                if depth == 0:
-                    i += 1
-                    break
-            i += 1
-        spans[key] = (start, i - start)
-        i = skip_ws(i)
-        if i < n and text[i] == ",":
-            i = skip_ws(i + 1)
-    return spans
 
 
 _TRAILING_COMMA_RE = re.compile(r",(\s*[\]}])")
@@ -406,9 +338,6 @@ def analyze_json(text: str) -> TableType:
                 (name, _infer_scalar(stats, arr[:SAMPLE_CAP], row_shape=False))
             )
         fields.sort(key=lambda kv: kv[0])
-        spans = _column_spans(text) or {}
-        return TableType(
-            Shape.COLUMN_OBJECT, JType("struct", fields=list(fields)), spans
-        )
+        return TableType(Shape.COLUMN_OBJECT, JType("struct", fields=list(fields)))
 
     return TableType(Shape.UNRECOGNIZED)

@@ -33,7 +33,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from duckdb_wasm_spark.artifacts import _fingerprint, committed_dir
 from duckdb_wasm_spark.scratch import scratch_dir
-from duckdb_wasm_spark.tables import load_table
+from duckdb_wasm_spark.tables import load_table, scoped_confs
 from duckdb_wasm_spark.writers import write_one_file
 
 # A streaming query pins spark.sql.shuffle.partitions as its state-store
@@ -57,31 +57,29 @@ def drain(
     on tmpfs, which a finite replay never reads again, so it is removed
     after. The trailing no-data micro-batch is skipped unless
     `keep_no_data_batch`: only an append-mode flush that waits on the
-    watermark alone needs it."""
+    watermark alone needs it. Both confs hold for the whole run under
+    tables.scoped_confs, so a foreachBatch callback must not open a
+    conf scope of its own."""
     spark = stream.sparkSession
     conf = {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
     if not keep_no_data_batch:
         conf["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    prev = {k: spark.conf.get(k) for k in conf}
     checkpoint = scratch_dir("dws_ckpt_", tmpfs=True)
+    writer = stream.writeStream.outputMode(mode).option(
+        "checkpointLocation", checkpoint
+    )
+    if isinstance(sink, str):
+        writer = writer.format("memory").queryName(sink)
+    else:
+        writer = sink(writer)
     try:
-        for k, v in conf.items():
-            spark.conf.set(k, v)
-        writer = stream.writeStream.outputMode(mode).option(
-            "checkpointLocation", checkpoint
-        )
-        if isinstance(sink, str):
-            writer = writer.format("memory").queryName(sink)
-        else:
-            writer = sink(writer)
-        q = writer.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        with scoped_confs(spark, conf):
+            q = writer.start()
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
     finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
         shutil.rmtree(checkpoint, ignore_errors=True)
     return spark.table(sink) if isinstance(sink, str) else None
 

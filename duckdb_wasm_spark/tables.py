@@ -14,6 +14,9 @@ files / hive partitions; nothing here materializes or collects.
 
 from __future__ import annotations
 
+import contextlib
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,6 +46,33 @@ def _ensure_session_conf(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark._dws_conf_done = True
+
+
+_SCOPED_CONF_LOCK = threading.Lock()
+
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: dict):
+    """Run a block under `confs`, then give every key back what it
+    read before: its old value, or unset if it was unset.
+
+    SQL confs are session-global: any query planned while the block
+    runs plans under them. Blocks therefore hold one lock for the whole
+    set → plan → restore window (intra-query thread pools exist in the
+    package). The lock is not reentrant: a block must not open another."""
+    with _SCOPED_CONF_LOCK:
+        before = spark.conf.getAll
+        old = {k: before.get(k) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -626,14 +626,11 @@ def test_panel_truth_reload_equals_rebuild(spark, sf_dir):
     _META sidecar's per-k truth counts must match the frame, so
     knn_graph_recall's no-job denominator is the real count."""
     from duckdb_wasm_spark.operators import dedup, similarity
-    from duckdb_wasm_spark.tables import load_table
 
     panel = similarity.panel_truth_memo(spark, sf_dir)
     served = panel["truth"]
     panel_k = max(similarity.TOP_K, dedup.KNN_K)
-    fresh = similarity._panel_brute_topk(
-        load_table(spark, sf_dir, "embeddings"), panel_k
-    )
+    fresh = similarity._panel_brute_topk(spark, sf_dir, panel_k)
     assert served.exceptAll(fresh).count() == 0
     assert fresh.exceptAll(served).count() == 0
     for k in sorted({similarity.TOP_K, dedup.KNN_K}):

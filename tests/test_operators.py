@@ -52,38 +52,22 @@ def test_entry_registry_exposes_operators():
 
 
 def test_entry_gate_priority_order():
-    """The driver walks queries() in insertion order under a bounded
-    correctness window (~50 rows/round) — the emission order IS the
-    gating policy (round-3 verdict #2). Every _GATE_PRIORITY name must
-    exist in the merged registry (a typo'd rotation entry would
-    silently lose that query its gate slot — r7 advice; queries still
-    being built go in _GATE_PRIORITY_BUILDING explicitly) and lead the
-    registry in priority order; no-oracle names ARE allowed in the
-    priority tier (the driver records a rows-only check — r6 verdict:
-    ann_brp_ml was starved of any driver row because the old loop
-    required an oracle); rows-only queries outside the priority tier
-    must come last."""
+    """The correctness gate walks queries() in insertion order under a
+    bounded window (~50 rows/round), so the emission order IS the
+    gating policy. Every _GATE_PRIORITY name must exist in the merged
+    registry (a typo'd rotation entry would silently lose that query
+    its gate slot) and the priority names must lead the registry in
+    priority order."""
     import __spark_entry__ as e
 
-    qs, osql = e.queries(), e.oracle_sql()
-    names = list(qs)
-    building = set(getattr(e, "_GATE_PRIORITY_BUILDING", ()))
-    unknown = [
-        n for n in e._GATE_PRIORITY if n not in qs and n not in building
-    ]
+    names = list(e.queries())
+    unknown = [n for n in e._GATE_PRIORITY if n not in names]
     assert not unknown, (
         f"_GATE_PRIORITY names missing from the registry (typo'd "
         f"rotation entries lose their gate slot silently): {unknown}"
     )
-    prio = [n for n in e._GATE_PRIORITY if n in qs]
+    prio = list(e._GATE_PRIORITY)
     assert names[: len(prio)] == prio, "priority names must lead queries()"
-    rows_only_tail = [
-        n for n in names if n not in osql and n not in prio
-    ]
-    if rows_only_tail:
-        assert names[-len(rows_only_tail):] == rows_only_tail, (
-            "non-priority rows-only queries must be last"
-        )
 
 
 def test_ngram_jaccard_df_cap_is_sound(spark, sf_dir):

@@ -7,7 +7,7 @@ partition the data')."""
 import pytest
 from pyspark.sql import functions as F
 
-from duckdb_wasm_spark.tables import load_table
+from duckdb_wasm_spark.tables import load_table, scoped_confs
 
 
 @pytest.fixture(scope="module")
@@ -93,7 +93,7 @@ def test_bloom_join_filters_at_runtime(spark, sf_dir, oracle):
     from duckdb_wasm_spark.plans import micro
     from duckdb_wasm_spark.testing import assert_parity
 
-    with micro.scoped_confs(spark, micro._BLOOM_CONFS):
+    with scoped_confs(spark, micro._BLOOM_CONFS):
         df = micro._bloom_join_frame(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "bloom_filter_agg" in plan, (
@@ -138,7 +138,7 @@ def test_aqe_skew_join_splits_at_runtime(spark, sf_dir, oracle):
     from duckdb_wasm_spark.plans import micro
     from duckdb_wasm_spark.testing import assert_parity
 
-    with micro.scoped_confs(spark, micro._AQE_SKEW_CONFS):
+    with scoped_confs(spark, micro._AQE_SKEW_CONFS):
         df = micro._aqe_skew_frame(spark, sf_dir)
         with_skew = df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()

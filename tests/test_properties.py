@@ -178,31 +178,6 @@ def test_parse_type_fails_closed(name):
         pass
 
 
-# ----------------------------------------------- JSON column-object spans
-@settings(max_examples=200, deadline=None)
-@given(
-    st.dictionaries(
-        st.text(alphabet="ab\\\"'", min_size=1, max_size=4),
-        st.lists(
-            st.integers(-5, 5) | st.text(max_size=4), max_size=3
-        ),
-        max_size=3,
-    )
-)
-def test_column_spans_are_in_bounds_and_start_on_arrays(obj):
-    """_column_spans scans raw bytes with its own string/escape
-    tracking — every reported (offset, size) must stay inside the text
-    and start on the column's '[' whatever hostile key characters
-    (quotes, backslashes) appear."""
-    text = json.dumps(obj)
-    spans = ja._column_spans(text)
-    if spans is None:
-        return
-    for k, (off, size) in spans.items():
-        assert 0 <= off <= len(text) and off + size <= len(text)
-        assert text[off:off + size].startswith("[")
-
-
 # ------------------------------------------------------------ http_range
 from duckdb_wasm_spark.sources.http_range import HttpRangeReader  # noqa: E402
 

@@ -97,3 +97,38 @@ def test_ordered_layout_ignores_file_mtimes(spark, sf_dir, oracle, tmp_path, mon
     spark.__dict__["_dws_stream_src_ord"].clear()
     name = "events_stream_outer_join"
     assert_parity(windows.QUERIES[name](spark, sf_dir), windows.ORACLE[name], oracle, name)
+
+
+def test_drain_and_scoped_confs_restore_confs(spark, tmp_path):
+    """drain and scoped_confs give every conf they touch back what it
+    read before: a key that was set reads its old value, and a key that
+    was unset is unset again (not pinned to its default)."""
+    from duckdb_wasm_spark.tables import scoped_confs
+
+    shuffle = "spark.sql.shuffle.partitions"
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+    def confs():
+        explicit = spark.conf.getAll
+        return {
+            k: (k in explicit, spark.conf.get(k))
+            for k in (shuffle, no_data, threshold)
+        }
+
+    spark.conf.unset(no_data)
+    spark.conf.set(threshold, "1234")
+    try:
+        before = confs()
+        assert before[shuffle][0] and not before[no_data][0]
+        src = str(tmp_path / "src")
+        spark.range(10).write.parquet(src)
+        stream = live.replay(spark, src, spark.read.parquet(src).schema)
+        assert live.drain(stream, "append", "conf_restore_sink").count() == 10
+        assert confs() == before
+        scoped = {shuffle: "7", no_data: "false", threshold: "-1"}
+        with scoped_confs(spark, scoped):
+            assert {k: spark.conf.get(k) for k in scoped} == scoped
+        assert confs() == before
+    finally:
+        spark.conf.unset(threshold)
