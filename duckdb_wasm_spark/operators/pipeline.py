@@ -31,6 +31,15 @@ from duckdb_wasm_spark.operators._text import (
     sql_toks,
     toks,
 )
+from duckdb_wasm_spark.operators.dedup import (
+    _gram_index_memo,
+    _minhash_sigs_memo,
+    _minhash_sql_parts,
+    _sql_closure,
+    _symmetric_edges,
+    connected_components,
+    minhash_pairs,
+)
 from duckdb_wasm_spark.plans._util import register_texts
 from duckdb_wasm_spark.tables import load_table
 
@@ -92,7 +101,7 @@ _SQL_SCORED = f"""
 
 
 def _scored_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DISK-PERSISTED per-document quality features (r15): doc_id,
+    """DISK-PERSISTED per-document quality features: doc_id,
     lang, source, n_tokens, quality, fp — the scored frame every
     curation composition starts from. EIGHT consumers re-ran the
     tokenizer + stopword-filter + fingerprint pass over `documents`
@@ -103,7 +112,7 @@ def _scored_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan, since tot/surv/kept branches each re-derive the scored
     subtree); a production pipeline scores quality ONCE at ingest and
     every downstream stage reads the feature columns. Shared derived
-    state under the r14 artifact line (never a single query's own
+    state, like every persisted artifact (never a single query's own
     output — every consumer still runs its own filter/aggregate/join
     logic over these per-doc features). Reload ≡ rebuild is pinned in
     tests/test_artifacts.py. Served raw: the frame is one narrow row
@@ -142,13 +151,13 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-filter then exact-dedup: keep each distinct normalized
     text's smallest surviving doc_id, with its quality score.
 
-    Single pass (round 4; was a groupBy-keepers + semi-join that
-    consumed the scored frame twice, re-running the tokenizer): the
-    fingerprint is computed map-side, the text column is dropped BEFORE
-    the shuffle so only narrow columns cross the wire, and the
+    Single pass (a groupBy-keepers + semi-join consumed the scored
+    frame twice, re-running the tokenizer): the fingerprint is
+    computed map-side, the text column is dropped BEFORE the shuffle
+    so only narrow columns cross the wire, and the
     min-doc_id keeper test is one window over the fp partition —
     measured 0.55s vs 0.70s at sf0.1 with identical results, and one
-    tokenize pass instead of two at any scale. r15: the scored+fp
+    tokenize pass instead of two at any scale. The scored+fp
     frame is served from the quality_scores ingest artifact
     (_scored_memo) — no tokenize pass at all on the query path."""
     from pyspark.sql.window import Window
@@ -185,7 +194,7 @@ def corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tolerance — a double SUM of per-doc qualities would be
     partition-order-dependent and is deliberately avoided.
 
-    r15: aggregates the quality_scores ingest artifact (_scored_memo)
+    Aggregates the quality_scores ingest artifact (_scored_memo)
     instead of re-running the tokenizer pass per call."""
     return (
         _scored_memo(spark, sf_dir)
@@ -256,8 +265,8 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the running sum goes through ranks.keyed_prefix_sum (two-
     phase distributed cumsum) rather than a lang-partitioned window —
     a handful-of-languages partition key would funnel each language's
-    whole corpus share through one task (round-10 verdict #2, the
-    extra_stats defect class)."""
+    whole corpus share through one task (the extra_stats defect
+    class)."""
     from duckdb_wasm_spark.ranks import keyed_prefix_sum
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -421,9 +430,9 @@ def sample_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin-packing — the assignment is a pure function of the running
     cumsum, deterministic, and oracle-checkable.
     Scale: identical shape to sample_token_budget — the running cumsum
-    goes through ranks.keyed_prefix_sum (two-phase distributed cumsum,
-    round-10 verdict #2) instead of a handful-of-languages partitioned
-    window; one shuffle for the (lang, seq_id) aggregate."""
+    goes through ranks.keyed_prefix_sum (two-phase distributed cumsum)
+    instead of a handful-of-languages partitioned window; one shuffle
+    for the (lang, seq_id) aggregate."""
     from duckdb_wasm_spark.ranks import keyed_prefix_sum
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -534,9 +543,9 @@ def corpus_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs, so the lang-partitioned running count's frames hold the
     DISTINCT token-count values (bounded by the document-length
     domain, corpus-independent), never the documents themselves
-    (round-10 verdict #2: the former per-row row_number put each
-    language's whole corpus share through one task). The value at
-    rank k is the smallest n_tokens whose running count reaches k —
+    (a per-row row_number would put each language's whole corpus
+    share through one task). The value at rank k is the smallest
+    n_tokens whose running count reaches k —
     identical to the rn == k pick because duplicates of the picked
     value are value-identical."""
     from pyspark.sql.window import Window
@@ -802,7 +811,7 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Jaccard = inter / (n_a + n_b - inter), one double division.
 
-    r15: the distinct vocabulary is localCheckpoint'd — THREE plan
+    The distinct vocabulary is localCheckpoint'd — THREE plan
     branches read it (sizes and both join sides) and each re-ran the
     tokenize + explode + distinct pass un-materialized."""
     docs = load_table(spark, sf_dir, "documents")
@@ -862,6 +871,45 @@ order by jaccard desc, src_a, src_b
 
 
 # ----------------------------------------------- pipeline_near_dedup_corpus
+def _survivor_labels(
+    spark: SparkSession, sf_dir: str, surviving: DataFrame
+) -> DataFrame:
+    """(doc_id, cluster_id): connected components over the MinHash
+    near-dup pairs among the `surviving` docs — the chain both near-dup
+    compositions share. Per-doc signatures and shingle arrays depend
+    only on a doc's own text, so the survivors' rows of the full-corpus
+    ingest artifacts ARE the subset's values: the sigs semi-join keeps
+    non-survivors out of the band buckets (the gram arrays need no
+    filter: candidate ids are all survivors)."""
+    sigs = _minhash_sigs_memo(spark, sf_dir).join(
+        surviving.select("doc_id"), "doc_id", "left_semi"
+    )
+    pairs = minhash_pairs(
+        sigs,
+        _gram_index_memo(spark, sf_dir)["arrays"].select("doc_id", "grams"),
+    ).select("doc_a", "doc_b")
+    return connected_components(
+        surviving.select("doc_id"), _symmetric_edges(pairs)
+    )
+
+
+# oracle twin of _survivor_labels, the CTE prefix of both compositions
+_SQL_SURVIVOR_LABELS = (
+    _sql_closure(
+        _minhash_sql_parts(source="surviving"),
+        "doc_a",
+        "doc_b",
+        "doc_id",
+        "surviving",
+        head=f"""scored as ({_SQL_SCORED}),
+surviving as (select * from scored where quality >= {QUALITY_MIN}),
+""",
+    )
+    + """,
+labels as (select a doc_id, min(b) cluster_id from reach group by a)"""
+)
+
+
 @_q("pipeline_near_dedup_corpus")
 def pipeline_near_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL near-dup curation pipeline in one gated query — the
@@ -873,59 +921,23 @@ def pipeline_near_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches, this composition removes near-duplicate CLUSTERS, the
     step that actually shrinks a crawled corpus.
 
-    Plan (r15): ZERO tokenizer passes — the scored frame is the
-    quality_scores ingest artifact, the MinHash signatures and the
-    shingle arrays are the same per-doc ingest artifacts dedup_minhash
-    serves (a doc's signature/grams depend only on its own text, so
-    the survivor subset's signatures ARE the full-corpus artifact
-    rows semi-joined to the survivor ids — the r14 "subset consumers
-    compute live" line is superseded by exactly this filter); then
-    the dedup_minhash band join on the filtered bands, the
-    pointer-jumping CC loop on the resulting edge list, and two
-    rollup aggregates. Every stage's scale story is documented on its
-    own operator; the composition adds only a broadcast-size label
-    join.
+    Plan: ZERO tokenizer passes — the scored frame is the
+    quality_scores ingest artifact, and the MinHash signatures and
+    shingle arrays are the per-doc ingest artifacts dedup_minhash
+    serves (see _survivor_labels); then the dedup_minhash band join on
+    the survivors, the pointer-jumping CC loop on the resulting edge
+    list, and two rollup aggregates. Every stage's scale story is
+    documented on its own operator; the composition adds only a
+    broadcast-size label join.
 
     Oracle: the same chain as SQL — scored/surviving CTEs feeding the
     parametrized MinHash chain (source='surviving') and the
     recursive-CTE closure, then the identical rollup. Per language:
     total docs, quality-cut count, near-dup-cut count, kept count,
     kept tokens."""
-    from duckdb_wasm_spark.operators.dedup import (
-        _gram_index_memo,
-        _minhash_sigs_memo,
-        connected_components,
-        minhash_pairs,
-    )
-
     scored = _scored_memo(spark, sf_dir)
     surviving = scored.where(F.col("quality") >= QUALITY_MIN)
-    # per-doc signatures/grams are doc-local, so the survivors' rows
-    # of the full-corpus ingest artifacts ARE the subset's values;
-    # the sigs semi-join keeps non-survivors out of the band buckets
-    # (gram arrays need no filter: candidate ids are all survivors)
-    sigs = _minhash_sigs_memo(spark, sf_dir).join(
-        surviving.select("doc_id"), "doc_id", "left_semi"
-    )
-    pairs = minhash_pairs(
-        surviving,
-        sigs=sigs,
-        gram_sets=_gram_index_memo(spark, sf_dir)["arrays"].select(
-            "doc_id", "grams"
-        ),
-    ).select("doc_a", "doc_b")
-    edges = (
-        pairs.union(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
-        )
-        .toDF("src", "dst")
-        # lazy (r15 verdict #6): materializes inside CC round 1's
-        # convergence action instead of a standalone job
-        .localCheckpoint(eager=False)
-    )
-    labels = connected_components(surviving.select("doc_id"), edges)
+    labels = _survivor_labels(spark, sf_dir, surviving)
     kept = surviving.join(
         labels.where(F.col("doc_id") == F.col("cluster_id")).select(
             "doc_id"
@@ -958,26 +970,7 @@ def pipeline_near_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _near_dedup_sql() -> str:
-    from duckdb_wasm_spark.operators.dedup import _minhash_sql_parts
-
-    ctes, pair_select = _minhash_sql_parts(source="surviving")
-    ctes = ctes.lstrip()
-    assert ctes.startswith("with ")
-    return f"""
-with recursive scored as ({_SQL_SCORED}),
-surviving as (select * from scored where quality >= {QUALITY_MIN}),
-{ctes[len("with "):]},
-pairs as ({pair_select}),
-edges as (
-  select doc_a src, doc_b dst from pairs
-  union
-  select doc_b src, doc_a dst from pairs),
-reach(a, b) as (
-  select doc_id, doc_id from surviving
-  union
-  select r.a, e.dst from reach r join edges e on r.b = e.src),
-labels as (select a doc_id, min(b) cluster_id from reach group by a),
+ORACLE["pipeline_near_dedup_corpus"] = f"""{_SQL_SURVIVOR_LABELS},
 kept as (
   select s.* from surviving s
   join labels l on s.doc_id = l.doc_id and s.doc_id = l.cluster_id),
@@ -997,9 +990,6 @@ left join surv using (lang)
 left join keptagg using (lang)
 order by lang
 """
-
-
-ORACLE["pipeline_near_dedup_corpus"] = _near_dedup_sql()
 
 
 # -------------------------------------------------- corpus_health_report
@@ -1022,7 +1012,7 @@ def corpus_health_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     index join documented on decontaminate_ngram."""
     from pyspark.sql.window import Window
 
-    # r15: scored+source+fp are quality_scores artifact columns — the
+    # scored+source+fp are quality_scores artifact columns — the
     # report's only live corpus-scale work is the decon check it embeds
     base = _scored_memo(spark, sf_dir)
     w = Window.partitionBy("fp")
@@ -1115,14 +1105,14 @@ def sample_mixture_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the weight/budget frame is |sources| rows (broadcast); the
     selection cumsum goes through ranks.keyed_prefix_sum (two-phase
-    distributed cumsum, round-10 verdict #2) — a handful-of-sources
+    distributed cumsum) — a handful-of-sources
     partitioned window would funnel each source's whole cleaned share
     through one task."""
     from pyspark.sql.window import Window
 
     from duckdb_wasm_spark.ranks import keyed_prefix_sum
 
-    # r15: scored+source+fp served from the quality_scores artifact
+    # scored+source+fp served from the quality_scores artifact
     scored = _scored_memo(spark, sf_dir).where(
         F.col("quality") >= QUALITY_MIN
     )
@@ -1347,41 +1337,10 @@ def pipeline_canonical_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH bands the pairs come from), executed as a rank-1 group limit."""
     from pyspark.sql.window import Window
 
-    from duckdb_wasm_spark.operators.dedup import (
-        _gram_index_memo,
-        _minhash_sigs_memo,
-        connected_components,
-        minhash_pairs,
-    )
-
-    # r15: scored frame + MinHash signatures + shingle arrays all
-    # served from their ingest artifacts (see pipeline_near_dedup_
-    # corpus — the identical survivor semi-join argument)
     surviving = _scored_memo(spark, sf_dir).where(
         F.col("quality") >= QUALITY_MIN
     )
-    sigs = _minhash_sigs_memo(spark, sf_dir).join(
-        surviving.select("doc_id"), "doc_id", "left_semi"
-    )
-    pairs = minhash_pairs(
-        surviving,
-        sigs=sigs,
-        gram_sets=_gram_index_memo(spark, sf_dir)["arrays"].select(
-            "doc_id", "grams"
-        ),
-    ).select("doc_a", "doc_b")
-    edges = (
-        pairs.union(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
-        )
-        .toDF("src", "dst")
-        # lazy (r15 verdict #6): materializes inside CC round 1's
-        # convergence action instead of a standalone job
-        .localCheckpoint(eager=False)
-    )
-    labels = connected_components(surviving.select("doc_id"), edges)
+    labels = _survivor_labels(spark, sf_dir, surviving)
     member = surviving.select(
         "doc_id", "lang", "n_tokens", "quality"
     ).join(labels, "doc_id")
@@ -1404,26 +1363,7 @@ def pipeline_canonical_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _canonical_best_sql() -> str:
-    from duckdb_wasm_spark.operators.dedup import _minhash_sql_parts
-
-    ctes, pair_select = _minhash_sql_parts(source="surviving")
-    ctes = ctes.lstrip()
-    assert ctes.startswith("with ")
-    return f"""
-with recursive scored as ({_SQL_SCORED}),
-surviving as (select * from scored where quality >= {QUALITY_MIN}),
-{ctes[len("with "):]},
-pairs as ({pair_select}),
-edges as (
-  select doc_a src, doc_b dst from pairs
-  union
-  select doc_b src, doc_a dst from pairs),
-reach(a, b) as (
-  select doc_id, doc_id from surviving
-  union
-  select r.a, e.dst from reach r join edges e on r.b = e.src),
-labels as (select a doc_id, min(b) cluster_id from reach group by a),
+ORACLE["pipeline_canonical_best"] = f"""{_SQL_SURVIVOR_LABELS},
 member as (
   select s.doc_id, s.lang, s.n_tokens, s.quality, l.cluster_id
   from surviving s join labels l on s.doc_id = l.doc_id),
@@ -1437,9 +1377,6 @@ select cluster_id, doc_id, lang, n_tokens, quality,
        cast(cluster_size as bigint) cluster_size
 from ranked where rk = 1
 """
-
-
-ORACLE["pipeline_canonical_best"] = _canonical_best_sql()
 
 
 register_texts(QUERIES, ORACLE)

@@ -54,7 +54,11 @@ from duckdb_wasm_spark.operators._text import (
     sql_toks,
     toks,
 )
-from duckdb_wasm_spark.operators.dedup import _pair_dot_udf, sql_dot
+from duckdb_wasm_spark.operators.dedup import (
+    _cosine,
+    _pair_dot_udf,
+    _sql_cos,
+)
 from duckdb_wasm_spark.operators.similarity import (
     _SQL_ARN,
     _SQL_CSIM,
@@ -219,16 +223,12 @@ def _semdedup_dups_build(spark: SparkSession, ranked: DataFrame) -> DataFrame:
         F.col("embedding").alias("eb"),
         F.col("nrm").alias("nb"),
     )
-    pair_dot = _pair_dot_udf()
     return (
         a.join(b, "cell")
         .where(F.col("ra") < F.col("rb"))
         .select(
             "bid",
-            (
-                pair_dot(F.col("ea"), F.col("eb"))
-                / (F.col("na") * F.col("nb"))
-            ).alias("sim"),
+            _cosine("ea", "eb", "na", "nb", _pair_dot_udf()).alias("sim"),
         )
         .groupBy("bid")
         .agg(
@@ -337,8 +337,7 @@ rk as (
 d as (
   select b.vec_id bid,
          cast(count(*) filter (
-           where {sql_dot('a.embedding', 'b.embedding')}
-                 / (a.nrm * b.nrm) >= {SEMDEDUP_TAU}) as bigint)
+           where {_sql_cos("a", "b")} >= {SEMDEDUP_TAU}) as bigint)
            n_prior_dups
   from rk a join rk b on a.cell = b.cell and a.rn < b.rn
   group by b.vec_id)

@@ -62,7 +62,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from duckdb_wasm_spark.operators.dedup import dot_fold, sql_dot
+from duckdb_wasm_spark.operators.dedup import (
+    _cosine,
+    _sql_cos,
+    dot_fold,
+    sql_dot,
+)
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
@@ -93,11 +98,6 @@ def _normed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         F.sqrt(dot_fold("embedding", "embedding")).alias("nrm"),
     )
-
-
-def _cosine(a: str, b: str, na: str, nb: str):
-    """Cosine of array columns a, b over their precomputed norms."""
-    return dot_fold(a, b) / (F.col(na) * F.col(nb))
 
 
 def _queries(frame: DataFrame, *extra) -> DataFrame:
@@ -247,7 +247,7 @@ shortlist as (
   select query_id, neighbor_id from adcranked where rank <= {r}),{full}
 rer as (
   select s.query_id, s.neighbor_id,
-         {sql_dot('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) sim
+         {_sql_cos("q", "n")} sim
   from shortlist s
   join {vecs} n on n.vec_id = s.neighbor_id
   join {vecs} q on q.vec_id = s.query_id),
@@ -401,26 +401,8 @@ def embed_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows regardless of corpus size; centroid arrays broadcast back; the
     distance pass is a narrow map; top-k is one window per label."""
     emb = load_table(spark, sf_dir, "embeddings")
-    comp = emb.select(
-        "label",
-        F.posexplode("embedding").alias("pos", "v"),
-    ).select(
-        "label",
-        "pos",
-        F.floor(F.col("v").cast("double") * _FP_SCALE).alias("sv"),
-    )
     cent = (
-        comp.groupBy("label", "pos")
-        .agg(F.sum("sv").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select(
-            "label",
-            "pos",
-            (
-                F.col("s").cast("double")
-                / F.col("n").cast("double")
-                / F.lit(float(_FP_SCALE))
-            ).alias("c"),
-        )
+        _lloyd_means(emb, keys=("label",))
         .groupBy("label")
         .agg(
             F.transform(

@@ -1,50 +1,65 @@
 #!/usr/bin/env python
-"""Dump .explain('formatted') for named registry queries (dev tool).
+"""Print one `<name> <md5>` line per registry query: the md5 of the
+query's optimized logical plan, so two checkouts that plan a query
+identically print the same line.
 
-Usage: python scripts/explain_dump.py <suffix> q1 q2 ...
-Writes plans/r16/<name>_<suffix>.txt per query (the optimization-round
-plan evidence the judge checks claims against). Uses the same session
-config as bench.py. Note: building a query's DataFrame executes any
-eager training/checkpoint actions its plan construction runs, so the
-dumped text is the plan of the RETURNED frame (the post-build query),
-exactly what bench.py's collect() executes.
+Usage: python scripts/explain_dump.py <sf_dir> [name ...]
+With no names, every registered query, sorted by name. The plan text
+is `df._jdf.queryExecution().optimizedPlan()` with expression ids
+(`#123`), the counters pyspark appends to Python-lambda variable names
+(`x_12`, one counter per process, so they depend on the queries built
+before) and the checkout's path (the artifact store lives under it)
+replaced by placeholders. Building a query runs the eager jobs its
+construction needs (artifact builds, checkpoints), so the hash is of
+the returned frame's plan, the one `collect()` executes. The session
+is bench.py's, on `$SPARK_GRAFT_CPUS` cores (default: all).
+
+Compare two checkouts:
+  diff <(cd <tree> && python scripts/explain_dump.py <sf_dir>) \\
+       <(python scripts/explain_dump.py <sf_dir>)
 """
 
+import hashlib
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 
-def main():
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-    ).rstrip("/")
+def plan_md5(df) -> str:
+    """md5 of the optimized logical plan of `df` with expression ids,
+    lambda variable counters and the checkout's path replaced by
+    placeholders."""
+    txt = df._jdf.queryExecution().optimizedPlan().toString()
+    txt = re.sub(r"\blambda (\w+?)_\d+\b", r"lambda \1", txt)
+    txt = re.sub(r"#\d+L?", "#", txt)
+    return hashlib.md5(txt.replace(_REPO, "<repo>").encode()).hexdigest()
+
+
+def main() -> int:
+    if len(sys.argv) < 2:
+        print(
+            "usage: python scripts/explain_dump.py <sf_dir> [name ...]",
+            file=sys.stderr,
+        )
+        return 2
+    sf_dir = sys.argv[1].rstrip("/")
     import __spark_entry__ as entrymod
     from bench import _build_session
 
     qs = entrymod.queries()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    names = sys.argv[2:] or sorted(qs)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = _build_session(cpus)
-    outdir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r16",
-    )
-    os.makedirs(outdir, exist_ok=True)
-    for n in names:
-        df = qs[n](spark, sf_dir)
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        path = os.path.join(outdir, f"{n}_{suffix}.txt")
-        with open(path, "w") as f:
-            f.write(txt)
-        print(f"wrote {path} ({len(txt)} chars)", flush=True)
-    spark.stop()
+    try:
+        for n in names:
+            print(n, plan_md5(qs[n](spark, sf_dir)), flush=True)
+    finally:
+        spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -164,11 +164,6 @@ def test_connected_components_long_chain(spark):
     # insufficient budget → loud failure, not partial labels
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.connected_components(nodes, edges, max_iters=2)
-    # opt-out returns the partial result for diagnostic use
-    partial = dedup.connected_components(
-        nodes, edges, max_iters=2, raise_on_nonconverged=False
-    )
-    assert partial.count() == n + 1
 
 
 def test_ngram_jaccard_capped_binding_cap_parity(spark, sf_dir, oracle):
@@ -1282,15 +1277,12 @@ def test_session_memos_are_per_session_and_consistent(spark, sf_dir):
     assert s1.exceptAll(fresh_sigs).count() == 0
     assert fresh_sigs.exceptAll(s1).count() == 0
 
-    from duckdb_wasm_spark.operators.dedup import (
-        _lsh_candidate_pairs,
-        _lsh_pairs_memo,
-    )
+    from duckdb_wasm_spark.operators.dedup import _lsh_pairs_memo, _probe_pairs
 
     p1 = _lsh_pairs_memo(spark, sf_dir)
     p2 = _lsh_pairs_memo(spark, sf_dir)
     assert p1 is p2
-    fresh_pairs = _lsh_candidate_pairs(spark, sf_dir)
+    fresh_pairs = _probe_pairs(s1, _emb_corpus_bits(spark, sf_dir))
     assert p1.exceptAll(fresh_pairs).count() == 0
     assert fresh_pairs.exceptAll(p1).count() == 0
 
@@ -1361,6 +1353,19 @@ def test_session_memos_are_per_session_and_consistent(spark, sf_dir):
     )
     assert ing1.exceptAll(fresh_ing).count() == 0
     assert fresh_ing.exceptAll(ing1).count() == 0
+
+
+def test_probe_mask_order_matches_recall_flip_count():
+    """knn_graph_recall tags each probe mask with its flip count by the
+    mask's position in _probe_masks(bits) — 0 at position 0, 1 up to
+    position `bits`, 2 after — so at every band width the masks must
+    be distinct and each mask's popcount must be that flip count."""
+    for bits in range(dedup.HP_BITS_MIN, dedup.HP_BITS_MAX + 1):
+        masks = dedup._probe_masks(bits)
+        assert len(set(masks)) == len(masks), bits
+        for pos, mask in enumerate(masks):
+            flips = 0 if pos == 0 else 1 if pos <= bits else 2
+            assert bin(mask).count("1") == flips, (bits, pos, mask)
 
 
 def test_lsh_candidate_growth_is_subquadratic(spark, sf_dir):
