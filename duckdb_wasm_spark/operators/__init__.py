@@ -7,7 +7,19 @@ Modules
   dedup       exact dedup, n-gram Jaccard near-dup, banded MinHash-LSH,
               SimHash, embedding-cosine near-dup via random-hyperplane
               LSH, connected-component clustering
-  similarity  brute-force cosine top-k (baseline) and IVF-partitioned ANN
+  similarity  embedding search: brute-force cosine top-k (the
+              baseline), IVF (seeded, multi-probe, Lloyd-trained,
+              k-means|| seeding), product quantization (ADC, rerank,
+              IVF-PQ, residual codes), MMR re-ranking, and embedding
+              audits (projection, PCA, quantization, truncation)
+  selection   data selection: SemDeDup, DSIR importance resampling,
+              perplexity bucketing, cluster silhouette
+  sketches    probabilistic sketches next to their exact answers:
+              HyperLogLog (and its merge), KMV distinct and Jaccard,
+              Count-Min heavy hitters, Bloom decontamination,
+              histogram quantiles
+  graph       iterative graph analytics over the order graph:
+              PageRank, common neighbors, degree distribution
   multimodal  binary-payload column plumbing (decode stubbed, Spark-side
               schema/batching real) via Arrow-batched mapInPandas:
               metadata, features, thumbnail resize, frame sampling
@@ -17,12 +29,17 @@ Modules
   temporal    as-of join and range join — registered queries plus the
               reusable `asof_join` / `range_join` DataFrame APIs
 
-Cross-engine determinism: every operator ships a DuckDB oracle built from the SAME primitives — md5 for hashing,
-left-fold `aggregate`/`list_reduce` for float reductions, integer bit
-ops for signatures — so results hash-match bit-for-bit (the driver's
-correctness gate). Approximate operators (LSH family) are deterministic
-too: their "randomness" is md5-derived, so the oracle reproduces the
-same approximation.
+Shared primitives live in `_text`: tokens, n-grams and the md5 →
+60-bit hash fold, each as a Spark Column (Spark SQL text where a
+caller builds `F.expr` strings) and as DuckDB SQL.
+
+Cross-engine determinism: every operator ships a DuckDB oracle built
+from the SAME primitives — md5 for hashing, left-fold
+`aggregate`/`list_reduce` for float reductions, integer bit ops for
+signatures — so results hash-match bit-for-bit (the registry's
+correctness gate). Approximate operators (the LSH family, the sketches)
+are deterministic too: their "randomness" is md5-derived, so the oracle
+reproduces the same approximation.
 
 Scale stance (100 TB): no driver-side collects; candidate generation is
 always banded/bucketed joins (inverted-index style), never all-pairs —

@@ -26,35 +26,28 @@ def sql_toks(col: str = "text") -> str:
     return SQL_TOKS.format(col=col)
 
 
-# ------------------------------------------------------------ trigrams
-def trigrams(t: Column) -> Column:
-    """Distinct 3-token shingles of a token array (Spark).
+# ------------------------------------------------------------- n-grams
+def ngrams_all(t: Column, n: int) -> Column:
+    """NON-distinct n-token shingles of a token array (Spark) —
+    occurrence counts kept, for entropy/repetition statistics.
 
-    Built by zipping three shifted slices of the token array, NOT by
+    Built by zipping n shifted slices of the token array, NOT by
     indexing ``t`` inside a per-element lambda: a lambda body referencing
     ``t`` re-evaluates the whole token expression for every element
     (Catalyst collapses projections, so even a "materialized" token
     column gets inlined back) — observed ~30× slowdown. Slices evaluate
     ``t`` a constant number of times per ROW."""
-    m = F.greatest(F.size(t) - 2, F.lit(0))
-    first = F.slice(t, 1, m)
-    second = F.slice(t, 2, m)
-    third = F.slice(t, 3, m)
-    g12 = F.zip_with(first, second, lambda x, y: F.concat(x, F.lit(" "), y))
-    grams = F.zip_with(g12, third, lambda xy, z: F.concat(xy, F.lit(" "), z))
-    return F.array_distinct(grams)
-
-
-def ngrams(t: Column, n: int) -> Column:
-    """Distinct n-token shingles for arbitrary n (Spark) — same
-    shifted-slice construction as trigrams() (constant evaluations of
-    ``t`` per row, no per-element lambda over the source expression)."""
     m = F.greatest(F.size(t) - (n - 1), F.lit(0))
     parts = [F.slice(t, i + 1, m) for i in range(n)]
     acc = parts[0]
     for p in parts[1:]:
         acc = F.zip_with(acc, p, lambda x, y: F.concat(x, F.lit(" "), y))
-    return F.array_distinct(acc)
+    return acc
+
+
+def ngrams(t: Column, n: int) -> Column:
+    """Distinct n-token shingles (Spark): ngrams_all() deduplicated."""
+    return F.array_distinct(ngrams_all(t, n))
 
 
 def sql_gram_concat(t: str, n: int) -> str:
@@ -67,38 +60,6 @@ def sql_gram_concat(t: str, n: int) -> str:
     )
 
 
-def sql_ngrams(t: str, n: int) -> str:
-    """Same distinct n-gram SET in DuckDB (order differs; consumers are
-    order-insensitive)."""
-    gram = sql_gram_concat(t, n)
-    return (
-        f"list_distinct(list_transform("
-        f"range(1, greatest(len({t}) - {n - 2}, 1)), i -> {gram}))"
-    )
-
-
-def sql_trigrams(t: str) -> str:
-    """Same shingle SET in DuckDB. list_distinct reorders relative to
-    Spark's array_distinct, which is fine: every consumer is
-    order-insensitive (integer vote sums, intersect sizes, list_min)."""
-    return (
-        f"list_distinct(list_transform(range(1, greatest(len({t})-1, 1)), "
-        f"i -> {t}[i] || ' ' || {t}[i+1] || ' ' || {t}[i+2]))"
-    )
-
-
-def ngrams_all(t: Column, n: int) -> Column:
-    """NON-distinct n-token shingles (Spark) — occurrence counts kept,
-    for entropy/repetition statistics. Same shifted-slice construction
-    as trigrams() (constant evaluations of ``t`` per row)."""
-    m = F.greatest(F.size(t) - (n - 1), F.lit(0))
-    parts = [F.slice(t, i + 1, m) for i in range(n)]
-    acc = parts[0]
-    for p in parts[1:]:
-        acc = F.zip_with(acc, p, lambda x, y: F.concat(x, F.lit(" "), y))
-    return acc
-
-
 def sql_ngrams_all(t: str, n: int) -> str:
     """Same NON-distinct n-gram list in DuckDB (range is exclusive, so
     range(1, len-(n-2)) enumerates the len-n+1 gram starts)."""
@@ -109,31 +70,29 @@ def sql_ngrams_all(t: str, n: int) -> str:
     )
 
 
-# ------------------------------------------------------------- bigrams
-def bigrams(t: Column) -> Column:
-    """NON-distinct 2-token shingles (Spark) — occurrence counts matter
-    for repetition statistics, so duplicates are kept. Same shifted-slice
-    construction as trigrams() (constant evaluations of ``t`` per row)."""
-    m = F.greatest(F.size(t) - 1, F.lit(0))
-    first = F.slice(t, 1, m)
-    second = F.slice(t, 2, m)
-    return F.zip_with(first, second, lambda x, y: F.concat(x, F.lit(" "), y))
-
-
-def sql_bigrams(t: str) -> str:
-    """Same NON-distinct bigram list in DuckDB (range upper bound is
-    exclusive, so range(1, len) enumerates the len-1 bigram starts)."""
-    return f"list_transform(range(1, greatest(len({t}), 1)), i -> {t}[i] || ' ' || {t}[i+1])"
+def sql_ngrams(t: str, n: int) -> str:
+    """Same distinct n-gram SET in DuckDB. list_distinct reorders
+    relative to Spark's array_distinct, which is fine: every consumer
+    is order-insensitive (integer vote sums, intersect sizes, list_min)."""
+    return f"list_distinct({sql_ngrams_all(t, n)})"
 
 
 # ------------------------------------------------------- hashed tokens
+# The md5 -> 60-bit integer fold: the leading 15 hex chars of md5(x)
+# read as hex. Every hash-derived register, counter, coin and sketch
+# position in both engines goes through one of these three forms.
 def tok_hash60(tok: Column) -> Column:
-    """60-bit integer hash of a token: leading 15 hex chars of md5.
-    Same value as DuckDB ('0x' || substr(md5(t),1,15))::bigint."""
+    """60-bit integer hash of a string Column (Spark)."""
     return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
 
 
+def expr_tok_hash60(tok: str) -> str:
+    """The same fold as Spark SQL text, for `F.expr` strings."""
+    return f"cast(conv(substring(md5({tok}), 1, 15), 16, 10) as bigint)"
+
+
 def sql_tok_hash60(tok: str) -> str:
+    """The same fold in DuckDB."""
     return f"('0x' || substr(md5({tok}), 1, 15))::bigint"
 
 

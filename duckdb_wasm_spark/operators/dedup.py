@@ -74,29 +74,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_wasm_spark.operators._text import (
+    ngrams,
     ngrams_all,
     sql_gram_concat,
+    sql_ngrams,
     sql_ngrams_all,
     sql_tok_hash60,
     sql_toks,
-    sql_trigrams,
     tok_hash60,
     toks,
-    trigrams,
 )
-from duckdb_wasm_spark.plans._util import register_texts
+from duckdb_wasm_spark.plans._util import register_texts, registrar
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
 
 
-def _q(name):
-    def reg(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return reg
+_q = registrar(QUERIES)
 
 
 # ----------------------------------------------------------- dedup_exact
@@ -121,7 +116,7 @@ def _gram_arrays(docs: DataFrame) -> DataFrame:
     Tokens are materialized first so the shingle builder's element_at
     references a column, not a re-evaluated split expression."""
     return docs.withColumn("_t", toks()).select(
-        "doc_id", trigrams(F.col("_t")).alias("grams")
+        "doc_id", ngrams(F.col("_t"), 3).alias("grams")
     )
 
 
@@ -265,7 +260,7 @@ def _sql_gram_sets(source: str) -> str:
     return f"""
   select distinct doc_id, g gram
   from (select doc_id,
-               unnest({sql_trigrams(sql_toks('text'))}) g
+               unnest({sql_ngrams(sql_toks('text'), 3)}) g
         from {source})"""
 
 
@@ -672,7 +667,7 @@ def _minhash_sql_parts(source: str = "documents") -> tuple[str, str]:
     text is otherwise identical)."""
     return f"""
 with docs as (
-  select doc_id, {sql_trigrams(sql_toks('text'))} grams from {source}),
+  select doc_id, {sql_ngrams(sql_toks('text'), 3)} grams from {source}),
 {_sql_sigs("(select doc_id, unnest(grams) g from docs)", "g")},
 {_sql_band_cand()},
 candg as (
@@ -1018,7 +1013,7 @@ def _simhash_sql() -> str:
     return f"""
 with docs as (
   select doc_id,
-         list_transform({sql_trigrams(sql_toks('text'))},
+         list_transform({sql_ngrams(sql_toks('text'), 3)},
                         g -> {sql_tok_hash60('g')}) hs
   from documents),
 bv as (
@@ -2905,7 +2900,7 @@ def _incremental_sql() -> str:
     band-row texts of the dedup_minhash oracle."""
     parts = [
         f"""with alldocs as (
-  select doc_id, {sql_trigrams(sql_toks('text'))} grams from documents),
+  select doc_id, {sql_ngrams(sql_toks('text'), 3)} grams from documents),
 newd as (select * from alldocs where doc_id % {INGEST_MOD} = {INGEST_MOD - 1}),
 oldd as (select * from alldocs where doc_id % {INGEST_MOD} <> {INGEST_MOD - 1}),"""
     ]

@@ -97,18 +97,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_wasm_spark.plans._util import registrar
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
 
 
-def _q(name):
-    def reg(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return reg
+_q = registrar(QUERIES)
 
 
 # ---------------------------------------------------------- graph_pagerank

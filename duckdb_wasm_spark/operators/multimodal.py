@@ -33,19 +33,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_wasm_spark.plans._util import register_texts
+from duckdb_wasm_spark.plans._util import register_texts, registrar
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
 
 
-def _q(name):
-    def reg(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return reg
+_q = registrar(QUERIES)
 
 
 # ------------------------------------------------------------- builders

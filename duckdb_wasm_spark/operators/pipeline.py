@@ -28,6 +28,7 @@ from duckdb_wasm_spark.operators._text import (
     ngrams,
     sql_ngrams,
     sql_str_list,
+    sql_tok_hash60,
     sql_toks,
     toks,
 )
@@ -40,19 +41,14 @@ from duckdb_wasm_spark.operators.dedup import (
     connected_components,
     minhash_pairs,
 )
-from duckdb_wasm_spark.plans._util import register_texts
+from duckdb_wasm_spark.plans._util import register_texts, registrar
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
 
 
-def _q(name):
-    def reg(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return reg
+_q = registrar(QUERIES)
 
 
 QUALITY_MIN = 0.73  # ~25th percentile of the synthetic corpus: a real cut
@@ -791,33 +787,24 @@ ORACLE["corpus_source_divergence"] = divergence_oracle_sql()
 OVL_N = 3  # shingle width of the compared vocabularies
 
 
-@_q("corpus_source_overlap")
-def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise EXACT vocabulary Jaccard between every source pair —
-    the cross-source contamination / overlap matrix a mixture designer
-    reads before setting corpus_mix_weights (two sources with ~1.0
-    trigram-vocab Jaccard are the same crawl twice; near-0 means
-    genuinely disjoint registers).
+def _source_vocab(docs: DataFrame, n: int) -> DataFrame:
+    """The distinct (source, gram) vocabulary of n-token shingles."""
+    return docs.select(
+        "source", F.explode(ngrams(toks(), n)).alias("gram")
+    ).distinct()
 
-    Plan: distinct (source, trigram) vocabulary — a fraction of the
-    corpus token stream — then a self-equi-join on the trigram key,
-    co-partitioned on one exchange of the (deduplicated) vocab, and a
-    |sources|^2-bounded aggregate. A shingle present in all S sources
-    emits S*(S-1)/2 pairs, so the expansion is bounded by the SOURCE
-    count squared per vocabulary entry — never doc x doc. At 100 TB
-    the vocab frame is the term dictionary (quadratic only in the ~
-    dozens of sources), the same shape as corpus_source_divergence's
-    grid but computed from the join side.
 
-    Jaccard = inter / (n_a + n_b - inter), one double division.
+def _sql_source_vocab(n: int) -> str:
+    """The same vocabulary in DuckDB: the body of a `vocab`-style CTE."""
+    grams = sql_ngrams(sql_toks("text"), n)
+    return f"select distinct source, unnest({grams}) gram\n  from documents"
 
-    The distinct vocabulary is localCheckpoint'd — THREE plan
-    branches read it (sizes and both join sides) and each re-ran the
-    tokenize + explode + distinct pass un-materialized."""
-    docs = load_table(spark, sf_dir, "documents")
-    vocab = docs.select(
-        "source", F.explode(ngrams(toks(), OVL_N)).alias("gram")
-    ).distinct().localCheckpoint()
+
+def _vocab_jaccard(vocab: DataFrame) -> DataFrame:
+    """Exact vocabulary Jaccard of every source pair src_a < src_b:
+    (src_a, src_b, n_inter, n_a, n_b, jaccard). A self-equi-join on
+    the gram, then the |sources|-row size table broadcast to both
+    sides; jaccard = inter / (n_a + n_b - inter), one double division."""
     sizes = vocab.groupBy("source").agg(F.count(F.lit(1)).alias("n_vocab"))
     a = vocab.select(F.col("source").alias("src_a"), "gram")
     b = vocab.select(F.col("source").alias("src_b"), "gram")
@@ -848,24 +835,60 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
             ).alias("jaccard"),
         )
-        .orderBy(F.col("jaccard").desc(), F.col("src_a"), F.col("src_b"))
+    )
+
+
+# The same Jaccard over a `vocab` CTE: the `sizes` and `inter` CTEs,
+# then a select of `cols` and the Jaccard as `out` over their join.
+_SQL_VOCAB_SIZES_INTER = """\
+sizes as (select source, count(*) n_vocab from vocab group by 1),
+inter as (
+  select a.source src_a, b.source src_b, count(*) n_inter
+  from vocab a join vocab b on a.gram = b.gram and a.source < b.source
+  group by 1, 2)"""
+
+
+def _sql_vocab_jaccard(cols: str, out: str) -> str:
+    return f"""select src_a, src_b, {cols}
+       cast(n_inter as double) / (sa.n_vocab + sb.n_vocab - n_inter) {out}
+from inter
+join sizes sa on sa.source = src_a
+join sizes sb on sb.source = src_b"""
+
+
+@_q("corpus_source_overlap")
+def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise EXACT vocabulary Jaccard between every source pair —
+    the cross-source contamination / overlap matrix a mixture designer
+    reads before setting corpus_mix_weights (two sources with ~1.0
+    trigram-vocab Jaccard are the same crawl twice; near-0 means
+    genuinely disjoint registers).
+
+    Plan: distinct (source, trigram) vocabulary — a fraction of the
+    corpus token stream — then a self-equi-join on the trigram key,
+    co-partitioned on one exchange of the (deduplicated) vocab, and a
+    |sources|^2-bounded aggregate. A shingle present in all S sources
+    emits S*(S-1)/2 pairs, so the expansion is bounded by the SOURCE
+    count squared per vocabulary entry — never doc x doc. At 100 TB
+    the vocab frame is the term dictionary (quadratic only in the ~
+    dozens of sources), the same shape as corpus_source_divergence's
+    grid but computed from the join side.
+
+    The distinct vocabulary is localCheckpoint'd — THREE plan
+    branches read it (sizes and both join sides) and each re-ran the
+    tokenize + explode + distinct pass un-materialized."""
+    docs = load_table(spark, sf_dir, "documents")
+    vocab = _source_vocab(docs, OVL_N).localCheckpoint()
+    return _vocab_jaccard(vocab).orderBy(
+        F.col("jaccard").desc(), F.col("src_a"), F.col("src_b")
     )
 
 
 ORACLE["corpus_source_overlap"] = f"""
 with vocab as (
-  select distinct source, unnest({sql_ngrams(sql_toks('text'), OVL_N)}) gram
-  from documents),
-sizes as (select source, count(*) n_vocab from vocab group by 1),
-inter as (
-  select a.source src_a, b.source src_b, count(*) n_inter
-  from vocab a join vocab b on a.gram = b.gram and a.source < b.source
-  group by 1, 2)
-select src_a, src_b, n_inter, sa.n_vocab n_a, sb.n_vocab n_b,
-       cast(n_inter as double) / (sa.n_vocab + sb.n_vocab - n_inter) jaccard
-from inter
-join sizes sa on sa.source = src_a
-join sizes sb on sb.source = src_b
+  {_sql_source_vocab(OVL_N)}),
+{_SQL_VOCAB_SIZES_INTER}
+{_sql_vocab_jaccard("n_inter, sa.n_vocab n_a, sb.n_vocab n_b,", "jaccard")}
 order by jaccard desc, src_a, src_b
 """
 
@@ -1305,8 +1328,8 @@ select source, doc_id, n_chars, rk from (
   select source, doc_id, n_chars,
          row_number() over (
            partition by source
-           order by cast(('0x' || substr(md5('wpri ' || cast(doc_id as
-                     varchar)), 1, 15))::bigint as double)
+           order by cast({sql_tok_hash60("'wpri ' || cast(doc_id as varchar)")}
+                         as double)
                     / cast(n_chars as double) asc,
                     doc_id asc) rk
   from documents)

@@ -49,9 +49,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_wasm_spark.operators._text import (
-    bigrams,
-    sql_bigrams,
+    ngrams_all,
+    sql_ngrams_all,
+    sql_tok_hash60,
     sql_toks,
+    tok_hash60,
     toks,
 )
 from duckdb_wasm_spark.operators.dedup import (
@@ -70,6 +72,7 @@ from duckdb_wasm_spark.operators.similarity import (
     _trained_centroids,
     _trained_centroids_memo,
 )
+from duckdb_wasm_spark.plans._util import registrar
 from duckdb_wasm_spark.ranks import global_ranks
 from duckdb_wasm_spark.tables import load_table
 
@@ -77,12 +80,7 @@ QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
 
 
-def _q(name):
-    def reg(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return reg
+_q = registrar(QUERIES)
 
 
 _SCALE = 1 << 20  # shared fixed-point unit for ln()-bearing sums
@@ -526,7 +524,7 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     feat = docs.select(
         "doc_id",
         "lang",
-        F.explode(bigrams(toks())).alias("g"),
+        F.explode(ngrams_all(toks(), 2)).alias("g"),
     ).select(
         "doc_id",
         "lang",
@@ -577,15 +575,7 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (0, 1) at both ends (max is (2^60-1)/2^60 < 1), identically in
     # the oracle text below.
     u = F.greatest(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("dsir"), F.col("doc_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        tok_hash60(F.concat(F.lit("dsir"), F.col("doc_id").cast("string")))
         .cast("double")
         / F.lit(float(1 << 60)),
         F.lit(2.0**-60),
@@ -609,7 +599,7 @@ ORACLE["sample_dsir"] = f"""
 with feat as (
   select doc_id, lang,
          ('0x' || substr(md5(g), 1, 8))::bigint % {DSIR_B} f
-  from (select doc_id, lang, unnest({sql_bigrams(sql_toks('text'))}) g
+  from (select doc_id, lang, unnest({sql_ngrams_all(sql_toks('text'), 2)}) g
         from documents)),
 raw as (select f, count(*) cr from feat group by f),
 tgt as (select f, count(*) ct from feat where lang = 'en' group by f),
@@ -632,8 +622,8 @@ w_doc as (
 scored as (
   select w.doc_id, d.lang, w.w_fp,
          w.w_fp + cast(floor(-ln(-ln(greatest(
-             cast(('0x' || substr(md5('dsir' || cast(d.doc_id as varchar)),
-                                  1, 15))::bigint as double)
+             cast({sql_tok_hash60("'dsir' || cast(d.doc_id as varchar)")}
+                  as double)
              / {float(1 << 60)}, {2.0**-60}))) * {float(_SCALE)}) as bigint)
            score_fp
   from w_doc w join documents d on w.doc_id = d.doc_id)

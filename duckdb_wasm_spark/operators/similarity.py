@@ -62,12 +62,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from duckdb_wasm_spark.operators._text import sql_tok_hash60, tok_hash60
 from duckdb_wasm_spark.operators.dedup import (
     _cosine,
     _sql_cos,
     dot_fold,
     sql_dot,
 )
+from duckdb_wasm_spark.plans._util import registrar
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
@@ -78,12 +80,7 @@ TOP_K = 5
 N_CENTROIDS = 8  # IVF coarse cells: centroids = vec_id < 8
 
 
-def _q(name):
-    def reg(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return reg
+_q = registrar(QUERIES)
 
 
 # ------------------------------------------------- the shared steps
@@ -1286,8 +1283,6 @@ def embed_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast equi-join on the input dim → ONE (vec_id, out_dim)
     map-side-combining hash aggregate. Output is N×k narrow rows —
     never a wide shuffle of the original vectors."""
-    from duckdb_wasm_spark.operators._text import tok_hash60
-
     emb = load_table(spark, sf_dir, "embeddings")
     comp = emb.select(
         "vec_id", F.posexplode("embedding").alias("pos", "v")
@@ -1334,6 +1329,9 @@ def embed_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# sign(j, i)'s hash key, 'rp:j:i', over the flat index i = 64 j + i
+_SQL_RP_KEY = "'rp:' || cast(i // 64 as varchar) || ':' || cast(i % 64 as varchar)"
+
 ORACLE["embed_random_projection"] = f"""
 with comp as (
   select vec_id, pos - 1 pos,
@@ -1343,9 +1341,7 @@ with comp as (
         from embeddings)),
 signs as (
   select cast(i % 64 as int) pos, cast(i // 64 as int) out_dim,
-         case when ('0x' || substr(md5('rp:' || cast(i // 64 as varchar)
-                    || ':' || cast(i % 64 as varchar)), 1, 15))::bigint
-                   % 2 = 0
+         case when {sql_tok_hash60(_SQL_RP_KEY)} % 2 = 0
               then 1 else -1 end sign
   from (select unnest(range(0, {RP_OUT_DIMS * 64})) i))
 select vec_id, out_dim,
@@ -2549,31 +2545,13 @@ _KPP_SCALE = 1 << 20  # fixed-point unit for the cost-sum phi
 def _kpp_u(t: int):
     """Exact md5-fraction in (0,1) for round t's selection coin —
     power-of-two denominator, identical in both engines."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"kpp{t}-"), F.col("vec_id").cast("string")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .cast("double")
-        / F.lit(float(1 << 60))
-    )
+    key = F.concat(F.lit(f"kpp{t}-"), F.col("vec_id").cast("string"))
+    return tok_hash60(key).cast("double") / F.lit(float(1 << 60))
 
 
 def _sql_kpp_u(t: int) -> str:
-    return (
-        f"cast(('0x' || substr(md5('kpp{t}-' || cast(vec_id as varchar)),"
-        f" 1, 15))::bigint as double) / {float(1 << 60)}"
-    )
+    key = f"'kpp{t}-' || cast(vec_id as varchar)"
+    return f"cast({sql_tok_hash60(key)} as double) / {float(1 << 60)}"
 
 
 def _with_xx(spark: SparkSession, sf_dir: str) -> DataFrame:

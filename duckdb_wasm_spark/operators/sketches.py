@@ -1,16 +1,32 @@
 """Probabilistic-sketch operators — the compressed summaries a 100 TB
-curation pipeline runs where exact state would not fit:
+curation pipeline runs where exact state would not fit. Each reports
+its estimate NEXT TO the exact answer, so the gate checks the estimator
+itself:
 
   sketch_hll_distinct        HyperLogLog distinct-shingle estimate per
-                             source, reported NEXT TO the exact count so
-                             the gate checks the estimator itself
-  sketch_cms_heavy_hitters   Count-Min sketch point estimates for the
-                             true top-20 shingles (overestimate-only
-                             guarantee, pytest-pinned)
-  sketch_bloom_decontaminate Bloom-filter membership pre-filter for
-                             benchmark decontamination, reported next to
-                             exact membership (no false negatives,
+                             source
+  sketch_hll_merge           per-source HLL registers max-merged into
+                             one sketch, against a direct global build
+  sketch_kmv_distinct        KMV (bottom-k) distinct-shingle estimate
+                             per source
+  sketch_kmv_jaccard         source-pair vocabulary Jaccard estimated
+                             from the KMV sketches
+  sketch_cms_heavy_hitters   Count-Min point estimates for the true
+                             top-20 shingles (overestimate-only,
                              pytest-pinned)
+  sketch_bloom_decontaminate Bloom-filter membership pre-filter for
+                             benchmark decontamination (no false
+                             negatives, pytest-pinned)
+  sketch_hist_quantiles      mergeable fixed-width histogram quantiles
+
+Shared steps, each one Spark helper and one DuckDB helper:
+_hll_register_rho / _sql_hll_register_rho (register and rho of a
+hash), _hll_estimate / _sql_hll_estimate (the register fold's estimate
+and its linear-counting correction), _kmv_bottom / _sql_kmv_bottom (the
+per-source bottom-k), _salted_pos / _sql_salted_pos (the CMS counter
+and Bloom bit positions). The distinct (source, shingle) vocabulary
+and the exact source-pair Jaccard come from pipeline.py, beside
+corpus_source_overlap.
 
 Every sketch here is md5-derived and therefore REPRODUCIBLE in the
 DuckDB oracle: the "randomness" of register assignment, row hashing and
@@ -29,11 +45,10 @@ Scale notes (100 TB):
   - CMS state is d×w = 4×256 counters total, map-side combined; point
     queries touch d rows per key. Heavy-hitter extraction joins the
     top-k frame (bounded) against the tiny sketch — never the corpus.
-  - The Bloom bitset is ≤ m = 65536 set-bit rows built from the EVAL
-    side (tiny by design), broadcast to the train scan exactly like
-    decontaminate_ngram's inverted index; the probe is an equi-join on
-    bit position. The win at scale: the broadcast is capped at m bits
-    no matter how large the eval suite grows.
+  - The Bloom bitset is ≤ m = 65536 bits built from the EVAL side
+    (tiny by design) and broadcast to the train scan as one bitmask
+    row. The win at scale: the broadcast is capped at m bits no matter
+    how large the eval suite grows.
 
 Float determinism: the only floating-point output is the HLL estimate;
 its register fold is summed as EXACT bigints (2^(53-M_j) is an integer
@@ -43,29 +58,36 @@ sequence is identical in both engines (see _hll docstrings).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from duckdb_wasm_spark.operators._text import (
+    expr_tok_hash60,
     ngrams,
     ngrams_all,
     sql_ngrams,
     sql_ngrams_all,
+    sql_tok_hash60,
     sql_toks,
+    tok_hash60,
     toks,
 )
+from duckdb_wasm_spark.operators.pipeline import (
+    _SQL_VOCAB_SIZES_INTER,
+    _source_vocab,
+    _sql_source_vocab,
+    _sql_vocab_jaccard,
+    _vocab_jaccard,
+)
+from duckdb_wasm_spark.plans._util import registrar
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
 
 
-def _q(name):
-    def reg(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return reg
+_q = registrar(QUERIES)
 
 
 # ------------------------------------------------------ sketch_hll_distinct
@@ -75,6 +97,71 @@ HLL_M = 1 << HLL_P
 # embedded as the same literal in both engines' texts
 HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)
 HLL_N = 3  # shingle width the estimator counts
+
+
+def _hll_register_rho() -> list[Column]:
+    """(register, rho) of the 60-bit hash column `h`: register = h % m;
+    the remaining 52 bits v = h div m give rho = 53 - bitlen(v), 53 for
+    v = 0. bitlen via length(bin(v)) is integer-exact."""
+    return [
+        (F.col("h") % HLL_M).alias("register"),
+        F.expr(
+            f"if(h div {HLL_M} = 0, 53, "
+            f"53 - length(bin(h div {HLL_M})))"
+        ).alias("rho"),
+    ]
+
+
+def _sql_hll_register_rho(h: str) -> tuple[str, str]:
+    """The same (register, rho) expressions in DuckDB over hash `h`
+    (bitlen via length(to_base(v, 2)))."""
+    return (
+        f"{h} % {HLL_M}",
+        f"case when {h} // {HLL_M} = 0 then 53\n"
+        f"                  else 53 - length(to_base({h} // {HLL_M}, 2)) end",
+    )
+
+
+def _hll_estimate(
+    s: DataFrame, out: str, key: tuple = (), extra: tuple = ()
+) -> DataFrame:
+    """The estimate `out` from the register fold: E = alpha m^2 /
+    (s_int / 2^53) over the exact bigint fold `s_int`, then the
+    small-range linear-counting correction m ln(m / V) where E <= 2.5m
+    and V = `v_zero` empty registers > 0. `key` columns go before it
+    and `extra` columns after it."""
+    return s.select(
+        *key,
+        F.expr(
+            # alpha is cast to double BEFORE multiplying: a bare
+            # decimal literal times 65536 overflows DuckDB's DECIMAL
+            # parse and would make the two engines' op sequences differ
+            f"cast({HLL_ALPHA!r} as double) * {HLL_M * HLL_M} "
+            f"/ (cast(s_int as double) / cast(pow(2, 53) as bigint))"
+        ).alias("e_raw"),
+        "v_zero",
+        *extra,
+    ).select(
+        *key,
+        F.expr(
+            f"if(e_raw <= {2.5 * HLL_M!r} and v_zero > 0, "
+            f"{HLL_M} * ln({HLL_M} / cast(v_zero as double)), e_raw)"
+        ).alias(out),
+        *extra,
+    )
+
+
+def _sql_hll_estimate(out: str) -> tuple[str, str]:
+    """The same two steps in DuckDB: the `e_raw` select item over
+    s_int, and the corrected estimate `out` over e_raw and v_zero."""
+    return (
+        f"cast({HLL_ALPHA!r} as double) * {HLL_M * HLL_M}\n"
+        f"           / (cast(s_int as double) / cast(2 ** 53 as double))"
+        " e_raw",
+        f"case when e_raw <= {2.5 * HLL_M!r} and v_zero > 0\n"
+        f"              then {HLL_M} * ln({HLL_M} / cast(v_zero as double))\n"
+        f"              else e_raw end {out}",
+    )
 
 
 @_q("sketch_hll_distinct")
@@ -106,15 +193,10 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is |sources| x 256 registers, corpus-size-free."""
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select(
-        "source", F.explode(ngrams(toks(), HLL_N)).alias("gram")
-    )
-    # r16 (guide §1.2/§2.4): ONE linear pipeline computes the sketch
-    # AND the exact count. The old plan derived the gram stream twice
-    # — the register branch hashed every OCCURRENCE and the exact
-    # branch ran a separate two-phase countDistinct — and joined the
-    # branches back at the end (Catalyst does not dedupe the common
-    # subtree, so documents was scanned and tokenized twice per run).
+    # ONE linear pipeline computes the sketch AND the exact count: a
+    # register branch hashing every OCCURRENCE beside a separate
+    # countDistinct branch, joined back at the end, scans and tokenizes
+    # documents twice (Catalyst does not dedupe the common subtree).
     # Register assignment is a pure function of the gram, so max(rho)
     # over occurrences equals max(rho) over DISTINCT (source, gram)
     # rows; and because the register partitions the distinct gram set,
@@ -122,38 +204,27 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # countDistinct branch collapses into one extra aggregate column
     # riding the register rollup. One corpus pass, md5 evaluated once
     # per distinct gram instead of once per occurrence, no join-back.
-    sg = grams.distinct()
-    hashed = sg.select(
-        "source",
-        F.expr(
-            "conv(substring(md5(gram), 1, 15), 16, 10)"
-        ).cast("long").alias("h"),
+    hashed = _source_vocab(docs, HLL_N).select(
+        "source", tok_hash60(F.col("gram")).alias("h")
     )
     regs = (
-        hashed.select(
-            "source",
-            (F.col("h") % HLL_M).alias("register"),
-            F.expr(
-                f"if(h div {HLL_M} = 0, 53, "
-                f"53 - length(bin(h div {HLL_M})))"
-            ).alias("rho"),
-        )
+        hashed.select("source", *_hll_register_rho())
         .groupBy("source", "register")
         .agg(
             F.max("rho").alias("m_j"),
             F.count(F.lit(1)).alias("n_distinct_reg"),
         )
     )
-    # Zero-fill WITHOUT the register grid (r16): the old plan exploded
-    # a sources×256 grid and left-joined the registers back — and the
-    # grid's source list derived from regs, duplicating the whole
-    # tokenize+hash subtree (a second documents scan, since Catalyst
-    # does not dedupe common subtrees). A PRESENT register always has
-    # m_j >= 1 (rho = 53 - bitlen(v) >= 1 for v < 2^52), so the absent
-    # registers are exactly the m_j = 0 ones and contribute a closed
-    # form: v_zero = 256 - n_present and s_int gains
-    # (256 - n_present) * 2^53 — exact bigint arithmetic, identical
-    # fold value, one aggregate instead of explode+join.
+    # Zero-fill WITHOUT the register grid: exploding a sources×256 grid
+    # and left-joining the registers back derives the grid's source
+    # list from regs, duplicating the whole tokenize+hash subtree (a
+    # second documents scan, since Catalyst does not dedupe common
+    # subtrees). A PRESENT register always has m_j >= 1 (rho = 53 -
+    # bitlen(v) >= 1 for v < 2^52), so the absent registers are exactly
+    # the m_j = 0 ones and contribute a closed form: v_zero = 256 -
+    # n_present and s_int gains (256 - n_present) * 2^53 — exact bigint
+    # arithmetic, identical fold value, one aggregate instead of
+    # explode+join.
     per_source = regs.groupBy("source").agg(
         F.expr(
             "sum(cast(pow(2, 53 - m_j) as bigint)) "
@@ -164,25 +235,7 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         # count(distinct gram) per source — no second corpus pass
         F.sum("n_distinct_reg").alias("n_exact"),
     )
-    est = per_source.select(
-        "source",
-        F.expr(
-            # alpha is cast to double BEFORE multiplying: a bare
-            # decimal literal times 65536 overflows DuckDB's DECIMAL
-            # parse and would make the two engines' op sequences differ
-            f"cast({HLL_ALPHA!r} as double) * {HLL_M * HLL_M} "
-            f"/ (cast(s_int as double) / cast(pow(2, 53) as bigint))"
-        ).alias("e_raw"),
-        "v_zero",
-        "n_exact",
-    ).select(
-        "source",
-        F.expr(
-            f"if(e_raw <= {2.5 * HLL_M!r} and v_zero > 0, "
-            f"{HLL_M} * ln({HLL_M} / cast(v_zero as double)), e_raw)"
-        ).alias("n_hll"),
-        "n_exact",
-    )
+    est = _hll_estimate(per_source, "n_hll", ("source",), ("n_exact",))
     return est.select(
         "source",
         "n_hll",
@@ -193,17 +246,19 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SQL_HLL_REG, _SQL_HLL_RHO = _sql_hll_register_rho("h")
+_SQL_HLL_E_RAW, _SQL_HLL_N_HLL = _sql_hll_estimate("n_hll")
+
 ORACLE["sketch_hll_distinct"] = f"""
 with grams as (
   select source, unnest({sql_ngrams(sql_toks('text'), HLL_N)}) gram
   from documents),
 hashed as (
-  select source, ('0x' || substr(md5(gram), 1, 15))::bigint h
+  select source, {sql_tok_hash60('gram')} h
   from grams),
 regs as (
-  select source, h % {HLL_M} register,
-         max(case when h // {HLL_M} = 0 then 53
-                  else 53 - length(to_base(h // {HLL_M}, 2)) end) m_j
+  select source, {_SQL_HLL_REG} register,
+         max({_SQL_HLL_RHO}) m_j
   from hashed group by 1, 2),
 grid as (
   select source, r.register
@@ -219,15 +274,12 @@ per_source as (
   from filled group by 1),
 est as (
   select source,
-         cast({HLL_ALPHA!r} as double) * {HLL_M * HLL_M}
-           / (cast(s_int as double) / cast(2 ** 53 as double)) e_raw,
+         {_SQL_HLL_E_RAW},
          v_zero
   from per_source),
 corrected as (
   select source,
-         case when e_raw <= {2.5 * HLL_M!r} and v_zero > 0
-              then {HLL_M} * ln({HLL_M} / cast(v_zero as double))
-              else e_raw end n_hll
+         {_SQL_HLL_N_HLL}
   from est),
 exact as (
   select source, count(distinct gram) n_exact from grams group by 1)
@@ -243,17 +295,17 @@ CMS_W = 256  # counters per row
 CMS_TOPK = 20
 
 
-def _cms_col_expr(i: int, gram: str) -> str:
-    """Row-i counter index for a shingle — Spark SQL text."""
-    return (
-        f"cast(conv(substring(md5(concat('cms{i} ', {gram})), 1, 15), "
-        f"16, 10) as bigint) % {CMS_W}"
-    )
+def _salted_pos(salt: str, gram: str, m: int) -> str:
+    """Counter position of `gram` under hash function `salt`: the fold
+    of md5(salt || ' ' || gram), mod m — Spark SQL text."""
+    key = f"concat('{salt} ', {gram})"
+    return f"{expr_tok_hash60(key)} % {m}"
 
 
-def _sql_cms_col(i: int, gram: str) -> str:
-    """Same index in DuckDB."""
-    return f"('0x' || substr(md5('cms{i} ' || {gram}), 1, 15))::bigint % {CMS_W}"
+def _sql_salted_pos(salt: str, gram: str, m: int) -> str:
+    """Same position in DuckDB."""
+    key = f"'{salt} ' || {gram}"
+    return f"{sql_tok_hash60(key)} % {m}"
 
 
 @_q("sketch_cms_heavy_hitters")
@@ -273,18 +325,16 @@ def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     g = docs.select("doc_id", F.explode(ngrams_all(toks(), 3)).alias("gram"))
     cells = " , ".join(
-        f"struct({i} as i, {_cms_col_expr(i, 'gram')} as col)"
+        f"struct({i} as i, {_salted_pos(f'cms{i}', 'gram', CMS_W)} as col)"
         for i in range(CMS_D)
     )
-    # r16 (guide §1.2): ONE per-gram count frame feeds both the sketch
-    # build and the exact top-k — the old plan derived the gram stream
-    # twice (Catalyst does not dedupe common subtrees): once exploding
-    # d=4 cell updates per OCCURRENCE into the cell rollup, once for
-    # the exact counts. Cell updates for one gram all hit the same d
-    # cells, so cnt(i, col) = sum of per-gram totals over grams
-    # hashing there — the d-way explode and the md5 cell hashes now
-    # run once per DISTINCT gram over the small checkpointed count
-    # frame, and the corpus is tokenized once.
+    # ONE per-gram count frame feeds both the sketch build and the
+    # exact top-k, so the corpus is tokenized once (Catalyst does not
+    # dedupe common subtrees, and a second derivation of the gram
+    # stream re-reads it). Cell updates for one gram all hit the same
+    # d cells, so cnt(i, col) = sum of per-gram totals over grams
+    # hashing there — the d-way explode and the md5 cell hashes run
+    # once per DISTINCT gram over the small checkpointed count frame.
     gc = (
         g.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("n_exact"))
@@ -319,11 +369,10 @@ def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_cms_cells(gram: str) -> str:
-    return ", ".join(
-        f"{{'i': {i}, 'col': {_sql_cms_col(i, gram)}}}" for i in range(CMS_D)
-    )
-
+_SQL_CMS_CELLS = ", ".join(
+    f"{{'i': {i}, 'col': {_sql_salted_pos(f'cms{i}', 'gram', CMS_W)}}}"
+    for i in range(CMS_D)
+)
 
 ORACLE["sketch_cms_heavy_hitters"] = f"""
 with g as (
@@ -331,14 +380,14 @@ with g as (
   from documents),
 upd as (
   select u.c.i i, u.c.col col
-  from g, unnest([{_sql_cms_cells('gram')}]) u(c)),
+  from g, unnest([{_SQL_CMS_CELLS}]) u(c)),
 cms as (select i, col, count(*) cnt from upd group by 1, 2),
 top as (
   select gram, count(*) n_exact from g group by 1
   order by n_exact desc, gram limit {CMS_TOPK}),
 probes as (
   select gram, n_exact, u.c.i i, u.c.col col
-  from top, unnest([{_sql_cms_cells('gram')}]) u(c))
+  from top, unnest([{_SQL_CMS_CELLS}]) u(c))
 select gram, any_value(n_exact) n_exact, min(cnt) cms_n,
        min(cnt) - any_value(n_exact) overestimate
 from probes join cms using (i, col)
@@ -351,20 +400,6 @@ BLOOM_K = 7  # hash functions
 BLOOM_M = 65536  # bits
 BLOOM_N = 5  # shingle width (decontaminate_ngram's DECON_N)
 BLOOM_EVAL_MOD = 20  # held-out split (decontaminate_ngram's)
-
-
-def _bloom_pos_expr(j: int, gram: str) -> str:
-    return (
-        f"cast(conv(substring(md5(concat('bloom{j} ', {gram})), 1, 15), "
-        f"16, 10) as bigint) % {BLOOM_M}"
-    )
-
-
-def _sql_bloom_pos(j: int, gram: str) -> str:
-    return (
-        f"('0x' || substr(md5('bloom{j} ' || {gram}), 1, 15))::bigint "
-        f"% {BLOOM_M}"
-    )
 
 
 @_q("sketch_bloom_decontaminate")
@@ -383,40 +418,38 @@ def sketch_bloom_decontaminate(
     eval suite grows — where decontaminate_ngram's broadcast inverted
     index grows with the eval set, the Bloom broadcast is capped.
 
-    r16 restructure (guide §2.3/§2.4 — shuffle fewer bytes, remove
-    shuffles; replaces the r15 localCheckpoint, whose write cost more
-    than the recompute it saved, −15% in the driver's run): the probe
-    is now an actual m-bit BITSET membership test instead of an
-    equi-join on exploded hash positions. Before: the train gram
-    stream was exploded 7× (one row per hash position), hash-joined
-    against the ≤65536-row set-bit frame, and the hits — ~7× the gram
-    stream at this filter's ~75% bit density — were shuffled into a
-    (train_id, gram) aggregate, with two more corpus-wide branches
-    (exact semi-join, per-doc counts) re-reading the gram stream.
-    After: ONE map-side-aggregated exchange builds the per-(doc,
-    gram) occurrence counts — and, as the only exchange the train
-    stream crosses before the final per-doc rollup, redistributes the
-    single-row-group scan across the cluster so the md5 probe work
-    parallelizes; the eval side collapses to a single-row dense
-    1024×long bitmask broadcast on a constant key; each distinct gram
-    probes its 7 positions with O(1) array-element bit tests in a
-    projection (no explode, no join, no per-gram shuffle); and ONE
-    final per-doc aggregate computes n_grams / n_bloom_hits /
-    n_exact_hits together (the eval-membership flag rides a broadcast
-    left join of the distinct eval grams). A probe-in-the-scan-stage
-    variant without the per-gram aggregate was measured SLOWER (3.2s
-    vs 2.7s min-warm): the raw layout's one-row-group scan runs the
+    Plan: the probe is an m-bit BITSET membership test, not an
+    equi-join on exploded hash positions, to shuffle fewer bytes and
+    run fewer shuffles. The join form explodes the train gram stream
+    7× (one row per hash position), hash-joins it against the
+    ≤65536-row set-bit frame and shuffles the hits — ~7× the gram
+    stream at this filter's ~75% bit density — into a (train_id,
+    gram) aggregate, with two more corpus-wide branches (exact
+    semi-join, per-doc counts) re-reading the gram stream. Here ONE
+    map-side-aggregated exchange builds the per-(doc, gram) occurrence
+    counts — and, as the only exchange the train stream crosses before
+    the final per-doc rollup, redistributes the single-row-group scan
+    across the cluster so the md5 probe work parallelizes; the eval
+    side collapses to a single-row dense 1024×long bitmask broadcast
+    on a constant key; each distinct gram probes its 7 positions with
+    O(1) array-element bit tests in a projection (no explode, no join,
+    no per-gram shuffle); and ONE final per-doc aggregate computes
+    n_grams / n_bloom_hits / n_exact_hits together (the eval-membership
+    flag rides a broadcast left join of the distinct eval grams).
+    Checkpointing the gram counts instead cost more in the write than
+    the recompute it saved, and a probe-in-the-scan-stage variant
+    without the per-gram aggregate was measured SLOWER (3.2s vs 2.7s
+    min-warm): the raw layout's one-row-group scan runs the
     14-md5s-per-gram projection single-threaded.
 
-    Exactness: the old probe's per-(train_id, gram) hit count over o
+    Exactness: the join form's per-(train_id, gram) hit count over o
     occurrences × 7 positions equals o·h (h = positions whose bit is
-    set, duplicates among the 7 count, as the join counted them), so
+    set, duplicates among the 7 count, as the join counts them), so
     `count == k` ≡ `o·h == k` — the bitmask form tests exactly that
     (ngrams() emits distinct shingles per doc, so o = 1 throughout,
     but the o-form stays independent of that internal). The eval bit
     positions derived from distinct eval grams are the same set as
-    from all eval rows. Oracle text unchanged; hash-green at all
-    three SFs."""
+    from all eval rows."""
     docs = load_table(spark, sf_dir, "documents")
     shingled = docs.select(
         "doc_id", F.explode(ngrams(toks(), BLOOM_N)).alias("gram")
@@ -433,10 +466,14 @@ def sketch_bloom_decontaminate(
         .distinct()
         .localCheckpoint()
     )
-    poss = ", ".join(_bloom_pos_expr(j, "gram") for j in range(BLOOM_K))
+    poss = [
+        _salted_pos(f"bloom{j}", "gram", BLOOM_M) for j in range(BLOOM_K)
+    ]
     n_words = BLOOM_M // 64
     mask = (
-        ev_grams.select(F.expr(f"explode(array({poss}))").alias("pos"))
+        ev_grams.select(
+            F.expr(f"explode(array({', '.join(poss)}))").alias("pos")
+        )
         .distinct()
         .groupBy(F.expr("pos div 64").alias("word"))
         .agg(
@@ -457,13 +494,12 @@ def sketch_bloom_decontaminate(
         )
     )
     # h = how many of the gram's k hash positions have their bit set
-    # (array duplicates among the k positions count, as the exploded
-    # join counted them)
+    # (array duplicates among the k positions count, as an exploded
+    # join would count them)
     h = " + ".join(
-        f"(shiftright(element_at(mask, "
-        f"cast(({_bloom_pos_expr(j, 'gram')}) div 64 as int) + 1), "
-        f"cast(({_bloom_pos_expr(j, 'gram')}) % 64 as int)) & 1)"
-        for j in range(BLOOM_K)
+        f"(shiftright(element_at(mask, cast(({pos}) div 64 as int) + 1), "
+        f"cast(({pos}) % 64 as int)) & 1)"
+        for pos in poss
     )
     return (
         gcounts.where(F.col("doc_id") % BLOOM_EVAL_MOD != 0)
@@ -498,6 +534,10 @@ def sketch_bloom_decontaminate(
     )
 
 
+_SQL_BLOOM_POSS = ", ".join(
+    _sql_salted_pos(f"bloom{j}", "gram", BLOOM_M) for j in range(BLOOM_K)
+)
+
 ORACLE["sketch_bloom_decontaminate"] = f"""
 with shingled as (
   select doc_id, unnest({sql_ngrams(sql_toks('text'), BLOOM_N)}) gram
@@ -507,10 +547,10 @@ train as (select doc_id train_id, gram from shingled
           where doc_id % {BLOOM_EVAL_MOD} != 0),
 bits as (
   select distinct u.p pos
-  from ev, unnest([{", ".join(_sql_bloom_pos(j, "gram") for j in range(BLOOM_K))}]) u(p)),
+  from ev, unnest([{_SQL_BLOOM_POSS}]) u(p)),
 probe as (
   select train_id, gram, u.p pos
-  from train, unnest([{", ".join(_sql_bloom_pos(j, "gram") for j in range(BLOOM_K))}]) u(p)),
+  from train, unnest([{_SQL_BLOOM_POSS}]) u(p)),
 bloom_hits as (
   select train_id, count(*) n_bloom_hits from (
     select train_id, gram
@@ -541,6 +581,34 @@ KMV_N = 3  # shingle width
 KMV_DENOM = 1 << 60
 
 
+def _kmv_bottom(vocab: DataFrame) -> DataFrame:
+    """(source, gram, h, rn): each source's KMV_K smallest shingle
+    hashes of the distinct `vocab`, ties ordered on (h, gram) so the
+    k-th element is total-order deterministic even under 60-bit
+    collisions. Spark >= 3.5 runs the rank filter as WindowGroupLimit
+    (map-side partial top-k per partition BEFORE the shuffle)."""
+    hashed = vocab.select(
+        "source", "gram", tok_hash60(F.col("gram")).alias("h")
+    )
+    w = Window.partitionBy("source").orderBy("h", "gram")
+    return hashed.withColumn("rn", F.row_number().over(w)).where(
+        F.col("rn") <= KMV_K
+    )
+
+
+def _sql_kmv_bottom(vocab: str, cols: str) -> str:
+    """The same bottom-k in DuckDB: the `hashed` CTE over the `vocab`
+    CTE, then the `bottom` CTE selecting `cols` and rn."""
+    return f"""hashed as (
+  select source, gram, {sql_tok_hash60('gram')} h
+  from {vocab}),
+bottom as (
+  select {cols},
+         row_number() over (partition by source order by h, gram) rn
+  from hashed
+  qualify rn <= {KMV_K})"""
+
+
 @_q("sketch_kmv_distinct")
 def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (bottom-k / k-minimum-values) distinct-trigram estimate per
@@ -552,44 +620,24 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (0,1), the k-th smallest u over the distinct shingle set gives
     E = (k-1) / u_k (Bar-Yossef et al. 2002); sources with fewer than
     k distinct shingles fall back to the exact count (the sketch IS
-    the full set there). Ordering ties on (h, gram) so the k-th
-    element is total-order deterministic even under 60-bit collisions.
+    the full set there).
 
     Determinism: u_k = h_k / 2^60 is one IEEE division with a
     power-of-two denominator (exact operand), then E is one more
     division — the identical two-op sequence in both engines.
 
-    Scale: the per-source bottom-k is a rank-filtered window; Spark
-    >= 3.5 executes it as WindowGroupLimit (map-side partial top-k
-    per partition BEFORE the shuffle), so state per source is k rows
-    at every stage — the mergeable-sketch property executed by the
-    engine itself. Merging sketches across splits = keeping the k
+    Scale: the per-source bottom-k (_kmv_bottom) keeps k rows per
+    source at every stage — the mergeable-sketch property executed by
+    the engine itself. Merging sketches across splits = keeping the k
     smallest of the union, which is exactly what the group-limit
     does."""
-    from pyspark.sql.window import Window
-
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select(
-        "source", F.explode(ngrams(toks(), KMV_N)).alias("gram")
-    ).distinct()
-    hashed = grams.select(
-        "source",
-        "gram",
-        F.expr("conv(substring(md5(gram), 1, 15), 16, 10)")
-        .cast("long")
-        .alias("h"),
-    )
-    w = Window.partitionBy("source").orderBy("h", "gram")
-    bottom = hashed.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= KMV_K
-    )
-    per = bottom.groupBy("source").agg(
+    grams = _source_vocab(docs, KMV_N)
+    per = _kmv_bottom(grams).groupBy("source").agg(
         F.max(F.when(F.col("rn") == KMV_K, F.col("h"))).alias("h_k"),
         F.count(F.lit(1)).alias("n_in"),
     )
-    exact = hashed.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_exact")
-    )
+    exact = grams.groupBy("source").agg(F.count(F.lit(1)).alias("n_exact"))
     return (
         per.join(exact, "source")
         .select(
@@ -614,16 +662,8 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE["sketch_kmv_distinct"] = f"""
 with grams as (
-  select distinct source, unnest({sql_ngrams(sql_toks('text'), KMV_N)}) gram
-  from documents),
-hashed as (
-  select source, gram, ('0x' || substr(md5(gram), 1, 15))::bigint h
-  from grams),
-bottom as (
-  select source, h,
-         row_number() over (partition by source order by h, gram) rn
-  from hashed
-  qualify rn <= {KMV_K}),
+  {_sql_source_vocab(KMV_N)}),
+{_sql_kmv_bottom("grams", "source, h")},
 per as (
   select source,
          max(case when rn = {KMV_K} then h end) h_k,
@@ -667,18 +707,8 @@ def sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.explode(ngrams(toks(), HLL_N)).alias("gram")
     )
     hashed = grams.select(
-        "source",
-        F.expr("conv(substring(md5(gram), 1, 15), 16, 10)")
-        .cast("long")
-        .alias("h"),
-    ).select(
-        "source",
-        (F.col("h") % HLL_M).alias("register"),
-        F.expr(
-            f"if(h div {HLL_M} = 0, 53, "
-            f"53 - length(bin(h div {HLL_M})))"
-        ).alias("rho"),
-    )
+        "source", tok_hash60(F.col("gram")).alias("h")
+    ).select("source", *_hll_register_rho())
     per_source = hashed.groupBy("source", "register").agg(
         F.max("rho").alias("m_j")
     )
@@ -696,21 +726,11 @@ def sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         filled = grid.join(regs, "register", "left").select(
             F.coalesce(F.col("m_j"), F.lit(0)).alias("m_j")
         )
-        return filled.agg(
+        s = filled.agg(
             F.expr("sum(cast(pow(2, 53 - m_j) as bigint))").alias("s_int"),
             F.expr("sum(if(m_j = 0, 1, 0))").alias("v_zero"),
-        ).select(
-            F.expr(
-                f"cast({HLL_ALPHA!r} as double) * {HLL_M * HLL_M} "
-                f"/ (cast(s_int as double) / cast(pow(2, 53) as bigint))"
-            ).alias("e_raw"),
-            "v_zero",
-        ).select(
-            F.expr(
-                f"if(e_raw <= {2.5 * HLL_M!r} and v_zero > 0, "
-                f"{HLL_M} * ln({HLL_M} / cast(v_zero as double)), e_raw)"
-            ).alias(out)
         )
+        return _hll_estimate(s, out)
 
     exact = grams.agg(F.countDistinct("gram").alias("n_exact"))
     return (
@@ -733,13 +753,11 @@ def sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_hll_fold(regs_cte: str, out: str) -> str:
     """DuckDB text of the register->estimate fold (same ops as Spark)."""
+    e_raw, corrected = _sql_hll_estimate(out)
     return f"""
-  select case when e_raw <= {2.5 * HLL_M!r} and v_zero > 0
-              then {HLL_M} * ln({HLL_M} / cast(v_zero as double))
-              else e_raw end {out}
+  select {corrected}
   from (
-    select cast({HLL_ALPHA!r} as double) * {HLL_M * HLL_M}
-             / (cast(s_int as double) / cast(2 ** 53 as double)) e_raw,
+    select {e_raw},
            v_zero
     from (
       select sum(cast(2 ** (53 - m_j) as bigint)) s_int,
@@ -750,18 +768,16 @@ def _sql_hll_fold(regs_cte: str, out: str) -> str:
         left join {regs_cte} using (register))))"""
 
 
+_SQL_MERGE_REG, _SQL_MERGE_RHO = _sql_hll_register_rho(sql_tok_hash60("gram"))
+
 ORACLE["sketch_hll_merge"] = f"""
 with grams as (
   select source, unnest({sql_ngrams(sql_toks('text'), HLL_N)}) gram
   from documents),
 hashed as (
   select source,
-         ('0x' || substr(md5(gram), 1, 15))::bigint % {HLL_M} register,
-         case when ('0x' || substr(md5(gram), 1, 15))::bigint // {HLL_M} = 0
-              then 53
-              else 53 - length(to_base(
-                ('0x' || substr(md5(gram), 1, 15))::bigint // {HLL_M}, 2))
-         end rho
+         {_SQL_MERGE_REG} register,
+         {_SQL_MERGE_RHO} rho
   from grams),
 per_source as (
   select source, register, max(rho) m_j from hashed group by 1, 2),
@@ -814,29 +830,13 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: integers end-to-end until two final IEEE divisions
     (estimate and error), both engine-exact; bottom-k ties ordered by
     (h, gram) as in sketch_kmv_distinct."""
-    from pyspark.sql.window import Window
-
     docs = load_table(spark, sf_dir, "documents")
-    # r15: FOUR plan branches read the distinct per-source vocabulary
-    # (the sketch build, the exact sizes, both sides of the exact
+    # FOUR plan branches read the distinct per-source vocabulary (the
+    # sketch build, the exact sizes, both sides of the exact
     # intersection join) — localCheckpoint it so the tokenize +
     # explode + distinct pass runs once instead of per branch
-    vocab = docs.select(
-        "source", F.explode(ngrams(toks(), KMV_N)).alias("gram")
-    ).distinct().localCheckpoint()
-    hashed = vocab.select(
-        "source",
-        "gram",
-        F.expr("conv(substring(md5(gram), 1, 15), 16, 10)")
-        .cast("long")
-        .alias("h"),
-    )
-    w = Window.partitionBy("source").orderBy("h", "gram")
-    bottom = (
-        hashed.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= KMV_K)
-        .drop("rn")
-    )
+    vocab = _source_vocab(docs, KMV_N).localCheckpoint()
+    bottom = _kmv_bottom(vocab).drop("rn")
     # |S|² pair grid: allowlisted BNLJ — both sides the distinct-source
     # list, dozens of rows at any corpus size (see BNLJ_ALLOWED entry)
     srcs = bottom.select("source").distinct()
@@ -880,33 +880,8 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_both"),
         )
     )
-    # exact calibration target (corpus_source_overlap's inner shape)
-    sizes = vocab.groupBy("source").agg(F.count(F.lit(1)).alias("n_vocab"))
-    inter = (
-        vocab.select(F.col("source").alias("src_a"), "gram")
-        .join(vocab.select(F.col("source").alias("src_b"), "gram"), "gram")
-        .where(F.col("src_a") < F.col("src_b"))
-        .groupBy("src_a", "src_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sz = F.broadcast(sizes)
-    exact = (
-        inter.join(sz.withColumnRenamed("source", "src_a"), "src_a")
-        .withColumnRenamed("n_vocab", "n_a")
-        .join(
-            sz.withColumnRenamed("source", "src_b").withColumnRenamed(
-                "n_vocab", "n_b"
-            ),
-            "src_b",
-        )
-        .select(
-            "src_a",
-            "src_b",
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            ).alias("jaccard_exact"),
-        )
+    exact = _vocab_jaccard(vocab).select(
+        "src_a", "src_b", F.col("jaccard").alias("jaccard_exact")
     )
     return (
         per.join(exact, ["src_a", "src_b"], "left")
@@ -931,16 +906,8 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE["sketch_kmv_jaccard"] = f"""
 with vocab as (
-  select distinct source, unnest({sql_ngrams(sql_toks('text'), KMV_N)}) gram
-  from documents),
-hashed as (
-  select source, gram, ('0x' || substr(md5(gram), 1, 15))::bigint h
-  from vocab),
-bottom as (
-  select source, gram, h,
-         row_number() over (partition by source order by h, gram) rn
-  from hashed
-  qualify rn <= {KMV_K}),
+  {_sql_source_vocab(KMV_N)}),
+{_sql_kmv_bottom("vocab", "source, gram, h")},
 srcs as (select distinct source from bottom),
 pairs as (
   select a.source src_a, b.source src_b
@@ -963,18 +930,9 @@ per as (
         from union_sketch
         qualify rn <= {KMV_K})
   group by 1, 2),
-sizes as (select source, count(*) n_vocab from vocab group by 1),
-inter as (
-  select a.source src_a, b.source src_b, count(*) n_inter
-  from vocab a join vocab b on a.gram = b.gram and a.source < b.source
-  group by 1, 2),
+{_SQL_VOCAB_SIZES_INTER},
 exact as (
-  select src_a, src_b,
-         cast(n_inter as double)
-         / (sa.n_vocab + sb.n_vocab - n_inter) jaccard_exact
-  from inter
-  join sizes sa on sa.source = src_a
-  join sizes sb on sb.source = src_b)
+  {_sql_vocab_jaccard("", "jaccard_exact")})
 select p.src_a, p.src_b, p.k_used, p.n_both,
        cast(p.n_both as double) / p.k_used jaccard_kmv,
        coalesce(e.jaccard_exact, 0.0) jaccard_exact,
@@ -1024,8 +982,6 @@ def sketch_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid crossed with the 1-row total — scalar frames, BNLJ-
     allowlisted. The exact side (one global sort) exists only as the
     audit baseline."""
-    from pyspark.sql.window import Window
-
     docs = load_table(spark, sf_dir, "documents").select(
         "source", "n_chars"
     )
@@ -1062,11 +1018,10 @@ def sketch_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("est_chars"),
     )
     # exact audit baseline: percentile_disc rank pick via the
-    # TWO-PHASE distributed rank (ranks.global_ranks — r9 verdict #3:
-    # the old partition-less corpus Window single-tasked the sort).
-    # The corpus-sized ranked frame stays distributed; the 3-row est
-    # side is the broadcast (r8 advice: broadcasting `ranked` was a
-    # driver hazard at scale even though the equi-join was correct).
+    # TWO-PHASE distributed rank (ranks.global_ranks: a partition-less
+    # corpus Window single-tasks the sort). The corpus-sized ranked
+    # frame stays distributed; the 3-row est side is the broadcast
+    # (a broadcast of the corpus-sized `ranked` frame would not scale).
     from duckdb_wasm_spark.ranks import global_ranks
 
     ranked = global_ranks(docs.select("n_chars"), ["n_chars"])

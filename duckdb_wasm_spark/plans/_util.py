@@ -103,6 +103,20 @@ def sql_query(
     return fn
 
 
+def registrar(queries: dict) -> Callable:
+    """A family module's `@_q(name)` decorator: it files the decorated
+    plan in `queries` under `name` and returns it unchanged."""
+
+    def q(name: str):
+        def reg(fn):
+            queries[name] = fn
+            return fn
+
+        return reg
+
+    return q
+
+
 def register_texts(queries: dict, oracle: dict[str, str]) -> None:
     """Register every `oracle` name that has no DataFrame plan in
     `queries` as `sql_query` over its own text. A family module calls

@@ -33,19 +33,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from duckdb_wasm_spark.plans._util import dec, register_texts, sql_dec, sql_dsum
+from duckdb_wasm_spark.plans._util import (
+    dec,
+    register_texts,
+    registrar,
+    sql_dec,
+    sql_dsum,
+)
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
 
 
-def _q(name):
-    def reg(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return reg
+_q = registrar(QUERIES)
 
 
 # ---------------------------------------------------- extra_windows

@@ -37,6 +37,7 @@ from duckdb_wasm_spark.plans._util import (
     dec,
     dsum,
     register_texts,
+    registrar,
     sql_dec,
     sql_dsum,
 )
@@ -47,12 +48,7 @@ QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
 
 
-def _q(name):
-    def reg(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return reg
+_q = registrar(QUERIES)
 
 
 TOP_K = 100

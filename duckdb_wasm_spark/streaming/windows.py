@@ -31,6 +31,7 @@ from duckdb_wasm_spark.plans._util import (
     dec,
     dsum,
     register_texts,
+    registrar,
     sql_dec,
     sql_dsum,
 )
@@ -42,12 +43,7 @@ QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
 
 
-def _q(name):
-    def reg(fn):
-        QUERIES[name] = fn
-        return fn
-
-    return reg
+_q = registrar(QUERIES)
 
 
 # -------------------------------------------------------- events_tumbling

@@ -233,17 +233,24 @@ def test_clusters_consistent_with_pairs(spark, sf_dir):
 def test_ngram_helpers_edge_lengths(spark):
     """Docs shorter than the shingle width must yield empty gram lists
     (→ NULL repetition fractions downstream), and the Spark and DuckDB
-    gram builders must produce the same SET for every edge length."""
+    gram builders must produce the same SET for every edge length. The
+    md5 → 60-bit fold's three forms (Column, Spark SQL text, DuckDB)
+    must each equal int(md5(s)[:15], 16) on the same texts and a
+    non-ASCII string, each plain and salted as a counter key ('cms0 ' || s)."""
+    import hashlib
+
     import duckdb
     from pyspark.sql import functions as F
 
     from duckdb_wasm_spark.operators._text import (
-        bigrams,
+        expr_tok_hash60,
         ngrams,
+        ngrams_all,
         sql_ngrams,
+        sql_tok_hash60,
         sql_toks,
+        tok_hash60,
         toks,
-        trigrams,
     )
 
     texts = ["", "a", "a b", "a b c", "a a a a a", "x y x y x y"]
@@ -254,8 +261,8 @@ def test_ngram_helpers_edge_lengths(spark):
         r.i: r
         for r in df.select(
             "i",
-            F.size(bigrams(toks())).alias("nb"),
-            F.size(trigrams(toks())).alias("n3"),
+            F.size(ngrams_all(toks(), 2)).alias("nb"),
+            F.size(ngrams(toks(), 3)).alias("n3"),
             F.size(ngrams(toks(), 5)).alias("n5"),
             F.array_sort(ngrams(toks(), 5)).alias("g5"),
         ).collect()
@@ -274,6 +281,33 @@ def test_ngram_helpers_edge_lengths(spark):
             [t],
         ).fetchone()[0]
         assert got == rows[i].g5, f"text={t!r}"
+
+    def fold(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+    folds = texts + ["naïve 日本語 ü"]
+    want = [(i, fold(t), fold("cms0 " + t)) for i, t in enumerate(folds)]
+    fdf = spark.createDataFrame(list(enumerate(folds)), ["i", "g"])
+    for plain, salted in (
+        (
+            tok_hash60(F.col("g")),
+            tok_hash60(F.concat(F.lit("cms0 "), F.col("g"))),
+        ),
+        (
+            F.expr(expr_tok_hash60("g")),
+            F.expr(expr_tok_hash60("concat('cms0 ', g)")),
+        ),
+    ):
+        got = fdf.select("i", plain, salted).collect()
+        assert sorted(tuple(r) for r in got) == want
+    salted = "'cms0 ' || g"
+    for i, t in enumerate(folds):
+        got = con.execute(
+            f"select {sql_tok_hash60('g')}, {sql_tok_hash60(salted)} "
+            "from (select ? g)",
+            [t],
+        ).fetchone()
+        assert (i, *got) == want[i], f"text={t!r}"
 
 
 def test_zero_token_doc_ratio_parity(spark, tmp_path):
