@@ -45,6 +45,14 @@ def _registries():
 _GATE_PRIORITY = [
     # (a) rewritten since the last green row: the queries that run
     # their DuckDB-dialect text (their emitted Spark SQL is new)
+    "extra_string_fns",
+    "extra_date_fns",
+    "extra_string_aggs",
+    "extra_pivot_json",
+    "micro_scalar_fns",
+    "embed_quantize_int8",
+    "embed_random_projection",
+    "embed_centroid_outliers",
     "text_stats",
     "text_langid",
     "text_tokens",
@@ -139,7 +147,6 @@ _GATE_PRIORITY = [
     "events_stream_sink",
     "extra_udtf_ngrams",
     "ivf_kmeanspp_init",
-    "micro_scalar_fns",
     "q17",
     "sample_dsir",
     "source_csv_roundtrip",

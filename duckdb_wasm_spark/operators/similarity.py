@@ -20,6 +20,16 @@ exact cosine top-k.
 plus the embedding audits (outliers, int8, random projection, PCA,
 ABTT, covariance, cluster purity, quantization and truncation recall).
 
+Three audits run their DuckDB-dialect oracle text through the dialect
+translator (`plans/_util.register_texts`): embed_centroid_outliers,
+embed_quantize_int8 and embed_random_projection, one-pass projections
+and aggregates whose text is as fast as a plan. Every other query
+stays a DataFrame plan: its text measured slower, stands in for a
+persisted artifact the plan serves, unrolls what the plan runs as one
+grouped-map Python stage (sim_topk_mmr), or does not analyze in Spark
+(embed_pca_power, embed_abtt and embed_covariance put a subquery
+inside a list lambda).
+
 Every variant builds from the same four steps, one helper each:
   _normed          (vec_id, embedding, nrm), nrm the fold-dot L2 norm
   _seed_centroids  the deterministic seeds vec_id < N_CENTROIDS, and
@@ -69,7 +79,7 @@ from duckdb_wasm_spark.operators.dedup import (
     dot_fold,
     sql_dot,
 )
-from duckdb_wasm_spark.plans._util import registrar
+from duckdb_wasm_spark.plans._util import register_texts, registrar
 from duckdb_wasm_spark.tables import load_table
 
 QUERIES: dict = {}
@@ -380,51 +390,12 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 OUTLIER_TOP_K = 10  # furthest vectors reported per label
 
 
-@_q("embed_centroid_outliers")
-def embed_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space outlier detection: per-label centroid, then the
-    OUTLIER_TOP_K vectors furthest (euclidean) from their own centroid —
-    the standard label-noise / anomaly sweep over a training corpus.
-
-    Determinism (the interesting part): a distributed double mean is
-    partition-order-dependent, so the centroid is accumulated in EXACT
-    fixed point — each float component is scaled by 2^20 (exponent
-    shift, exact in double) and floored to a bigint; integer sums are
-    associative, so the mean is bit-identical on any cluster and in the
-    DuckDB oracle. The per-vector distance is then the usual
-    order-preserving left fold.
-
-    Scale: one posexplode + hash aggregate on (label, pos) — 640 output
-    rows regardless of corpus size; centroid arrays broadcast back; the
-    distance pass is a narrow map; top-k is one window per label."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        _lloyd_means(emb, keys=("label",))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda x: x["c"],
-            ).alias("cent")
-        )
-    )
-    sq = lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)  # noqa: E731
-    dists = emb.join(F.broadcast(cent), "label").select(
-        "label",
-        "vec_id",
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(F.col("embedding"), F.col("cent"), sq),
-                F.lit(0.0),
-                lambda a, v: a + v,
-            )
-        ).alias("dist"),
-    )
-    return _topk(
-        dists, OUTLIER_TOP_K, by="dist", query="label", neighbor="vec_id"
-    ).select("label", "vec_id", "rank", "dist")
-
-
+# Embedding-space outlier detection: per-label centroid, then the
+# OUTLIER_TOP_K vectors furthest (euclidean) from their own centroid,
+# the label-noise / anomaly sweep over a training corpus. Each
+# centroid component sums 2^20-scaled bigints, so the mean is the same
+# on any partitioning; the distance is the left-fold sum of squares;
+# ties rank on the smaller vec_id.
 ORACLE["embed_centroid_outliers"] = f"""
 with comp as (
   select label, pos - 1 pos,
@@ -1185,55 +1156,13 @@ ORACLE["sim_topk_pq_rerank"] = f"""{_pq_adc_sql()},{_sql_rerank(PQ_RERANK)}"""
 
 
 # --------------------------------------------------- embed_quantize_int8
-@_q("embed_quantize_int8")
-def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric per-vector int8 quantization of the embedding column —
-    the 4× compression pass an embedding store runs before indexing:
-    scale = max|x|/127, q_i = round(x_i/scale), plus the max absolute
-    reconstruction error. Quantized values ship as a CSV string (a
-    bare int array column would hash differently between engines'
-    result normalizers; the string is representation-stable).
-
-    Determinism: float elements cast to double (exact), then only
-    IEEE correctly-rounded ops (no transcendental); round-half ties on
-    x/scale are measure-zero for data-derived doubles and the max
-    element hits exactly ±127 (not a tie). Zero vectors quantize to
-    all-zeros with scale 0 and error 0. One narrow zero-shuffle
-    projection."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = F.transform(F.col("embedding"), lambda v: v.cast("double"))
-    scale = (
-        F.array_max(F.transform(e, lambda v: F.abs(v))) / F.lit(127.0)
-    ).alias("scale")
-    q = F.when(
-        F.col("scale") > 0,
-        F.transform(
-            F.col("e"),
-            lambda v: F.round(v / F.col("scale"), 0).cast("int"),
-        ),
-    ).otherwise(F.transform(F.col("e"), lambda v: F.lit(0)))
-    err = F.when(
-        F.col("scale") > 0,
-        F.array_max(
-            F.transform(
-                F.col("e"),
-                lambda v: F.abs(
-                    v - F.round(v / F.col("scale"), 0) * F.col("scale")
-                ),
-            )
-        ),
-    ).otherwise(F.lit(0.0))
-    return (
-        emb.select("vec_id", e.alias("e"), scale)
-        .select(
-            "vec_id",
-            "scale",
-            F.array_join(q, ",").alias("q_csv"),
-            err.alias("max_err"),
-        )
-    )
-
-
+# Symmetric per-vector int8 quantization, the 4x compression pass an
+# embedding store runs before indexing: scale = max|x|/127,
+# q_i = round(x_i/scale), plus the max absolute reconstruction error.
+# Codes ship as a CSV string, whose hash is the same in both engines'
+# result normalizers. Floats widen to double exactly and only
+# correctly-rounded ops follow; the max element hits exactly +-127.
+# Zero vectors quantize to all zeros with scale 0 and error 0.
 ORACLE["embed_quantize_int8"] = """
 with d as (
   select vec_id,
@@ -1263,72 +1192,11 @@ from d
 RP_OUT_DIMS = 16  # projected dimensionality (64 → 16)
 
 
-@_q("embed_random_projection")
-def embed_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Johnson-Lindenstrauss random projection — the standard embedding
-    dim-reduction pass (64 → RP_OUT_DIMS) a pipeline runs before
-    LSH/clustering when the index must shrink: y_j = Σ_i sign(j,i)·x_i
-    with a dense ±1 sign matrix (Achlioptas-style; distances preserved
-    in expectation at 1/√k scale, which a consumer applies as a
-    constant).
-
-    Determinism: the sign matrix is md5-derived — sign(j,i) = +1 iff
-    the 60-bit integer fold of md5('rp:j:i') is even — so both engines
-    materialize the IDENTICAL matrix with no RNG; components accumulate
-    as 2^20-scaled bigints (sign flips are exact), and the final
-    s/2^20 is an exact exponent shift.
-
-    Scale: the sign matrix is k×64 = 1024 broadcast rows built from
-    range() (no data scan); the corpus side is one posexplode →
-    broadcast equi-join on the input dim → ONE (vec_id, out_dim)
-    map-side-combining hash aggregate. Output is N×k narrow rows —
-    never a wide shuffle of the original vectors."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    comp = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "v")
-    ).select(
-        "vec_id",
-        "pos",
-        F.floor(F.col("v").cast("double") * _FP_SCALE).alias("sv"),
-    )
-    signs = (
-        spark.range(RP_OUT_DIMS * 64)
-        .select(
-            (F.col("id") % 64).cast("int").alias("pos"),
-            (F.col("id") / 64).cast("int").alias("out_dim"),
-        )
-        .select(
-            "pos",
-            "out_dim",
-            F.when(
-                tok_hash60(
-                    F.concat(
-                        F.lit("rp:"),
-                        F.col("out_dim").cast("string"),
-                        F.lit(":"),
-                        F.col("pos").cast("string"),
-                    )
-                )
-                % 2
-                == 0,
-                F.lit(1),
-            )
-            .otherwise(F.lit(-1))
-            .alias("sign"),
-        )
-    )
-    return (
-        comp.join(F.broadcast(signs), "pos")
-        .groupBy("vec_id", "out_dim")
-        .agg(
-            (
-                F.sum(F.col("sv") * F.col("sign")).cast("double")
-                / F.lit(float(_FP_SCALE))
-            ).alias("comp")
-        )
-    )
-
-
+# Johnson-Lindenstrauss random projection (64 -> RP_OUT_DIMS):
+# y_j = sum_i sign(j, i) x_i over a dense +-1 sign matrix, with
+# sign(j, i) = +1 iff the 60-bit md5 fold of 'rp:j:i' is even, so both
+# engines build the same matrix with no RNG. Components accumulate as
+# 2^20-scaled bigints and s/2^20 is an exact exponent shift.
 # sign(j, i)'s hash key, 'rp:j:i', over the flat index i = 64 j + i
 _SQL_RP_KEY = "'rp:' || cast(i // 64 as varchar) || ':' || cast(i % 64 as varchar)"
 
@@ -2915,3 +2783,6 @@ s1 as (select qid, nid, en, nn, sim, 1 step from cand where rk = 1),
 {','.join(_mmr_step_sql(t) for t in range(2, MMR_K + 1))}
 select qid query_id, nid neighbor_id, step, sim from s{MMR_K}
 """
+
+
+register_texts(QUERIES, ORACLE)

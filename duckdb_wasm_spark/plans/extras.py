@@ -5,20 +5,18 @@ Each construct family has one registered query with a DuckDB oracle
 text.
 
 The registered queries run that oracle text through the dialect
-translator (`sql_query`), the path `Connection.query()` takes. Seven
-stay DataFrame plans:
+translator (`sql_query`), the path `Connection.query()` takes. Three
+stay DataFrame plans, none for a translator gap:
 
   extra_stats         its text orders a per-returnflag window over all
                       of lineitem, a class-key window the plan guard
                       forbids; the plan uses a domain-bounded radix
                       cumsum instead (`_radix_quantile`)
-  extra_string_fns    the translator has no `string_split`
-  extra_date_fns      the translator has no `datediff('day', ...)`
-  extra_string_aggs   the translator has no ordered aggregates
-  extra_pivot_json    the translator has no `json_extract_string`
-  extra_variant_json  the same gap; the plan is the VARIANT gate
-  extra_udtf_ngrams   the translator has no list lambdas; the plan is
-                      the Python UDTF gate
+  extra_variant_json  the VARIANT gate: parse_json + variant_get, a
+                      surface the text (json_extract_string) never
+                      reaches
+  extra_udtf_ngrams   the Python UDTF gate: a registered table function
+                      called through a LATERAL reference
 
 Scale notes: ranking windows shuffle by the partition key then sort
 within partitions (bounded by partition size, not table size); set ops
@@ -225,40 +223,11 @@ from agg unpivot (value for measure in (sum_qty, sum_price, n_items))
 
 
 # ------------------------------------------------------ extra_string_fns
-@_q("extra_string_fns")
-def extra_string_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String + regex scalar-function corpus: case mapping, trim/pad,
-    replace, split, search, slicing, levenshtein, regex extract /
-    global replace / match-flag — one narrow projection. Regex
-    patterns stay in the Java∩RE2 common subset (no backrefs or
-    lookaround), where the engines agree."""
-    cust = load_table(spark, sf_dir, "customer").where(
-        F.col("c_custkey") <= 200
-    )
-    return cust.select(
-        "c_custkey",
-        F.upper("c_name").alias("up"),
-        F.lower("c_mktsegment").alias("lo"),
-        F.length("c_name").alias("name_len"),
-        F.lpad("c_name", 25, "*").alias("padded"),
-        F.replace(F.col("c_name"), F.lit("Customer"), F.lit("Cust")).alias(
-            "replaced"
-        ),
-        F.size(F.split("c_name", "#")).alias("n_parts"),
-        F.instr(F.col("c_name"), "#").alias("hash_at"),
-        F.reverse(F.col("c_mktsegment")).alias("rev"),
-        F.substring("c_mktsegment", 2, 3).alias("seg_mid"),
-        F.repeat(F.lit("ab"), 3).alias("rep"),
-        F.levenshtein("c_mktsegment", F.lit("BUILDING")).alias("lev"),
-        F.concat_ws("|", "c_mktsegment", "c_name").alias("joined"),
-        F.regexp_extract("c_name", r"(\d+)", 1).alias("digits"),
-        F.regexp_replace("c_name", r"0+", "#").alias("zero_runs"),
-        F.col("c_name").rlike(r"Customer#0*1\d$").cast("int").alias(
-            "ends_teenish"
-        ),
-    )
-
-
+# String + regex scalar-function corpus: case mapping, trim/pad,
+# replace, split, search, slicing, levenshtein, regex extract / global
+# replace / match flag, in one narrow projection. Regex patterns stay
+# in the Java/RE2 common subset (no backrefs or lookaround), where the
+# engines agree.
 ORACLE["extra_string_fns"] = r"""
 select c_custkey,
        upper(c_name) up,
@@ -283,29 +252,8 @@ where c_custkey <= 200
 
 
 # -------------------------------------------------------- extra_date_fns
-@_q("extra_date_fns")
-def extra_date_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date scalar-function corpus: truncation, month arithmetic with
-    end-of-month clamping, day arithmetic, diffs, and part extraction."""
-    orders = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderkey") <= 400
-    )
-    d = F.col("o_orderdate").cast("date")
-    return orders.select(
-        "o_orderkey",
-        d.alias("d"),
-        F.trunc(d, "month").alias("month_start"),
-        F.last_day(d).alias("month_end"),
-        F.add_months(d, 2).alias("plus_2mo"),
-        F.date_add(d, 30).alias("plus_30d"),
-        F.datediff(F.lit("1998-12-01").cast("date"), d).alias("days_to_cut"),
-        F.year(d).alias("y"),
-        F.quarter(d).alias("q"),
-        (F.dayofweek(d) - 1).alias("dow_sun0"),
-        F.dayofyear(d).alias("doy"),
-    )
-
-
+# Date scalar-function corpus: truncation, month arithmetic with
+# end-of-month clamping, day arithmetic, diffs and part extraction.
 ORACLE["extra_date_fns"] = """
 select o_orderkey,
        od d,
@@ -625,26 +573,10 @@ from quant q join m on q.l_returnflag = m.l_returnflag
 
 
 # ------------------------------------------------- extra_string_aggs
-@_q("extra_string_aggs")
-def extra_string_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered string aggregation (ANSI listagg WITHIN GROUP) plus the
-    array-aggregation corpus (sorted collect, join, size, index,
-    membership) over one supplier grouping. The explicit order and the
-    sorted list make every output order-independent."""
-    sup = load_table(spark, sf_dir, "supplier").where(F.col("s_suppkey") <= 40)
-    sup.createOrReplaceTempView("sup_small")
-    return spark.sql(
-        "select s_nationkey, "
-        "listagg(s_name, '|') within group (order by s_name) s_names, "
-        "array_join(array_sort(collect_list(s_name)), ',') names_csv, "
-        "cast(size(collect_list(s_name)) as int) n_sup, "
-        "element_at(array_sort(collect_list(s_name)), 1) first_name, "
-        "cast(array_contains(collect_list(s_name), 'Supplier#000000007') "
-        "     as int) has_7 "
-        "from sup_small group by s_nationkey"
-    )
-
-
+# Ordered string aggregation (ANSI listagg WITHIN GROUP) plus the
+# list-aggregation corpus (sorted collect, join, size, index,
+# membership) over one supplier grouping. The explicit order and the
+# sorted list make every output order-independent.
 ORACLE["extra_string_aggs"] = """
 select s_nationkey,
        string_agg(s_name, '|' order by s_name) s_names,
@@ -663,40 +595,10 @@ group by s_nationkey
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
-@_q("extra_pivot_json")
-def extra_pivot_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot (explicit value list, static schema) + JSON-path
-    extraction feeding typed aggregation, per user. Pivot leaves absent
-    combinations NULL, counted as 0 like the oracle's conditional
-    aggregation; n_-prefixed aliases because a bare `view` column is a
-    reserved word on the oracle side. Two aggregates on the same
-    user_id key joined back: co-partitioned, so the join adds no
-    exchange beyond the aggregation shuffles."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("user_id") < 50)
-    pivoted = (
-        ev.groupBy("user_id")
-        .pivot("event_type", _EVENT_TYPES)
-        .agg(F.count(F.lit(1)))
-    )
-    k = F.get_json_object("props", "$.k")
-    j = (
-        ev.select("user_id", k.alias("k_str"), k.cast("int").alias("k"))
-        .groupBy("user_id")
-        .agg(
-            F.sum("k").cast("long").alias("sum_k"),
-            F.min("k_str").alias("min_k_str"),
-            F.max("k_str").alias("max_k_str"),
-        )
-    )
-    return pivoted.join(j, "user_id").select(
-        "user_id",
-        *[F.coalesce(F.col(t), F.lit(0)).alias(f"n_{t}") for t in _EVENT_TYPES],
-        "sum_k",
-        "min_k_str",
-        "max_k_str",
-    )
-
-
+# Pivot by conditional aggregation over a fixed value list (absent
+# combinations count 0) plus JSON-path extraction feeding typed
+# aggregation, per user. Aliases carry an n_ prefix because `view` is
+# a reserved word in DuckDB.
 ORACLE["extra_pivot_json"] = f"""
 select user_id,
        {', '.join(f"count(case when event_type = '{t}' then 1 end) n_{t}"

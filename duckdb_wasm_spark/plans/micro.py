@@ -15,10 +15,14 @@ CARDINALITY() gives the expected row count per query as a function of
 the input tables (checked in tests, mirroring the reference's embedded
 asserts).
 
-The six queries above, micro_topk_per_group and profile_columns run
-their DuckDB-dialect oracle text through `sql_query`, in the same
-database session as `Connection.query()`. micro_scalar_fns stays a
-DataFrame plan, because the translator has no `xor(`.
+The six queries above, micro_topk_per_group, micro_scalar_fns and
+profile_columns run their DuckDB-dialect oracle text through
+`sql_query`, in the same database session as `Connection.query()`.
+The other registered queries stay DataFrame plans, each for a
+capability or plan shape its text lacks: staged ORC/CSV/JSON files, a
+Python DataSource (batch and streaming), a bucketed join, the
+two-phase zone-map ranks, a runtime Bloom filter and an AQE skew-join
+split.
 
 Scale notes: sort is a global range-partitioned sort (Spark samples
 boundaries — the one unavoidable all-shuffle op); topk never
@@ -102,24 +106,11 @@ where l_quantity <= 5 and c_mktsegment = 'BUILDING'
 
 
 # ----------------------------------------------------- micro_scalar_fns
-@_q("micro_scalar_fns")
-def micro_scalar_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Math + bitwise scalar coverage (ref batch_stream.test.ts:23
-    `(v & 127)::TINYINT`, batch_stream_async.test.ts:101 `sin(v)`).
-    Trig results are rounded to 12 decimals: JVM Math.sin and DuckDB's
-    libm differ in the last ulp on ~0.4% of inputs; at 12 decimals the
-    fixed event_id domain matches exactly (verified, deterministic)."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.round(F.sin("event_id"), 12).alias("sin_v"),
-        F.round(F.cos("event_id"), 12).alias("cos_v"),
-        F.col("event_id").bitwiseAND(F.lit(127)).alias("band7"),
-        F.col("event_id").bitwiseXOR(F.lit(255)).alias("bxor"),
-        (F.col("event_id") % 7).alias("bmod"),
-    )
-
-
+# Math + bitwise scalar coverage (ref batch_stream.test.ts:23
+# `(v & 127)::TINYINT`, batch_stream_async.test.ts:101 `sin(v)`). Trig
+# results are rounded to 12 decimals: JVM Math.sin and DuckDB's libm
+# differ in the last ulp on ~0.4% of inputs; at 12 decimals the fixed
+# event_id domain matches exactly.
 ORACLE["micro_scalar_fns"] = """
 select event_id,
        round(sin(event_id), 12) sin_v,
