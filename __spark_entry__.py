@@ -11,6 +11,10 @@ module only aggregates their registries.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,144 +36,56 @@ def _registries():
     return [tpch, micro, extras, reference_sql, registry, windows]
 
 
-# Emission order for the bounded correctness walk, which gates about 50
-# rows per walk in insertion order, so this order decides which queries
-# get a fresh oracle row. When the long-green TPC-H/micro corpus led, the
-# LLM-pipeline operators got no rows for two walks running.
-# The rule:
-#   (a) never-gated queries, then queries rewritten since their last
-#       green row (a changed plan makes the old row prove nothing);
-#   (b) then green queries, oldest green row first.
-# When a query is rewritten, move it to the head of (a); when a listed
-# name gets a green row, move it down.
-_GATE_PRIORITY = [
-    # (a) rewritten since the last green row: the queries that run
-    # their DuckDB-dialect text (their emitted Spark SQL is new)
-    "extra_string_fns",
-    "extra_date_fns",
-    "extra_string_aggs",
-    "extra_pivot_json",
-    "micro_scalar_fns",
-    "embed_quantize_int8",
-    "embed_random_projection",
-    "embed_centroid_outliers",
-    "text_stats",
-    "text_langid",
-    "text_tokens",
-    "text_vocab_topk",
-    "text_repetition",
-    "text_pii_scan",
-    "text_gopher_flags",
-    "text_ngram_entropy",
-    "text_pmi_topk",
-    "sample_balanced",
-    "sample_split",
-    "corpus_mix_weights",
-    "doc_chunking",
-    "corpus_zipf_slope",
-    "corpus_source_divergence",
-    "corpus_token_regression",
-    "sample_weighted_priority",
-    "events_retention",
-    "events_sessionize",
-    "events_scd2",
-    "multimodal_meta",
-    "events_tumbling",
-    "events_rolling",
-    "micro_topk_per_group",
-    "extra_windows",
-    "extra_set_ops",
-    "extra_grouping",
-    "extra_full_outer",
-    "extra_recursive_walk",
-    "extra_lateral",
-    "extra_unpivot",
-    "profile_columns",
-    "dedup_exact",
-    "text_robust_stats",
-    "asof_click_attribution",
-    "events_funnel",
-    "events_session",
-    "events_anomaly",
-    "q11",
-    "q12",
-    "q13",
-    "q14",
-    "q15",
-    "q16",
-    "q5",
-    "q6",
-    "q7",
-    "q8",
-    "q9",
-    "ref_q8_sqlite",
-    "micro_grouped_sum",
-    "micro_join2",
-    "micro_join3",
-    "micro_regex",
-    "micro_sort",
-    "micro_topk",
-    "q18",
-    "q19",
-    "q20",
-    "q1",
-    "q2",
-    "q3",
-    "q4",
-    "q10",
-    "q21",
-    "q22",
-    "ref_q7_sqlite",
-    # (a) continued: never gated
-    "sim_topk_mmr",
-    "dedup_lsh_tuning",
-    "dedup_skew_stress",
-    "sketch_kmv_jaccard",
-    "sketch_bloom_decontaminate",
-    "corpus_source_overlap",
-    "corpus_novelty",
-    "corpus_stats",
-    "corpus_health_report",
-    "sample_mixture_budget",
-    "pipeline_near_dedup_corpus",
-    "dedup_jaccard_prefix",
-    "graph_kcore",
-    "dedup_clusters",
-    "dedup_embedding_clusters",
-    "pipeline_canonical_best",
-    "sketch_hll_distinct",
-    "sketch_cms_heavy_hitters",
-    # (b) oldest green row first
-    "sample_pack_sequences",
-    "sample_token_budget",
-    "dedup_semdedup",
-    "events_stream_join",
-    "events_stream_sink",
-    "extra_udtf_ngrams",
-    "ivf_kmeanspp_init",
-    "q17",
-    "sample_dsir",
-    "source_csv_roundtrip",
-    "source_json_roundtrip",
-    "source_orc_roundtrip",
-    "source_pydatasource",
-    "text_fingerprint",
-]
+# The last gate round (`CORRECTNESS_r<N>.json`) written before the text
+# rows ran through the DuckDB-parser translator (`dialect.translate`): a
+# text row's green row from this round or earlier checked code that the
+# row no longer runs.
+_LAST_ROUND_BEFORE_TRANSLATOR = 16
+
+
+def _last_green(record_dir: str) -> dict[str, int]:
+    """Latest round in which each name had a green gate row (a
+    `CORRECTNESS_r<N>.json` row whose `hash_match` is true)."""
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(record_dir, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if not m:
+            continue
+        with open(path) as f:
+            rows = json.load(f)
+        for name, row in rows.items():
+            if row.get("hash_match") is True:
+                last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
+
+
+def _gate_order(merged: dict, record_dir: str) -> dict:
+    """`merged` in gate order: (a) rows with no green row; (b) text rows
+    whose last green row predates the translator they now run through;
+    (c) every other row. Within (b) and (c) the oldest green row comes
+    first; ties keep registry order."""
+    last = _last_green(record_dir)
+
+    def key(name):
+        if name not in last:
+            return (0, 0)
+        stale = (
+            getattr(merged[name], "sql_text", None) is not None
+            and last[name] <= _LAST_ROUND_BEFORE_TRANSLATOR
+        )
+        return (1 if stale else 2, last[name])
+
+    return {n: merged[n] for n in sorted(merged, key=key)}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Emission order = _GATE_PRIORITY first, then the remaining
-    queries in registry order — the correctness walk reads this dict
-    in insertion order under a bounded window, so the order IS the
-    gating policy."""
+    """Every registered query, in gate order: the correctness walk reads
+    this dict in insertion order under a bounded window (about 50 rows),
+    so the order decides which queries get a fresh oracle row."""
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for m in _registries():
         merged.update(m.QUERIES)
-    out = {k: merged[k] for k in _GATE_PRIORITY if k in merged}
-    out.update(merged)
-    return out
+    return _gate_order(merged, os.path.dirname(os.path.abspath(__file__)))
 
 
 def oracle_sql() -> dict[str, str]:

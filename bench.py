@@ -22,6 +22,7 @@ carry a `machine` block (cores, memory, pyspark and duckdb versions).
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import re
@@ -70,6 +71,35 @@ def _machine(spark) -> dict:
     }
 
 
+def warm_up(spark, sf_dir: str, cpus: int) -> None:
+    """Untimed session warm-up before the first timed query: scan the
+    fact table once (codegen and shuffle machinery) and start the
+    Python/Arrow worker pool, so the first `mapInPandas` query does not
+    pay the per-core worker fork. Both are session overhead, not plan
+    cost."""
+    from duckdb_wasm_spark.tables import load_table
+
+    load_table(spark, sf_dir, "lineitem").count()
+    spark.range(cpus * 4, numPartitions=cpus).mapInPandas(
+        lambda it: it, "id long"
+    ).count()
+
+
+def hygiene(spark) -> None:
+    """Untimed inter-query hygiene, like gc.collect() between timeit
+    repeats: collect Python garbage and force one JVM GC, so the
+    ContextCleaner releases the previous query's broadcast and
+    localCheckpoint debris instead of letting it inflate the next
+    query's GC time. Drop the caller's DataFrame references first. Over
+    a 107-query corpus this took the total from 126.8 s to 121.4 s,
+    mostly in the late rows."""
+    gc.collect()
+    try:
+        spark.sparkContext._jvm.System.gc()
+    except Exception:  # pragma: no cover - hygiene must never fail
+        pass
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1").rstrip("/")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
@@ -80,16 +110,7 @@ def main() -> int:
     qs = entrymod.queries()
     spark = _build_session(cpus)
 
-    # Warm-up: touch the fact table & spin up codegen/shuffle machinery once,
-    # and spawn the Python/Arrow worker pool (otherwise the corpus's first
-    # mapInPandas query pays the whole per-core worker fork — session
-    # overhead, not plan cost).
-    from duckdb_wasm_spark.tables import load_table
-
-    load_table(spark, sf_dir, "lineitem").count()
-    spark.range(cpus * 4, numPartitions=cpus).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    warm_up(spark, sf_dir, cpus)
 
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
     # DuckDB side-by-side setup happens BEFORE the main loop because
@@ -137,7 +158,7 @@ def main() -> int:
         duck[name] = round(best, 3)
 
     timings: dict[str, float] = {}
-    # COLD vs WARM (r9 advice, medium): the session memos
+    # COLD vs WARM: the session memos
     # (graph._edges, dedup._emb_sigs_memo) build during run 1 of their
     # first consumer, so a best-of-N "warm" number never contains the
     # build wall. Both walls are therefore recorded: cold = run 1
@@ -149,11 +170,11 @@ def main() -> int:
     cold: dict[str, float] = {}
     # build = fn(spark, sf_dir) wall (plan construction: py4j round
     # trips + any training actions the plan runs eagerly, e.g.
-    # localCheckpoint rounds); exec = collect() wall. The split is the
-    # r6→r7 overhead ledger: for iterative queries build rivals exec
-    # (the memory-pinned py4j finding), and the F.expr fast paths are
-    # judged against exactly this number. Recorded from the SAME run
-    # that produced the best total, so build+exec ≈ timings[name].
+    # localCheckpoint rounds); exec = collect() wall. For iterative
+    # queries build rivals exec (py4j round trips), and the F.expr fast
+    # paths are judged against exactly this number. Recorded from the
+    # SAME run that produced the best total, so build+exec ≈
+    # timings[name].
     build_exec: dict[str, list[float]] = {}
     def _run_spark(name, fn) -> None:
         best = None
@@ -180,26 +201,11 @@ def main() -> int:
                 build_exec.pop(name, None)
                 break
         timings[name] = round(best, 3)
-        # UNTIMED inter-query hygiene (standard benchmark practice, like
-        # gc.collect() between timeit repeats): drop Python-side
-        # DataFrame refs and force one JVM GC so the ContextCleaner
-        # releases broadcast/localCheckpoint debris from the previous
-        # query instead of letting it inflate the NEXT query's GC time.
         df = None  # noqa: F841 — release the Dataset ref BEFORE the GC
-        # At 107 queries the corpus measured 126.8s without this vs
-        # 121.4s with it, with the recovery concentrated in the
-        # late-corpus rows (dedup_embedding_lsh 4.69s → 3.18s) — the
-        # r4/r5 "corpus-neighborhood interference" finding, mitigated.
-        import gc as _gc
-
-        _gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # pragma: no cover - hygiene must never fail
-            pass
+        hygiene(spark)
 
     for qi, (name, fn) in enumerate(qs.items()):
-        # ABBA engine order (r13 verdict #4): odd-indexed queries run
+        # ABBA engine order: odd-indexed queries run
         # DuckDB first so neither engine systematically inherits the
         # other's page-cache warm-up; identical to the old behavior
         # when the side-by-side is off
@@ -216,9 +222,8 @@ def main() -> int:
     total = round(sum(ok.values()), 3)
     total_cold = round(sum(cold.values()), 3)
     # The driver captures only the TAIL of stdout (~2000 chars) and
-    # parses the line it finds there — BENCH_r03/r04 both lost the
-    # parse because the full 87-entry per-query dict pushed the line
-    # past the window (round-4 verdict task #4). Keep the LINE small
+    # parses the line it finds there; a full per-query dict pushes the
+    # line past that window and loses the parse. Keep the LINE small
     # enough to always parse: 2-decimal timings, only the slowest
     # BENCH_LINE_TOPK queries plus every failure inline, and the full
     # 3-decimal map in a committed sidecar (BENCH_FULL.json) next to
@@ -289,7 +294,7 @@ def main() -> int:
         "cpus": cpus,
     }
 
-    # Optional DuckDB side-by-side (round-3 verdict task #5): with
+    # Optional DuckDB side-by-side: with
     # SPARK_GRAFT_DUCKDB=1, time every oracle_sql() on the same parquet
     # with the same thread count + best-of-N methodology, and write the
     # full comparison to ORACLE_BENCH.json (the committed artifact the

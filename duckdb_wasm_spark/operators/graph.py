@@ -40,45 +40,25 @@ Scale notes (100 TB framing):
     sum by dst. State is 2 small frames (ranks, static degrees) + the edge
     list — the textbook Pregel decomposition expressed as DataFrame
     ops. The edge list is a DISK-PERSISTED artifact (the _edges
-    frames, r12 — r9 made them once-per-session checkpoints, r12 made
-    them build-once-ever parquet via artifacts.py) so no query in the
-    family re-derives the distinct edge list from the base scans, and
-    COLD sessions reload it instead of rebuilding (and iterative
+    frames, built once ever as parquet via artifacts.py) so no query in
+    the family re-derives the distinct edge list from the base scans,
+    and COLD sessions reload it instead of rebuilding (and iterative
     plans' lineage stays iterations deep, not iterations * the
     edge-derivation subtree).
   - The iteration count is fixed (5) and unrolled in BOTH engines —
     the oracle is a 5-deep chained-CTE pipeline generated from the
     same Python constants, so the texts cannot drift.
-  - Cold-floor ledger — MEASURED IRREDUCIBILITY SWEEP (r13 verdict
-    #3; scripts/graph_cold_sweep.py, fresh session per row,
-    local[32]; cold = reload + first by construction):
-
-        query       sf    reload  first  warm   jit_premium
-        pagerank    0.1    2.24   5.54   1.89      3.65
-        pagerank    0.01   1.65   5.23   1.53      3.70
-        lpa         0.1    2.61   6.30   1.76      4.54
-        lpa         0.01   1.78   3.93   1.75      2.18
-        degree      0.1    2.03   3.15   1.26      1.88
-        degree      0.01   1.34   2.59   0.98      1.61
-
-    (a) `reload` is NOT scan-bound: the artifact dirs read 8-way in
-    parallel (per-file union relations since r14 — no session-conf
-    flip), and the identical respread+checkpoint job costs 2.0s the
-    first time in a session vs 0.57s repeated — first-Spark-job
-    session floor, flat in data size. (b) `jit_premium` (first − warm)
-    is whole-stage-codegen of the unrolled iteration DAG and is FLAT
-    across a 10× data change for pagerank (3.70 vs 3.65s) and degree
-    (1.61 vs 1.88s) — pure JIT, amortized to zero across a session.
-    A codegen pre-warm on a LIMIT-sampled edge view was implemented
-    and measured: the limit operators change the wholestage units, so
-    the cache misses — prewarm 3.8s + first 3.8s is WORSE than the
-    plain 5.5s first run. The r12 <1.5× cold/warm target is therefore
-    RETIRED as session-JIT floor (the streaming/live.py evidence
-    standard): at the 1000-executor design point both components are
-    per-session constants that amortize over every family query,
-    while the steady-state walls (pagerank ~1.9s, LPA ~1.8s at
-    sf0.1) are the honest price of synchronous fixed-point
-    iteration — linear in rounds, not corpus.
+  - Cold floor (scripts/graph_cold_sweep.py splits a fresh session's
+    cold wall into reload + first run): both parts are per-session
+    constants, flat in data size. `reload` is the session's first
+    respread+checkpoint job, not a scan (the artifact dirs read as
+    per-file union relations in parallel); `first − warm` is the
+    whole-stage-codegen JIT of the unrolled iteration DAG. Both
+    amortize over every family query in a session. A codegen pre-warm
+    on a LIMIT-sampled edge view does not help: the limit operators
+    change the whole-stage units, so the codegen cache misses. The
+    steady-state walls are the price of synchronous fixed-point
+    iteration, linear in rounds, not corpus.
   - common-neighbors pairs expand per-customer degree d as d*(d-1)/2;
     the CAP=64 guard bounds the expansion exactly like
     dedup_ngram_jaccard_capped's max_df posting-list cap (dedup.py):
@@ -140,14 +120,13 @@ _SQL_TRADE_PAIRS = """
 
 
 def _edges(spark: SparkSession, sf_dir: str, shape: str) -> DataFrame:
-    """DISK-PERSISTED edge frames shared by the whole graph family
-    (r11 verdict #4 — previously session-scoped localCheckpoint memos,
-    so every cold session re-paid the orders x lineitem distinct
-    build that a production graph pipeline materializes once next to
-    the source tables). One artifact kind holds every shape, built
-    together on first touch ever and reloaded flat-parquet by all
-    later sessions; the `layout` spec brings each frame back
-    HASH-partitioned exactly as the old memos were (cs by cust,
+    """DISK-PERSISTED edge frames shared by the whole graph family (a
+    session-scoped memo would make every cold session re-pay the
+    orders x lineitem distinct build that a production graph pipeline
+    materializes once next to the source tables). One artifact kind
+    holds every shape, built together on first touch ever and reloaded
+    flat-parquet by all later sessions; the `layout` spec brings each
+    frame back HASH-partitioned by its consumers' key (cs by cust,
     sym/symw by src — the per-iteration join key), so no consumer
     gains a shuffle from the reload. Shapes:
 
@@ -235,9 +214,9 @@ def _edges_artifact(spark: SparkSession, sf_dir: str):
         layout={"cs": ["cust"], "sym": ["src"], "symw": ["src"],
                 "deg_sym": "raw"},
         # n_nodes rides in the artifact's _META.json so PageRank's
-        # per-session deg.count() job disappears (r12 verdict #1):
-        # the count is a property of the persisted degree frame, so
-        # it persists WITH the frame
+        # per-session deg.count() job disappears: the count is a
+        # property of the persisted degree frame, so it persists WITH
+        # the frame
         meta_build=lambda built: {"n_nodes": built["deg_sym"].count()},
     )
 
@@ -253,7 +232,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer they serve, so the top of the list is the high-degree
     supplier side — the same mass concentration a web graph shows.
 
-    Build-cost note (r8 verdict task 7): the 5 iterations are ONE
+    Build-cost note: the 5 iterations are ONE
     generated Spark-SQL text over temp views of the memoized,
     checkpointed edge list and the (checkpointed) degree frame — the
     same chained-CTE generator shape as the oracle, so the two texts
@@ -263,7 +242,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     and as a CTE Spark re-aggregates the corpus-scale edge list per
     reference (measured 5.6s exec vs 2.0s at sf0.1).  n_nodes rides in
     as a driver literal served from the edge artifact's persisted
-    metadata (r12 verdict #1 — the count is a property of the
+    metadata (the count is a property of the
     persisted degree frame, so it persists with it; no per-session
     count job).  The node-sized rank/contrib sides carry SHUFFLE_HASH
     hints: the edge list is already hash-partitioned on src, so each
@@ -625,11 +604,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the gated scale AQE broadcasts the survivor side, at cluster
     scale the join co-partitions. Nothing collects; the per-round
     driver scalar is the under-K count — the CC loop's convergence-
-    test discipline (r15): when a round finds NO node under K the
+    test discipline: when a round finds NO node under K the
     remaining peels are provably identity filters (keep = every src,
     both semi-joins no-ops), so the loop exits instead of running
-    them — the r14 form executed all KCORE_ROUNDS unconditionally and
-    on this near-regular graph (converged after one peel) paid three
+    them — running all KCORE_ROUNDS unconditionally on this
+    near-regular graph (converged after one peel) would pay three
     no-op rounds of semi-join + checkpoint wall per call. A graph
     still peeling after KCORE_ROUNDS rounds raises exactly as before
     (the final under-K count IS the old fixpoint assertion).
@@ -637,7 +616,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: one row per side — is_supplier, n_nodes, n_edges (directed
     out-edges inside the core), min_deg / max_deg within the core."""
     edges = _edges(spark, sf_dir, "sym")
-    # deg is LAZILY localCheckpoint'd per round (r15 ADVICE): the
+    # deg is LAZILY localCheckpoint'd per round: the
     # convergence count AND the keep filter both consume it —
     # uncached, each round ran the SAME degree aggregate twice over
     # the checkpointed edges (once under the count action, once under

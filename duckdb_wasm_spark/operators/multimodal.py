@@ -64,8 +64,7 @@ def with_assets(docs: DataFrame) -> DataFrame:
 def decode_image(payload: bytes, fmt: str) -> np.ndarray:
     """Decode a binary image payload to (height, width, 3) uint8 RGB.
 
-    REAL for the two codec-free formats (round-5 verdict task #4) —
-    pure-numpy parsers, no image library needed:
+    REAL for the two codec-free formats — pure-numpy parsers, no image library needed:
       - ``ppm``  binary PPM (P6, maxval 255)
       - ``bmp``  24-bit uncompressed BI_RGB, BITMAPINFOHEADER
 
@@ -366,7 +365,7 @@ DS_BASE = 8  # decode-stats geometry: w,h in [8, 15] keeps the oracle cheap
 
 @_q("multimodal_decode_stats")
 def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL decoder gate (r6 verdict task #6): synthesize a genuine
+    """REAL decoder gate: synthesize a genuine
     binary PPM (even doc_ids) or 24-bit BMP (odd doc_ids) payload whose
     RGB pixels are the doc's text bytes tiled row-major, then decode it
     back through `decode_image` — the actual `_decode_ppm`/`_decode_bmp`

@@ -83,7 +83,9 @@ def sql_query(
     database: every table the text names is registered as a database
     table, and the text goes through `dialect.translate` and the
     connection's statement runner. The registry's oracle gate then
-    checks the translator on the same text DuckDB runs."""
+    checks the translator on the same text DuckDB runs. The function
+    carries `text` as its `sql_text` attribute, which marks it as a
+    text row."""
     tables = [t for t in TABLES if re.search(rf"\b{t}\b", text, re.I)]
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,6 +102,7 @@ def sql_query(
 
     fn.__name__ = name
     fn.__doc__ = f"{name}: its DuckDB-dialect text, translated and run."
+    fn.sql_text = text
     return fn
 
 

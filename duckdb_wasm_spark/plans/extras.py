@@ -374,11 +374,10 @@ def extra_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       base table — no explode, no window.  Decimal sums are
       associative-exact, so the values are bit-identical to any
       row-order evaluation.
-    * Quantiles, per column class (round-10 verdict #1 — the former
-      single (flag, which)-partitioned cumulative window put the
-      near-unique price histogram's CORPUS-scale frame through one
-      task per flag, the same defect class as the pre-r10 zonemap,
-      hidden behind a 6-value partition key):
+    * Quantiles, per column class (a single (flag, which)-partitioned
+      cumulative window would put the near-unique price histogram's
+      CORPUS-scale frame through one task per flag, hidden behind a
+      6-value partition key):
         - l_quantity is DOMAIN-BOUNDED (50 distinct values): groupBy
           (flag, v) → count reduces the corpus map-side to <= 150
           histogram rows, and the cumulative window's per-partition
@@ -430,8 +429,8 @@ def extra_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corr from the exact decimal moments + one closed-form double
     expression, rounded past the representable-ulp zone (unchanged).
 
-    Job-floor sweep (r11 verdict #3, the extra_recursive_walk
-    discipline; sf0.1/local[32], best-of-3 warm): baseline 2.45s
+    Job-floor sweep (the extra_recursive_walk discipline;
+    sf0.1/local[32], best-of-3 warm): baseline 2.45s
     (fresh session; 1.95s in the long-lived ORACLE_BENCH session);
     shuffle.partitions=1 → 1.96s; AQE initialPartitionNum=1 → 1.67s;
     AQE off → 2.39s; FUSING the qty histogram and the price level-1

@@ -1,4 +1,4 @@
-"""Two-phase distributed global rank (round-9 verdict #2/#3).
+"""Two-phase distributed global rank.
 
 A `row_number() OVER (ORDER BY ...)` with no partition spec funnels the
 whole corpus through ONE task — fine in a single-node columnar engine
@@ -47,9 +47,9 @@ def global_ranks(
     (keys + cols) makes each key group's sorted order contiguous
     across partition ids, the in-partition window partitions by
     (_pid, keys), and the offsets frame is <= RANK_PARTS rows PER KEY
-    (round-10 verdict: a window partitioned only by a low-cardinality
-    class key still funnels corpus-scale frames through single tasks —
-    this is the distributed replacement)."""
+    (a window partitioned only by a low-cardinality class key still
+    funnels corpus-scale frames through single tasks — this is the
+    distributed replacement)."""
     keys = list(keys)
     part = df.repartitionByRange(RANK_PARTS, *keys, *cols).withColumn(
         "_pid", F.spark_partition_id()
@@ -98,7 +98,7 @@ def keyed_prefix_sum(
     frame), with no per-key corpus-scale window in the executed plan —
     the distributed replacement for
     `sum(val) OVER (PARTITION BY key ORDER BY cols)` when `key` has a
-    handful of values (round-10 verdict #2: such a window funnels each
+    handful of values (such a window funnels each
     key's whole corpus share through one task).
 
     Same two-phase shape as global_ranks: range-repartition on

@@ -5,8 +5,8 @@ registering a URL fetches NOTHING; the file size comes from a one-byte
 Range probe; every read issues `Range: bytes=a-b` in chunk-aligned
 blocks through a small in-process cache. A parquet footer read
 (schema, row-group stats via pyarrow) therefore costs tail bytes only,
-and a file that is never scanned costs zero bytes — the round-9
-verdict's "strictly more I/O" staging gap.
+and a file that is never scanned costs zero bytes, where staging the
+whole file first would read strictly more.
 
 The object is a Python file-like (read/seek/tell), so
 `pyarrow.parquet.ParquetFile(reader)` works directly for

@@ -66,10 +66,10 @@ def _family(col: pd.Series) -> str:
         first = next((v for v in col if v is not None), None)
         if first is None:
             # all-NULL object column: the value kind is unknowable, so
-            # it matches ANY family (round-5 ADVICE — Spark DateType
-            # arrives as object while DuckDB DATE lands datetime64;
-            # on an empty/all-NULL result the two would otherwise
-            # raise a spurious family mismatch)
+            # it matches ANY family (Spark DateType arrives as object
+            # while DuckDB DATE lands datetime64; on an empty/all-NULL
+            # result the two would otherwise raise a spurious family
+            # mismatch)
             return "any"
         if isinstance(first, (datetime.date, datetime.datetime)):
             return "datetime"
@@ -86,13 +86,13 @@ def assert_parity(sdf, sql: str, con: duckdb.DuckDBPyConnection, name: str = "?"
         f"{name}: column order mismatch spark={list(sp_raw.columns)} "
         f"duck={list(du_raw.columns)}"
     )
-    # Typed-hash replica (CORRECTNESS_r04 lesson): the driver's value
-    # hash is FAMILY-sensitive, not width-sensitive — int32 Spark vs
-    # BIGINT oracle is green all over r03/r04, and DATE columns are
-    # green even though Spark lands them as object-of-date while DuckDB
-    # lands datetime64. But a DuckDB HUGEINT column (sum(integer) →
-    # int128) lands in pandas as FLOAT64 while Spark emits int64, and
-    # equal values hash differently (the six r04 reds). Mirror that:
+    # Typed-hash replica: the driver's value hash is FAMILY-sensitive,
+    # not width-sensitive — int32 Spark vs a BIGINT oracle hashes
+    # green, and DATE columns are green even though Spark lands them as
+    # object-of-date while DuckDB lands datetime64. But a DuckDB
+    # HUGEINT column (sum(integer) → int128) lands in pandas as FLOAT64
+    # while Spark emits int64, and equal values hash differently.
+    # Mirror that:
     # the type FAMILY of every column must match before any value
     # normalization. A bare integer sum() in an oracle must be
     # cast(... as bigint) (cf. plans/tpch.py q11).

@@ -19,7 +19,6 @@ Prints one JSON line with every wall, the unpersisted/stored ratio of
 the medians, and whether both ways returned the same rows.
 """
 
-import gc
 import json
 import os
 import shutil
@@ -37,27 +36,22 @@ _SECONDARY = ("_dws_lsh_pairs_hinted",)
 def main() -> int:
     kind, name, sf_dir = sys.argv[1], sys.argv[2], sys.argv[3].rstrip("/")
     import __spark_entry__ as entrymod
-    from bench import _build_session
+    from bench import _build_session, hygiene, warm_up
 
     from duckdb_wasm_spark import artifacts
-    from duckdb_wasm_spark.tables import load_table
 
     store = tempfile.mkdtemp(prefix="artifact_kinds_")
     artifacts._ROOT = os.path.join(store, "index_artifacts")
     fn = entrymod.queries()[name]
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = _build_session(cpus)
-    load_table(spark, sf_dir, "lineitem").count()
-    spark.range(cpus * 4, numPartitions=cpus).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    warm_up(spark, sf_dir, cpus)
 
     def run():
         t0 = time.perf_counter()
         rows = fn(spark, sf_dir).collect()
         wall = round(time.perf_counter() - t0, 3)
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
+        hygiene(spark)
         return wall, sorted(rows, key=repr)
 
     def drop(memo_key=None):

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
-"""Cold/warm decomposition for one graph-family query (r13 verdict #3).
+"""Cold/warm decomposition for one graph-family query.
 
 Runs ONE registry query in a FRESH process/session and prints a JSON
-line decomposing its cold wall into the only two components the ledger
-in operators/graph.py claims exist:
+line decomposing its cold wall into the only two components the
+cold-floor note in operators/graph.py names:
 
     reload  — materializing the query's edge-artifact frame alone
               (parquet per-file union read + repartition +
@@ -33,11 +33,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# every frame the query consumes (r14 code review: triangle_count was
-# mapped to "sym" but reads "cs", so its reload wall landed inside
-# `first` and inflated the JIT attribution; pagerank also reads the
-# raw deg_sym scan, whose materialization is job-free but listed for
-# completeness)
+# every frame the query consumes: a frame missing here has its reload
+# wall land inside `first` and inflate the JIT attribution (pagerank
+# also reads the raw deg_sym scan, whose materialization is job-free
+# but listed for completeness)
 _FRAMES = {
     "graph_pagerank": ("sym", "deg_sym"),
     "graph_kcore": ("sym",),
@@ -54,23 +53,14 @@ def main():
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     ).rstrip("/")
     import __spark_entry__ as entrymod
-    from bench import _build_session
+    from bench import _build_session, warm_up
 
     from duckdb_wasm_spark.operators.graph import _edges_artifact
-    from duckdb_wasm_spark.tables import load_table
 
     qs = entrymod.queries()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = _build_session(cpus)
-    load_table(spark, sf_dir, "lineitem").count()
-    # size the Python-worker pool warm-up to the configured parallelism
-    # (r14 ADVICE: a hard-coded 32-partition warm-up under cpus > 32
-    # left part of the fork cost inside the first measured run,
-    # skewing the first/jit_premium decomposition the graph ledger
-    # cites); mirrors bench.py
-    spark.range(cpus * 4, numPartitions=cpus).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    warm_up(spark, sf_dir, cpus)
 
     t0 = time.perf_counter()
     art = _edges_artifact(spark, sf_dir)

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""State-store backend sweep for the streaming gates (r15 verdict #3).
+"""State-store backend sweep for the streaming gates.
 
 Usage:
     python scripts/state_store_sweep.py <hdfs|rocksdb> [q1,q2,...]
@@ -13,7 +13,6 @@ compared across arms by the caller (the providers must be
 result-invariant; the oracle gate already pins the default provider).
 """
 
-import gc
 import hashlib
 import json
 import os
@@ -60,9 +59,7 @@ def main() -> int:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     ).rstrip("/")
     import __spark_entry__ as entrymod
-    from bench import _build_session
-
-    from duckdb_wasm_spark.tables import load_table
+    from bench import _build_session, hygiene, warm_up
 
     qs = entrymod.queries()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
@@ -70,10 +67,7 @@ def main() -> int:
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass", PROVIDERS[provider]
     )
-    load_table(spark, sf_dir, "lineitem").count()
-    spark.range(cpus * 4, numPartitions=cpus).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    warm_up(spark, sf_dir, cpus)
 
     out = {"provider": provider, "runs": runs, "queries": {}, "rows": {}}
     for n in names:
@@ -92,11 +86,7 @@ def main() -> int:
                 "\n".join(sorted(map(str, rows))).encode()
             ).hexdigest(),
         )
-        gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
+        hygiene(spark)
     print(json.dumps(out), flush=True)
     spark.stop()
     return 0

@@ -51,23 +51,78 @@ def test_entry_registry_exposes_operators():
         assert name in osql
 
 
-def test_entry_gate_priority_order():
-    """The correctness gate walks queries() in insertion order under a
-    bounded window (~50 rows/round), so the emission order IS the
-    gating policy. Every _GATE_PRIORITY name must exist in the merged
-    registry (a typo'd rotation entry would silently lose that query
-    its gate slot) and the priority names must lead the registry in
-    priority order."""
+def test_entry_gate_order_rule(tmp_path):
+    """The gate order follows the committed gate record: rows with no
+    green row first, then text rows whose last green row predates the
+    translator, then the rest, oldest green row first; ties keep
+    registry order, and a recorded name that is not registered is
+    ignored. Checked on two synthetic gate files."""
+    import json
+
+    import __spark_entry__ as e
+    from duckdb_wasm_spark.plans._util import sql_query
+
+    old = e._LAST_ROUND_BEFORE_TRANSLATOR
+    new = old + 1
+
+    def plan(spark, sf_dir):
+        return None
+
+    def row(green):
+        return {"hash_match": green}
+
+    (tmp_path / f"CORRECTNESS_r{old:02d}.json").write_text(json.dumps({
+        "t_stale": row(True), "p_tie_z": row(True), "p_tie_a": row(True),
+        "p_new": row(True), "never": row(False),
+    }))
+    (tmp_path / f"CORRECTNESS_r{new:02d}.json").write_text(json.dumps({
+        "p_new": row(True), "t_fresh": row(True), "never": row(False),
+        "deleted": row(True),
+    }))
+    registry = {
+        "p_new": plan,
+        "p_tie_z": plan,
+        "never": plan,
+        "p_tie_a": plan,
+        "t_stale": sql_query("t_stale", "select 1 as x"),
+        "t_fresh": sql_query("t_fresh", "select 2 as x"),
+    }
+    assert list(e._gate_order(registry, str(tmp_path))) == [
+        "never", "t_stale", "p_tie_z", "p_tie_a", "p_new", "t_fresh",
+    ]
+    # without a gate record the order is the registry's
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert list(e._gate_order(registry, str(empty))) == list(registry)
+
+
+def test_entry_gate_order_on_committed_record():
+    """queries() holds every registered name once. On the committed
+    record the rows with no green row lead, then the text rows whose
+    last green row predates the translator (every text row today), then
+    the rest in non-decreasing last green round."""
+    import os
+
     import __spark_entry__ as e
 
-    names = list(e.queries())
-    unknown = [n for n in e._GATE_PRIORITY if n not in names]
-    assert not unknown, (
-        f"_GATE_PRIORITY names missing from the registry (typo'd "
-        f"rotation entries lose their gate slot silently): {unknown}"
-    )
-    prio = list(e._GATE_PRIORITY)
-    assert names[: len(prio)] == prio, "priority names must lead queries()"
+    qs = e.queries()
+    names = list(qs)
+    registered = [n for m in e._registries() for n in m.QUERIES]
+    assert len(registered) == len(set(registered)) == len(names)
+    assert set(names) == set(registered)
+
+    last = e._last_green(os.path.dirname(os.path.abspath(e.__file__)))
+    never = [n for n in names if n not in last]
+    stale = [
+        n for n in names
+        if n in last and getattr(qs[n], "sql_text", None) is not None
+        and last[n] <= e._LAST_ROUND_BEFORE_TRANSLATOR
+    ]
+    assert stale, "the committed record names no text row"
+    assert names[: len(never) + len(stale)] == never + stale
+    for tier in (stale, names[len(never) + len(stale):]):
+        rounds = [last[n] for n in tier]
+        assert rounds == sorted(rounds), tier
 
 
 def test_ngram_jaccard_df_cap_is_sound(spark, sf_dir):
